@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.hadoop.fs.Path
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.current_timestamp
 
@@ -17,9 +15,8 @@ import graft.io.{Sinks, Sources}
   * Differences from the reference, all deliberate (SURVEY §2.11):
   *  - accepts a glob, so the documented-but-unimplemented "last 24 hourly
   *    files" behavior is one argument;
-  *  - state read → merge → overwrite has no read-overwrite race: the merge
-  *    is persisted, and both sinks go through staging+swap
-  *    (`Sinks.overwriteSafely`);
+  *  - no read-overwrite race: both outputs are staged before either is
+  *    swapped, and a swap that crashed midway is recovered before reading;
   *  - both output tables carry `last_updated` (the production shape,
   *    `IncrementalAutocomplete.java:107,129`) — excluded from oracle
   *    queries only because it is nondeterministic.
@@ -48,27 +45,34 @@ object Main {
     finally spark.stop()
   }
 
-  /** One incremental batch: read logs, merge into parquet state, write
-    * state + top-K through the staging swap. Factored out so tests can
-    * replay it without a JVM fork.
-    */
+  /** One CronJob tick over the logs matching `logsGlob`: [[tick]]. */
   def runOnce(spark: SparkSession, logsGlob: String, stateDir: String,
-              topKDir: String, k: Int): (Long, Long) = {
-    val lines = Sources.textLines(spark, logsGlob)
-    val state =
-      if (new Path(stateDir).getFileSystem(
-          spark.sessionState.newHadoopConf()).exists(new Path(stateDir)))
-        spark.read.parquet(stateDir).select("prefix", "query", "frequency")
-      else Pipeline.emptyState(spark)
+              topKDir: String, k: Int): (Long, Long) =
+    tick(Sources.textLines(spark, logsGlob), stateDir, topKDir, k)
 
-    val (merged, topK) = Pipeline.incrementalRun(lines, state, k)
+  /** Merges `lines` into the state at `stateDir`, rewrites state and
+    * top-K, returns their row counts; the CLI's and the streaming
+    * micro-batches' one tick. Both outputs are staged, and the state's
+    * query-grain invariant checked, before either is swapped: a lost
+    * cached block recomputes from the old state, and a broken state fails
+    * the tick with both targets untouched.
+    */
+  def tick(lines: DataFrame, stateDir: String, topKDir: String,
+           k: Int): (Long, Long) = {
+    val spark = lines.sparkSession
+    val state =
+      if (Sinks.recover(spark, stateDir))
+        spark.read.schema(Tables.freqTable).parquet(stateDir)
+      else Pipeline.emptyState(spark)
+    val run = Pipeline.incrementalRun(lines, state, k)
     try {
-      val stateRows = merged.count() // materialize BEFORE touching state dir
-      Sinks.overwriteSafely(withLastUpdated(merged), stateDir)
-      Sinks.overwriteSafely(withLastUpdated(topK), topKDir)
-      val topKRows = spark.read.parquet(topKDir).count()
+      val stateRows = Sinks.stage(withLastUpdated(run.state), stateDir)
+      val topKRows = Sinks.stage(withLastUpdated(run.topK), topKDir)
+      run.checkState()
+      Sinks.swap(spark, stateDir)
+      Sinks.swap(spark, topKDir)
       println(s"[graft] state=$stateRows rows, topK=$topKRows prefixes")
       (stateRows, topKRows)
-    } finally merged.unpersist()
+    } finally run.merged.unpersist()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -8,51 +8,71 @@ import graft.ops._
 
 /** The rebuilt `IncrementalAutocomplete` dataflow (SURVEY.md §3.1):
   *
-  *   text lines → filter/normalize (P1,P2) → prefix-expand (G1) →
-  *   per-batch counts (A1) → merge with cumulative state (J1) →
+  *   text lines → filter/normalize (P1,P2) → per-query counts (A1) →
+  *   merge with the state at query grain (J1) → prefix-expand (G1) →
   *   top-K per prefix (W1,P4) → JSON completions (A3).
   *
+  * Query-grain invariant: a query has one state row per prefix length
+  * 2..min(len, 60), each carrying the query's total frequency. So its
+  * length-2 row alone holds its count: the merge reads those rows, sums
+  * per query and expands prefixes after the merge, with the same output
+  * rows as merging the exploded state. [[incrementalRun]] verifies it.
+  *
   * Fixes over the reference, both load-bearing at scale:
-  *  - the merged state is persisted once and feeds BOTH sinks; the reference
-  *    recomputes the whole plan per sink and overwrites the JDBC table it is
-  *    lazily reading (read-overwrite race, SURVEY §2.11.1). Here state I/O is
-  *    the caller's concern (`io.Sinks.overwriteSafely` does staging+swap).
+  *  - the per-query merge is persisted once and feeds BOTH sinks; the
+  *    reference recomputes the plan per sink and overwrites the table it
+  *    lazily reads (SURVEY §2.11.1). State I/O is `Main.tick`'s concern.
   *  - deterministic rank ties and collect order (SURVEY §2.11.2/3).
   */
 object Pipeline {
 
-  /** Stateless per-batch counts: lines → (prefix, query, cnt).
-    * This is the legacy `TrendingAutocomplete` core (SURVEY §3.2).
-    *
-    * The aggregation is pushed BELOW the prefix generator: prefixes are a
-    * deterministic function of the query, so count(prefix, query) ==
-    * count(query). Counting per query first means the one wide shuffle
-    * moves one row per input line (map-side combined to one per distinct
-    * query per task) instead of the ≤59× exploded fan-out, and the
-    * generator runs post-shuffle over distinct queries only — identical
-    * output to aggregating the exploded pairs, at a fraction of the
-    * shuffle volume. At 100 TB this is the difference between shuffling
-    * the corpus once and shuffling it 59 times.
+  /** lines → (query, frequency). Counting BELOW the prefix generator:
+    * prefixes are a function of the query, so the one wide shuffle moves
+    * a row per distinct query per task, not the ≤59× exploded fan-out.
     */
-  def batchCounts(lines: DataFrame, col: String = "value",
-                  minLen: Int = 2, maxLen: Int = 60): DataFrame = {
-    val norm = Normalize(lines, col, "query", minLen)
-    val freq = FrequencyAgg.counts(norm, Seq("query"), "frequency")
-    freq.select(
-      explode(PrefixExpand.prefixArray(freq("query"), minLen, maxLen))
-        .as("prefix"),
-      freq("query"), freq("frequency"))
-  }
+  def queryCounts(lines: DataFrame): DataFrame =
+    FrequencyAgg.counts(Normalize(lines, "value", "query"), Seq("query"),
+      "frequency")
 
-  /** One incremental run: merge batch counts into `state`, return
-    * (newState, topK) — newState persisted so both sinks share one compute.
+  /** (query, frequency) → (prefix, query, frequency), a row per prefix. */
+  def expand(freq: DataFrame): DataFrame =
+    freq.select(explode(PrefixExpand.prefixArray(freq("query"))).as("prefix"),
+      freq("query"), freq("frequency"))
+
+  /** Stateless per-batch counts: lines → (prefix, query, frequency).
+    * This is the legacy `TrendingAutocomplete` core (SURVEY §3.2).
     */
-  def incrementalRun(lines: DataFrame, state: DataFrame, k: Int = 10)
-      : (DataFrame, DataFrame) = {
-    val merged = Merge(batchCounts(lines), state,
-      Seq("prefix", "query"), "frequency")
+  def batchCounts(lines: DataFrame): DataFrame = expand(queryCounts(lines))
+
+  /** New state and top-K, both expanded from the persisted per-query
+    * merge `merged`, which the caller unpersists. `checkState` throws if
+    * the input state broke the invariant; call it once `merged` is built.
+    */
+  final case class Run(state: DataFrame, topK: DataFrame, merged: DataFrame,
+                       checkState: () => Unit)
+
+  /** Merges the batch into `state` at query grain. The invariant check
+    * rides the state scan: the row count must equal the summed fan-out of
+    * the length-2 rows, and the summed frequency their frequency × fan-out.
+    */
+  def incrementalRun(lines: DataFrame, state: DataFrame, k: Int = 10): Run = {
+    val obs = new Observation()
+    val head = length(state("prefix")) === 2
+    val fanOut = least(length(state("query")), lit(60)).cast("long") - 1
+    def total(c: Column) = coalesce(sum(c), lit(0L))
+    val old = state.observe(obs, count(lit(1)).as("rows"),
+      total(when(head, fanOut)).as("head_rows"),
+      total(state("frequency")).as("freq"),
+      total(when(head, state("frequency") * fanOut)).as("head_freq"))
+      .filter(head)
+    val merged = Merge(old, queryCounts(lines), Seq("query"), "frequency")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    (merged, topCompletions(merged, k))
+    Run(expand(merged), topCompletions(expand(merged), k), merged, () => {
+      val m = obs.get
+      if (m("rows") != m("head_rows") || m("freq") != m("head_freq"))
+        throw new IllegalStateException(
+          s"state breaks the query-grain invariant: $m")
+    })
   }
 
   /** (prefix, query, frequency) → (prefix, completions-json) top-K table.

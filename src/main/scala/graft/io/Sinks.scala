@@ -1,8 +1,9 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Sinks (SURVEY.md §2.1). The reference's JDBC `SaveMode.Overwrite` writes
   * to the same table its plan lazily reads (`IncrementalAutocomplete.java:
@@ -11,33 +12,51 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   */
 object Sinks {
 
-  /** Parquet state-dir overwrite without the read-overwrite race: write
-    * `df` fully into `<path>.staging`, then swap staging into `path`.
-    * The reading plan (which may still reference `path`) is safe because
-    * the staging write materializes the full result before the old state
-    * is touched.
-    *
-    * Uses the Hadoop FileSystem API, so the swap works on HDFS (rename is
-    * atomic there) as well as the local FS. On S3 "rename" is copy+delete
-    * — not atomic; production S3 deployments should point the state at an
-    * atomic-commit table layer instead (the staging write still guarantees
-    * no data loss: the old dir is removed only after the new one is
-    * complete).
-    */
+  /** Overwrite safe for a plan that still reads `path`: [[stage]], [[swap]]. */
   def overwriteSafely(df: DataFrame, path: String): Unit = {
-    val hconf = df.sparkSession.sessionState.newHadoopConf()
-    val tgt = new Path(path)
-    val staging = new Path(path + ".staging")
-    val old = new Path(path + ".old")
-    val fs = tgt.getFileSystem(hconf)
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(tgt) && !fs.rename(tgt, old))
-      throw new java.io.IOException(s"cannot stage out old state $tgt")
-    if (!fs.rename(staging, tgt))
-      throw new java.io.IOException(s"cannot swap staging into $tgt")
+    stage(df, path)
+    swap(df.sparkSession, path)
+  }
+
+  /** Writes `df` into `<path>.staging`; returns the rows written. */
+  def stage(df: DataFrame, path: String): Long = {
+    val obs = new Observation()
+    df.observe(obs, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.Overwrite).parquet(path + ".staging")
+    obs.get("rows").asInstanceOf[Long]
+  }
+
+  /** Swaps a complete `<path>.staging` into `path`: `path` → `.old`,
+    * staging → `path`, delete `.old`. `.old` is deleted only while a
+    * complete `path` is in place, so a crash between the renames leaves it
+    * for [[recover]]. Atomic on HDFS and the local FS; S3 state needs an
+    * atomic-commit table layer.
+    */
+  def swap(spark: SparkSession, path: String): Unit = {
+    val (fs, tgt, old) = paths(spark, path)
+    if (fs.exists(tgt)) { fs.delete(old, true); rename(fs, tgt, old) }
+    rename(fs, new Path(path + ".staging"), tgt)
     fs.delete(old, true)
   }
+
+  /** Restores `<path>.old` when `path` is missing (a swap crashed between
+    * its two renames); returns whether `path` exists. Call before reading.
+    */
+  def recover(spark: SparkSession, path: String): Boolean = {
+    val (fs, tgt, old) = paths(spark, path)
+    if (!fs.exists(tgt) && fs.exists(old)) rename(fs, old, tgt)
+    fs.exists(tgt)
+  }
+
+  private def paths(spark: SparkSession, path: String) = {
+    val tgt = new Path(path)
+    (tgt.getFileSystem(spark.sessionState.newHadoopConf()), tgt,
+      new Path(path + ".old"))
+  }
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"cannot rename $from to $to")
 
   /** Bucketed persistent table for co-partitioned incremental merge: state
     * bucketed by the merge key means each incremental run shuffles only the

@@ -13,11 +13,6 @@ object Sources {
   def textLines(spark: SparkSession, paths: String*): DataFrame =
     spark.read.text(paths: _*)
 
-  /** Hourly file path, reference template `<base>/<name>.txt`
-    * (`IncrementalAutocomplete.java:64`).
-    */
-  def hourlyFile(base: String, name: String): String = s"$base/$name.txt"
-
   /** Parquet table (testdata + engine-side state stand-in). */
   def parquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders}
 
 /** Typed core (SURVEY §1.3): case-class rows + `Dataset[T]` facades for
   * the pipeline stages where compile-time row types help library users.
@@ -24,11 +24,6 @@ package object model {
 /** Typed facade over Pipeline. */
 object TypedPipeline {
   import model._
-
-  def readLogs(spark: SparkSession, paths: String*): Dataset[LogLine] = {
-    implicit val enc = Encoders.product[LogLine]
-    io.Sources.textLines(spark, paths: _*).as[LogLine]
-  }
 
   def batchCounts(lines: Dataset[LogLine]): Dataset[PrefixCount] = {
     implicit val enc = Encoders.product[PrefixCount]

@@ -2750,10 +2750,9 @@ object AnalyticsQueries {
       // the 24-file list form of the source — the glob/list reader the
       // reference documents but never shipped (SURVEY §2.11.5)
       val lines = graft.io.Sources.textLines(s, IncrFixture.paths(s, dir): _*)
-      val (state1, _) =
+      val run1 =
         graft.Pipeline.incrementalRun(lines, graft.Pipeline.emptyState(s))
-      val (state2, _) = graft.Pipeline.incrementalRun(lines, state1)
-      state2.select("prefix", "query", "frequency")
+      graft.Pipeline.incrementalRun(lines, run1.state).state
     },
 
     // S5/§2.11.4 — nested design-doc completions shape:

@@ -4,9 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.{Pipeline, Tables}
-import graft.io.Sinks
-import graft.ops.Merge
+import graft.{Main, Tables}
 
 /** Structured Streaming variants (SURVEY §2.10/§7.5).
   *
@@ -18,8 +16,8 @@ import graft.ops.Merge
   *    `Trigger.AvailableNow` — each invocation drains exactly the files
   *    not yet processed (the checkpoint tracks seen files, replacing the
   *    reference's "one hardcoded hourly file per run" and making the
-  *    documented-but-unimplemented 24h catch-up automatic), merges them
-  *    into the parquet state via foreachBatch + staging swap, then stops.
+  *    documented-but-unimplemented 24h catch-up automatic), runs each
+  *    micro-batch through the CLI's own tick (`Main.tick`), then stops.
   *    Re-running on a schedule reproduces the CronJob semantics with
   *    exactly-once file accounting.
   *
@@ -40,24 +38,8 @@ object StreamingPipeline {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val session = batch.sparkSession
-        val state =
-          if (new org.apache.hadoop.fs.Path(stateDir).getFileSystem(
-              session.sessionState.newHadoopConf())
-              .exists(new org.apache.hadoop.fs.Path(stateDir)))
-            session.read.parquet(stateDir)
-              .select("prefix", "query", "frequency")
-          else Pipeline.emptyState(session)
-        val merged = Merge(Pipeline.batchCounts(batch), state,
-          Seq("prefix", "query"), "frequency")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          merged.count() // materialize before touching the state dir
-          Sinks.overwriteSafely(merged, stateDir)
-          Sinks.overwriteSafely(Pipeline.topCompletions(merged, k), topKDir)
-          batches += 1
-        } finally merged.unpersist()
-        ()
+        Main.tick(batch, stateDir, topKDir, k)
+        batches += 1
       }
       .start()
     q.awaitTermination()

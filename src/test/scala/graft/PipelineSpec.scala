@@ -4,15 +4,16 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-/** End-to-end incremental pipeline replay (SURVEY §5.2.4): run the
-  * reference's own 50-query fixture through Main.runOnce twice against a
-  * parquet state dir and assert cumulative frequencies double and the
-  * top-K stays stable — the behavior `README.md:81-91` describes.
+/** End-to-end incremental pipeline replay (SURVEY §5.2.4): run a
+  * 50-line hourly query log (FIXTURES §A1 shape and edge cases) through
+  * Main.runOnce twice against a parquet state dir and assert cumulative
+  * frequencies double and the top-K stays stable — the behavior
+  * `README.md:81-91` describes.
   */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  private val fixture = "/root/reference/input-data/2025-06-10-23.txt"
+  private val fixture = PipelineSpec.queryLog
 
   test("replaying the same batch twice doubles frequencies, keeps top-K") {
     val dir = graft.TempDirs.create("graft-pipe")
@@ -60,4 +61,10 @@ class PipelineSpec extends SparkSpec {
     def toMap2: Map[(String, String), Long] =
       rows.map { case (p, q, f) => (p, q) -> f }.toMap
   }
+}
+
+object PipelineSpec {
+  /** The bundled hourly query log (src/test/resources/query-logs). */
+  val queryLog: String =
+    getClass.getResource("/query-logs/2025-06-10-23.txt").getPath
 }
