@@ -30,7 +30,9 @@ import org.apache.spark.sql.SparkSession
   * Dev knobs (unset in the driver's run — defaults keep its behavior):
   *  - SPARK_GRAFT_ONLY: comma-separated query names (subset profiling);
   *  - SPARK_GRAFT_REPEAT: time each query N times, report the MEDIAN —
-  *    how BENCH_BASELINE.json expected ranges are produced.
+  *    how BENCH_BASELINE.json expected ranges are produced;
+  *  - SPARK_GRAFT_BENCH_OUT: path of the full JSON artifact (default
+  *    BENCH_FULL.json); the BENCH_LINE.json mirror is written beside it.
   */
 object Bench {
   // JIT-liveness sink for the canary spin loop: @volatile write is a
@@ -492,18 +494,23 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json"))
     java.nio.file.Files.write(out,
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // Fixed-name byte-identical mirror of the stdout line (r16 verdict
-    // #2): the official per-query PERF comparison has been empty since
-    // r14 because the driver's tail parse never recovered the line —
-    // with the mirror the comparison can never silently vanish again.
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LINE.json"),
+    // Byte-identical mirror of the stdout line, written next to the full
+    // artifact so a run pointed elsewhere never overwrites another run's
+    // mirror: a consumer that misses the stdout tail still finds the line.
+    java.nio.file.Files.write(
+      out.toAbsolutePath.resolveSibling("BENCH_LINE.json"),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // The stdout line goes out LAST, after Spark is stopped and logging
     // silenced, so nothing (executor shutdown WARNs, sbt banners — see
-    // build.sbt outputStrategy/showSuccess) can print after it: the
-    // driver's tail capture must find it as the final stdout line.
+    // build.sbt outputStrategy/showSuccess) can print after it: a
+    // stdout tail capture must find it as the final stdout line. A
+    // throwing stop() is logged, never allowed to swallow the line.
     spark.sparkContext.setLogLevel("ERROR")
-    spark.stop()
+    try spark.stop()
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] spark.stop() failed: $e")
+    }
     println(line)
     System.out.flush()
   }

@@ -331,18 +331,13 @@ object MaintenanceQueries {
             .as("n_risky_rows"))
     },
 
-    // X12o — the CDC CONSUMER as a REAL streaming run (fourth streaming
-    // gate entry): the change feed arrives as a file-source stream
-    // (8 staged files, 2 per trigger → ≥4 micro-batches) and the
-    // latest-per-key state is a complete-mode max(struct(version,
-    // delete-rank, payload)) aggregation — max over a total order is
-    // commutative across micro-batches, which is exactly what the oracle
-    // match certifies: the streamed state, applied to the base, must be
-    // bit-identical to the batch q_cdc_merge snapshot. (version,
-    // delete-rank) is unique per key in the feed, so the payload fields
-    // never tie-break; the delete-rank encodes 'D' beats 'U' at equal
-    // version, the same rule as the batch window's (version DESC, op
-    // ASC). Oracle = q_cdc_merge's SQL verbatim.
+    // X12o — the CDC CONSUMER as a REAL streaming run: the change feed
+    // arrives as a file-source stream (8 staged files, 2 per trigger →
+    // ≥4 micro-batches) and the latest-per-key state is a complete-mode
+    // max(struct(version, delete-rank, payload)) aggregation
+    // (StreamingPipeline.streamCdcComplete). The streamed state, applied
+    // to the base, must be bit-identical to the batch q_cdc_merge
+    // snapshot. Oracle = q_cdc_merge's SQL verbatim.
     "q_stream_cdc" -> Q(
       s"""WITH $duckLatest
          |SELECT COALESCE(l.doc_id, b.doc_id) AS doc_id,
@@ -355,26 +350,16 @@ object MaintenanceQueries {
          |FROM documents b FULL OUTER JOIN latest l ON b.doc_id = l.doc_id
          |WHERE l.op IS NULL OR l.op <> 'D'""".stripMargin) { (s, dir) =>
       val d = table(s, dir, "documents")
-      val state = graft.streaming.StreamingPipeline.drainComplete(
-        s, StreamStaging.dir(s, dir, "cdc8"), "cdc") { st =>
-        st.groupBy("doc_id")
-          .agg(max(struct(col("version"),
-            when(col("op") === "D", 2).otherwise(1).as("drk"),
-            col("op"), col("lang"), col("source"), col("n_chars")))
-            .as("m"))
-      }
-      val latest = state.select(col("doc_id"), col("m.op").as("op"),
-        col("m.lang").as("lang"), col("m.source").as("source"),
-        col("m.n_chars").as("n_chars"))
-      applyLatest(d, latest)
+      graft.streaming.StreamingPipeline.streamCdcComplete(s, dir,
+        latest => applyLatest(d, latest))
     },
 
     // X12r — the UPDATE-mode twin of q_stream_cdc: the same
     // latest-per-key max(struct) state, but each micro-batch's changed
     // keys MERGE into the hash-prefix-partitioned sink table
-    // (drainUpdateMerge), and applying the state to the base snapshot
-    // is a READ-side join — the state-table-plus-view split a real CDC
-    // consumer serves from. Oracle = q_cdc_merge's SQL verbatim, the
+    // (StreamingPipeline.streamCdcUpdate), and applying the state to the
+    // base snapshot is a READ-side join — the state-table-plus-view split
+    // a real CDC consumer serves from. Oracle = q_cdc_merge's SQL verbatim, the
     // same certification as the complete-mode twin.
     "q_stream_cdc_update" -> Q(
       s"""WITH $duckLatest
