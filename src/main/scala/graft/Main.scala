@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.current_timestamp
 
@@ -56,6 +58,14 @@ object Main {
     * query-grain invariant checked, before either is swapped: a lost
     * cached block recomputes from the old state, and a broken state fails
     * the tick with both targets untouched.
+    *
+    * The two staging writes read only the persisted merge, so they run
+    * at the same time: top-K on a fresh thread, state on the caller's. A
+    * fresh thread, not a pool, because it inherits the caller's
+    * `SparkContext` local properties (a stream's query id inside
+    * `foreachBatch`); a pooled thread keeps its creator's. A failed write
+    * still joins the other before the merge is unpersisted, and rethrows
+    * with the other's failure suppressed; nothing is swapped.
     */
   def tick(lines: DataFrame, stateDir: String, topKDir: String,
            k: Int): (Long, Long) = {
@@ -66,13 +76,28 @@ object Main {
       else Pipeline.emptyState(spark)
     val run = Pipeline.incrementalRun(lines, state, k)
     try {
-      val stateRows = Sinks.stage(withLastUpdated(run.state), stateDir)
-      val topKRows = Sinks.stage(withLastUpdated(run.topK), topKDir)
+      val (stateRows, topKRows) = concurrently(
+        Sinks.stage(withLastUpdated(run.state), stateDir),
+        Sinks.stage(withLastUpdated(run.topK), topKDir))
       run.checkState()
       Sinks.swap(spark, stateDir)
       Sinks.swap(spark, topKDir)
       println(s"[graft] state=$stateRows rows, topK=$topKRows prefixes")
       (stateRows, topKRows)
     } finally run.merged.unpersist()
+  }
+
+  /** Runs `b` on a fresh thread while `a` runs on this one; returns once
+    * both have. The first failure is rethrown, the other suppressed on it.
+    */
+  private def concurrently[A, B](a: => A, b: => B): (A, B) = {
+    var bOut: Try[B] = null
+    val thread = new Thread(() =>
+      bOut = try Success(b) catch { case e: Throwable => Failure(e) },
+      "graft-tick-stage")
+    thread.start()
+    val aOut = try Try(a) finally thread.join()
+    aOut.failed.foreach { e => bOut.failed.foreach(e.addSuppressed); throw e }
+    (aOut.get, bOut.get)
   }
 }

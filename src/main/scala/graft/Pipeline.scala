@@ -8,15 +8,17 @@ import graft.ops._
 
 /** The rebuilt `IncrementalAutocomplete` dataflow (SURVEY.md §3.1):
   *
-  *   text lines → filter/normalize (P1,P2) → per-query counts (A1) →
-  *   merge with the state at query grain (J1) → prefix-expand (G1) →
+  *   text lines → filter/normalize (P1,P2) → per-query counts merged
+  *   with the state at query grain (A1,J1) → prefix-expand (G1) →
   *   top-K per prefix (W1,P4) → JSON completions (A3).
   *
   * Query-grain invariant: a query has one state row per prefix length
   * 2..min(len, 60), each carrying the query's total frequency. So its
-  * length-2 row alone holds its count: the merge reads those rows, sums
-  * per query and expands prefixes after the merge, with the same output
-  * rows as merging the exploded state. [[incrementalRun]] verifies it.
+  * length-2 row alone holds its count: the merge unions those rows with
+  * the batch's normalised lines as `(query, 1)`, sums per query in one
+  * shuffle (the partial aggregate counts the batch per task) and expands
+  * prefixes after the merge, with the same output rows as merging the
+  * exploded state. [[incrementalRun]] verifies the invariant.
   *
   * Fixes over the reference, both load-bearing at scale:
   *  - the per-query merge is persisted once and feeds BOTH sinks; the
@@ -51,9 +53,10 @@ object Pipeline {
   final case class Run(state: DataFrame, topK: DataFrame, merged: DataFrame,
                        checkState: () => Unit)
 
-  /** Merges the batch into `state` at query grain. The invariant check
-    * rides the state scan: the row count must equal the summed fan-out of
-    * the length-2 rows, and the summed frequency their frequency × fan-out.
+  /** Merges the batch into `state` at query grain, in one shuffle. The
+    * invariant check rides the state scan: the row count must equal the
+    * summed fan-out of the length-2 rows, and the summed frequency their
+    * frequency × fan-out.
     */
   def incrementalRun(lines: DataFrame, state: DataFrame, k: Int = 10): Run = {
     val obs = new Observation()
@@ -65,7 +68,9 @@ object Pipeline {
       total(state("frequency")).as("freq"),
       total(when(head, state("frequency") * fanOut)).as("head_freq"))
       .filter(head)
-    val merged = Merge(old, queryCounts(lines), Seq("query"), "frequency")
+    val batch = Normalize(lines, "value", "query")
+      .withColumn("frequency", lit(1L))
+    val merged = Merge(old, batch, Seq("query"), "frequency")
       .persist(StorageLevel.MEMORY_AND_DISK)
     Run(expand(merged), topCompletions(expand(merged), k), merged, () => {
       val m = obs.get

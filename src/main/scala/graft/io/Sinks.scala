@@ -77,22 +77,6 @@ object Sinks {
     df.write.mode(SaveMode.Overwrite).option("truncate", "true")
       .jdbc(url, table, props)
 
-  /** Size-targeted parquet writer: rebalances to ~`targetRows` rows per
-    * output file before writing. At 100 TB the small-files problem (one
-    * file per shuffle partition × thousands of partitions) is as
-    * destructive as skew; callers pick targetRows from their row width.
-    * Uses repartition (full shuffle) — with AQE the REBALANCE query hint
-    * also splits skewed partitions, so SQL users should prefer that form
-    * when available.
-    */
-  def parquetSized(df: DataFrame, path: String, targetRows: Long): Unit = {
-    // df is computed twice (count, then write) — pass a cached/
-    // checkpointed frame when the plan upstream is expensive
-    val total = df.count()
-    val files = math.max(1, math.ceil(total.toDouble / targetRows).toInt)
-    df.repartition(files).write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
   /** Hive-style partitioned parquet layout: one directory per partition
     * value. THE layout decision at 100 TB — queries filtering on the
     * partition column scan only matching directories (partition pruning,

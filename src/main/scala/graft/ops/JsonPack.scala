@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** A3 + JSON packing (SURVEY.md §2.4/§2.8): assemble ranked completions per
@@ -12,6 +13,14 @@ import org.apache.spark.sql.functions._
   * collects `struct(rank, query)`, sorts the array explicitly
   * (`sort_array` — structs sort lexicographically, rank first), then projects
   * the query back out. Deterministic under any partitioning.
+  *
+  * [[flat]] and [[nested]] collect over `Window.partitionBy(group)` and keep
+  * the rank-1 row, not a `groupBy`: on [[TopK]] output the rows already sit
+  * clustered and sorted by group, so the window adds no Sort and no
+  * Exchange, where `collect_list` under `groupBy` plans two
+  * `ObjectHashAggregate`s that fall back to sort-based aggregation past 128
+  * groups. Precondition: every group has a row of rank 1 (true of [[TopK]]
+  * output); a group without one is dropped.
   */
 object JsonPack {
 
@@ -21,22 +30,28 @@ object JsonPack {
     */
   def flat(df: DataFrame, group: String, rankCol: String, payload: String,
            out: String = "completions"): DataFrame =
-    df.groupBy(df(group))
-      .agg(to_json(sort_array(collect_list(struct(df(rankCol), df(payload))))
-        .getField(payload)).as(out))
+    rankOrdered(df, group, rankCol, struct(df(rankCol), df(payload)),
+      a => to_json(a.getField(payload)).as(out))
 
   /** Nested design-doc shape (SURVEY §2.11.4, `reports-steps/steps.docx`):
     * `[{"query": ..., "frequency": ...}, ...]` in rank order.
     */
   def nested(df: DataFrame, group: String, rankCol: String, query: String,
              freq: String, out: String = "completions"): DataFrame =
-    df.groupBy(df(group))
-      .agg(to_json(transform(
-        sort_array(collect_list(struct(
-          df(rankCol).as("r"), df(query).as("query"),
-          df(freq).as("frequency")))),
-        e => struct(e.getField("query").as("query"),
-                    e.getField("frequency").as("frequency")))).as(out))
+    rankOrdered(df, group, rankCol, struct(df(rankCol).as("r"),
+      df(query).as("query"), df(freq).as("frequency")),
+      a => to_json(transform(a, e => struct(e.getField("query").as("query"),
+        e.getField("frequency").as("frequency")))).as(out))
+
+  /** (group, pack(array of `elem` in rank order)) from each group's rank-1
+    * row; `elem` must lead with the rank so the array sorts by it.
+    */
+  private def rankOrdered(df: DataFrame, group: String, rankCol: String,
+                          elem: Column, pack: Column => Column): DataFrame =
+    df.select(df(group), df(rankCol),
+        collect_list(elem).over(Window.partitionBy(df(group))).as("__elems"))
+      .filter(col(rankCol) === 1)
+      .select(col(group), pack(sort_array(col("__elems"))))
 
   /** S5 document frame — the reference's MongoDB collection record
     * (`reports-steps/steps.docx` schema; `IncrementalAutocomplete.java:

@@ -145,6 +145,45 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), s"cartesian in join plan:\n$p")
   }
 
+  private def exchanges(p: String): Int =
+    p.linesIterator.count(l => l.contains("Exchange") && !l.contains("Reused"))
+
+  test("topCompletions over a cached frame packs inside the rank window") {
+    // the JSON pack rides the top-K window's clustering and sort: no
+    // collect_list aggregate (ObjectHashAggregate falls back to sorting
+    // past 128 groups), and no Sort or Exchange beyond the top-K's own
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val id = col("id")
+    val freq = spark.range(0, 3000, 1, 4)
+      .select(concat(lit("p"), (id % 400).cast("string")).as("prefix"),
+        concat(lit("q"), id.cast("string")).as("query"),
+        (id % 7).as("frequency"))
+      .cache()
+    try {
+      val p = Pipeline.topCompletions(freq, k = 10)
+        .queryExecution.executedPlan.toString
+      assert(!p.contains("ObjectHashAggregate") && !p.contains("SortAggregate"),
+        s"top-K packing planned an aggregate:\n$p")
+      assert(exchanges(p) == 1, s"expected 1 exchange:\n$p")
+      val ranked = graft.ops.TopK(freq, Seq("prefix"), freq("frequency"),
+        Seq(freq("query")), 10).queryExecution.executedPlan.toString
+      def sorts(s: String) = s.linesIterator.count(_.contains("Sort ["))
+      assert(sorts(p) == sorts(ranked), s"the pack added a Sort:\n$p")
+    } finally freq.unpersist()
+  }
+
+  test("incrementalRun merges state and batch lines in one shuffle") {
+    val dir = TempDirs.create("graft-merge-plan")
+    Main.runOnce(spark, PipelineSpec.queryLog, s"$dir/state", s"$dir/topk", 3)
+    val state = spark.read.schema(Tables.freqTable).parquet(s"$dir/state")
+    val lines = graft.io.Sources.textLines(spark, PipelineSpec.queryLog)
+    val merged = Pipeline.incrementalRun(lines, state).merged
+    try {
+      val p = merged.queryExecution.executedPlan.toString
+      assert(exchanges(p) == 1, s"expected 1 exchange:\n$p")
+    } finally merged.unpersist()
+  }
+
   test("q_merge: union of co-partitioned aggs re-aggregates with no extra shuffle") {
     val p = plan("q_merge")
     val exchanges = p.linesIterator

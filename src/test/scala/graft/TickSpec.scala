@@ -11,10 +11,11 @@ import org.apache.spark.sql.{DataFrame, Row}
 import graft.ops.Merge
 import graft.util.Fs
 
-/** `Main.tick` merges at query grain, stages both outputs, checks the
-  * state's query-grain invariant, then swaps. These specs hold it to a
-  * row-grain reference, to failing a broken state before any swap, to
-  * recovering a swap that crashed midway, and to its job count.
+/** `Main.tick` merges at query grain, stages both outputs at the same
+  * time, checks the state's query-grain invariant, then swaps. These specs
+  * hold it to a row-grain reference, to failing a broken state or a failed
+  * staging write before any swap, to recovering a swap that crashed
+  * midway, and to its job count.
   */
 class TickSpec extends SparkSpec {
   import spark.implicits._
@@ -106,6 +107,70 @@ class TickSpec extends SparkSpec {
       assert((digest(stateDir), digest(topKDir)) == before,
         "a failed tick must leave both targets byte-identical")
     }
+  }
+
+  /** A target under a regular file: no write to it can succeed. */
+  private def unwritable(dir: String, name: String): String = {
+    Files.writeString(Paths.get(s"$dir/$name-blocker"), "not a directory")
+    s"$dir/$name-blocker/$name"
+  }
+
+  private def tree(dir: String): Option[Map[String, String]] =
+    if (Files.exists(Paths.get(dir))) Some(digest(dir)) else None
+
+  /** Runs a tick that must fail; asserts it left both targets as they
+    * were and no staging job, staging thread or persisted merge behind.
+    */
+  private def failedTick(stateDir: String, topKDir: String): Throwable = {
+    val sc = spark.sparkContext
+    val cached = sc.getPersistentRDDs.keySet
+    val before = (tree(stateDir), tree(topKDir))
+    val err = intercept[Exception](
+      Main.runOnce(spark, PipelineSpec.queryLog, stateDir, topKDir, 3))
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      "a staging job outlived the tick")
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.getName == "graft-tick-stage" && t.isAlive),
+      "the top-K staging thread outlived the tick")
+    assert(sc.getPersistentRDDs.keySet.subsetOf(cached),
+      "the tick left its merge persisted")
+    assert((tree(stateDir), tree(topKDir)) == before,
+      "a failed tick must leave both targets byte-identical")
+    err
+  }
+
+  /** Whether `err` or a cause names the regular file blocking `target`. */
+  private def mentions(err: Throwable, target: String): Boolean = {
+    val blocker = Paths.get(target).getParent.toString
+    Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains(blocker))
+  }
+
+  test("a failed top-K staging write fails a warm tick before any swap") {
+    val dir = TempDirs.create("graft-tick-topk-fail")
+    val stateDir = s"$dir/state"
+    Main.runOnce(spark, PipelineSpec.queryLog, stateDir, s"$dir/topk", 3)
+    val topKDir = unwritable(dir, "topk")
+    val err = failedTick(stateDir, topKDir)
+    assert(mentions(err, topKDir), s"not the top-K write's failure: $err")
+  }
+
+  test("a failed state staging write fails a first tick before any swap") {
+    val dir = TempDirs.create("graft-tick-state-fail")
+    val stateDir = unwritable(dir, "state")
+    val err = failedTick(stateDir, s"$dir/topk")
+    assert(mentions(err, stateDir), s"not the state write's failure: $err")
+  }
+
+  test("when both staging writes fail, one is rethrown, one suppressed") {
+    val dir = TempDirs.create("graft-tick-both-fail")
+    val (stateDir, topKDir) =
+      (unwritable(dir, "state"), unwritable(dir, "topk"))
+    val err = failedTick(stateDir, topKDir)
+    assert(mentions(err, stateDir), s"not the state write's failure: $err")
+    assert(err.getSuppressed.exists(mentions(_, topKDir)),
+      s"the top-K write's failure is not suppressed on it: $err")
   }
 
   test("a tick after a crash mid-swap restores .old and merges into it") {

