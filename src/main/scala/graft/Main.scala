@@ -1,9 +1,11 @@
 package graft
 
+import java.time.Instant
+
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.current_timestamp
+import org.apache.spark.sql.functions.lit
 
 import graft.io.{Sinks, Sources}
 
@@ -20,13 +22,14 @@ import graft.io.{Sinks, Sources}
   *  - no read-overwrite race: both outputs are staged before either is
   *    swapped, and a swap that crashed midway is recovered before reading;
   *  - both output tables carry `last_updated` (the production shape,
-  *    `IncrementalAutocomplete.java:107,129`) — excluded from oracle
+  *    `IncrementalAutocomplete.java:107,129`), one instant per tick, so a
+  *    tick's state and top-K rows agree on it — excluded from oracle
   *    queries only because it is nondeterministic.
   */
 object Main {
 
-  def withLastUpdated(df: DataFrame): DataFrame =
-    df.withColumn("last_updated", current_timestamp())
+  def withLastUpdated(df: DataFrame, at: Instant): DataFrame =
+    df.withColumn("last_updated", lit(at))
 
   def main(args: Array[String]): Unit = {
     require(args.length == 4,
@@ -57,7 +60,8 @@ object Main {
     * micro-batches' one tick. Both outputs are staged, and the state's
     * query-grain invariant checked, before either is swapped: a lost
     * cached block recomputes from the old state, and a broken state fails
-    * the tick with both targets untouched.
+    * the tick with both targets untouched. Both are stamped with one
+    * `last_updated`, taken once per tick.
     *
     * The two staging writes read only the persisted merge, so they run
     * at the same time: top-K on a fresh thread, state on the caller's. A
@@ -75,10 +79,11 @@ object Main {
         spark.read.schema(Tables.freqTable).parquet(stateDir)
       else Pipeline.emptyState(spark)
     val run = Pipeline.incrementalRun(lines, state, k)
+    val at = Instant.now()
     try {
       val (stateRows, topKRows) = concurrently(
-        Sinks.stage(withLastUpdated(run.state), stateDir),
-        Sinks.stage(withLastUpdated(run.topK), topKDir))
+        Sinks.stage(withLastUpdated(run.state, at), stateDir),
+        Sinks.stage(withLastUpdated(run.topK, at), topKDir))
       run.checkState()
       Sinks.swap(spark, stateDir)
       Sinks.swap(spark, topKDir)

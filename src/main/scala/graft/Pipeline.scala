@@ -9,8 +9,9 @@ import graft.ops._
 /** The rebuilt `IncrementalAutocomplete` dataflow (SURVEY.md §3.1):
   *
   *   text lines → filter/normalize (P1,P2) → per-query counts merged
-  *   with the state at query grain (A1,J1) → prefix-expand (G1) →
-  *   top-K per prefix (W1,P4) → JSON completions (A3).
+  *   with the state at query grain (A1,J1) → state: prefix-expand (G1);
+  *   top-K: ranked per prefix at query grain (W1,P4) → JSON completions
+  *   (A3).
   *
   * Query-grain invariant: a query has one state row per prefix length
   * 2..min(len, 60), each carrying the query's total frequency. So its
@@ -19,6 +20,11 @@ import graft.ops._
   * shuffle (the partial aggregate counts the batch per task) and expands
   * prefixes after the merge, with the same output rows as merging the
   * exploded state. [[incrementalRun]] verifies the invariant.
+  *
+  * The top-K never sees the expanded rows either: [[ops.PrefixTopK]]
+  * ranks every prefix in one query-sorted pass over the merge, with the
+  * same output as [[topCompletions]] over [[expand]], which stays for
+  * callers that hold prefix-grain rows.
   *
   * Fixes over the reference, both load-bearing at scale:
   *  - the per-query merge is persisted once and feeds BOTH sinks; the
@@ -46,9 +52,10 @@ object Pipeline {
     */
   def batchCounts(lines: DataFrame): DataFrame = expand(queryCounts(lines))
 
-  /** New state and top-K, both expanded from the persisted per-query
-    * merge `merged`, which the caller unpersists. `checkState` throws if
-    * the input state broke the invariant; call it once `merged` is built.
+  /** New state (expanded) and top-K (ranked at query grain), both from
+    * the persisted per-query merge `merged`, which the caller unpersists.
+    * `checkState` throws if the input state broke the invariant; call it
+    * once `merged` is built.
     */
   final case class Run(state: DataFrame, topK: DataFrame, merged: DataFrame,
                        checkState: () => Unit)
@@ -72,7 +79,7 @@ object Pipeline {
       .withColumn("frequency", lit(1L))
     val merged = Merge(old, batch, Seq("query"), "frequency")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    Run(expand(merged), topCompletions(expand(merged), k), merged, () => {
+    Run(expand(merged), PrefixTopK(merged, k), merged, () => {
       val m = obs.get
       if (m("rows") != m("head_rows") || m("freq") != m("head_freq"))
         throw new IllegalStateException(

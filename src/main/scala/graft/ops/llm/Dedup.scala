@@ -497,8 +497,8 @@ object Dedup {
     * `graft_knn_bucket_cap.n_buckets_at_cap` (a `Dataset.observe`
     * CollectMetrics node: exactly one surviving row per at-cap bucket
     * carries rank == maxBucket) reports per-run how many buckets hit the
-    * cap; production listeners (QueryExecutionListener /
-    * StreamingQueryListener) alert on it. The metric counts buckets of
+    * cap. It is emitted on every run, but no main-code listener reads it
+    * yet (ROADMAP #3); today only specs do. The metric counts buckets of
     * size >= maxBucket — a bucket of EXACTLY maxBucket rows is counted
     * though nothing was dropped (the boundary over-report is the price
     * of keeping the CollectMetrics node ABOVE the rank filter, where it

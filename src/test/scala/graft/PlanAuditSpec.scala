@@ -184,6 +184,42 @@ class PlanAuditSpec extends SparkSpec {
     } finally merged.unpersist()
   }
 
+  test("the tick's top-K ranks the merge in one unexploded, full-width shuffle") {
+    // query-grain ranking (ops.PrefixTopK): the persisted merge is hashed
+    // by 2-char head and scanned in query order — no prefix explode below
+    // the shuffle, no rank or collect window, and the ~18x fan-out stage
+    // keeps spark.sql.shuffle.partitions tasks under AQE (an AQEShuffleRead
+    // would coalesce it)
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+      AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{WindowExec,
+      WindowGroupLimitExec}
+    val dir = TempDirs.create("graft-topk-plan")
+    Main.runOnce(spark, PipelineSpec.queryLog, s"$dir/state", s"$dir/topk", 3)
+    val state = spark.read.schema(Tables.freqTable).parquet(s"$dir/state")
+    val lines = graft.io.Sources.textLines(spark, PipelineSpec.queryLog)
+    val run = Pipeline.incrementalRun(lines, state, k = 3)
+    try {
+      run.topK.collect()
+      val p = run.topK.queryExecution.executedPlan
+      val plans = new AdaptiveSparkPlanHelper {}
+      val shuffles = plans.collect(p) { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size == 1, s"expected 1 exchange above the merge:\n$p")
+      assert(plans.collect(shuffles.head) { case g: GenerateExec => g }.isEmpty,
+        s"prefixes exploded below the shuffle:\n$p")
+      assert(plans.collect(p) {
+        case w: WindowExec => w
+        case w: WindowGroupLimitExec => w
+      }.isEmpty, s"top-K planned a window:\n$p")
+      assert(plans.collect(p) { case r: AQEShuffleReadExec => r }.isEmpty,
+        s"AQE coalesced the ranking stage:\n$p")
+      assert(shuffles.head.outputPartitioning.numPartitions ==
+        spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    } finally run.merged.unpersist()
+  }
+
   test("q_merge: union of co-partitioned aggs re-aggregates with no extra shuffle") {
     val p = plan("q_merge")
     val exchanges = p.linesIterator

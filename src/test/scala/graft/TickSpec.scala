@@ -76,6 +76,22 @@ class TickSpec extends SparkSpec {
       q.length < 2 || q != q.trim.toLowerCase })
   }
 
+  test("a tick stamps its state and top-K rows with one last_updated") {
+    val dir = TempDirs.create("graft-tick-stamp")
+    val (stateDir, topKDir) = (s"$dir/state", s"$dir/topk")
+    def stamps(target: String): Seq[java.sql.Timestamp] =
+      spark.read.parquet(target).select("last_updated").distinct()
+        .as[java.sql.Timestamp].collect().toSeq
+    val ticks = (1 to 2).map { _ =>
+      Main.runOnce(spark, PipelineSpec.queryLog, stateDir, topKDir, 3)
+      val state = stamps(stateDir)
+      assert(state.size == 1, s"state rows carry ${state.size} stamps")
+      assert(stamps(topKDir) == state, "top-K and state stamps differ")
+      state.head
+    }
+    assert(ticks(1).after(ticks(0)), "the warm tick kept a stale stamp")
+  }
+
   private val corruptions: Seq[(String, Seq[Row] => Seq[Row])] = Seq(
     "one prefix row's frequency bumped" -> { rows =>
       val i = rows.indexWhere(_.getString(0) == "sou")
