@@ -5,22 +5,23 @@ import org.apache.spark.sql.SparkSession
 /** Driver-run benchmark: executes every declared query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
-  * Measurement rules (VERDICT r1 "What's wrong" #2):
+  * Measurement rules:
   *  - results are written to the `noop` sink, not `.count()`-ed — count on
   *    top of an aggregate lets ColumnPruning drop expensive projections
   *    (q_topk_collect's to_json/collect_list never executed under count);
   *  - one untimed warmup query absorbs JVM/codegen/parquet-footer warmup
   *    instead of billing it to whichever query runs first;
-  *  - the dedup family's shared pair/signature bases (queries.SharedBases)
-  *    build cold in their own timed phase after warmup — published as
-  *    "shared_base_build" and INCLUDED in the headline total — so a
-  *    query's time never depends on whether an earlier consumer already
-  *    built the index;
+  *  - the shared bases of the dedup family (the queries.SharedBases
+  *    memo) and the one-off query fixtures build cold in their own timed
+  *    phase after warmup — published as "shared_base_build", with one
+  *    line per item in "base_build_detail", and INCLUDED in the headline
+  *    total — so a query's time never depends on whether an earlier
+  *    consumer already built the base;
   *  - headline "value"/"queries" publish min(first, rerun) for the
-  *    handful of gate-outlier queries the audit pass reran (r13 verdict
-  *    #2: the r13 sweep billed a 3-4× environmental window to the
-  *    headline while the reruns sat at their medians — the headline must
-  *    track the engine, not the sandbox). The unfolded evidence stays
+  *    handful of gate-outlier queries the audit pass reran: a host load
+  *    wave can cover one measurement of a query while its rerun sits at
+  *    its median, and the headline must track the engine, not the
+  *    host. The unfolded evidence stays
   *    lossless: "run1" has every cold first measurement, "retried" the
   *    raw (first, rerun) pairs. A genuine regression is slow on BOTH
   *    runs, so min() cannot hide one;
@@ -130,21 +131,21 @@ object Bench {
       }
       cleanup()
     }
-    // warmup buys JIT/codegen state only — shared index bases built by a
+    // warmup buys JIT/codegen state only — shared bases built by a
     // warmup query are dropped, then rebuilt COLD in an explicitly timed
-    // index-build phase (the TPC load-phase pattern): the dedup family's
-    // shared pair/signature bases are an index reused across ~11 queries,
-    // so billing the build to whichever consumer happens to run first
-    // would make that query's time depend on sweep order. The build time
-    // is published as "shared_base_build" AND included in the headline
-    // total — nothing is untimed, it just has its own line item.
+    // base phase (the TPC load-phase pattern): each base is reused by
+    // several queries, so billing the build to whichever consumer happens
+    // to run first would make that query's time depend on sweep order.
+    // The build time is published as "shared_base_build" AND included in
+    // the headline total — nothing is untimed, it just has its own line
+    // item.
     canary("post_warmup")
     graft.queries.SharedBases.invalidateAll(spark)
     // Per-item try/catch + per-item timing: one base failing must not
     // silently skip the rest (a skipped IncrFixture would bill the fixture
     // write to q_pipeline_incremental's timer), and when shared_base_build
-    // regresses (r8: 5.5 s → 35.5 s in the driver sweep) the detail map
-    // says WHICH base paid — published in BENCH_FULL.json.
+    // regresses the detail map says WHICH base paid — published in
+    // BENCH_FULL.json.
     val baseDetail = scala.collection.mutable.LinkedHashMap[String, Double]()
     val tBase = System.nanoTime()
     def timedBase(name: String)(body: => Unit): Unit = {
@@ -154,19 +155,8 @@ object Bench {
       }
       baseDetail(name) = (System.nanoTime() - t0) / 1e9
     }
-    // Cross-sweep warm start (r12 verdict #7): hydrate the five memo
-    // bases from the fingerprint-keyed snapshot store when this
-    // testdata was already swept by a previous bench JVM — the builds
-    // below then hit the memo and cost ~0, the production "load the
-    // index, don't rebuild it" shape. A cold sweep builds as before
-    // and snapshots at the end. SPARK_GRAFT_NO_WARM=1 forces the cold
-    // path (honest cold-build measurement).
-    val noWarm = sys.env.get("SPARK_GRAFT_NO_WARM").contains("1")
-    var warmBases = 0
-    if (!noWarm) timedBase("warm_load") {
-      warmBases = graft.queries.SharedBases.warmStart(spark, sfDir)
-        .count(_._2)
-    }
+    // The five SharedBases memo bases: the memo lives only as long as
+    // this session, so every sweep builds them here.
     timedBase("minhash_pairs") {
       graft.queries.SharedBases.minhashPairs(spark, sfDir) }
     timedBase("minhash_sigs") {
@@ -177,31 +167,26 @@ object Bench {
       graft.queries.SharedBases.dbscanRoles(spark, sfDir) }
     timedBase("knn_edges") {
       graft.queries.SharedBases.knnEdges(spark, sfDir) }
-    // q_pipeline_incremental's 24-hourly-file fixture (r7 verdict #1):
-    // built HERE, timed, so the query's own timer measures the glob
-    // read + two incremental runs instead of 24-way small-file write
-    // I/O (the one r7 bench flag a rerun did not clear).
+    // q_pipeline_incremental's 24-hourly-file fixture: built HERE, timed,
+    // so the query's own timer measures the glob read + two incremental
+    // runs instead of 24-way small-file write I/O.
     timedBase("incr_fixture") {
       graft.queries.IncrFixture.paths(spark, sfDir); () }
-    // q_scan_* format fixtures (r8): same rule — the queries time the
+    // q_scan_* format fixtures: same rule — the queries time the
     // SCAN, the one-off fixture write bills the shared-base phase.
     Seq("csv", "json", "orc", "part").foreach { f =>
       timedBase(s"fixture_$f") {
         graft.queries.FormatFixture.path(spark, sfDir, f); () }
     }
-    // bucketed catalog tables (r11): q_join_bucketed times the
+    // bucketed catalog tables: q_join_bucketed times the
     // co-located JOIN, the one-off bucketed writes bill here.
     timedBase("fixture_bucketed") {
       graft.queries.FormatFixture.bucketedTables(spark, sfDir); () }
-    // streaming staged sources (r10): the ten streaming entries share
-    // four memoized staged layouts — the entries time the STREAM, the
+    // streaming staged sources: the streaming entries share
+    // five memoized staged layouts — the entries time the STREAM, the
     // corpus staging writes bill here.
     timedBase("fixture_stream") {
       graft.queries.StreamStaging.prebuild(spark, sfDir) }
-    // one-off snapshot write of any base the store was missing (warm
-    // sweeps skip it structurally — everything already present)
-    if (!noWarm) timedBase("snapshot") {
-      graft.queries.SharedBases.snapshot(spark, sfDir) }
     val baseBuild = (System.nanoTime() - tBase) / 1e9
     canary("post_base_build")
     // Streaming-engine warmup, untimed (r16 optimization round): the
@@ -445,7 +430,7 @@ object Bench {
         f""""total_raw":$totalRaw%.3f,""" +
         s""""run1":${qsJson(run1.toSeq)},""" +
         s""""errors":${errsJson(160)},"retried":$retr,""" +
-        f""""shared_base_build":$baseBuild%.3f,"shared_base_warm":$warmBases,""" +
+        f""""shared_base_build":$baseBuild%.3f,""" +
         s""""base_build_detail":$baseDet,""" +
         f""""canary":${qsJson(canaries.toSeq)},"canary_skew":$canarySkew%.2f,""" +
         f""""canary_q":${qsJson(canaryQ.toSeq)},""" +

@@ -18,21 +18,6 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Env-var boolean with fail-fast parsing: a raw env value fed into a
-    * boolean Spark conf ("1", "TRUE ", a typo) would otherwise surface as
-    * a parse error deep inside RocksDB conf handling at the FIRST stateful
-    * query, long after session construction. Accepts the usual spellings
-    * case-insensitively; anything else is an immediate, named error.
-    */
-  private[graft] def envFlag(name: String, default: Boolean): Boolean =
-    sys.env.get(name).map(_.trim.toLowerCase) match {
-      case None | Some("") => default
-      case Some("1" | "true" | "yes" | "on") => true
-      case Some("0" | "false" | "no" | "off") => false
-      case Some(v) => throw new IllegalArgumentException(
-        s"$name must be a boolean (got '$v'); use true/false, 1/0, yes/no, on/off")
-    }
-
   def builder(appName: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
@@ -92,7 +77,7 @@ object GraftSession {
       // per updated key. numRowsTotal then reads -1; specs that assert
       // state-row eviction re-enable it per query.
       .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        envFlag("SPARK_GRAFT_TRACK_ROWS", default = false).toString)
+        "false")
       // catalog-table storage (bucketed layouts) goes to a per-process
       // temp dir, never ./spark-warehouse in the caller's CWD; pid
       // suffix keeps concurrent driver/bench JVMs from clobbering each

@@ -87,24 +87,18 @@ object Pipeline {
     })
   }
 
-  /** (prefix, query, frequency) → (prefix, completions-json) top-K table.
+  /** (prefix, query, frequency) → (prefix, completions-json) top-K table
+    * over prefix-grain rows; the tick ranks its query-grain merge with
+    * [[PrefixTopK]] instead.
     *
-    * Skew (SURVEY §4.3): the default path relies on the native
-    * Partial+Final WindowGroupLimit — each map task ships only k rows per
-    * prefix, so a hot 2-char prefix shuffles k×tasks rows, not its fan-in
-    * (plan-audited on a skewed fixture in PlanAuditSpec). `salts > 1`
-    * switches to [[TopK.salted]], which additionally spreads the hot
-    * prefix's FINAL pass over `salts` reducers — for deployments where
-    * k×tasks on one reducer is itself a straggler (100k-task clusters).
-    * Identical output either way.
+    * Skew (SURVEY §4.3): the native Partial+Final WindowGroupLimit ships
+    * only k rows per prefix from each map task, so a hot 2-char prefix
+    * shuffles k×tasks rows, not its fan-in (plan-audited on a skewed
+    * fixture in PlanAuditSpec).
     */
-  def topCompletions(freq: DataFrame, k: Int, salts: Int = 1): DataFrame = {
-    val ranked =
-      if (salts > 1)
-        TopK.salted(freq, Seq("prefix"), freq("frequency"),
-          Seq(freq("query")), k, salts)
-      else TopK(freq, Seq("prefix"), freq("frequency"),
-        Seq(freq("query")), k)
+  def topCompletions(freq: DataFrame, k: Int): DataFrame = {
+    val ranked = TopK(freq, Seq("prefix"), freq("frequency"),
+      Seq(freq("query")), k)
     JsonPack.flat(ranked, "prefix", "rnk", "query")
   }
 

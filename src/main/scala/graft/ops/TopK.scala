@@ -36,35 +36,4 @@ object TopK {
     df.withColumn(rankCol, row_number().over(w))
       .filter(col(rankCol) <= k)
   }
-
-  /** Explicit salted two-phase top-K for pathological group fan-in
-    * (SURVEY §4.3: a hot 2-char prefix can hold a large share of the
-    * corpus). The native plan above already map-side-limits, but its
-    * FINAL pass still lands k rows per map task of a hot group on ONE
-    * reducer — k=10 across 100k map tasks is a 1M-row straggler
-    * partition. Salting inserts a spreading pass: phase 1 ranks within
-    * (group, salt) — the hot group fans out over `salts` reducers, each
-    * itself map-side-limited — phase 2 re-ranks the ≤ salts×k survivors
-    * per group, a trivially small final window. The salt is a
-    * deterministic hash of the tie-break columns, so reruns shard
-    * identically. Output is identical to [[apply]] whenever
-    * (metric, tieBreaks) totally orders each group (the same contract
-    * apply needs for deterministic ranks); equivalence asserted in
-    * TopKSpec, plan shape in PlanAuditSpec.
-    */
-  def salted(df: DataFrame, groupKeys: Seq[String], metric: Column,
-             tieBreaks: Seq[Column], k: Int, salts: Int = 64,
-             rankCol: String = "rnk"): DataFrame = {
-    require(salts > 0, s"salts must be positive, got $salts")
-    require(tieBreaks.nonEmpty, "salted top-k salts on the tie-break columns")
-    val w1 = Window
-      .partitionBy(groupKeys.map(df(_)) :+ col("__salt"): _*)
-      .orderBy(metric.desc +: tieBreaks.map(_.asc): _*)
-    val local = df
-      .withColumn("__salt", pmod(xxhash64(tieBreaks: _*), lit(salts)))
-      .withColumn("__lr", row_number().over(w1))
-      .filter(col("__lr") <= k)
-      .drop("__salt", "__lr")
-    apply(local, groupKeys, metric, tieBreaks, k, rankCol)
-  }
 }

@@ -18,10 +18,8 @@ import org.apache.spark.sql.functions._
   *    verified with exact Jaccard. Candidate volume is controlled by (k,
   *    bands) — the standard S-curve — independent of corpus size.
   *
-  * Hash choice: the oracle-checked path uses sha256 (bit-identical in Spark
-  * and DuckDB); `minhashSigsFast` swaps in xxhash64 (one 64-bit mix per
-  * shingle instead of a crypto digest) for production throughput — same
-  * algebra, different hash family.
+  * Hash choice: MinHash signatures use sha256, which is bit-identical in
+  * Spark and DuckDB, so every signature-derived result is oracle-checked.
   */
 object Dedup {
 
@@ -80,42 +78,6 @@ object Dedup {
       .select(col("doc"), TextOps.shingleSet(col("_t"), n).as("shs"))
       .withColumn("n_", size(col("shs")))
       .localCheckpoint(true)
-    ppjoin(withSet, num, den)
-  }
-
-  /** The shingle-set table that IS the exact-Jaccard/PPJoin index:
-    * (doc, shs). Persist it — bucketed by doc via `Sinks.writeBucketed` —
-    * and a later session mines with [[ngramJaccardPairsFromIndex]]
-    * without ever re-tokenizing or re-shingling the corpus (the shingle
-    * pass dominates the standalone miner). The cross-session twin of
-    * `minhashIndex` for the exact tier.
-    */
-  def jaccardIndex(df: DataFrame, idCol: String, textCol: String,
-                   n: Int = 3): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    df.select(df(idCol).as("doc"), df(textCol).as("_t"))
-      .repartition(par)
-      .select(col("doc"), TextOps.shingleSet(col("_t"), n).as("shs"))
-  }
-
-  /** Full PPJoin mining from a persisted [[jaccardIndex]] table —
-    * row-identical to [[ngramJaccardPairs]] on the corpus the index was
-    * built from (spec-asserted), costing bucketed scans of (doc, shs)
-    * instead of the corpus shingle pass. No localCheckpoint here: the
-    * branches re-read the stored table, which is exactly what the store
-    * is for, and severing lineage would hide its bucketing from the
-    * verify joins.
-    */
-  def ngramJaccardPairsFromIndex(indexBase: DataFrame,
-                                 num: Int = 8, den: Int = 10): DataFrame =
-    ppjoin(indexBase.select(col("doc"), col("shs"))
-      .withColumn("n_", size(col("shs"))), num, den)
-
-  /** PPJoin body over a prepared shingle base (doc, shs, n_) — shared by
-    * the standalone miner (checkpointed base) and the stored-index form
-    * (bucketed scans).
-    */
-  private def ppjoin(withSet: DataFrame, num: Int, den: Int): DataFrame = {
     val post = withSet.select(col("doc"), col("n_"),
       explode(col("shs")).as("g"))
     // document frequency per shingle as a WINDOW count, not groupBy+join:
@@ -281,12 +243,6 @@ object Dedup {
     */
   def minhashSig(hashes: Column, j: Int): Column =
     array_min(transform(hashes, h => substring(h, j * 8 + 1, 8)))
-
-  /** Production-speed signature: xxhash64 with per-signature seed. Not
-    * oracle-checked (xxhash64 is Spark-specific); covered by DedupSpec.
-    */
-  def minhashSigFast(shingleSet: Column, j: Int): Column =
-    array_min(transform(shingleSet, sh => xxhash64(lit(j), sh)))
 
   /** Shared MinHash front-end: shingle sets (base: doc, sh [, extra
     * carried columns]) and the exploded band-bucket table (banded: doc,
@@ -799,20 +755,6 @@ object Dedup {
     (banded.select(col("doc"), col("band"), col("bkey")),
       base.select(col("doc"), col("sh")))
   }
-
-  /** Full self-mining from a persisted index — the cross-session form of
-    * [[minhashDedup]]: candidates AND verification come entirely from the
-    * stored (bands, base) tables of [[minhashIndex]], so the corpus text
-    * is never rescanned or re-shingled. Row-identical to `minhashDedup`
-    * on the corpus the index was built from (spec-asserted). When the
-    * tables were written with `Sinks.writeBucketed` on their join keys
-    * ((band, bkey) and (doc)), the bucket self-join and both verify
-    * joins read pre-bucketed scans.
-    */
-  def minhashPairsFromIndex(indexBands: DataFrame, indexBase: DataFrame,
-                            num: Int = 8, den: Int = 10): DataFrame =
-    minePairs(indexBase.select(col("doc"), col("sh")),
-      indexBands.select(col("doc"), col("band"), col("bkey")), num, den)
 
   /** Incremental near-dup mining against a PERSISTED index — the
     * production form of [[minhashDeltaPairs]]: the corpus side arrives

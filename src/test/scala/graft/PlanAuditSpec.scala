@@ -105,8 +105,9 @@ class PlanAuditSpec extends SparkSpec {
   test("topCompletions on a skewed prefix: map-side limit + correct hot top-k") {
     // SURVEY §4.3 skew shape: one hot 2-char prefix holding 5000 distinct
     // queries, a uniform tail, spread over several map tasks. Audits the
-    // PRODUCTION path (Pipeline.topCompletions) at the fixture the skew
-    // guard exists for, in both the native and salted variants.
+    // prefix-grain ranking (Pipeline.topCompletions, which TypedPipeline
+    // uses; the tick ranks with ops.PrefixTopK) at the fixture the skew
+    // guard exists for.
     import spark.implicits._
     import org.apache.spark.sql.functions.{get_json_object, lit}
     val hot = (1 to 5000).map(i => ("ho", s"how to $i", (i % 7 + 1).toLong))
@@ -120,16 +121,9 @@ class PlanAuditSpec extends SparkSpec {
       p.linesIterator.count(_.contains("WindowGroupLimit")) >= 2,
       s"skewed production plan lost the two-phase group limit:\n$p")
 
-    val salted = Pipeline.topCompletions(freq, k = 10, salts = 16)
-    val ps = salted.queryExecution.executedPlan.toString
-    assert(ps.linesIterator.count(_.contains("WindowGroupLimit")) >= 3,
-      s"salted plan must carry the extra spreading phase:\n$ps")
-
-    // both variants agree, and the hot prefix's winner is the true argmax:
-    // highest frequency (7), ties broken by query asc
+    // the hot prefix's winner is the true argmax: highest frequency (7),
+    // ties broken by query asc
     val n = native.as[(String, String)].collect().toMap
-    val s = salted.as[(String, String)].collect().toMap
-    assert(n == s, "salted completions diverged from native")
     assert(n.size == 1001)
     val top = get_json_object(lit(n("ho")), "$[0]")
     val first = spark.range(1).select(top).as[String].head()
@@ -745,27 +739,18 @@ class PlanAuditSpec extends SparkSpec {
     // the declared registry entries pass dim=64 so building the plan
     // must not launch any Spark job (at 100 TB that scan is a full
     // corpus pass before the query even starts)
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(j.stageInfos.map(_.name).mkString("|"))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
       SparkEntry.queries("q_similarity_ann")(spark, sf0001)
       SparkEntry.queries("q_similarity_ann_exact")(spark, sf0001)
       SparkEntry.queries("q_dedup_embed")(spark, sf0001)
-      Thread.sleep(500) // let any in-flight job-start events post
-      // "parquet at ..." jobs are footer/schema reads from the source
-      // registration — metadata-sized, not corpus scans; anything else
-      // (e.g. the inference aggregate's collect) is a real pass
-      val scans = jobs.toArray(Array.empty[String])
-        .filterNot(_.startsWith("parquet at"))
-      assert(scans.isEmpty,
-        s"eager job(s) ran while only CONSTRUCTING the plans: " +
-          scans.mkString("; "))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // "parquet at ..." jobs are footer/schema reads from the source
+    // registration — metadata-sized, not corpus scans; anything else
+    // (e.g. the inference aggregate's collect) is a real pass
+    val scans = jobs.filterNot(_.startsWith("parquet at"))
+    assert(scans.isEmpty,
+      s"eager job(s) ran while only CONSTRUCTING the plans: " +
+        scans.mkString("; "))
   }
 
   test("q_containment: df from a window, prefix-posting equi-join, no cartesian") {

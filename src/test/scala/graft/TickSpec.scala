@@ -5,7 +5,6 @@ import java.security.MessageDigest
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.ops.Merge
@@ -211,19 +210,9 @@ class TickSpec extends SparkSpec {
     val dir = TempDirs.create("graft-tick-jobs")
     val (stateDir, topKDir) = (s"$dir/state", s"$dir/topk")
     Main.runOnce(spark, PipelineSpec.queryLog, stateDir, topKDir, 10)
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.add(j.stageInfos.map(_.name).mkString("|"))
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graft.ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
+    val names = jobsDuring {
       Main.runOnce(spark, PipelineSpec.queryLog, stateDir, topKDir, 10)
-      org.apache.spark.graft.ListenerBus.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    val names = jobs.asScala.toSeq
+    }
     assert(names.size == 6, s"a count or read-back crept back in:\n" +
       names.mkString("\n"))
   }

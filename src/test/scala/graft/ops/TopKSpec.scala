@@ -41,22 +41,4 @@ class TopKSpec extends SparkSpec {
     val out = TopK(d, Seq("grp"), d("freq"), Seq(d("item")), 100)
     assert(out.count() == 7)
   }
-
-  test("salted two-phase top-k is bit-identical to the native plan") {
-    // skewed fixture: one hot group with many members (heavy ties — the
-    // case where a wrong salt/re-rank interaction would show), plus small
-    // groups with fewer members than k
-    val rows = (1 to 500).map(i => ("hot", f"i$i%04d", (i % 9).toLong)) ++
-      Seq(("tiny", "a", 5L), ("tiny", "b", 5L), ("one", "x", 1L))
-    val d = rows.toDF("grp", "item", "freq").repartition(7)
-    val native = TopK(d, Seq("grp"), d("freq"), Seq(d("item")), 10)
-      .select("grp", "item", "rnk").as[(String, String, Int)]
-      .collect().toSet
-    for (salts <- Seq(1, 3, 64)) {
-      val s = TopK.salted(d, Seq("grp"), d("freq"), Seq(d("item")), 10, salts)
-        .select("grp", "item", "rnk").as[(String, String, Int)]
-        .collect().toSet
-      assert(s == native, s"salted($salts) diverged from native")
-    }
-  }
 }

@@ -102,26 +102,11 @@ class DedupSpec extends SparkSpec {
     val capped = Dedup.knnCandidates(bands, 32)
     // the cap trigger must be OBSERVED: 1000 identical docs share one
     // bucket per band (4 bands) and every one is oversize
-    @volatile var observed = Map.empty[String, org.apache.spark.sql.Row]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit = observed ++= qe.observedMetrics
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val cappedN = capped.count()
-    try {
-      var waited = 0
-      while (!observed.contains("graft_knn_bucket_cap") && waited < 10000) {
-        Thread.sleep(100); waited += 100
-      }
-      assert(observed.get("graft_knn_bucket_cap")
-        .exists(_.getLong(0) == 4L),
-        s"expected 4 at-cap buckets observed: $observed")
-    } finally spark.listenerManager.unregister(listener)
+    var cappedN = 0L
+    val observed = observedDuring { cappedN = capped.count() }
+    assert(observed.get("graft_knn_bucket_cap")
+      .exists(_.getLong(0) == 4L),
+      s"expected 4 at-cap buckets observed: $observed")
     // ≤ cap partners per doc per band (4 bands; distinct() may merge)
     assert(cappedN <= 1000L * 32 * 4,
       s"capped candidates $cappedN exceed the n·cap·bands bound")
@@ -434,16 +419,5 @@ class DedupSpec extends SparkSpec {
         .map { case ((b, c), i) => (a, b, i + 1, c) }
     }.toSet
     assert(got.toSet == expected)
-  }
-
-  test("fast xxhash signatures: equal shingle sets get equal sigs") {
-    val d = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"),
-      (3L, "zeta eta theta iota")).toDF("doc_id", "text")
-    val sh = TextOps.shingleSet(d("text"), 3)
-    val sigs = d.select(d("doc_id"),
-        Dedup.minhashSigFast(sh, 0).as("s0"), Dedup.minhashSigFast(sh, 1).as("s1"))
-      .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    assert(sigs(1L) == sigs(2L))
-    assert(sigs(1L) != sigs(3L))
   }
 }

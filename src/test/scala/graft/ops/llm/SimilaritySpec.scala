@@ -405,27 +405,15 @@ class SimilaritySpec extends SparkSpec {
       .toDF("id", "cell", "vec")
     // the cap must be OBSERVABLE, not silent: the CollectMetrics node
     // reports how many cells were actually capped (here: the one cell)
-    @volatile var observed = Map.empty[String, org.apache.spark.sql.Row]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit = observed ++= qe.observedMetrics
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
     val capped = Similarity.semDedupPairs(df, 0.9, targetCell = 64,
       maxCell = 16)
-    val pairs = capped.select("a", "b").as[(Long, Long)].collect().toSet
-    try {
-      var waited = 0
-      while (!observed.contains("graft_semdedup_cell_cap") &&
-          waited < 10000) { Thread.sleep(100); waited += 100 }
-      assert(observed.get("graft_semdedup_cell_cap")
-        .exists(_.getLong(0) == 1L),
-        s"cap trigger must be observed: $observed")
-    } finally spark.listenerManager.unregister(listener)
+    var pairs = Set.empty[(Long, Long)]
+    val observed = observedDuring {
+      pairs = capped.select("a", "b").as[(Long, Long)].collect().toSet
+    }
+    assert(observed.get("graft_semdedup_cell_cap")
+      .exists(_.getLong(0) == 1L),
+      s"cap trigger must be observed: $observed")
     assert(pairs.nonEmpty && pairs.size <= 600 * 16,
       s"cap failed to bound pairs: ${pairs.size}")
     // coverage: every doc appears in at least one pair

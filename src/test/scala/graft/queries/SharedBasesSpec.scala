@@ -77,109 +77,6 @@ class SharedBasesSpec extends SparkSpec {
       s"stale shared base served after table rewrite ($before -> $after)")
   }
 
-  test("persisted index: a NEW session serves q_dedup_clusters from the store") {
-    import org.apache.spark.sql.functions._
-    val prefix = "graft_sb_roundtrip"
-    spark.sql(s"DROP TABLE IF EXISTS ${prefix}_bands")
-    spark.sql(s"DROP TABLE IF EXISTS ${prefix}_base")
-    // q_dedup_clusters' exact shape: pairs -> CC -> cluster-size histogram
-    def clusters(pairs: org.apache.spark.sql.DataFrame) =
-      graft.ops.llm.Dedup.connectedComponents(pairs.select("a", "b"))
-        .groupBy("rep").agg(count(lit(1)).as("cluster_size"))
-        .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
-        .collect().map(_.toString).sorted.toSeq
-    val expected = clusters(SharedBases.minhashPairs(spark, sf0001))
-    // session 1 persists the index; "restart": memo cleared, new session
-    // state — only the metastore tables survive
-    SharedBases.persistIndex(spark, sf0001, prefix)
-    SharedBases.invalidateAll(spark)
-    val s2 = spark.newSession()
-    val pairs = SharedBases.minhashPairsFromStore(s2, prefix)
-    val plan = pairs.queryExecution.executedPlan.toString
-    assert(plan.contains(s"${prefix}_bands") &&
-      plan.contains(s"${prefix}_base"),
-      s"store tables must feed the mining:\n$plan")
-    assert(plan.contains("Bucketed: true"),
-      s"index scans must use their bucketing:\n$plan")
-    assert(!plan.toLowerCase.contains("documents.parquet"),
-      s"corpus must not be rescanned:\n$plan")
-    // row-identity of the pair base itself...
-    assert(pairs.collect().map(_.toString).sorted.toSeq ==
-      SharedBases.minhashPairs(spark, sf0001).collect()
-        .map(_.toString).sorted.toSeq,
-      "stored-index pairs must be row-identical to the in-session base")
-    // ...and of the full declared-query composition in the new session
-    assert(clusters(pairs) == expected,
-      "q_dedup_clusters served from the store must match")
-  }
-
-  test("persisted IVF index: a NEW session searches row-identical from the store") {
-    import org.apache.spark.sql.functions._
-    val prefix = "graft_sb_ivf_roundtrip"
-    spark.sql(s"DROP TABLE IF EXISTS ${prefix}_cents")
-    spark.sql(s"DROP TABLE IF EXISTS ${prefix}_cells")
-    val e = graft.Tables.table(spark, sf0001, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-    val expected = graft.ops.llm.Ivf.int8TopKExact(e,
-        e.filter(col("vec_id") < 10), k = 5, nClusters = 16, nprobe = 4)
-      .collect().map(_.toString).sorted.toSeq
-    assert(expected.nonEmpty)
-    // session 1 persists the index; "restart": only the tables survive
-    SharedBases.persistIvfIndex(spark, sf0001, prefix)
-    SharedBases.invalidateAll(spark)
-    val s2 = spark.newSession()
-    val q2 = graft.Tables.table(s2, sf0001, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .filter(col("vec_id") < 10)
-    val got = SharedBases.ivfTopKFromStore(s2, q2, k = 5, nprobe = 4,
-      prefix = prefix)
-    val plan = got.queryExecution.executedPlan.toString
-    assert(plan.contains(s"${prefix}_cells") &&
-      plan.contains(s"${prefix}_cents"),
-      s"store tables must feed the search:\n$plan")
-    assert(plan.contains("Bucketed: true"),
-      s"cell scans must use their bucketing:\n$plan")
-    // the corpus is served from the store: embeddings.parquet appears
-    // ONLY as the (pruned) query-side scan, never as a corpus rescan
-    val corpusScans = plan.linesIterator
-      .count(l => l.contains("FileScan") && l.contains("embeddings.parquet"))
-    assert(corpusScans == 1,
-      s"expected 1 query-side scan, got $corpusScans:\n$plan")
-    assert(got.collect().map(_.toString).sorted.toSeq == expected,
-      "store-served IVF search must be row-identical to the direct build")
-  }
-
-  test("persisted PQ index: a NEW session refines row-identical from the store") {
-    import org.apache.spark.sql.functions._
-    val prefix = "graft_sb_pq_roundtrip"
-    spark.sql(s"DROP TABLE IF EXISTS ${prefix}_books")
-    spark.sql(s"DROP TABLE IF EXISTS ${prefix}_codes")
-    val vecs = graft.Tables.table(spark, sf0001, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .toDF("id", "vec")
-    val books = graft.ops.llm.Pq.fitCodebooks(vecs, m = 8, k = 64,
-      iters = 1)
-    val codes = graft.ops.llm.Pq.encode(vecs, books, m = 8)
-    val expected = graft.ops.llm.Pq.refineTopKInt(vecs, codes, books,
-        vecs.filter(col("id") < 10), m = 8, k = 5, shortlist = 40)
-      .collect().map(_.toString).sorted.toSeq
-    assert(expected.nonEmpty)
-    SharedBases.persistPqIndex(spark, sf0001, prefix)
-    SharedBases.invalidateAll(spark)
-    val s2 = spark.newSession()
-    val q2 = graft.Tables.table(s2, sf0001, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .toDF("id", "vec").filter(col("id") < 10)
-    val got = SharedBases.pqRefineFromStore(s2, sf0001, q2, k = 5,
-      shortlist = 40, m = 8, prefix = prefix)
-    val plan = got.queryExecution.executedPlan.toString
-    assert(plan.contains(s"${prefix}_codes") &&
-      plan.contains(s"${prefix}_books"),
-      s"store tables must feed the ADC stage:\n$plan")
-    assert(got.collect().map(_.toString).sorted.toSeq == expected,
-      "store-served PQ refine must be row-identical to the direct build")
-  }
-
   test("ivfQuantizer: staged generation equals the direct build") {
     import org.apache.spark.sql.functions._
     val direct = graft.ops.llm.Ivf.int8Quantizer(
@@ -196,55 +93,6 @@ class SharedBasesSpec extends SparkSpec {
     assert(first == direct && second == direct,
       "staged quantizer must be identical to the direct build")
     assert(direct.size == 16)
-  }
-
-  test("persisted jaccard base: a NEW session mines row-identical from the store") {
-    val prefix = "graft_sb_jac_roundtrip"
-    spark.sql(s"DROP TABLE IF EXISTS ${prefix}_base")
-    val expected = SharedBases.jaccardPairs(spark, sf0001)
-      .collect().map(_.toString).sorted.toSeq
-    SharedBases.persistJaccardBase(spark, sf0001, prefix)
-    SharedBases.invalidateAll(spark)
-    val s2 = spark.newSession()
-    val pairs = SharedBases.jaccardPairsFromStore(s2, prefix)
-    val plan = pairs.queryExecution.executedPlan.toString
-    assert(plan.contains(s"${prefix}_base"),
-      s"store table must feed the mining:\n$plan")
-    assert(plan.contains("Bucketed: true"),
-      s"index scans must use their bucketing:\n$plan")
-    assert(!plan.toLowerCase.contains("documents.parquet"),
-      s"corpus must not be re-shingled:\n$plan")
-    assert(pairs.collect().map(_.toString).sorted.toSeq == expected,
-      "stored-base pairs must be row-identical to the in-session base")
-  }
-
-  test("snapshot store: a warm start serves row-identical bases") {
-    // cold memo builds, snapshot to the store, drop everything, then
-    // warm-start: the hydrated bases must be row-identical and the
-    // warm flags must report the stored ones as served
-    val coldPairs = SharedBases.minhashPairs(spark, sf0001)
-      .collect().map(_.toString).sorted.toSeq
-    val coldEdges = SharedBases.knnEdges(spark, sf0001)
-      .collect().map(_.toString).sorted.toSeq
-    SharedBases.snapshot(spark, sf0001)
-    SharedBases.invalidateAll(spark)
-    val warm = SharedBases.warmStart(spark, sf0001)
-    assert(warm("mh_pairs") && warm("knn_edges"),
-      s"stored bases must hydrate warm: $warm")
-    val warmPairs = SharedBases.minhashPairs(spark, sf0001)
-      .collect().map(_.toString).sorted.toSeq
-    val warmEdges = SharedBases.knnEdges(spark, sf0001)
-      .collect().map(_.toString).sorted.toSeq
-    assert(warmPairs == coldPairs,
-      "warm-served minhash pairs must be row-identical")
-    assert(warmEdges == coldEdges,
-      "warm-served knn edges must be row-identical")
-    // the warm load is a store read, not a re-mine: the memo entry's
-    // lineage must not touch the corpus text
-    val plan = SharedBases.minhashPairs(spark, sf0001)
-      .queryExecution.executedPlan.toString
-    assert(!plan.toLowerCase.contains("documents.parquet"),
-      s"warm base must come from the store, not a corpus rescan:\n$plan")
   }
 
   test("invalidateAll clears the retained set and unpersists the bases") {

@@ -6,17 +6,17 @@ import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.ops.llm.Dedup
 
-/** Adversarial-SKEW stress leg (r15 verdict #4): the uniform 128×
-  * replication leg proves the cap/salt machinery PRESENT but never
+/** Adversarial-SKEW stress leg: the uniform 128×
+  * replication leg proves the cap machinery PRESENT but never
   * observes it FIRING (`n_capped_buckets` is always 0 on organic data).
   * This harness builds Zipf-hot fixtures on top of the sf0.1 corpus —
-  * one LSH band bucket driven past `maxBucket`, one top-K group holding
-  * ~half the rows, one join key holding ~half the fact table — and runs
+  * one LSH band bucket driven past `maxBucket` and one join key holding
+  * ~half the fact table — and runs
   * the guarded paths against them, asserting:
   *   - the observed metrics actually fire (bucket cap > 0, AQE skew
   *     split in the executed plan);
   *   - output contracts hold (≤k partners per doc, deterministic
-  *     partner sample across reruns, salted ≡ unsalted top-K);
+  *     partner sample across reruns);
   *   - wall time stays bounded (reported; an uncapped hot bucket would
   *     be quadratic).
   *
@@ -115,40 +115,7 @@ object SkewStress {
     } finally spark.listenerManager.unregister(listener)
 
     // ---------------------------------------------------------------
-    // Leg 2: hot top-K group (TopK.salted's reason to exist). One
-    // prefix holds ~50% of 1M rows; salted and unsalted must agree
-    // bit-for-bit and the salted run must stay bounded.
-    // ---------------------------------------------------------------
-    {
-      val rows = spark.range(1000000L).select(
-        when(col("id") % 2 === 0, lit("ho"))
-          .otherwise(concat(lit("p"), (col("id") % 997).cast("string")))
-          .as("prefix"),
-        concat(lit("q"), col("id").cast("string")).as("query"),
-        pmod(xxhash64(col("id")), lit(100000L)).as("frequency"))
-        .localCheckpoint(true)
-      val (tPlain, hPlain) = time {
-        graft.ops.TopK(rows, Seq("prefix"), rows("frequency"),
-          Seq(rows("query")), k = 10)
-          .agg(count(lit(1)), bit_xor(xxhash64(col("prefix"), col("query"),
-            col("rnk")))).as[(Long, Long)].head()
-      }
-      val (tSalted, hSalted) = time {
-        graft.ops.TopK.salted(rows, Seq("prefix"), rows("frequency"),
-          Seq(rows("query")), k = 10)
-          .agg(count(lit(1)), bit_xor(xxhash64(col("prefix"), col("query"),
-            col("rnk")))).as[(Long, Long)].head()
-      }
-      assert(hPlain == hSalted,
-        s"salted top-K diverged from plain: $hPlain vs $hSalted")
-      out("topk_hot_group") =
-        f"""{"rows": 1000000, "hot_share": 0.5, """ +
-          f""""t_plain_sec": $tPlain%.2f, "t_salted_sec": $tSalted%.2f, """ +
-          f""""rows_out": ${hPlain._1}, "bit_equal": ${hPlain == hSalted}}"""
-    }
-
-    // ---------------------------------------------------------------
-    // Leg 3: hot join key under AQE skew-join. One key holds ~50% of a
+    // Leg 2: hot join key under AQE skew-join. One key holds ~50% of a
     // 4M-row fact side; with broadcast disabled (the big-big case the
     // guard exists for) AQE must split the skewed partition — asserted
     // from the executed plan — and the join must stay bounded.
@@ -199,7 +166,7 @@ object SkewStress {
 
     val doc = out.map { case (k, v) => s"""  "$k": $v""" }
       .mkString(
-        s"""{\n  "sf_dir": "$sfDir",\n  "note": "Zipf-hot fixtures: the guards must FIRE (cap metric > 0, AQE skew split) with contracts intact (deterministic sample, k-bound, salted==plain) and bounded time",\n""",
+        s"""{\n  "sf_dir": "$sfDir",\n  "note": "Zipf-hot fixtures: the guards must FIRE (cap metric > 0, AQE skew split) with contracts intact (deterministic sample, k-bound) and bounded time",\n""",
         ",\n", "\n}\n")
     println(doc)
     jsonOut.foreach { p =>
