@@ -85,6 +85,9 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
           s"graft-warehouse-${ProcessHandle.current.pid}").toString)
+      // local `file:` I/O through graft.io.LocalFs: it starts no
+      // chmod/readlink process per created file or rename
+      .config(graft.io.LocalFs.confs)
 
   /** Local session (tests, Verify/Bench, standalone CLI).
     *

@@ -63,6 +63,8 @@ object SparkSpec {
     .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
       "false")
     .config("spark.sql.warehouse.dir", warehouseDir)
+    // same `file:` FileSystem/FileContext classes as GraftSession
+    .config(graft.io.LocalFs.confs)
     .getOrCreate()
 }
 
