@@ -71,12 +71,12 @@ object Bench {
       System.gc()
     }
 
-    // Ambient-load canary (r9 verdict #3): the committed r9 sweep was
-    // the tail of a monotone 178→261 s hypervisor load wave on an
-    // UNCHANGED tree, and separating load from regression took
-    // forensics. This is a fixed-work single-thread spin loop (~100 ms
-    // nominal on an idle host) timed at every phase boundary and
-    // published per-phase — a sweep now self-reports its ambient skew
+    // Ambient-load canary: a host load wave can slow a whole sweep of an
+    // UNCHANGED tree (one sweep read 178→261 s), and separating load from
+    // regression must not take forensics. This is a fixed-work
+    // single-thread spin loop (~100 ms nominal on an idle host) timed at
+    // every phase boundary and published per-phase — a sweep
+    // self-reports its ambient skew
     // factor (slowest canary over fastest, see canarySkew below), so a
     // judge can read "the host was 2× loaded at some point during the
     // sweep" straight off the artifact and use the per-phase map to
@@ -98,14 +98,12 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     def canary(phase: String): Unit = canaries(phase) = spin(40000000)
-    // Per-QUERY canary (r15 verdict #2 — the close run must be readable
-    // without prose forensics): a ~25 ms fixed-work spin timed right
-    // after each query's timer closes, published per query in
-    // BENCH_FULL's "canary_q". A host wave now localizes to exactly the
-    // queries it covered — "q_X read 3x AND its canary read 2.8x" is
-    // machine-readable wave evidence, where r15 needed ROUND-NOTES
-    // archaeology. Total cost ~25 ms × n_queries ≈ 7 s per sweep,
-    // outside every timer.
+    // Per-QUERY canary: a ~25 ms fixed-work spin timed right after each
+    // query's timer closes, published per query in BENCH_FULL's
+    // "canary_q". A host wave localizes to exactly the queries it
+    // covered — "q_X read 3x AND its canary read 2.8x" is
+    // machine-readable wave evidence. Total cost ~25 ms × n_queries ≈
+    // 7 s per sweep, outside every timer.
     val canaryQ = scala.collection.mutable.LinkedHashMap[String, Double]()
     def miniCanary(): Double = spin(10000000)
     canary("start")
@@ -114,14 +112,14 @@ object Bench {
     // q_dedup_clusters the shingle/sha/minhash/join/iterative-CC paths,
     // and the 5 heaviest queries of the committed sweep (PQ k-means +
     // ADC, the kNN-graph tier, banded levenshtein) warm their own hot
-    // loops — first-run outliers in r5/r6 driver sweeps were exactly
-    // these queries paying JIT/codegen compilation inside their timers
-    // (q_knn_graph 3.76 s first vs 1.43 s rerun). The 3-run baseline
+    // loops — without it, first-run outliers were exactly these queries
+    // paying JIT/codegen compilation inside their timers (q_knn_graph
+    // 3.76 s first vs 1.43 s rerun). The 3-run baseline
     // medians discard first-run warmup; a single-run sweep has no such
     // discard, so the warmup has to do it.
     for (wq <- Seq("q_pipeline", "q_dedup_clusters", "q_pq_refine",
       "q_knn_graph", "q_knn_clusters", "q_edit_distance")) {
-      // a failed warmup must be VISIBLE (r16 ADVICE): the failure itself
+      // a failed warmup must be VISIBLE: the failure itself
       // is swallowed (warmup is best-effort), but silently reverting to
       // cold first-use inside some query's timer shows up as an
       // unexplained outlier, so say which warmup died and why
@@ -155,7 +153,7 @@ object Bench {
       }
       baseDetail(name) = (System.nanoTime() - t0) / 1e9
     }
-    // The five SharedBases memo bases: the memo lives only as long as
+    // The six SharedBases memo bases: the memo lives only as long as
     // this session, so every sweep builds them here.
     timedBase("minhash_pairs") {
       graft.queries.SharedBases.minhashPairs(spark, sfDir) }
@@ -167,6 +165,8 @@ object Bench {
       graft.queries.SharedBases.dbscanRoles(spark, sfDir) }
     timedBase("knn_edges") {
       graft.queries.SharedBases.knnEdges(spark, sfDir) }
+    timedBase("ivf_quantizer") {
+      graft.queries.SharedBases.ivfQuantizer(spark, sfDir) }
     // q_pipeline_incremental's 24-hourly-file fixture: built HERE, timed,
     // so the query's own timer measures the glob read + two incremental
     // runs instead of 24-way small-file write I/O.
@@ -189,20 +189,19 @@ object Bench {
       graft.queries.StreamStaging.prebuild(spark, sfDir) }
     val baseBuild = (System.nanoTime() - tBase) / 1e9
     canary("post_base_build")
-    // Streaming-engine warmup, untimed (r16 optimization round): the
-    // first stream drain of a sweep paid MicroBatchExecution / RocksDB
-    // JNI / state-store codegen first-use inside its own timer — the
+    // Streaming-engine warmup, untimed: without it the first stream
+    // drain of a sweep pays MicroBatchExecution / RocksDB JNI /
+    // state-store codegen first-use inside its own timer — the
     // alphabetically-first stream entry (q_stream_asof) read ~2.5-3x its
     // warm median in REPEAT=1 sweeps while every later drain sat near
     // baseline. Same rationale as the batch warmup block above (JIT/
     // codegen state only, which the 3-run baseline medians already
     // discard); placed AFTER the timed fixture-staging phase so the
-    // staged-source builds keep billing to shared_base_build, exactly
-    // as before.
+    // staged-source builds bill to shared_base_build.
     try run("q_stream_dedup") catch { case e: Throwable =>
       // visible for the same reason as the batch warmups above: a failed
       // stream warmup silently bills cold RocksDB/MicroBatch init to the
-      // first timed stream entry (r16 ADVICE)
+      // first timed stream entry
       System.err.println(s"[bench] stream warmup failed: " +
         s"${e.getClass.getSimpleName}: ${e.getMessage}")
     }
@@ -210,20 +209,16 @@ object Bench {
     canary("post_stream_warmup")
 
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Run the historically variance-prone heavy queries FIRST, right after
-    // warmup (VERDICT r4 "Next round" #3): in the r3/r4 driver sweeps they
-    // ran 25-110 queries deep into an alphabetical order and clocked
+    // Run the variance-prone heavy queries FIRST, right after warmup:
+    // placed 25-110 queries deep into an alphabetical order they clocked
     // 3-7x their idle-host 3-run medians, while every cheap neighbor
     // matched its median — accumulated JIT/metaspace/GC state, not the
     // queries, was being billed. Fronting them measures each against the
     // same JVM state the medians were taken in; the order is deterministic
-    // and the driver sees it in the per-query map either way.
-    // q_pipeline_incremental joined the front block in r14: the flagship
-    // operational loop ran 2.7x its median in the r13 driver sweep (first
-    // AND post-sweep retry) while scoring 1.2x in a clean reproduction —
-    // alphabetical placement had it absorbing the sweep's late-window
-    // JVM/ambient state; fronting it measures it against the same
-    // fresh-after-warmup state its medians were taken in.
+    // and the per-query map shows it either way. The same
+    // holds for q_pipeline_incremental, the flagship operational loop:
+    // late in the sweep it read 2.7x its median (first AND retry) while
+    // a clean reproduction read 1.2x.
     val frontLoaded = Seq("q_pipeline_incremental", "q_dedup_clusters",
       "q_dedup_keep", "q_keep_best", "q_minhash_calib", "q_ngram_jaccard",
       "q_nested", "q_topk_collect")
@@ -232,10 +227,10 @@ object Bench {
       (SparkEntry.queries.keys.toSeq.sorted diff frontLoaded))
       .filter(n => only.forall(_.contains(n)))
     val midAt = names.size / 2
-    // run1 is published NEXT TO the median (r10 verdict #3): REPEAT>1
-    // medians are warm numbers (runs 2+ reuse JIT/codegen/page-cache
-    // state), and the committed medians were understating what a fresh
-    // JVM pays — the cold first measurement is the accountability line.
+    // run1 is published NEXT TO the median: REPEAT>1 medians are warm
+    // numbers (runs 2+ reuse JIT/codegen/page-cache state) and understate
+    // what a fresh JVM pays — the cold first measurement is the
+    // accountability line.
     val run1 = scala.collection.mutable.LinkedHashMap[String, Double]()
     val results = names.zipWithIndex.map { case (name, qi) =>
       if (qi == midAt) canary("mid_sweep")
@@ -257,7 +252,7 @@ object Bench {
       name -> times(times.length / 2) // median (== the value when repeat=1)
     }
 
-    // Wave/GC audit pass (r15 verdict #2 — wave-aware close protocol):
+    // Wave/GC audit pass:
     // any query reading > 1.5x its baseline median (excess > 0.3s; plus
     // the relative-only 2x tier for sub-0.3s queries,
     // q_pipeline_incremental at its tighter 1.75x) is re-measured ONCE
@@ -268,10 +263,10 @@ object Bench {
     // folds min(first, rerun): a genuine regression is slow on the
     // QUIET rerun too and survives the fold; a wave hit is not, and the
     // per-query canary map says which it was with no prose. Runs under
-    // REPEAT>1 as well: r15 measured waves covering all three
-    // consecutive repeats, so medians are not wave-proof either.
+    // REPEAT>1 as well: host waves have covered all three consecutive
+    // repeats, so medians are not wave-proof either.
     // Retries are capped at 40 a sweep — far above the observed worst
-    // case (14, r14 calibration) — so a pathologically loaded host
+    // case (14) — so a pathologically loaded host
     // cannot double the sweep; the cap being HIT is itself published
     // (retry_budget_exhausted).
     //
@@ -287,11 +282,11 @@ object Bench {
         val txt = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get("BENCH_BASELINE.json")), "UTF-8")
         val j = JsonMethods.parse(txt)
-        // cross-round drift (r14 verdict #1): computed at rebase time by
-        // tools/make_baseline.py on MEDIANS vs the frozen r13 anchor
-        // (single-run values are never drift evidence — r14 calibration:
-        // 25 spurious single-run flags vs 1 median flag), republished
-        // verbatim here so the round's BENCH artifact carries it.
+        // drift vs the frozen anchor: computed at rebase time by
+        // tools/make_baseline.py on MEDIANS (single-run values are never
+        // drift evidence — one calibration gave 25 spurious single-run
+        // flags vs 1 median flag), republished verbatim here so the
+        // BENCH artifact carries it.
         val drift = j \ "drift_vs_r13" match {
           case JNothing => """{"status":"absent_from_baseline"}"""
           case v => JsonMethods.compact(JsonMethods.render(v))
@@ -319,11 +314,10 @@ object Bench {
           (Map.empty, s"parse_error:${e.getClass.getSimpleName}",
             """{"status":"parse_error"}""")
       }
-    // Wave-aware retry eligibility (r15 verdict #2): ANY query whose
-    // measurement exceeds 1.5x its baseline median is re-measured before
-    // publishing — the old tier-1 2.0s absolute floor hid exactly the
-    // wave-hit mid-size queries (q_tfidf_knn 6.28 vs 1.72 baseline) that
-    // forced prose adjudication in r15. A 0.3s excess floor remains so
+    // Wave-aware retry eligibility: ANY query whose measurement exceeds
+    // 1.5x its baseline median is re-measured before publishing — a 2.0s
+    // absolute floor would hide exactly the wave-hit mid-size queries
+    // (q_tfidf_knn 6.28 vs 1.72 baseline). A 0.3s excess floor remains so
     // millisecond wobble on sub-second queries doesn't burn the budget
     // (same floor as the drift rule); tier 2 (relative-only, no floor)
     // still catches sub-0.3s queries at 2x.
@@ -335,7 +329,7 @@ object Bench {
     // reads within 1.3x the sweep's own per-query canary floor (or 30s
     // passes — the relative value is published either way). A rerun
     // taken INSIDE the same wave that inflated the first measurement
-    // proves nothing; r15's waves ran 60-90s, so bounded waiting
+    // proves nothing; observed waves ran 60-90s, so bounded waiting
     // actually clears most of them and the canary_rel field says when
     // it did not.
     val miniFloor = if (canaryQ.nonEmpty) canaryQ.values.min else 0.025
@@ -360,9 +354,9 @@ object Bench {
     val retried = scala.collection.mutable.LinkedHashMap[
       String, (Double, Double, Double)]()
     var retryBudget = 40
-    // REPEAT>1 sweeps retry too (r15: a 60-90s wave covers ALL THREE
-    // consecutive repeats, so a median is NOT wave-proof — the r15 close
-    // had q_tfidf_knn's median at 3.6x with every repeat inside one wave)
+    // REPEAT>1 sweeps retry too (a 60-90s wave covers ALL THREE
+    // consecutive repeats, so a median is NOT wave-proof — q_tfidf_knn's
+    // median once read 3.6x with every repeat inside one wave)
     results.foreach { case (name, t) =>
       baselines.get(name) match {
         case Some(b) if !errors.contains(name) &&
@@ -379,7 +373,7 @@ object Bench {
       }
     }
 
-    // Headline folding (r13 verdict #2): a retried query whose rerun
+    // Headline folding: a retried query whose rerun
     // succeeded publishes min(first, rerun) — symmetric evidence for both
     // readings stays in "run1"/"retried"; a real regression shows on the
     // rerun too and survives the min().
@@ -411,7 +405,7 @@ object Bench {
     val total = baseBuild + headline.collect {
       case (k, v) if !errors.contains(k) => v
     }.sum
-    // Unfolded headline (r16 verdict #6): the same total WITHOUT the
+    // Unfolded headline: the same total WITHOUT the
     // min(first, rerun) retry fold, so the fold's contribution is one
     // subtraction (total_raw - total), not an audit of "retried".
     val totalRaw = baseBuild + results.collect {
@@ -440,8 +434,8 @@ object Bench {
         f""""baseline_status":"$baselineStatus","sf":"$sfDir"}"""
     // The file is the LOSSLESS artifact; stdout is the driver contract —
     // and the driver's capture keeps only the last ~2000 chars of stdout
-    // (BENCH_r04 arrived tail-truncated; BENCH_r06/r07/r08 all recorded
-    // parsed:null because the full per-query map is ~5 KB). The stdout
+    // (the full per-query map is ~5 KB: a full line arrives
+    // tail-truncated and does not parse). The stdout
     // line therefore DEGRADES deterministically to fit ~1800 bytes: full
     // query map if it fits, else the top-K slowest queries (the
     // perf-grading subset) with an explicit omission count; error

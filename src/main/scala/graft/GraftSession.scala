@@ -24,7 +24,7 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
-      // Join strategy (r16 optimization, guide §3.1/§9): let the planner
+      // Join strategy: let the planner
       // pick shuffled-hash over sort-merge when a side's per-partition
       // build fits — SMJ pays two sorts the hash join skips; SHJ's OOM
       // risk is bounded by the same size checks the planner already
@@ -32,7 +32,7 @@ object GraftSession {
       // whose post-shuffle partitions measure under 64 MB (size-bounded,
       // not core-count-tuned — valid at any scale; Spark's default of 0
       // simply disables the rewrite).
-      // Known failure mode (r16 ADVICE): the static planner's SHJ pick
+      // Known failure mode: the static planner's SHJ pick
       // runs on COMPILE-TIME size estimates — a badly mis-estimated
       // build side that AQE doesn't rewrite can OOM where SMJ would
       // have spilled. Bridge.resetStats frames are safe (reset stats
@@ -78,46 +78,20 @@ object GraftSession {
       // state-row eviction re-enable it per query.
       .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
         "false")
-      // catalog-table storage (bucketed layouts) goes to a per-process
-      // temp dir, never ./spark-warehouse in the caller's CWD; pid
-      // suffix keeps concurrent driver/bench JVMs from clobbering each
-      // other's table directories
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-          s"graft-warehouse-${ProcessHandle.current.pid}").toString)
+      // catalog-table storage (bucketed layouts) goes to a temp dir that
+      // lives as long as this JVM, never ./spark-warehouse in the
+      // caller's CWD
+      .config("spark.sql.warehouse.dir", TempDirs.create("graft-warehouse-"))
       // local `file:` I/O through graft.io.LocalFs: it starts no
       // chmod/readlink process per created file or rename
       .config(graft.io.LocalFs.confs)
 
-  /** Local session (tests, Verify/Bench, standalone CLI).
-    *
-    * Scratch space (`spark.local.dir` — shuffle files, block-manager
-    * disk blocks, RocksDB working dirs) goes to tmpfs when available:
-    * it is ephemeral by definition and the single-box bench showed the
-    * interval-join drains paying ~20% of their wall to /tmp disk I/O
-    * for files that never outlive the JVM. Local-mode-only by design —
-    * a real cluster's resource manager owns executor local dirs
-    * (YARN/K8s override `spark.local.dir`), and at 100 TB scratch
-    * belongs on provisioned disks, not RAM. Honored only if the caller
-    * hasn't already routed it (SPARK_LOCAL_DIRS / spark.local.dir).
+  /** Local session (tests, Verify/Bench, standalone CLI). Scratch space
+    * (`spark.local.dir`: shuffle files, block-manager disk blocks, RocksDB
+    * working dirs) stays Spark's own: SPARK_LOCAL_DIRS or java.io.tmpdir.
     */
-  def local(appName: String, cores: Int): SparkSession = {
-    val b = builder(appName, cores).master(s"local[$cores]")
+  def local(appName: String, cores: Int): SparkSession =
+    builder(appName, cores).master(s"local[$cores]")
       .config("spark.ui.enabled", "false")
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val routed = sys.env.contains("SPARK_LOCAL_DIRS") ||
-      sys.props.contains("spark.local.dir")
-    if (!routed && java.nio.file.Files.isDirectory(shm) &&
-        java.nio.file.Files.isWritable(shm)) {
-      // per-pid subdir: Spark creates and deletes its own spark-*/
-      // blockmgr-* dirs inside on stop; the pid scope keeps concurrent
-      // driver/bench JVMs apart (same discipline as the warehouse dir)
-      val scratch = shm.resolve(
-        s"graft-local-${ProcessHandle.current.pid}")
-      java.nio.file.Files.createDirectories(scratch)
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        graft.util.Fs.deleteRecursively(scratch)))
-      b.config("spark.local.dir", scratch.toString).getOrCreate()
-    } else b.getOrCreate()
-  }
+      .getOrCreate()
 }

@@ -6,21 +6,20 @@ import org.apache.spark.sql.types._
 
 import graft.Tables
 
-/** Per-JVM memoized copies of the `documents` table in the OTHER source
-  * formats (S1 family, SURVEY §2.1): csv, json-lines, orc, and a
-  * lang-partitioned parquet layout. Backs the `q_scan_csv` / `q_scan_json`
-  * / `q_scan_orc` / `q_scan_partitioned` declared queries, which read the
-  * fixture through [[graft.io.Sources]] and aggregate — so the DuckDB
-  * oracle (which sees the parquet stand-in, same convention as
-  * `q_scan_text`) certifies the format reader end-to-end: a wrong
-  * delimiter, schema drift, or partition-column loss changes the hash.
+/** Copies of the `documents` table in the OTHER source formats (S1
+  * family, SURVEY §2.1): csv, json-lines, orc, and a lang-partitioned
+  * parquet layout. Backs the `q_scan_csv` / `q_scan_json` / `q_scan_orc`
+  * / `q_scan_partitioned` declared queries, which read the fixture
+  * through [[graft.io.Sources]] and aggregate — so the DuckDB oracle
+  * (which sees the parquet stand-in, same convention as `q_scan_text`)
+  * certifies the format reader end-to-end: a wrong delimiter, schema
+  * drift, or partition-column loss changes the hash.
   *
-  * Same lifecycle contract as [[IncrFixture]]: one deterministic
-  * destination per (source dir, format, documents-fingerprint) in the
-  * cross-JVM [[StagingStore]] — re-runs and later sweeps reuse the
-  * landed generation; a regenerated corpus misses structurally and
-  * rebuilds. Bench builds these in the TIMED shared-base phase so the
-  * per-query timer measures the scan, not fixture setup.
+  * Same lifecycle contract as [[IncrFixture]]: one staged layout per
+  * (source dir, format, documents fingerprint), owned by
+  * [[StreamStaging.stage]]; a rewritten corpus misses and restages.
+  * Bench builds these in the TIMED shared-base phase so the per-query
+  * timer measures the scan, not fixture setup.
   */
 private[graft] object FormatFixture {
 
@@ -49,34 +48,30 @@ private[graft] object FormatFixture {
     * on first use per (dir, documents-fingerprint).
     */
   def path(s: SparkSession, dir: String, format: String): String =
-    synchronized {
-      val fp = SharedBases.fingerprint(s, dir)
-      cache.getOrElseUpdate(s"$dir@$format@$fp", {
-        StagingStore.getOrBuild(dir, s"fmt_$format", fp) { dest =>
-        val d = docs(s, dir)
-        format match {
-          case "csv" =>
-            // header on, default quoting — the reader side must agree on
-            // both or counts/lengths drift (the oracle would catch it).
-            // Spark's csv WRITER trims leading/trailing whitespace by
-            // default (ignore*WhiteSpace=true on write, false on read) —
-            // an asymmetric lossy default; pin both off so the roundtrip
-            // is byte-faithful for any corpus.
-            d.write.mode("overwrite").option("header", "true")
-              .option("ignoreLeadingWhiteSpace", "false")
-              .option("ignoreTrailingWhiteSpace", "false")
-              .csv(dest)
-          case "json" => d.write.mode("overwrite").json(dest)
-          case "orc" => d.write.mode("overwrite").orc(dest)
-          case "part" =>
-            // lang-partitioned parquet: the layout whose scan-time win is
-            // partition PRUNING (a lang predicate never opens other
-            // langs' files) — plan-asserted in PlanAuditSpec
-            d.write.mode("overwrite").partitionBy("lang").parquet(dest)
-          case other => sys.error(s"unknown fixture format: $other")
-        }
-        }
-      })
+    StreamStaging.stage(dir, s"fmt_$format",
+        SharedBases.fingerprint(s, dir)) { dest =>
+      val d = docs(s, dir)
+      format match {
+        case "csv" =>
+          // header on, default quoting — the reader side must agree on
+          // both or counts/lengths drift (the oracle would catch it).
+          // Spark's csv WRITER trims leading/trailing whitespace by
+          // default (ignore*WhiteSpace=true on write, false on read) —
+          // an asymmetric lossy default; pin both off so the roundtrip
+          // is byte-faithful for any corpus.
+          d.write.mode("overwrite").option("header", "true")
+            .option("ignoreLeadingWhiteSpace", "false")
+            .option("ignoreTrailingWhiteSpace", "false")
+            .csv(dest)
+        case "json" => d.write.mode("overwrite").json(dest)
+        case "orc" => d.write.mode("overwrite").orc(dest)
+        case "part" =>
+          // lang-partitioned parquet: the layout whose scan-time win is
+          // partition PRUNING (a lang predicate never opens other
+          // langs' files) — plan-asserted in PlanAuditSpec
+          d.write.mode("overwrite").partitionBy("lang").parquet(dest)
+        case other => sys.error(s"unknown fixture format: $other")
+      }
     }
 
   /** Two co-bucketed catalog tables over `dir`'s documents — the corpus
@@ -85,7 +80,7 @@ private[graft] object FormatFixture {
     * — so a doc_id equi-join between them is EXCHANGE-FREE (the 100 TB
     * co-located-join layout; PlanAuditSpec pins the shuffle-free
     * SortMergeJoin). Memoized per (dir, fingerprint); table files live
-    * in the session's per-process temp warehouse (GraftSession).
+    * in the session's temp warehouse (GraftSession).
     */
   def bucketedTables(s: SparkSession, dir: String): (String, String) =
     synchronized {

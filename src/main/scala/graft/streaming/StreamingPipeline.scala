@@ -473,7 +473,7 @@ object StreamingPipeline {
     * band table mined against, here it is the (cid, cc, cn2) centroid
     * table new vectors are routed by. The quantizer is built ONCE from
     * the accumulated corpus (`Ivf.int8Quantizer`, the digest-seeded
-    * integer-exact scheme of q_similarity_ivf_exact), checkpointed, and
+    * integer-exact scheme of q_similarity_ivf_exact), materialized, and
     * broadcast into every batch; each trigger's cost is O(delta ×
     * nClusters) with nothing corpus-sized touched — the index a 100 TB
     * vector store maintains without refitting. Assignment is per-row
@@ -482,14 +482,10 @@ object StreamingPipeline {
     * that equality is exactly what the gate hash certifies.
     */
   def streamIvfAssign(spark: SparkSession, sfDir: String): DataFrame = {
-    // hydrated from the fingerprint-keyed store (SharedBases.
-    // ivfQuantizer): the first session builds + stages the quantizer,
-    // later drains of the same corpus load 16 rows — the "load the
-    // index, don't rebuild it" production shape; determinism of the
-    // digest seeding keeps the stored and rebuilt tables identical
+    // built once per session and embeddings fingerprint (SharedBases
+    // memo, materialized): one quantizer serves every micro-batch
     val cents = graft.queries.SharedBases
       .ivfQuantizer(spark, sfDir, nClusters = 16)
-      .localCheckpoint(true) // one quantizer serves every micro-batch
     drainAppend(spark,
       graft.queries.StreamStaging.dir(spark, sfDir, "emb8"), "ivfassign",
       perBatch = b => graft.ops.llm.Ivf.int8CellIds(
@@ -780,7 +776,8 @@ object StreamingPipeline {
       // time-ordered staged kinds carry PINNED file mtimes: FileStreamSource
       // picks the next batch by modification time, and out-of-order slices
       // would make a watermark silently drop whole ranges
-      val built = build(spark.readStream.schema(stagedSchema(spark, stagedDir))
+      val built = build(spark.readStream
+        .schema(graft.queries.StreamStaging.schema(spark, stagedDir))
         .option("maxFilesPerTrigger", "2")
         .parquet(stagedDir))
       val q = built.writeStream
@@ -849,8 +846,7 @@ object StreamingPipeline {
   def drainUpdateMerge(spark: SparkSession, src: DataFrame, prefix: String,
                        keyCols: Seq[String])(
       build: DataFrame => DataFrame): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory(
-      s"graft-stream-$prefix-adhoc")
+    val tmp = ephemeralDir(s"$prefix-adhoc")
     try {
       src.repartition(8).write.mode("overwrite").parquet(tmp.toString)
       drainUpdateMerge(spark, tmp.toString, prefix, keyCols)(build)
@@ -984,68 +980,17 @@ object StreamingPipeline {
     */
   val defaultStatePartitions = 8
 
-  /** tmpfs-backed temp dir (fallback: java.io.tmpdir) for the drains'
-    * EPHEMERAL scratch — checkpoints and merge-sink tables, deleted on
-    * every exit path and never restarted from. Both are written every
-    * trigger: the per-batch RocksDB changelog commit, and the merge table
-    * is READ AND REWRITTEN per trigger, yet durability buys nothing for
-    * scratch by contract. The commit's "file sync to external storage"
-    * (rocksdbCommitFileSyncLatencyMs) once read 2137 of 2399 ms
-    * stateCommit across one drain, but that was process starts, not
-    * fsync: on a disk-backed java.io.tmpdir, [[graft.io.LocalFs]] took a
-    * `q_stream_topk` state task's sync from ~90 to ~4 ms (median per
-    * 8-task batch 712.5 -> 37.5 ms) with no change to any fsync. A
-    * production deployment — where the checkpoint IS the restart story and
-    * the sink a durable table — points them at durable storage and pays
-    * the sync deliberately.
-    *
-    * tmpfs is used only with HEADROOM: the merge tables are data-sized,
-    * and a small /dev/shm (e.g. Docker's 64 MB default) would ENOSPC a
-    * drain mid-run — so the mount must have at least [[shmMinFreeBytes]]
-    * usable, and `GRAFT_NO_SHM_SCRATCH=1` opts out entirely (both fall
-    * back to java.io.tmpdir).
+  /** Temp dir under java.io.tmpdir for the drains' EPHEMERAL scratch —
+    * checkpoints and merge-sink tables, deleted on every exit path and
+    * never restarted from. Both are written every trigger (the per-batch
+    * RocksDB changelog commit; the merge table is read and rewritten),
+    * yet durability buys nothing for scratch by contract. A production
+    * deployment — where the checkpoint IS the restart story and the sink
+    * a durable table — points them at durable storage and pays the sync
+    * deliberately.
     */
-  private[graft] val shmMinFreeBytes: Long = 1L << 30 // 1 GiB
-  private def ephemeralDir(tag: String): java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val usable =
-      try java.nio.file.Files.getFileStore(shm).getUsableSpace
-      catch { case _: java.io.IOException => 0L }
-    if (!sys.env.get("GRAFT_NO_SHM_SCRATCH").contains("1") &&
-        java.nio.file.Files.isDirectory(shm) &&
-        java.nio.file.Files.isWritable(shm) &&
-        usable >= shmMinFreeBytes)
-      java.nio.file.Files.createTempDirectory(shm, s"graft-$tag")
-    else
-      java.nio.file.Files.createTempDirectory(s"graft-stream-$tag")
-  }
-
-  /** Source schema for a staged fixture dir, memoized per dir: every
-    * drain start was paying a listing + parquet-footer read for a schema
-    * that is immutable once staged (the StagingStore generations are
-    * content-addressed — a re-staged corpus lands at a NEW path, so a
-    * path-keyed memo can never serve a stale schema). Only store paths
-    * are memoized — decided by `StagingStore.isStorePath` (a normalized
-    * prefix compare against the real store root), not a
-    * substring match: the ad-hoc drain overload stages into plain temp
-    * dirs, which are deleted after the call and whose names could in
-    * principle recycle under a different dataset — those pay the one
-    * footer read instead of risking a stale hit. The memo is bounded:
-    * before inserting past 64 entries, paths whose generations were
-    * evicted from disk are dropped (generations are re-landed at new
-    * fingerprint paths, so long sessions would otherwise grow the map
-    * monotonically).
-    */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-  private def stagedSchema(spark: SparkSession, stagedDir: String): StructType =
-    if (graft.queries.StagingStore.isStorePath(stagedDir)) {
-      if (schemaMemo.size > 64)
-        schemaMemo.keySet.removeIf(p =>
-          !java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p)))
-      schemaMemo.computeIfAbsent(stagedDir,
-        d => spark.read.parquet(d).schema)
-    } else spark.read.parquet(stagedDir).schema
+  private def ephemeralDir(tag: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(s"graft-stream-$tag")
 
   /** X12p — the 100 TB shape of `q_stream_dedup`: the SAME exact-dedup
     * aggregation run in UPDATE output mode, each micro-batch's changed

@@ -12,30 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session — Spark
   * startup dominates suite time otherwise).
   */
-/** Tracked temp dirs for specs/test tools, deleted by ONE shutdown hook —
-  * test JVMs previously leaked dozens of graft-* dirs to /tmp per run
-  * (r7 verdict #7 temp-dir audit).
-  */
-object TempDirs {
-  private val created =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val hook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      created.forEach { p =>
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(p))
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(f => try java.nio.file.Files.deleteIfExists(f)
-              catch { case _: java.io.IOException => () })
-      }))
-  def create(prefix: String): String = {
-    hook
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    created.add(p)
-    p.toString
-  }
-}
-
 object SparkSpec {
   private val warehouseDir = TempDirs.create("graft-warehouse")
 

@@ -84,14 +84,18 @@ class SharedBasesSpec extends SparkSpec {
           .select(col("vec_id"), col("embedding").cast("array<double>")),
         nClusters = 16)
       .collect().map(_.toString).sorted.toSeq
-    // first call may build + stage; second call must serve the landed
-    // generation (cross-JVM store) — both must equal the direct build
+    // the first call builds the memo entry; any later call in this JVM,
+    // from any session, serves that entry without running a job — both
+    // must equal the direct build
     val first = SharedBases.ivfQuantizer(spark, sf0001)
       .collect().map(_.toString).sorted.toSeq
+    val jobs = jobsDuring {
+      SharedBases.ivfQuantizer(spark.newSession(), sf0001); () }
+    assert(jobs.isEmpty, s"memo hit ran jobs: $jobs")
     val second = SharedBases.ivfQuantizer(spark.newSession(), sf0001)
       .collect().map(_.toString).sorted.toSeq
     assert(first == direct && second == direct,
-      "staged quantizer must be identical to the direct build")
+      "memoized quantizer must be identical to the direct build")
     assert(direct.size == 16)
   }
 

@@ -54,18 +54,16 @@ class DrainSpec extends SparkSpec {
     slice
   }
 
-  /** Scratch dirs a drain named `prefix` would create, on tmpfs or in
+  /** Scratch dirs a drain named `prefix` would create in
     * java.io.tmpdir.
     */
-  private def scratch(prefix: String): Seq[String] =
-    Seq("/dev/shm", System.getProperty("java.io.tmpdir"))
-      .map(Paths.get(_)).filter(Files.isDirectory(_)).flatMap { d =>
-        import scala.jdk.CollectionConverters._
-        val s = Files.list(d)
-        try s.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.contains(s"-$prefix-")).toList
-        finally s.close()
-      }
+  private def scratch(prefix: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+    try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.contains(s"-$prefix-")).toList
+    finally s.close()
+  }
 
   /** A conf's explicitly set value; None when unset. */
   private def setting(key: String): Option[String] =

@@ -3,7 +3,7 @@ package graft.tools
 import graft.GraftSession
 
 /** Breaks ONE drain's wall time into the StreamingQueryProgress
-  * durationMs phases (r12 verdict #6): addBatch (actual work) vs
+  * durationMs phases: addBatch (actual work) vs
   * latestOffset/getBatch (source listing) vs queryPlanning vs
   * walCommit/commitOffsets (offset+commit log I/O), plus the
   * state-store commit/load times from stateOperators. Run:
@@ -12,11 +12,6 @@ import graft.GraftSession
 object StreamOverheadProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    if (args.lift(1).contains("shmlocal")) {
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get("/dev/shm/graft-local"))
-      System.setProperty("spark.local.dir", "/dev/shm/graft-local")
-    }
     val spark = GraftSession.local("graft-stream-overhead", 32)
     println(s"[probe] spark.local.dir=" +
       spark.sparkContext.getConf.get("spark.local.dir", "<default>"))
