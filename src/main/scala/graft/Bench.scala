@@ -18,27 +18,56 @@ import org.apache.spark.sql.SparkSession
   *    total — so a query's time never depends on whether an earlier
   *    consumer already built the base;
   *  - headline "value"/"queries" publish min(first, rerun) for the
-  *    handful of gate-outlier queries the audit pass reran: a host load
-  *    wave can cover one measurement of a query while its rerun sits at
-  *    its median, and the headline must track the engine, not the
-  *    host. The unfolded evidence stays
-  *    lossless: "run1" has every cold first measurement, "retried" the
-  *    raw (first, rerun) pairs. A genuine regression is slow on BOTH
-  *    runs, so min() cannot hide one;
+  *    gate-outlier queries the audit pass reran (see `retryEligible` and
+  *    `fold`). The unfolded evidence stays lossless: "run1" has every
+  *    cold first measurement, "retried" the raw (first, rerun) pairs,
+  *    "total_raw" the total without the fold. A genuine regression is
+  *    slow on BOTH runs, so min() cannot hide one;
   *  - failures are reported in an "errors" field, never silently timed as
-  *    successes.
+  *    successes, and stay out of the totals.
   *
-  * Dev knobs (unset in the driver's run — defaults keep its behavior):
+  * Dev knobs (unset in a default run):
   *  - SPARK_GRAFT_ONLY: comma-separated query names (subset profiling);
   *  - SPARK_GRAFT_REPEAT: time each query N times, report the MEDIAN —
   *    how BENCH_BASELINE.json expected ranges are produced;
-  *  - SPARK_GRAFT_BENCH_OUT: path of the full JSON artifact (default
-  *    BENCH_FULL.json); the BENCH_LINE.json mirror is written beside it.
+  *  - SPARK_GRAFT_BENCH_OUT: path the JSON line is also written to
+  *    (default BENCH_FULL.json).
   */
 object Bench {
-  // JIT-liveness sink for the canary spin loop: @volatile write is a
-  // side effect the JIT cannot elide, and it never touches the timing
-  @volatile private var canaryBlackhole: Long = 0L
+
+  /** A query is re-measured once when its time exceeds 1.5x its baseline
+    * median by more than 0.3 s, or exceeds 2x it (1.75x for
+    * q_pipeline_incremental) with no absolute floor. This covers every
+    * time `tools/bench_gate.py` can flag — tier 1 (> 1.5x and > 2.0 s
+    * excess) and tier 2 (the same 2x / 1.75x ratios) — so after the
+    * min(first, rerun) fold a gate flag means both runs were slow. The
+    * 0.3 s floor keeps millisecond wobble on sub-second queries from
+    * spending the retry budget.
+    */
+  private[graft] def retryEligible(name: String, t: Double, b: Double)
+      : Boolean = {
+    val rel = if (name == "q_pipeline_incremental") 1.75 else 2.0
+    (t > 1.5 * b && t - b > 0.3) || t > rel * b
+  }
+
+  /** Headline fold: a retried query whose rerun succeeded (rerun >= 0)
+    * publishes min(first, rerun); every other query keeps its time. */
+  private[graft] def fold(results: Seq[(String, Double)],
+                          retried: collection.Map[String, (Double, Double)])
+      : Seq[(String, Double)] =
+    results.map { case (name, t) =>
+      retried.get(name) match {
+        case Some((first, rerun)) if rerun >= 0 =>
+          name -> math.min(first, rerun)
+        case _ => name -> t
+      }
+    }
+
+  /** Sweep total: the shared-base build plus every query that did not
+    * error (an errored query's time measures its failure, not its work). */
+  private[graft] def total(baseBuild: Double, times: Seq[(String, Double)],
+                           errors: collection.Set[String]): Double =
+    baseBuild + times.collect { case (k, v) if !errors.contains(k) => v }.sum
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -60,8 +89,8 @@ object Bench {
     // unpersist alone leaves its entries pinned); one GC nudge so the
     // freed heap is compacted on our time, not the next query's.
     // SharedBases' RDDs are SPARED: they model a persisted index reused
-    // across the dedup family (built inside the first consumer's timer),
-    // not per-query scratch — see queries.SharedBases.
+    // across the dedup family, not per-query scratch — see
+    // queries.SharedBases.
     def cleanup(): Unit = {
       spark.catalog.clearCache()
       val keep = graft.queries.SharedBases.retainedRddIds
@@ -71,58 +100,19 @@ object Bench {
       System.gc()
     }
 
-    // Ambient-load canary: a host load wave can slow a whole sweep of an
-    // UNCHANGED tree (one sweep read 178→261 s), and separating load from
-    // regression must not take forensics. This is a fixed-work
-    // single-thread spin loop (~100 ms nominal on an idle host) timed at
-    // every phase boundary and published per-phase — a sweep
-    // self-reports its ambient skew
-    // factor (slowest canary over fastest, see canarySkew below), so a
-    // judge can read "the host was 2× loaded at some point during the
-    // sweep" straight off the artifact and use the per-phase map to
-    // localize WHEN.
-    val canaries = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def spin(iters: Int): Double = {
-      var x = 0x9e3779b97f4a7c15L
-      var i = 0
-      val t0 = System.nanoTime()
-      while (i < iters) {
-        x = x * 6364136223846793005L + 1442695040888963407L
-        x ^= (x >>> 33)
-        i += 1
-      }
-      // keep the loop's result live so JIT cannot elide the work — via a
-      // blackhole side channel, never the published value (a sentinel
-      // leaking into the artifact would corrupt canary_skew)
-      canaryBlackhole += x
-      (System.nanoTime() - t0) / 1e9
-    }
-    def canary(phase: String): Unit = canaries(phase) = spin(40000000)
-    // Per-QUERY canary: a ~25 ms fixed-work spin timed right after each
-    // query's timer closes, published per query in BENCH_FULL's
-    // "canary_q". A host wave localizes to exactly the queries it
-    // covered — "q_X read 3x AND its canary read 2.8x" is
-    // machine-readable wave evidence. Total cost ~25 ms × n_queries ≈
-    // 7 s per sweep, outside every timer.
-    val canaryQ = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def miniCanary(): Double = spin(10000000)
-    canary("start")
-
     // Warmup, untimed: q_pipeline covers the scan/agg/window/json paths,
     // q_dedup_clusters the shingle/sha/minhash/join/iterative-CC paths,
-    // and the 5 heaviest queries of the committed sweep (PQ k-means +
-    // ADC, the kNN-graph tier, banded levenshtein) warm their own hot
-    // loops — without it, first-run outliers were exactly these queries
-    // paying JIT/codegen compilation inside their timers (q_knn_graph
-    // 3.76 s first vs 1.43 s rerun). The 3-run baseline
-    // medians discard first-run warmup; a single-run sweep has no such
-    // discard, so the warmup has to do it.
+    // and the heaviest queries (PQ k-means + ADC, the kNN-graph tier,
+    // banded levenshtein) warm their own hot loops — without it, first-run
+    // outliers were exactly these queries paying JIT/codegen compilation
+    // inside their timers (q_knn_graph 3.76 s first vs 1.43 s rerun). The
+    // 3-run baseline medians discard first-run warmup; a single-run sweep
+    // has no such discard, so the warmup has to do it.
     for (wq <- Seq("q_pipeline", "q_dedup_clusters", "q_pq_refine",
       "q_knn_graph", "q_knn_clusters", "q_edit_distance")) {
-      // a failed warmup must be VISIBLE: the failure itself
-      // is swallowed (warmup is best-effort), but silently reverting to
-      // cold first-use inside some query's timer shows up as an
-      // unexplained outlier, so say which warmup died and why
+      // warmup is best-effort, but a failed one must be VISIBLE: cold
+      // first use inside some query's timer shows up as an unexplained
+      // outlier, so say which warmup died and why
       try run(wq) catch { case e: Throwable =>
         System.err.println(s"[bench] warmup $wq failed: " +
           s"${e.getClass.getSimpleName}: ${e.getMessage}")
@@ -134,16 +124,11 @@ object Bench {
     // base phase (the TPC load-phase pattern): each base is reused by
     // several queries, so billing the build to whichever consumer happens
     // to run first would make that query's time depend on sweep order.
-    // The build time is published as "shared_base_build" AND included in
-    // the headline total — nothing is untimed, it just has its own line
-    // item.
-    canary("post_warmup")
     graft.queries.SharedBases.invalidateAll(spark)
     // Per-item try/catch + per-item timing: one base failing must not
     // silently skip the rest (a skipped IncrFixture would bill the fixture
     // write to q_pipeline_incremental's timer), and when shared_base_build
-    // regresses the detail map says WHICH base paid — published in
-    // BENCH_FULL.json.
+    // regresses the detail map says WHICH base paid.
     val baseDetail = scala.collection.mutable.LinkedHashMap[String, Double]()
     val tBase = System.nanoTime()
     def timedBase(name: String)(body: => Unit): Unit = {
@@ -188,25 +173,18 @@ object Bench {
     timedBase("fixture_stream") {
       graft.queries.StreamStaging.prebuild(spark, sfDir) }
     val baseBuild = (System.nanoTime() - tBase) / 1e9
-    canary("post_base_build")
     // Streaming-engine warmup, untimed: without it the first stream
     // drain of a sweep pays MicroBatchExecution / RocksDB JNI /
     // state-store codegen first-use inside its own timer — the
     // alphabetically-first stream entry (q_stream_asof) read ~2.5-3x its
     // warm median in REPEAT=1 sweeps while every later drain sat near
-    // baseline. Same rationale as the batch warmup block above (JIT/
-    // codegen state only, which the 3-run baseline medians already
-    // discard); placed AFTER the timed fixture-staging phase so the
+    // baseline. Placed AFTER the timed fixture-staging phase so the
     // staged-source builds bill to shared_base_build.
     try run("q_stream_dedup") catch { case e: Throwable =>
-      // visible for the same reason as the batch warmups above: a failed
-      // stream warmup silently bills cold RocksDB/MicroBatch init to the
-      // first timed stream entry
       System.err.println(s"[bench] stream warmup failed: " +
         s"${e.getClass.getSimpleName}: ${e.getMessage}")
     }
     cleanup()
-    canary("post_stream_warmup")
 
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Run the variance-prone heavy queries FIRST, right after warmup:
@@ -226,14 +204,12 @@ object Bench {
     val names = (frontLoaded ++
       (SparkEntry.queries.keys.toSeq.sorted diff frontLoaded))
       .filter(n => only.forall(_.contains(n)))
-    val midAt = names.size / 2
     // run1 is published NEXT TO the median: REPEAT>1 medians are warm
     // numbers (runs 2+ reuse JIT/codegen/page-cache state) and understate
     // what a fresh JVM pays — the cold first measurement is the
     // accountability line.
     val run1 = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val results = names.zipWithIndex.map { case (name, qi) =>
-      if (qi == midAt) canary("mid_sweep")
+    val results = names.map { name =>
       val raw = (1 to repeat).map { _ =>
         val t0 = System.nanoTime()
         try run(name)
@@ -247,56 +223,25 @@ object Bench {
         dt
       }
       run1(name) = raw.head
-      canaryQ(name) = miniCanary()
       val times = raw.sorted
       name -> times(times.length / 2) // median (== the value when repeat=1)
     }
 
-    // Wave/GC audit pass:
-    // any query reading > 1.5x its baseline median (excess > 0.3s; plus
-    // the relative-only 2x tier for sub-0.3s queries,
-    // q_pipeline_incremental at its tighter 1.75x) is re-measured ONCE
-    // in a QUIET WINDOW — the rerun waits (bounded, 30s) for the
-    // mini-canary to return to the sweep's own floor, so a 60-90s host
-    // wave cannot cover both measurements — and the (first, rerun,
-    // canary_rel) triple is published in "retried". The headline then
-    // folds min(first, rerun): a genuine regression is slow on the
-    // QUIET rerun too and survives the fold; a wave hit is not, and the
-    // per-query canary map says which it was with no prose. Runs under
-    // REPEAT>1 as well: host waves have covered all three consecutive
-    // repeats, so medians are not wave-proof either.
-    // Retries are capped at 40 a sweep — far above the observed worst
-    // case (14) — so a pathologically loaded host
-    // cannot double the sweep; the cap being HIT is itself published
-    // (retry_budget_exhausted).
-    //
     // Baseline file contract: must parse as JSON and its "sf" must match
     // this run's sfDir, else the audit pass is skipped and the reason is
     // published in "baseline_status" — a stale/mismatched baseline must
     // not silently change which queries get audited.
-    val (baselines, baselineStatus, driftJson)
-        : (Map[String, Double], String, String) =
+    val (baselines, baselineStatus): (Map[String, Double], String) =
       try {
         import org.json4s._
         import org.json4s.jackson.JsonMethods
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("BENCH_BASELINE.json")), "UTF-8")
-        val j = JsonMethods.parse(txt)
-        // drift vs the frozen anchor: computed at rebase time by
-        // tools/make_baseline.py on MEDIANS (single-run values are never
-        // drift evidence — one calibration gave 25 spurious single-run
-        // flags vs 1 median flag), republished verbatim here so the
-        // BENCH artifact carries it.
-        val drift = j \ "drift_vs_r13" match {
-          case JNothing => """{"status":"absent_from_baseline"}"""
-          case v => JsonMethods.compact(JsonMethods.render(v))
-        }
+        val j = JsonMethods.parse(new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get("BENCH_BASELINE.json")), "UTF-8"))
         val bsf = j \ "sf" match {
           case JString(s) => s
           case _ => ""
         }
-        if (bsf != sfDir)
-          (Map.empty[String, Double], s"sf_mismatch:$bsf", drift)
+        if (bsf != sfDir) (Map.empty[String, Double], s"sf_mismatch:$bsf")
         else {
           val qs = j \ "queries" match {
             case JObject(fields) => fields.collect {
@@ -305,185 +250,59 @@ object Bench {
             }.toMap
             case _ => Map.empty[String, Double]
           }
-          (qs, if (qs.isEmpty) "empty" else "ok", drift)
+          (qs, if (qs.isEmpty) "empty" else "ok")
         }
       } catch {
-        case _: java.nio.file.NoSuchFileException =>
-          (Map.empty, "absent", """{"status":"no_baseline"}""")
+        case _: java.nio.file.NoSuchFileException => (Map.empty, "absent")
         case e: Throwable =>
-          (Map.empty, s"parse_error:${e.getClass.getSimpleName}",
-            """{"status":"parse_error"}""")
+          (Map.empty, s"parse_error:${e.getClass.getSimpleName}")
       }
-    // Wave-aware retry eligibility: ANY query whose measurement exceeds
-    // 1.5x its baseline median is re-measured before publishing — a 2.0s
-    // absolute floor would hide exactly the wave-hit mid-size queries
-    // (q_tfidf_knn 6.28 vs 1.72 baseline). A 0.3s excess floor remains so
-    // millisecond wobble on sub-second queries doesn't burn the budget
-    // (same floor as the drift rule); tier 2 (relative-only, no floor)
-    // still catches sub-0.3s queries at 2x.
-    def retryEligible(name: String, t: Double, b: Double): Boolean = {
-      val rel = if (name == "q_pipeline_incremental") 1.75 else 2.0
-      (t > 1.5 * b && t - b > 0.3) || t > rel * b
-    }
-    // Quiet-window wait before each rerun: spin the mini-canary until it
-    // reads within 1.3x the sweep's own per-query canary floor (or 30s
-    // passes — the relative value is published either way). A rerun
-    // taken INSIDE the same wave that inflated the first measurement
-    // proves nothing; observed waves ran 60-90s, so bounded waiting
-    // actually clears most of them and the canary_rel field says when
-    // it did not.
-    val miniFloor = if (canaryQ.nonEmpty) canaryQ.values.min else 0.025
-    // Aggregate wait budget (5 min across the whole sweep): a
-    // pathologically loaded host must not be able to stretch the sweep
-    // by 40 retries x 30s of waiting — once the budget is spent,
-    // reruns proceed immediately and canary_rel says they ran hot.
-    var quietWaitBudgetNs = 300L * 1000000000L
-    def awaitQuiet(): Double = {
-      var c = miniCanary()
+    // Audit pass: every retry-eligible query is re-measured ONCE, after
+    // the whole sweep, and the raw (first, rerun) pair is published in
+    // "retried" (rerun -1 when it failed). REPEAT>1 sweeps retry too: a
+    // host load wave can cover all consecutive repeats, so a median is
+    // not wave-proof either. At most 40 reruns a sweep (far above the
+    // observed worst case, 14), so a pathologically loaded host cannot
+    // double the sweep; 40 entries in "retried" means the cap was hit.
+    val retried = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
+    results.filter { case (name, t) =>
+      !errors.contains(name) &&
+        baselines.get(name).exists(retryEligible(name, t, _))
+    }.take(40).foreach { case (name, t) =>
       val t0 = System.nanoTime()
-      val deadline = t0 + math.min(30L * 1000000000L, quietWaitBudgetNs)
-      while (c > 1.3 * miniFloor && System.nanoTime() < deadline) {
-        Thread.sleep(2000)
-        c = miniCanary()
-      }
-      quietWaitBudgetNs = math.max(0L,
-        quietWaitBudgetNs - (System.nanoTime() - t0))
-      c
+      val ok = try { run(name); true } catch { case _: Throwable => false }
+      val t2 = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      cleanup()
+      retried(name) = (t, t2)
     }
-    // (first, rerun, canary-at-rerun relative to the sweep's quiet floor)
-    val retried = scala.collection.mutable.LinkedHashMap[
-      String, (Double, Double, Double)]()
-    var retryBudget = 40
-    // REPEAT>1 sweeps retry too (a 60-90s wave covers ALL THREE
-    // consecutive repeats, so a median is NOT wave-proof — q_tfidf_knn's
-    // median once read 3.6x with every repeat inside one wave)
-    results.foreach { case (name, t) =>
-      baselines.get(name) match {
-        case Some(b) if !errors.contains(name) &&
-            retryEligible(name, t, b) && retryBudget > 0 =>
-          retryBudget -= 1
-          val cq = awaitQuiet()
-          val t0 = System.nanoTime()
-          val ok = try { run(name); true }
-            catch { case _: Throwable => false }
-          val t2 = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-          cleanup()
-          retried(name) = (t, t2, cq / miniFloor)
-        case _ => ()
-      }
-    }
-
-    // Headline folding: a retried query whose rerun
-    // succeeded publishes min(first, rerun) — symmetric evidence for both
-    // readings stays in "run1"/"retried"; a real regression shows on the
-    // rerun too and survives the min().
-    val headline = results.map { case (name, t) =>
-      retried.get(name) match {
-        case Some((first, rerun, _)) if rerun >= 0 =>
-          name -> math.min(first, rerun)
-        case _ => name -> t
-      }
-    }
-
-    canary("end")
-    // skew factor: slowest canary over the fastest — 1.0x on a quiet
-    // host; >1.5x means ambient load stole cycles DURING the sweep and
-    // per-query comparisons against idle-host medians need salt
-    val canarySkew =
-      if (canaries.nonEmpty) canaries.values.max / canaries.values.min
-      else 1.0
-    // per-query skew: worst mini-canary over the sweep's floor — >1.5
-    // means at least one query's measurement window was wave-covered
-    // (which queries: read canary_q in BENCH_FULL against the floor)
-    val canaryQSkew =
-      if (canaryQ.nonEmpty) canaryQ.values.max / canaryQ.values.min
-      else 1.0
 
     def qsJson(entries: Seq[(String, Double)]): String =
       entries.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
         .mkString("{", ",", "}")
-    val total = baseBuild + headline.collect {
-      case (k, v) if !errors.contains(k) => v
-    }.sum
-    // Unfolded headline: the same total WITHOUT the
-    // min(first, rerun) retry fold, so the fold's contribution is one
-    // subtraction (total_raw - total), not an audit of "retried".
-    val totalRaw = baseBuild + results.collect {
-      case (k, v) if !errors.contains(k) => v
-    }.sum
-    val retr = retried.map { case (k, (a, b, cr)) =>
-      "\"" + k +
-        f"""\":{"first":$a%.3f,"rerun":$b%.3f,"canary_rel":$cr%.2f}"""
+    val headline = fold(results, retried)
+    val retr = retried.map { case (k, (a, b)) =>
+      "\"" + k + f"""\":{"first":$a%.3f,"rerun":$b%.3f}"""
     }.mkString("{", ",", "}")
-    def errsJson(cap: Int): String = errors
-      .map { case (k, v) => "\"" + k + "\":\"" + v.take(cap) + "\"" }
+    val errs = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
-    val baseDet = qsJson(baseDetail.toSeq)
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qsJson(headline)},""" +
-        f""""total_raw":$totalRaw%.3f,""" +
+    val line =
+      s"""{"metric":"total","value":${total(baseBuild, headline, errors.keySet)},""" +
+        s""""unit":"sec","queries":${qsJson(headline)},""" +
+        f""""total_raw":${total(baseBuild, results, errors.keySet)}%.3f,""" +
         s""""run1":${qsJson(run1.toSeq)},""" +
-        s""""errors":${errsJson(160)},"retried":$retr,""" +
+        s""""errors":$errs,"retried":$retr,""" +
         f""""shared_base_build":$baseBuild%.3f,""" +
-        s""""base_build_detail":$baseDet,""" +
-        f""""canary":${qsJson(canaries.toSeq)},"canary_skew":$canarySkew%.2f,""" +
-        f""""canary_q":${qsJson(canaryQ.toSeq)},""" +
-        f""""canary_q_skew":$canaryQSkew%.2f,""" +
-        s""""drift_vs_r13":$driftJson,""" +
-        s""""retry_budget_exhausted":${retryBudget == 0},""" +
+        s""""base_build_detail":${qsJson(baseDetail.toSeq)},""" +
         f""""baseline_status":"$baselineStatus","sf":"$sfDir"}"""
-    // The file is the LOSSLESS artifact; stdout is the driver contract —
-    // and the driver's capture keeps only the last ~2000 chars of stdout
-    // (the full per-query map is ~5 KB: a full line arrives
-    // tail-truncated and does not parse). The stdout
-    // line therefore DEGRADES deterministically to fit ~1800 bytes: full
-    // query map if it fits, else the top-K slowest queries (the
-    // perf-grading subset) with an explicit omission count; error
-    // messages shorten before queries drop. Every omitted detail is in
-    // BENCH_FULL.json.
-    val budget = 1800
-    // stdout carries only the drift FLAG COUNT (the full section is in
-    // BENCH_FULL.json) — null when the baseline predates the anchor
-    val driftFlags: String = {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      JsonMethods.parseOpt(driftJson).map(v => v \ "n_flags").collect {
-        case JInt(n) => n.toString
-      }.getOrElse("null")
-    }
-    def stdoutLine(top: Int, errCap: Int): String = {
-      val byTime = headline.sortBy { case (k, v) => (-v, k) }
-      val kept = byTime.take(top).sortBy(_._1)
-      val omitted = headline.size - kept.size
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${qsJson(kept)},""" +
-        f""""total_raw":$totalRaw%.3f,""" +
-        s""""n_queries":${results.size},"queries_omitted":$omitted,""" +
-        s""""errors":${errsJson(errCap)},"n_errors":${errors.size},""" +
-        f""""shared_base_build":$baseBuild%.3f,"baseline_status":"$baselineStatus",""" +
-        s""""drift_vs_r13_flags":$driftFlags,""" +
-        f""""canary_skew":$canarySkew%.2f,"canary_q_skew":$canaryQSkew%.2f,""" +
-        f""""full":"BENCH_FULL.json","sf":"$sfDir"}"""
-    }
-    val candidates = Iterator((results.size, 80), (results.size, 40),
-      (60, 40), (40, 40), (25, 20), (12, 0), (0, 0))
-    val line = candidates.map { case (t, c) => stdoutLine(t, c) }
-      .find(_.length <= budget)
-      .getOrElse(stdoutLine(0, 0))
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json"))
-    java.nio.file.Files.write(out,
-      (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // Byte-identical mirror of the stdout line, written next to the full
-    // artifact so a run pointed elsewhere never overwrites another run's
-    // mirror: a consumer that misses the stdout tail still finds the line.
     java.nio.file.Files.write(
-      out.toAbsolutePath.resolveSibling("BENCH_LINE.json"),
+      java.nio.file.Paths.get(
+        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // The stdout line goes out LAST, after Spark is stopped and logging
     // silenced, so nothing (executor shutdown WARNs, sbt banners — see
-    // build.sbt outputStrategy/showSuccess) can print after it: a
-    // stdout tail capture must find it as the final stdout line. A
-    // throwing stop() is logged, never allowed to swallow the line.
+    // build.sbt outputStrategy/showSuccess) can print after it: it is
+    // the final stdout line. A throwing stop() is logged, never allowed
+    // to swallow the line.
     spark.sparkContext.setLogLevel("ERROR")
     try spark.stop()
     catch {

@@ -43,7 +43,7 @@ object Ivf {
     * fitCentroids and duplicate cell rows. Every internal caller feeds
     * a per-id table (corpus rows / persisted index rows).
     */
-  private def assign(vectors: DataFrame, centroids: DataFrame): DataFrame = {
+  private[llm] def assign(vectors: DataFrame, centroids: DataFrame): DataFrame = {
     val cb = centroids.agg(sort_array(collect_list(struct(
       col("cid"), col("cvec"),
       Similarity.l2norm(col("cvec")).as("cn")))).as("cb"))
@@ -58,15 +58,6 @@ object Ivf {
       .select(col("id"), col("_best").getField("cid").as("cid"),
         col("vec"), col("nv"))
   }
-
-  /** Public cell assignment for composition — the SemDeDup front-end
-    * (`Similarity.semDedupPairs` over IVF cells): each (id, vec) row gets
-    * its best cell by cosine. Output: (id, cid, vec).
-    */
-  def assignCells(vectors: DataFrame, centroids: DataFrame): DataFrame =
-    assign(vectors.toDF("id", "vec")
-        .withColumn("nv", Similarity.l2norm(col("vec"))), centroids)
-      .select(col("id"), col("cid"), col("vec"))
 
   /** Deterministic k-means-lite: digest-ordered seeding + `iters` Lloyd
     * rounds. Returns (cid, cvec).

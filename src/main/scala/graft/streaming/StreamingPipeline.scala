@@ -88,37 +88,15 @@ object StreamingPipeline {
         col("session_window.end").as("session_end"),
         col("user_id"), col("n_events"))
 
-  /** Custom keyed state via flatMapGroupsWithState: cumulative per-user
-    * event counts emitted on every update — the arbitrary-state escape
-    * hatch for semantics windows can't express (monotone counters that
-    * survive across micro-batches AND restarts via the checkpoint's
-    * state store). Production deployments add a GroupStateTimeout as the
-    * state-GC bound; left at NoTimeout here since the counter must never
-    * expire.
-    */
-  def statefulUserCounts(events: org.apache.spark.sql.Dataset[(Long, String)])
-      : DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (Long, Long)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, batch: Iterator[(Long, String)],
-         state: GroupState[Long]) =>
-          val next = state.getOption.getOrElse(0L) + batch.size
-          state.update(next)
-          Iterator((user, next))
-      }
-      .toDF("user_id", "total_events")
-  }
-
-  /** The same cumulative per-user counter on the transformWithState API
-    * (Spark 4's arbitrary-state v2, the successor to
-    * flatMapGroupsWithState): typed `ValueState` handles backed by the
-    * state store, per-state TTL (the state-GC story flatMapGroupsWithState
-    * lacked without timeouts), and timer support. `ttl` bounds how long an
-    * idle user's counter survives — pass `TTLConfig.NONE` for never-expire
-    * semantics identical to `statefulUserCounts`.
+  /** Custom keyed state: cumulative per-user event counts emitted on
+    * every update — the arbitrary-state escape hatch for semantics
+    * windows can't express (monotone counters that survive across
+    * micro-batches AND restarts via the checkpoint's state store). Built
+    * on transformWithState (Spark 4's arbitrary-state v2, the successor
+    * to flatMapGroupsWithState): typed `ValueState` handles backed by the
+    * state store, per-state TTL as the state-GC bound, and timer support.
+    * `ttl` bounds how long an idle user's counter survives; the default
+    * `TTLConfig.NONE` never expires it.
     */
   def statefulUserCountsTws(events: org.apache.spark.sql.Dataset[(Long, String)],
                             ttl: org.apache.spark.sql.streaming.TTLConfig =
@@ -232,11 +210,13 @@ object StreamingPipeline {
     * stored index (`Dedup.minhashDeltaPairsIndexed`, pure index-table
     * form — the batch's index slice is built once and used for both the
     * join and the append), and appends its slice idempotently
-    * (`batch=<id>` directories, same at-least-once → exactly-once
-    * accounting as [[incrementalDedup]]). Versus incrementalDedup, the
-    * per-batch cost drops from O(corpus re-shingle) to O(delta +
-    * colliding-bucket reads) — the difference between a pipeline that
-    * slows down as the corpus grows and one that doesn't.
+    * (`batch=<id>` directories: foreachBatch is at-least-once, so a
+    * replayed batch overwrites its own slice, and those idempotent writes
+    * are what make the checkpoint's batch accounting effectively
+    * exactly-once). Versus re-mining each batch against the accumulated
+    * corpus text, the per-batch cost drops from O(corpus re-shingle) to
+    * O(delta + colliding-bucket reads) — the difference between a
+    * pipeline that slows down as the corpus grows and one that doesn't.
     *
     * Concurrency contract: `indexDir` is OWNED by exactly one stream
     * (the checkpoint already enforces one writer per checkpointDir; the
@@ -319,60 +299,6 @@ object StreamingPipeline {
           wBands, wBase, num = 8, den = 10)
         pairs.write.mode("overwrite")
           .parquet(s"$pairsDir/batch=$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Continuous-ingest near-dup detection: each micro-batch of documents
-    * is MinHash-mined against the accumulated corpus via
-    * `Dedup.minhashDeltaPairs` (corpus-bands × delta-bands — the corpus
-    * never joins itself), found pairs land in `pairsDir/batch=<id>`, then
-    * the batch itself lands in `corpusDir/batch=<id>` (per-batch
-    * directories overwritten on replay — foreachBatch is at-least-once,
-    * so idempotent writes are what make the checkpoint's batch accounting
-    * effectively exactly-once). The streaming shape of the
-    * daily-increment dedup in SURVEY §2.12 L20: state lives in parquet
-    * (at scale: the persisted band table bucketed by (band, bkey)), the
-    * checkpoint gives exactly-once batch accounting, and a batch is also
-    * deduped against itself (minhashDeltaPairs includes delta×delta).
-    */
-  def incrementalDedup(docs: DataFrame, corpusDir: String, pairsDir: String,
-                       checkpointDir: String): Unit = {
-    val q = docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // only a MISSING/empty corpus means "first batch, start empty" —
-        // checked explicitly so any actual read failure (corrupt file,
-        // schema drift) surfaces instead of being mistaken for first-run:
-        // swallowing it would silently lose every cross-batch duplicate
-        // while the batch still writes, permanently poisoning the corpus
-        // resolve the filesystem FROM the path, not the default FS — a
-        // corpusDir on s3a:// or hdfs:// with a local default fs would
-        // throw "Wrong FS" from the default-FS handle
-        val corpusPath = new org.apache.hadoop.fs.Path(corpusDir)
-        val fs = corpusPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val corpus =
-          if (fs.exists(corpusPath) && fs.listStatus(corpusPath).nonEmpty)
-            spark.read.parquet(corpusDir).select("doc_id", "text")
-          // first-batch placeholder carries the BATCH's own doc_id/text
-          // types (a string doc_id would fail or silently widen in
-          // unionByName against a hardcoded BIGINT placeholder)
-          else batch.select("doc_id", "text").limit(0)
-        val pairs = graft.ops.llm.Dedup.minhashDeltaPairs(
-          corpus, batch, "doc_id", "text")
-        // foreachBatch is at-least-once: a replayed batch must overwrite
-        // its own slice, not append a second copy — per-batch directories
-        // make both writes idempotent, which is what actually backs the
-        // exactly-once accounting claimed above
-        pairs.write.mode("overwrite")
-          .parquet(s"$pairsDir/batch=$batchId")
-        batch.select("doc_id", "text").write.mode("overwrite")
-          .parquet(s"$corpusDir/batch=$batchId")
         ()
       }
       .start()

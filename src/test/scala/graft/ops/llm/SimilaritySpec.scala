@@ -317,7 +317,9 @@ class SimilaritySpec extends SparkSpec {
     val planted = embeddings.filter(col("vec_id") === 0)
       .select(lit(9000L).as("vec_id"), col("v"))
     val vs = embeddings.unionByName(planted)
-    val cells = Ivf.assignCells(vs, Ivf.fitCentroids(vs, 8, 2))
+    val cells = Ivf.assign(
+        vs.toDF("id", "vec").withColumn("nv", Similarity.l2norm(col("vec"))),
+        Ivf.fitCentroids(vs, 8, 2))
       .select(col("id"), col("cid"), col("vec"))
     val found = Similarity.semDedupPairs(
         cells.select(col("id"), col("cid").as("cell"), col("vec")), 0.95)

@@ -89,32 +89,6 @@ class StreamingSpec extends SparkSpec {
     assert(rows(2L) == Seq(1L))
   }
 
-  test("flatMapGroupsWithState: counts survive across restarts via checkpoint") {
-    implicit val sqlCtx = spark.sqlContext
-    val ckpt = graft.TempDirs.create("graft-state")
-    val seen = scala.collection.concurrent.TrieMap.empty[Long, Long]
-    def drain(mem: MemoryStream[(Long, String)]): Unit = {
-      val q = StreamingPipeline.statefulUserCounts(mem.toDS())
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .outputMode("update").trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.collect().foreach(r => seen(r.getLong(0)) = r.getLong(1))
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    val mem = MemoryStream[(Long, String)]
-    mem.addData((1L, "a"), (1L, "b"), (2L, "c"))
-    drain(mem)
-    assert(seen.get(1L).contains(2L) && seen.get(2L).contains(1L))
-    mem.addData((1L, "d"))
-    drain(mem) // restarted query, same checkpointed state store
-    assert(seen.get(1L).contains(3L),
-      s"user 1 cumulative must reach 3 across restart: $seen")
-  }
-
   test("transformWithState: counts survive across restarts via checkpoint") {
     implicit val sqlCtx = spark.sqlContext
     val ckpt = graft.TempDirs.create("graft-tws")
@@ -257,33 +231,6 @@ class StreamingSpec extends SparkSpec {
       q.stop()
       spark.conf.set(trackKey, trackOld)
     }
-  }
-
-  test("incremental ingest dedup: batches mine pairs vs the growing corpus") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = graft.TempDirs.create("graft-inc-dedup")
-    val (corpus, pairs, ckpt) =
-      (s"$dir/corpus", s"$dir/pairs", s"$dir/ckpt")
-    val a = "spark merges batches of rows into partitions for every stage"
-    val mem = MemoryStream[(Long, String)]
-    // batch 1: two unrelated docs → no pairs, corpus seeded
-    mem.addData((1L, a), (2L, "totally different cooking text about pasta"))
-    def drain(): Unit = StreamingPipeline.incrementalDedup(
-      mem.toDS().toDF("doc_id", "text"), corpus, pairs, ckpt)
-    drain()
-    assert(spark.read.parquet(corpus).count() == 2)
-    // batch 2: near-dup of doc 1 + exact dup of doc 2 → pairs vs CORPUS
-    mem.addData((3L, a + " again"), (4L, "totally different cooking text about pasta"))
-    drain()
-    val found = spark.read.parquet(pairs)
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    assert(found.contains((2L, 4L)), s"exact dup vs corpus missing: $found")
-    assert(found.contains((1L, 3L)), s"near dup vs corpus missing: $found")
-    assert(spark.read.parquet(corpus).count() == 4)
-    // re-drain with no new data: checkpoint prevents re-mining
-    drain()
-    assert(spark.read.parquet(pairs).count() == found.size.toLong,
-      "replayed batch must not duplicate pairs")
   }
 
   test("index-backed incremental dedup: same pairs, corpus never re-shingled") {

@@ -74,28 +74,10 @@ object Stress {
           .select(explode(Multimodal.frameSample(col("payload"),
             col("meta.n_frames"))))
           .count()),
-      // X12i streaming incremental ingest dedup, end-to-end through the
-      // file source + AvailableNow checkpointed query (RocksDB state store
-      // via GraftSession): 4 micro-batches, each band-joined against the
-      // corpus accumulated so far. The factor must track the linear
-      // delta×corpus join volume, never corpus² — the quadratic
-      // corpus self-join this op exists to avoid.
-      "stream_incremental_dedup" -> (d => {
-        val spark = d.sparkSession
-        val root = graft.TempDirs.create("graft-sstress")
-        val src = d.select(col("doc_id"), col("text"))
-        src.repartition(4).write.mode("overwrite").parquet(s"$root/src")
-        val docs = spark.readStream.schema(src.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$root/src")
-        graft.streaming.StreamingPipeline.incrementalDedup(docs,
-          s"$root/corpus", s"$root/pairs", s"$root/ckpt")
-        spark.read.parquet(s"$root/pairs").count()
-      }),
-      // X12k index-backed streaming ingest dedup: state = (bands, base)
-      // slices, never corpus text. Same 4-micro-batch drive as the
-      // recompute op above — the factor comparison between the two IS
-      // the measured value of the persisted index (per-batch corpus
-      // re-shingle vs delta-only).
+      // X12k index-backed streaming ingest dedup, end-to-end through the
+      // file source + AvailableNow checkpointed query: 4 micro-batches,
+      // state = (bands, base) slices, never corpus text. The factor must
+      // track the delta, never corpus² (per-batch corpus re-shingle).
       "stream_inc_dedup_indexed" -> (d => {
         val spark = d.sparkSession
         val root = graft.TempDirs.create("graft-sstress-idx")

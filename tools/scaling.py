@@ -133,8 +133,6 @@ def main():
                         "embeddings_families": SIZE_RATIO_HI},
         "noise_floor_s": NOISE_FLOOR_S,
         "flag_exponent": FLAG_EXPONENT,
-        "canary_skew": {sf: b.get("canary_skew")
-                        for sf, b in benches.items()},
         "families": table,
         "flagged": flagged,
     }
