@@ -99,15 +99,6 @@ object Compaction {
   final case class CompactResult(filesKept: Long, filesRewritten: Long,
                                  binsRewritten: Long, bytesRewritten: Long)
 
-  /** Apply a compaction pass: merge every multi-file bin of `srcDir`'s
-    * parquet files into one ~targetBytes output file under `destDir`.
-    * Singleton bins are already at target and are NOT read or copied —
-    * the caller keeps them where they are (move/retain is a metadata
-    * decision, not a data job). One Spark job, one shuffle of only the
-    * small-file bytes; the path→bin map rides a broadcast hashed
-    * relation joined on `input_file_name()` (manifest scale, see class
-    * doc — never a plan literal).
-    */
   /** Read the multi-file-bin paths and tag each row with its owning bin.
     * The path→bin map rides a BROADCAST relation, not a plan literal: at
     * the class doc's design point (~800k files / 100 TB) a `typedlit`
@@ -124,6 +115,15 @@ object Compaction {
       .join(broadcast(binFrame), "__path")
       .drop("__path")
 
+  /** Apply a compaction pass: merge every multi-file bin of `srcDir`'s
+    * parquet files into one ~targetBytes output file under `destDir`.
+    * Singleton bins are already at target and are NOT read or copied —
+    * the caller keeps them where they are (move/retain is a metadata
+    * decision, not a data job). One Spark job, one shuffle of only the
+    * small-file bytes; the path→bin map rides a broadcast hashed
+    * relation joined on `input_file_name()` (manifest scale, see class
+    * doc — never a plan literal).
+    */
   def compact(spark: SparkSession, srcDir: String, destDir: String,
               targetBytes: Long): CompactResult = {
     val planned = plan(listFiles(spark, srcDir), targetBytes)

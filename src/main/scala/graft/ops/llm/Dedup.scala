@@ -59,7 +59,7 @@ object Dedup {
     // partition, which would run the expensive shingle pass on one core —
     // shuffling the raw text is trivial by comparison.
     //
-    // EAGER CHECKPOINT DISCIPLINE (repo-wide, r10): every localCheckpoint
+    // EAGER CHECKPOINT DISCIPLINE (repo-wide): every localCheckpoint
     // whose result feeds more than one plan branch uses eager=true. A
     // *lazy* checkpoint handed to a multi-consumer plan can deadlock
     // inside Spark itself: dag-scheduler-event-loop takes the checkpoint
@@ -68,7 +68,7 @@ object Dedup {
     // broadcast-exchange thread — materializing the checkpoint as a side
     // effect of its own job — holds RDDCheckpointData$ (RDD.doCheckpoint)
     // and waits for that RDD's monitor (markCheckpointed). Lock-order
-    // inversion, permanent hang; jstack-confirmed in round 9 on
+    // inversion, permanent hang; jstack-confirmed on
     // editDistancePairs below. eager=true materializes the blocks under
     // a single job BEFORE any fan-out, so no consumer ever races the
     // checkpoint — same single scan, paid deterministically.
@@ -169,7 +169,7 @@ object Dedup {
       .filter(col("inter") * den >= col("na") * num)
   }
 
-  /** Bounded-output containment mining (r7 verdict #3): the full pair
+  /** Bounded-output containment mining: the full pair
     * list of [[containmentPairs]] is output-linear in the TRUE pair
     * count, which an adversarial corpus (a giant mutual-containment
     * family) makes quadratic — at 100 TB the run cost becomes pair
@@ -291,10 +291,6 @@ object Dedup {
       .filter(col("inter") * den >= col("uni") * num)
   }
 
-  /** MinHash+LSH near-dup pairs: k=2*bands sha256 signatures, banded r=2,
-    * candidates from same-(band, bandkey) buckets, verified with exact
-    * shingle Jaccard >= num/den. Output (a, b, inter, uni).
-    */
   /** Banded-bucket candidate mining + exact verify — the shared back half
     * of every MinHash query (minhashDedup and minhashCalibration must see
     * the IDENTICAL pair set, so they share this by construction).
@@ -310,6 +306,10 @@ object Dedup {
     verifyPairs(cand, base, num, den)
   }
 
+  /** MinHash+LSH near-dup pairs: k=2*bands sha256 signatures, banded r=2,
+    * candidates from same-(band, bandkey) buckets, verified with exact
+    * shingle Jaccard >= num/den. Output (a, b, inter, uni).
+    */
   def minhashDedup(df: DataFrame, idCol: String, textCol: String,
                    n: Int = 3, bands: Int = 4, num: Int = 8, den: Int = 10)
       : DataFrame = {
@@ -361,18 +361,6 @@ object Dedup {
           .as("jac_permille"))
   }
 
-  /** Incremental near-dup mining: pairs involving at least one `incoming`
-    * doc against `existing ∪ incoming` — the daily-ingest shape. Result is
-    * exactly `minhashDedup(existing ∪ incoming)` filtered to pairs with an
-    * incoming side (completeness: any qualifying pair shares a band bucket
-    * with its incoming member), but the bucket join's right side is the
-    * DELTA's bands only — the full corpus never joins against itself, and
-    * when the delta is small AQE broadcasts it, so an increment costs one
-    * corpus scan + a delta-sized join instead of a corpus×corpus bucket
-    * join. At production scale use [[minhashDeltaPairsIndexed]] instead:
-    * the `existing` side arrives as the persisted [[minhashIndex]]
-    * tables and is never re-shingled at all.
-    */
   /** Estimator-calibration view: for every LSH-verified pair, the Jaccard
     * ESTIMATE implied by the MinHash signatures (matching 32-bit families /
     * total, in permille) next to the exact Jaccard — the query that tells
@@ -439,29 +427,6 @@ object Dedup {
         col("inter"), col("uni"), col("jac_ppm"))
   }
 
-  /** Capped candidate generation for the kNN graph: the banded bucket
-    * self-join, with the RIGHT side of each (band, bkey) bucket limited
-    * to `maxBucket` members picked by rank of xxhash64(band, bkey, doc)
-    * (doc as tie-break — fully deterministic under any partitioning).
-    * The left (probe) side keeps every member, so each doc still
-    * receives candidates; only its choice of partners inside an
-    * oversized bucket is sampled. Candidates per bucket:
-    * |bucket| · min(|bucket|, maxBucket) instead of |bucket|².
-    *
-    * Cap observability (r7 ADVICE): sampling inside oversize buckets is
-    * a recall decision that must never be silent — the observed metric
-    * `graft_knn_bucket_cap.n_buckets_at_cap` (a `Dataset.observe`
-    * CollectMetrics node: exactly one surviving row per at-cap bucket
-    * carries rank == maxBucket) reports per-run how many buckets hit the
-    * cap. It is emitted on every run, but no main-code listener reads it
-    * yet (ROADMAP #3); today only specs do. The metric counts buckets of
-    * size >= maxBucket — a bucket of EXACTLY maxBucket rows is counted
-    * though nothing was dropped (the boundary over-report is the price
-    * of keeping the CollectMetrics node ABOVE the rank filter, where it
-    * cannot break the Filter-over-Window adjacency that
-    * InferWindowGroupLimit needs to map-side-limit the cap itself —
-    * plan-asserted in PlanAuditSpec).
-    */
   /** Undirected distinct LSH candidate pairs (a < b): the banded bucket
     * self-join the near-dup family mines, exposed as a graph substrate
     * for whole-graph analytics (k-core). Same hot-bucket cap as
@@ -479,6 +444,29 @@ object Dedup {
       .select(col("na").as("a"), col("nb").as("b"))
   }
 
+  /** Capped candidate generation for the kNN graph: the banded bucket
+    * self-join, with the RIGHT side of each (band, bkey) bucket limited
+    * to `maxBucket` members picked by rank of xxhash64(band, bkey, doc)
+    * (doc as tie-break — fully deterministic under any partitioning).
+    * The left (probe) side keeps every member, so each doc still
+    * receives candidates; only its choice of partners inside an
+    * oversized bucket is sampled. Candidates per bucket:
+    * |bucket| · min(|bucket|, maxBucket) instead of |bucket|².
+    *
+    * Cap observability: sampling inside oversize buckets is
+    * a recall decision that must never be silent — the observed metric
+    * `graft_knn_bucket_cap.n_buckets_at_cap` (a `Dataset.observe`
+    * CollectMetrics node: exactly one surviving row per at-cap bucket
+    * carries rank == maxBucket) reports per-run how many buckets hit the
+    * cap. It is emitted on every run, but no main-code listener reads it
+    * yet (ROADMAP #3); today only specs do. The metric counts buckets of
+    * size >= maxBucket — a bucket of EXACTLY maxBucket rows is counted
+    * though nothing was dropped (the boundary over-report is the price
+    * of keeping the CollectMetrics node ABOVE the rank filter, where it
+    * cannot break the Filter-over-Window adjacency that
+    * InferWindowGroupLimit needs to map-side-limit the cap itself —
+    * plan-asserted in PlanAuditSpec).
+    */
   private[llm] def knnCandidates(banded: DataFrame,
                                  maxBucket: Int): DataFrame = {
     require(maxBucket >= 1, "maxBucket must be at least 1")
@@ -500,7 +488,7 @@ object Dedup {
   }
 
   /** Audit of the hot-bucket-cap assumption the capped candidate family's
-    * ORACLES rely on (r14 ADVICE): the DuckDB twins of q_kcore /
+    * ORACLES rely on: the DuckDB twins of q_kcore /
     * q_single_linkage / the kNN-graph tier mine LSH buckets UNCAPPED,
     * while the Spark side samples partners inside buckets over
     * `maxBucket` — the two engines diverge exactly when a (band, bkey)
@@ -617,10 +605,10 @@ object Dedup {
       .select(col("doc_id"), col("nbr_id"), col("rnk"), col("cos_micro"))
   }
 
-  /** Containment k-NN graph — the BOUNDED-COMPUTE containment miner
-    * (r7 verdict #3): [[knnGraph]]'s capped LSH-bucket candidate
-    * machinery reused verbatim, but scored with asymmetric containment
-    * |A∩B|/|A| instead of Jaccard: per doc, its `k` strongest containers
+  /** Containment k-NN graph — the BOUNDED-COMPUTE containment miner:
+    * [[knnGraph]]'s capped LSH-bucket candidate machinery reused
+    * verbatim, but scored with asymmetric containment |A∩B|/|A|
+    * instead of Jaccard: per doc, its `k` strongest containers
     * among same-bucket mates. Candidate volume is the capped
     * Σ|bucket|·min(|bucket|, maxBucket) — never the true-pair count, so
     * an adversarial mutual-containment family costs what MinHash mining
@@ -758,29 +746,15 @@ object Dedup {
 
   /** Incremental near-dup mining against a PERSISTED index — the
     * production form of [[minhashDeltaPairs]]: the corpus side arrives
-    * as the stored (bands, base) tables of [[minhashIndex]], so an
-    * increment costs ONE delta-sized shingle pass + a delta-sized
-    * bucket join + verification reads of only the colliding corpus
-    * docs. The corpus text is never rescanned, never re-shingled.
-    * Result is row-identical to `minhashDeltaPairs(corpus, incoming)`
-    * (spec-asserted); ids must be disjoint between index and delta,
-    * as in the recompute form.
-    */
-  def minhashDeltaPairsIndexed(indexBands: DataFrame, indexBase: DataFrame,
-                               incoming: DataFrame,
-                               idCol: String, textCol: String,
-                               n: Int = 3, bands: Int = 4,
-                               num: Int = 8, den: Int = 10): DataFrame = {
-    val (dBands, dBase) = minhashIndex(incoming, idCol, textCol, n, bands)
-    minhashDeltaPairsIndexed(indexBands, indexBase, dBands, dBase,
-      num, den)
-  }
-
-  /** Pure index-table form: both the corpus AND the delta arrive as
-    * prebuilt (bands, base) tables — no text column touched at all.
-    * This is what a streaming ingest uses when the delta's index slice
-    * is also being appended to the store (build it once, mine with it,
-    * write it).
+    * as the stored (bands, base) tables of [[minhashIndex]] and the delta
+    * as its own [[minhashIndex]] slice, so an increment costs ONE
+    * delta-sized shingle pass + a delta-sized bucket join + verification
+    * reads of only the colliding corpus docs. The corpus text is never
+    * rescanned, never re-shingled. Result is row-identical to
+    * `minhashDeltaPairs(corpus, incoming)` (spec-asserted); ids must be
+    * disjoint between index and delta, as in the recompute form. A
+    * streaming ingest builds the delta's slice once, mines with it and
+    * appends it to the store.
     */
   def minhashDeltaPairsIndexed(indexBands: DataFrame, indexBase: DataFrame,
                                deltaBands: DataFrame, deltaBase: DataFrame,
@@ -801,6 +775,18 @@ object Dedup {
     verifyPairs(cand, allBase, num, den)
   }
 
+  /** Incremental near-dup mining: pairs involving at least one `incoming`
+    * doc against `existing ∪ incoming` — the daily-ingest shape. Result is
+    * exactly `minhashDedup(existing ∪ incoming)` filtered to pairs with an
+    * incoming side (completeness: any qualifying pair shares a band bucket
+    * with its incoming member), but the bucket join's right side is the
+    * DELTA's bands only — the full corpus never joins against itself, and
+    * when the delta is small AQE broadcasts it, so an increment costs one
+    * corpus scan + a delta-sized join instead of a corpus×corpus bucket
+    * join. At production scale use [[minhashDeltaPairsIndexed]] instead:
+    * the `existing` side arrives as the persisted [[minhashIndex]]
+    * tables and is never re-shingled at all.
+    */
   def minhashDeltaPairs(existing: DataFrame, incoming: DataFrame,
                         idCol: String, textCol: String,
                         n: Int = 3, bands: Int = 4,
@@ -1056,7 +1042,7 @@ object Dedup {
     bigPairs.unionByName(smallDiff).unionByName(smallSame)
   }
 
-  /** Bounded-output edit-distance mining (r7 verdict #3, the
+  /** Bounded-output edit-distance mining (the
     * [[containmentTopK]] rationale): symmetrize [[editDistancePairs]]'s
     * canonical a<b pairs into directed (doc_id, nbr_id) edges and keep
     * each doc's `k` closest neighbors (dist asc, nbr_id asc) via the
@@ -1070,7 +1056,7 @@ object Dedup {
     // EAGER CHECKPOINT DISCIPLINE: the symmetrizing union below reads the
     // pair table twice (once per direction) — un-checkpointed, the whole
     // Ed-Join mining front-end (gram explode + prefix join + banded DP)
-    // executed twice per run (r16 plan census: 27 Exchanges vs the base
+    // executed twice per run (plan census: 27 Exchanges vs the base
     // miner's 13).
     val p = editDistancePairs(df, idCol, textCol, q, maxDist, prefixChars)
       .localCheckpoint(true)
@@ -1151,7 +1137,7 @@ object Dedup {
     * contraction graph under a weight-monotone path) must pass a larger
     * budget AND `strict = true`: a silently-unconverged label table is a
     * correctness bug downstream (duplicate forest edges, split clusters),
-    * not a perf knob (r14 ADVICE, Mst.boruvka).
+    * not a perf knob (Mst.boruvka).
     *
     * @param strict throw instead of returning when the label fixpoint was
     *               not reached within `maxIter` rounds
@@ -1161,7 +1147,7 @@ object Dedup {
     connectedComponents(pairs, maxIter, strict,
       preMaterialized = false, knownEdgeCount = -1L)
 
-  /** Iterative-caller variant (r16 optimization): a loop that calls CC
+  /** Iterative-caller variant: a loop that calls CC
     * once per round (Borůvka contraction, batched dendrogram cuts) pays
     * the input re-checkpoint and the sizing count() as two extra Spark
     * jobs per call — pure driver/scheduler fixed cost on forest-sized
@@ -1194,7 +1180,7 @@ object Dedup {
       .union(p.select(col("b").as("src"), col("a").as("dst")))
       .repartition(parts, col("src"))
       .localCheckpoint(true)
-    // ONE Spark job per round (r16 verdict #4 — the loop paid up to
+    // ONE Spark job per round (the loop used to pay up to
     // three driver-scheduled jobs per round: propagate checkpoint, jump
     // checkpoint, convergence-sum agg; iterative consumers like Borůvka
     // and the batched dendrogram cuts pay the loop once per contraction

@@ -120,30 +120,6 @@ object Ivf {
         round(col("score"), 4).as("score4"))
   }
 
-  /** Bit-deterministic IVF search — the hash-verifiable twin of `topK`:
-    * every arithmetic step is either exact integer or a single correctly
-    * rounded IEEE op on exact integers, so the result is engine-portable
-    * (same rows in Spark and DuckDB), unlike float-cosine ANN.
-    *
-    *  - corpus and queries are int8-quantized (`Similarity.int8Codes`,
-    *    the oracle-checked q_quantize scheme);
-    *  - the coarse quantizer is seeded, not fitted: cells are the
-    *    `nClusters` corpus vectors with the smallest sha256(id) digests
-    *    (deterministic, SQL-expressible — Lloyd iterations would need
-    *    order-dependent float means);
-    *  - cell affinity: cos(v,c) on int8 codes = dot/(|v||c|) — the
-    *    dequant scales cancel, |v| is constant per row, so ranking cells
-    *    by sign-preserving dot²/|c|² is exact; the one double division is
-    *    of exact sub-2^53 integers (correctly rounded → bit-identical
-    *    across engines), ties broken on cid;
-    *  - final score: integer code-dot × both dequant scales (BIGINT),
-    *    exactly q_similarity_int8's scoring, restricted to the query's
-    *    `nprobe` best cells.
-    *
-    * Scale shape: the centroid table (nClusters rows) broadcasts to both
-    * assignment and probe sides; the corpus shuffles once, on cell id,
-    * into the probe join; TopK is two-phase WindowGroupLimit.
-    */
   /** Digest-seeded int8 coarse quantizer from a prepared codes table
     * (id, cv): the `nClusters` vectors with the smallest sha256(id)
     * digests, with their integer squared norms. Shared by the batch
@@ -252,6 +228,30 @@ object Ivf {
       .select(col("qid"), col("id"), col("rnk"), col("score"))
   }
 
+  /** Bit-deterministic IVF search — the hash-verifiable twin of `topK`:
+    * every arithmetic step is either exact integer or a single correctly
+    * rounded IEEE op on exact integers, so the result is engine-portable
+    * (same rows in Spark and DuckDB), unlike float-cosine ANN.
+    *
+    *  - corpus and queries are int8-quantized (`Similarity.int8Codes`,
+    *    the oracle-checked q_quantize scheme);
+    *  - the coarse quantizer is seeded, not fitted: cells are the
+    *    `nClusters` corpus vectors with the smallest sha256(id) digests
+    *    (deterministic, SQL-expressible — Lloyd iterations would need
+    *    order-dependent float means);
+    *  - cell affinity: cos(v,c) on int8 codes = dot/(|v||c|) — the
+    *    dequant scales cancel, |v| is constant per row, so ranking cells
+    *    by sign-preserving dot²/|c|² is exact; the one double division is
+    *    of exact sub-2^53 integers (correctly rounded → bit-identical
+    *    across engines), ties broken on cid;
+    *  - final score: integer code-dot × both dequant scales (BIGINT),
+    *    exactly q_similarity_int8's scoring, restricted to the query's
+    *    `nprobe` best cells.
+    *
+    * Scale shape: the centroid table (nClusters rows) broadcasts to both
+    * assignment and probe sides; the corpus shuffles once, on cell id,
+    * into the probe join; TopK is two-phase WindowGroupLimit.
+    */
   def int8TopKExact(vectors: DataFrame, queries: DataFrame, k: Int,
                     nClusters: Int = 16, nprobe: Int = 4): DataFrame = {
     val (cents, assigned) = int8Index(vectors, nClusters)

@@ -155,14 +155,6 @@ object Pq {
         round(col("adc"), 4).as("adc4"))
   }
 
-  /** ADC-shortlist + exact refine — the production IVF-PQ+refine recipe:
-    * ADC cheaply cuts the corpus to a `shortlist` per query (m table
-    * lookups per candidate), then ONLY the shortlist rows re-join their
-    * full vectors for exact cosine rescoring. At scale the expensive
-    * arithmetic touches `shortlist × queries` rows instead of the
-    * corpus. Output: (qid, id, rnk, score4) — same shape as
-    * [[Similarity.bruteForceTopK]].
-    */
   /** Hash-verifiable twin of [[refineTopK]]: same ADC-shortlist → refine
     * pipeline, but the refine rescore is the exact-integer int8 score
     * (code-dot × both dequant scales, [[Similarity.int8TopK]]'s scoring)
@@ -196,6 +188,14 @@ object Pq {
       .select(col("qid"), col("id"), col("rnk"), col("score"))
   }
 
+  /** ADC-shortlist + exact refine — the production IVF-PQ+refine recipe:
+    * ADC cheaply cuts the corpus to a `shortlist` per query (m table
+    * lookups per candidate), then ONLY the shortlist rows re-join their
+    * full vectors for exact cosine rescoring. At scale the expensive
+    * arithmetic touches `shortlist × queries` rows instead of the
+    * corpus. Output: (qid, id, rnk, score4) — same shape as
+    * [[Similarity.bruteForceTopK]].
+    */
   def refineTopK(vectors: DataFrame, codes: DataFrame, codebooks: DataFrame,
                  queries: DataFrame, m: Int, k: Int,
                  shortlist: Int): DataFrame = {

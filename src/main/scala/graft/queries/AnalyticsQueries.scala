@@ -31,6 +31,146 @@ object AnalyticsQueries {
                        discount: org.apache.spark.sql.Column) =
     round(price * (lit(1.0) - discount) * 100).cast("long")
 
+  // 12h-gap sessionization in exact µs: `sess(user_id, event_id, tsu, $idx)`
+  // with `$idx` the per-user session index.
+  private def duckSessions(idx: String) =
+    s"""e AS (SELECT user_id, event_id, epoch_us(ts) tsu FROM events),
+      |flagged AS (
+      |  SELECT user_id, event_id, tsu,
+      |    CASE WHEN lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id)
+      |           IS NULL
+      |         OR tsu - lag(tsu) OVER (PARTITION BY user_id
+      |             ORDER BY tsu, event_id) > 43200000000
+      |         THEN 1 ELSE 0 END AS is_new
+      |  FROM e),
+      |sess AS (
+      |  SELECT user_id, event_id, tsu,
+      |    sum(is_new) OVER (PARTITION BY user_id ORDER BY tsu, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS $idx
+      |  FROM flagged)""".stripMargin
+
+  // Per-session event count, duration and first/last event ids.
+  private val duckSessionStats =
+    """  CAST(count(*) AS BIGINT) AS n_events,
+      |  CAST(max(tsu) - min(tsu) AS BIGINT) AS dur,
+      |  CAST(min(event_id) AS BIGINT) AS first_event,
+      |  CAST(max(event_id) AS BIGINT) AS last_event""".stripMargin
+
+  // Sessions keyed by start; q_stream_sessionize and its append twin share
+  // this oracle.
+  private val duckStreamSessions =
+    s"""WITH ${duckSessions("idx")}
+      |SELECT user_id,
+      |  CAST(min(tsu) AS BIGINT) AS session_start,
+      |  CAST(max(tsu) - min(tsu) AS BIGINT) AS dur,
+      |  CAST(count(*) AS BIGINT) AS n_events,
+      |  CAST(min(event_id) AS BIGINT) AS first_event,
+      |  CAST(max(event_id) AS BIGINT) AS last_event
+      |FROM sess GROUP BY user_id, idx""".stripMargin
+
+  // The signup → click → purchase funnel (24h steps); q_funnel and
+  // q_stream_funnel share this oracle.
+  private val duckFunnel =
+    """WITH e AS (SELECT user_id, event_type, epoch_us(ts) tsu
+      |           FROM events),
+      |u AS (SELECT user_id,
+      |    min(CASE WHEN event_type = 'signup' THEN tsu END) t1
+      |  FROM e GROUP BY 1),
+      |u2 AS (SELECT u.user_id, u.t1,
+      |    min(CASE WHEN e.event_type = 'click' AND e.tsu > u.t1
+      |             AND e.tsu <= u.t1 + 86400000000 THEN e.tsu END) t2
+      |  FROM u JOIN e ON e.user_id = u.user_id GROUP BY 1, 2),
+      |u3 AS (SELECT u2.user_id, u2.t1, u2.t2,
+      |    min(CASE WHEN e.event_type = 'purchase' AND e.tsu > u2.t2
+      |             AND e.tsu <= u2.t2 + 86400000000 THEN e.tsu END) t3
+      |  FROM u2 JOIN e ON e.user_id = u2.user_id GROUP BY 1, 2, 3)
+      |SELECT
+      |  CAST(count(*) FILTER (WHERE t1 IS NOT NULL) AS BIGINT) n_signup,
+      |  CAST(count(*) FILTER (WHERE t2 IS NOT NULL) AS BIGINT)
+      |    n_then_click,
+      |  CAST(count(*) FILTER (WHERE t3 IS NOT NULL) AS BIGINT)
+      |    n_then_purchase
+      |FROM u3""".stripMargin
+
+  // Clicks `c(user_id, cid, tsu)` and views `v(user_id, tsu, vid)` in µs,
+  // one view id per (user, tsu).
+  private val duckClickViews =
+    """c AS (SELECT user_id, event_id cid, epoch_us(ts) tsu
+      |           FROM events WHERE event_type = 'click'),
+      |v0 AS (SELECT user_id, event_id vid, epoch_us(ts) tsu
+      |       FROM events WHERE event_type = 'view'),
+      |v AS (SELECT user_id, tsu, max(vid) vid FROM v0 GROUP BY 1, 2)"""
+      .stripMargin
+
+  // Each click with its latest view at or before it; q_asof_join and
+  // q_stream_asof share this oracle.
+  private val duckAsofJoin =
+    s"""WITH $duckClickViews
+      |SELECT c.cid AS click_id, c.user_id, c.tsu AS ts,
+      |  v.vid AS view_id, c.tsu - v.tsu AS gap
+      |FROM c ASOF LEFT JOIN v
+      |  ON c.user_id = v.user_id AND c.tsu >= v.tsu""".stripMargin
+
+  // Counts of consecutive event-type pairs per user; q_transitions and
+  // q_stream_transitions share this oracle.
+  private val duckTransitions =
+    """WITH e AS (SELECT user_id, event_id, event_type,
+      |             epoch_us(ts) tsu FROM events),
+      |nx AS (SELECT event_type ft,
+      |    lead(event_type) OVER (PARTITION BY user_id
+      |      ORDER BY tsu, event_id) tt
+      |  FROM e)
+      |SELECT ft AS from_type, tt AS to_type,
+      |  CAST(count(*) AS BIGINT) cnt
+      |FROM nx WHERE tt IS NOT NULL GROUP BY 1, 2""".stripMargin
+
+  // The 20 most frequent words (ties by word); q_stream_topk and its update
+  // twin share this oracle.
+  private val duckTopWords =
+    """SELECT word, cnt FROM (
+      |  SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
+      |    SELECT unnest(string_split_regex(lower(trim(text)), '\s+'))
+      |      AS word
+      |    FROM documents) t
+      |  WHERE word <> '' GROUP BY word)
+      |ORDER BY cnt DESC, word LIMIT 20""".stripMargin
+
+  // Per text digest: the lowest doc id and the copy count; q_stream_dedup
+  // and its update twin share this oracle.
+  private val duckDigestCopies =
+    """WITH d AS (
+      |  SELECT sha256(lower(trim(text))) AS digest, doc_id
+      |  FROM documents)
+      |SELECT digest, CAST(min(doc_id) AS BIGINT) AS keep_doc,
+      |  CAST(count(*) AS BIGINT) AS n_copies
+      |FROM d GROUP BY 1""".stripMargin
+
+  // Events in µs split into clicks `c(user_id, click_id, ct)` and views
+  // `v(user_id, view_id, vt)`.
+  private val duckClickViewTimes =
+    """e AS (SELECT user_id, event_id, epoch_us(ts) tsu, event_type
+      |  FROM events),
+      |c AS (SELECT user_id, event_id AS click_id, tsu AS ct FROM e
+      |  WHERE event_type = 'click'),
+      |v AS (SELECT user_id, event_id AS view_id, tsu AS vt FROM e
+      |  WHERE event_type = 'view')""".stripMargin
+
+  // Event counts per 5-minute tumbling window and type; q_stream_window
+  // and its update twin share this oracle.
+  private val duckWindowCounts =
+    """SELECT strftime(to_timestamp(floor(epoch(ts) / 300) * 300),
+      |    '%Y-%m-%d %H:%M:%S') AS window_start,
+      |  event_type, CAST(count(*) AS BIGINT) AS cnt
+      |FROM events GROUP BY 1, 2""".stripMargin
+
+  // Item count and the exact integer Q5 revenue (cents × (1000 − milli
+  // discount)).
+  private val duckQ5Revenue =
+    """  CAST(count(*) AS BIGINT) AS n_items,
+      |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
+      |    * (1000 - CAST(round(l_discount * 1000) AS BIGINT)))
+      |    AS BIGINT) AS revenue_ppm_cents""".stripMargin
+
   val all: Map[String, Q] = Map(
 
     // J2 — 5-table star join. Dimensions are explicitly broadcast: customer
@@ -460,16 +600,7 @@ object AnalyticsQueries {
     // As-of join: each click matched to the user's latest view at-or-before
     // it (one shuffle + sort via union/last-over-window — no non-equi
     // probe). Oracle uses DuckDB's native ASOF LEFT JOIN.
-    "q_asof_join" -> Q(
-      """WITH c AS (SELECT user_id, event_id cid, epoch_us(ts) tsu
-        |           FROM events WHERE event_type = 'click'),
-        |v0 AS (SELECT user_id, event_id vid, epoch_us(ts) tsu
-        |       FROM events WHERE event_type = 'view'),
-        |v AS (SELECT user_id, tsu, max(vid) vid FROM v0 GROUP BY 1, 2)
-        |SELECT c.cid AS click_id, c.user_id, c.tsu AS ts,
-        |  v.vid AS view_id, c.tsu - v.tsu AS gap
-        |FROM c ASOF LEFT JOIN v
-        |  ON c.user_id = v.user_id AND c.tsu >= v.tsu""".stripMargin) {
+    "q_asof_join" -> Q(duckAsofJoin) {
       (s, dir) =>
         val e = table(s, dir, "events")
           .withColumn("tsu", expr("ts div 1000"))
@@ -488,27 +619,7 @@ object AnalyticsQueries {
     // window-mins over ONE user exchange (every window shares the
     // user_id partition), then a single-row rollup. 150 → 65 → 29 users
     // at sf0.01.
-    "q_funnel" -> Q(
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) tsu
-        |           FROM events),
-        |u AS (SELECT user_id,
-        |    min(CASE WHEN event_type = 'signup' THEN tsu END) t1
-        |  FROM e GROUP BY 1),
-        |u2 AS (SELECT u.user_id, u.t1,
-        |    min(CASE WHEN e.event_type = 'click' AND e.tsu > u.t1
-        |             AND e.tsu <= u.t1 + 86400000000 THEN e.tsu END) t2
-        |  FROM u JOIN e ON e.user_id = u.user_id GROUP BY 1, 2),
-        |u3 AS (SELECT u2.user_id, u2.t1, u2.t2,
-        |    min(CASE WHEN e.event_type = 'purchase' AND e.tsu > u2.t2
-        |             AND e.tsu <= u2.t2 + 86400000000 THEN e.tsu END) t3
-        |  FROM u2 JOIN e ON e.user_id = u2.user_id GROUP BY 1, 2, 3)
-        |SELECT
-        |  CAST(count(*) FILTER (WHERE t1 IS NOT NULL) AS BIGINT) n_signup,
-        |  CAST(count(*) FILTER (WHERE t2 IS NOT NULL) AS BIGINT)
-        |    n_then_click,
-        |  CAST(count(*) FILTER (WHERE t3 IS NOT NULL) AS BIGINT)
-        |    n_then_purchase
-        |FROM u3""".stripMargin) { (s, dir) =>
+    "q_funnel" -> Q(duckFunnel) { (s, dir) =>
       val win = 86_400_000_000L
       val e = table(s, dir, "events")
         .select(col("user_id"), col("event_type"),
@@ -585,16 +696,7 @@ object AnalyticsQueries {
     // event type is followed by each other type within a user's ordered
     // stream — the path-analysis staple behind sankey/flow charts. One
     // lead() window on the user exchange, then a tiny 5x5 rollup.
-    "q_transitions" -> Q(
-      """WITH e AS (SELECT user_id, event_id, event_type,
-        |             epoch_us(ts) tsu FROM events),
-        |nx AS (SELECT event_type ft,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY tsu, event_id) tt
-        |  FROM e)
-        |SELECT ft AS from_type, tt AS to_type,
-        |  CAST(count(*) AS BIGINT) cnt
-        |FROM nx WHERE tt IS NOT NULL GROUP BY 1, 2""".stripMargin) {
+    "q_transitions" -> Q(duckTransitions) {
       (s, dir) =>
         val e = table(s, dir, "events")
           .select(col("user_id"), col("event_id"), col("event_type"),
@@ -834,11 +936,8 @@ object AnalyticsQueries {
     // join. Scale: one fact-fact exchange pair + broadcast dims + a
     // (nation × year)-sized rollup.
     "q_tpch_q5" -> Q(
-      """SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |  CAST(count(*) AS BIGINT) AS n_items,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |    * (1000 - CAST(round(l_discount * 1000) AS BIGINT)))
-        |    AS BIGINT) AS revenue_ppm_cents
+      s"""SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS o_year,
+        |$duckQ5Revenue
         |FROM customer
         |JOIN orders ON o_custkey = c_custkey
         |JOIN lineitem ON l_orderkey = o_orderkey
@@ -1249,12 +1348,9 @@ object AnalyticsQueries {
     // fact-fact exchange is orders⋈lineitem on the order key; dims
     // broadcast post-filter; output ≤ 2 pairs × years.
     "q_tpch_q7" -> Q(
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+      s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
-        |  CAST(count(*) AS BIGINT) AS n_items,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |    * (1000 - CAST(round(l_discount * 1000) AS BIGINT)))
-        |    AS BIGINT) AS revenue_ppm_cents
+        |$duckQ5Revenue
         |FROM lineitem
         |JOIN orders ON o_orderkey = l_orderkey
         |JOIN customer ON c_custkey = o_custkey
@@ -2306,20 +2402,7 @@ object AnalyticsQueries {
     // GA4-style pair) — 426 of 3292 gap sessions at sf0.01 exceed the cap
     // and split. Whole computation rides the one per-key exchange.
     "q_sessionize_capped" -> Q(
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) tsu FROM events),
-        |flagged AS (
-        |  SELECT user_id, event_id, tsu,
-        |    CASE WHEN lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id)
-        |           IS NULL
-        |         OR tsu - lag(tsu) OVER (PARTITION BY user_id
-        |             ORDER BY tsu, event_id) > 43200000000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM e),
-        |sess AS (
-        |  SELECT user_id, event_id, tsu,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY tsu, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM flagged),
+      s"""WITH ${duckSessions("sid")},
         |st AS (SELECT user_id, event_id, tsu, sid,
         |  tsu - min(tsu) OVER (PARTITION BY user_id, sid) offs
         |  FROM sess),
@@ -2327,10 +2410,7 @@ object AnalyticsQueries {
         |  (offs - offs % 86400000000) // 86400000000 pid FROM st)
         |SELECT user_id, CAST(sid AS BIGINT) AS session_idx,
         |  CAST(pid AS BIGINT) AS part_idx,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(max(tsu) - min(tsu) AS BIGINT) AS dur,
-        |  CAST(min(event_id) AS BIGINT) AS first_event,
-        |  CAST(max(event_id) AS BIGINT) AS last_event
+        |$duckSessionStats
         |FROM p GROUP BY 1, 2, 3""".stripMargin) { (s, dir) =>
       val e = table(s, dir, "events")
         .withColumn("ts_us", expr("ts div 1000"))
@@ -2343,11 +2423,7 @@ object AnalyticsQueries {
     // appears — the "quote too stale to price the trade" rule. Same
     // single-shuffle asof plan; tolerance is a post-window predicate.
     "q_asof_tolerance" -> Q(
-      """WITH c AS (SELECT user_id, event_id cid, epoch_us(ts) tsu
-        |           FROM events WHERE event_type = 'click'),
-        |v0 AS (SELECT user_id, event_id vid, epoch_us(ts) tsu
-        |       FROM events WHERE event_type = 'view'),
-        |v AS (SELECT user_id, tsu, max(vid) vid FROM v0 GROUP BY 1, 2),
+      s"""WITH $duckClickViews,
         |m AS (SELECT c.cid AS click_id, c.user_id, c.tsu AS ts,
         |  v.vid AS view_id, c.tsu - v.tsu AS gap
         |  FROM c ASOF LEFT JOIN v
@@ -2390,25 +2466,9 @@ object AnalyticsQueries {
     // (DuckDB surfaces the ns parquet at µs; Spark keeps the long, so the
     // query floors ns→µs with `div`).
     "q_sessionize" -> Q(
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) tsu FROM events),
-        |flagged AS (
-        |  SELECT user_id, event_id, tsu,
-        |    CASE WHEN lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id)
-        |           IS NULL
-        |         OR tsu - lag(tsu) OVER (PARTITION BY user_id
-        |             ORDER BY tsu, event_id) > 43200000000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM e),
-        |sess AS (
-        |  SELECT user_id, event_id, tsu,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY tsu, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-        |  FROM flagged)
+      s"""WITH ${duckSessions("session_idx")}
         |SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(max(tsu) - min(tsu) AS BIGINT) AS dur,
-        |  CAST(min(event_id) AS BIGINT) AS first_event,
-        |  CAST(max(event_id) AS BIGINT) AS last_event
+        |$duckSessionStats
         |FROM sess GROUP BY 1, 2""".stripMargin) { (s, dir) =>
       val e = table(s, dir, "events")
         .withColumn("ts_us", expr("ts div 1000"))
@@ -2419,11 +2479,7 @@ object AnalyticsQueries {
     // §2.10 — the streaming windowed-aggregation surface, exercised through
     // its batch twin (identical window expression; watermark is a no-op in
     // batch). Epoch-aligned 5-minute tumbling windows per event_type.
-    "q_stream_window" -> Q(
-      """SELECT strftime(to_timestamp(floor(epoch(ts) / 300) * 300),
-        |    '%Y-%m-%d %H:%M:%S') AS window_start,
-        |  event_type, CAST(count(*) AS BIGINT) AS cnt
-        |FROM events GROUP BY 1, 2""".stripMargin) { (s, dir) =>
+    "q_stream_window" -> Q(duckWindowCounts) { (s, dir) =>
       graft.streaming.StreamingPipeline.windowedEventCountsBatch(s, dir)
     },
 
@@ -2434,11 +2490,7 @@ object AnalyticsQueries {
     // store keep their final value in the sink, so the drained table
     // is complete and hash-matches q_stream_window's byte-identical
     // batch oracle — bounded state AND a lossless result in one entry.
-    "q_stream_window_update" -> Q(
-      """SELECT strftime(to_timestamp(floor(epoch(ts) / 300) * 300),
-        |    '%Y-%m-%d %H:%M:%S') AS window_start,
-        |  event_type, CAST(count(*) AS BIGINT) AS cnt
-        |FROM events GROUP BY 1, 2""".stripMargin) { (s, dir) =>
+    "q_stream_window_update" -> Q(duckWindowCounts) { (s, dir) =>
       graft.streaming.StreamingPipeline.streamWindowUpdate(s, dir)
     },
 
@@ -2448,13 +2500,7 @@ object AnalyticsQueries {
     // AvailableNow into a memory sink, then hash-matched against the
     // batch oracle — min/count are commutative over micro-batches, so
     // streaming and batch must agree bit-for-bit.
-    "q_stream_dedup" -> Q(
-      """WITH d AS (
-        |  SELECT sha256(lower(trim(text))) AS digest, doc_id
-        |  FROM documents)
-        |SELECT digest, CAST(min(doc_id) AS BIGINT) AS keep_doc,
-        |  CAST(count(*) AS BIGINT) AS n_copies
-        |FROM d GROUP BY 1""".stripMargin) { (s, dir) =>
+    "q_stream_dedup" -> Q(duckDigestCopies) { (s, dir) =>
       graft.streaming.StreamingPipeline.streamDedupComplete(s, dir)
     },
 
@@ -2464,13 +2510,7 @@ object AnalyticsQueries {
     // partitioned parquet sink table (dynamic partition overwrite) —
     // the shape that scales past driver memory, certified equivalent by
     // hash-matching the BYTE-IDENTICAL batch oracle.
-    "q_stream_dedup_update" -> Q(
-      """WITH d AS (
-        |  SELECT sha256(lower(trim(text))) AS digest, doc_id
-        |  FROM documents)
-        |SELECT digest, CAST(min(doc_id) AS BIGINT) AS keep_doc,
-        |  CAST(count(*) AS BIGINT) AS n_copies
-        |FROM d GROUP BY 1""".stripMargin) { (s, dir) =>
+    "q_stream_dedup_update" -> Q(duckDigestCopies) { (s, dir) =>
       graft.streaming.StreamingPipeline.streamDedupUpdate(s, dir)
     },
 
@@ -2505,16 +2545,7 @@ object AnalyticsQueries {
     // lead() oracle exactly — certifying that the state bridges every
     // trigger boundary. Time-ordered arrival across triggers comes from
     // the events8range staging (the X12s mtime lesson).
-    "q_stream_transitions" -> Q(
-      """WITH e AS (SELECT user_id, event_id, event_type,
-        |             epoch_us(ts) tsu FROM events),
-        |nx AS (SELECT event_type ft,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY tsu, event_id) tt
-        |  FROM e)
-        |SELECT ft AS from_type, tt AS to_type,
-        |  CAST(count(*) AS BIGINT) cnt
-        |FROM nx WHERE tt IS NOT NULL GROUP BY 1, 2""".stripMargin) {
+    "q_stream_transitions" -> Q(duckTransitions) {
       (s, dir) =>
         graft.streaming.StreamingPipeline.streamTransitions(s, dir)
     },
@@ -2527,27 +2558,7 @@ object AnalyticsQueries {
     // merging changed users into the sink table, then the three-step
     // rollup. The oracle is q_funnel's SQL verbatim — one hash proves
     // the state machine bridges every trigger boundary.
-    "q_stream_funnel" -> Q(
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) tsu
-        |           FROM events),
-        |u AS (SELECT user_id,
-        |    min(CASE WHEN event_type = 'signup' THEN tsu END) t1
-        |  FROM e GROUP BY 1),
-        |u2 AS (SELECT u.user_id, u.t1,
-        |    min(CASE WHEN e.event_type = 'click' AND e.tsu > u.t1
-        |             AND e.tsu <= u.t1 + 86400000000 THEN e.tsu END) t2
-        |  FROM u JOIN e ON e.user_id = u.user_id GROUP BY 1, 2),
-        |u3 AS (SELECT u2.user_id, u2.t1, u2.t2,
-        |    min(CASE WHEN e.event_type = 'purchase' AND e.tsu > u2.t2
-        |             AND e.tsu <= u2.t2 + 86400000000 THEN e.tsu END) t3
-        |  FROM u2 JOIN e ON e.user_id = u2.user_id GROUP BY 1, 2, 3)
-        |SELECT
-        |  CAST(count(*) FILTER (WHERE t1 IS NOT NULL) AS BIGINT) n_signup,
-        |  CAST(count(*) FILTER (WHERE t2 IS NOT NULL) AS BIGINT)
-        |    n_then_click,
-        |  CAST(count(*) FILTER (WHERE t3 IS NOT NULL) AS BIGINT)
-        |    n_then_purchase
-        |FROM u3""".stripMargin) { (s, dir) =>
+    "q_stream_funnel" -> Q(duckFunnel) { (s, dir) =>
       graft.streaming.StreamingPipeline.streamFunnel(s, dir)
     },
 
@@ -2559,44 +2570,29 @@ object AnalyticsQueries {
     // because an as-of match is per-left-row independent. Oracle =
     // q_asof_join's SQL verbatim — one hash proves no click is lost,
     // duplicated, or mismatched across ≥4 triggers.
-    "q_stream_asof" -> Q(
-      """WITH c AS (SELECT user_id, event_id cid, epoch_us(ts) tsu
-        |           FROM events WHERE event_type = 'click'),
-        |v0 AS (SELECT user_id, event_id vid, epoch_us(ts) tsu
-        |       FROM events WHERE event_type = 'view'),
-        |v AS (SELECT user_id, tsu, max(vid) vid FROM v0 GROUP BY 1, 2)
-        |SELECT c.cid AS click_id, c.user_id, c.tsu AS ts,
-        |  v.vid AS view_id, c.tsu - v.tsu AS gap
-        |FROM c ASOF LEFT JOIN v
-        |  ON c.user_id = v.user_id AND c.tsu >= v.tsu""".stripMargin) {
+    "q_stream_asof" -> Q(duckAsofJoin) {
       (s, dir) =>
         graft.streaming.StreamingPipeline.streamAsof(s, dir)
     },
 
     // X12h — transformWithState (Spark 4's arbitrary-state v2 API) as a
-    // REAL gate drain (was spec-only through r10): a typed-ValueState
-    // cumulative per-user counter in UPDATE mode, each batch's touched
-    // users merged into the sink table; the final table is the exact
-    // per-user total and hash-matches the trivial batch oracle.
+    // REAL gate drain: a typed-ValueState cumulative per-user counter in
+    // UPDATE mode, each batch's touched users merged into the sink table;
+    // the final table is the exact per-user total and hash-matches the
+    // trivial batch oracle.
     "q_stream_tws" -> Q(
       """SELECT user_id, CAST(count(*) AS BIGINT) AS total_events
         |FROM events GROUP BY 1""".stripMargin) { (s, dir) =>
       graft.streaming.StreamingPipeline.streamUserCountsTws(s, dir)
     },
 
-    // X12e — the stream-stream interval join as a REAL gate drain (was
-    // spec-only through r10): clicks joined to same-user views within
-    // the hour before them, two watermarked branches of ONE staged
-    // file-source stream, horizon-bounded join state, append-mode
-    // production merge sink. The oracle is the plain batch interval
+    // X12e — the stream-stream interval join as a REAL gate drain:
+    // clicks joined to same-user views within the hour before them, two
+    // watermarked branches of ONE staged file-source stream,
+    // horizon-bounded join state, append-mode production merge sink. The oracle is the plain batch interval
     // join in exact integer µs — every pair must emit exactly once.
     "q_stream_interval_join" -> Q(
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) tsu, event_type
-        |  FROM events),
-        |c AS (SELECT user_id, event_id AS click_id, tsu AS ct FROM e
-        |  WHERE event_type = 'click'),
-        |v AS (SELECT user_id, event_id AS view_id, tsu AS vt FROM e
-        |  WHERE event_type = 'view')
+      s"""WITH $duckClickViewTimes
         |SELECT c.user_id, CAST(click_id AS BIGINT) AS click_id,
         |  CAST(view_id AS BIGINT) AS view_id
         |FROM c JOIN v ON c.user_id = v.user_id
@@ -2611,12 +2607,7 @@ object AnalyticsQueries {
     // proves finality, so this runs over the sentinel staging — the
     // heartbeat drives BOTH branches' watermarks past the tail.
     "q_stream_interval_join_outer" -> Q(
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) tsu, event_type
-        |  FROM events),
-        |c AS (SELECT user_id, event_id AS click_id, tsu AS ct FROM e
-        |  WHERE event_type = 'click'),
-        |v AS (SELECT user_id, event_id AS view_id, tsu AS vt FROM e
-        |  WHERE event_type = 'view')
+      s"""WITH $duckClickViewTimes
         |SELECT c.user_id, CAST(click_id AS BIGINT) AS click_id,
         |  CAST(view_id AS BIGINT) AS view_id
         |FROM c LEFT JOIN v ON c.user_id = v.user_id
@@ -2630,14 +2621,7 @@ object AnalyticsQueries {
     // complete-mode state across >= 4 micro-batches with the global
     // top-K sort+limit INSIDE the streaming query; (cnt desc, word asc)
     // tie-break makes the emitted set deterministic and hash-matchable.
-    "q_stream_topk" -> Q(
-      """SELECT word, cnt FROM (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
-        |    SELECT unnest(string_split_regex(lower(trim(text)), '\s+'))
-        |      AS word
-        |    FROM documents) t
-        |  WHERE word <> '' GROUP BY word)
-        |ORDER BY cnt DESC, word LIMIT 20""".stripMargin) { (s, dir) =>
+    "q_stream_topk" -> Q(duckTopWords) { (s, dir) =>
       graft.streaming.StreamingPipeline.streamTopKWords(s, dir)
     },
 
@@ -2647,14 +2631,7 @@ object AnalyticsQueries {
     // change-sized state maintenance, any reader cuts its own K), not a
     // per-trigger re-sort of the whole state. Oracle byte-identical to
     // q_stream_topk's.
-    "q_stream_topk_update" -> Q(
-      """SELECT word, cnt FROM (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
-        |    SELECT unnest(string_split_regex(lower(trim(text)), '\s+'))
-        |      AS word
-        |    FROM documents) t
-        |  WHERE word <> '' GROUP BY word)
-        |ORDER BY cnt DESC, word LIMIT 20""".stripMargin) { (s, dir) =>
+    "q_stream_topk_update" -> Q(duckTopWords) { (s, dir) =>
       graft.streaming.StreamingPipeline.streamTopKUpdate(s, dir)
     },
 
@@ -2667,28 +2644,7 @@ object AnalyticsQueries {
     // gap apart merges (window [t, t+gap] is end-inclusive for merging;
     // StreamingSpec pins this). Keyed by session_start so the output is
     // stable without a per-user running index.
-    "q_stream_sessionize" -> Q(
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) tsu FROM events),
-        |flagged AS (
-        |  SELECT user_id, event_id, tsu,
-        |    CASE WHEN lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id)
-        |           IS NULL
-        |         OR tsu - lag(tsu) OVER (PARTITION BY user_id
-        |             ORDER BY tsu, event_id) > 43200000000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM e),
-        |sess AS (
-        |  SELECT user_id, event_id, tsu,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY tsu, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS idx
-        |  FROM flagged)
-        |SELECT user_id,
-        |  CAST(min(tsu) AS BIGINT) AS session_start,
-        |  CAST(max(tsu) - min(tsu) AS BIGINT) AS dur,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(min(event_id) AS BIGINT) AS first_event,
-        |  CAST(max(event_id) AS BIGINT) AS last_event
-        |FROM sess GROUP BY user_id, idx""".stripMargin) { (s, dir) =>
+    "q_stream_sessionize" -> Q(duckStreamSessions) { (s, dir) =>
       graft.streaming.StreamingPipeline.streamSessionizeComplete(s, dir)
     },
 
@@ -2700,28 +2656,7 @@ object AnalyticsQueries {
     // a watermark-heartbeat sentinel flushes the tail (see
     // streamSessionizeAppend's scaladoc). Oracle byte-identical to
     // q_stream_sessionize's.
-    "q_stream_sessionize_append" -> Q(
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) tsu FROM events),
-        |flagged AS (
-        |  SELECT user_id, event_id, tsu,
-        |    CASE WHEN lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id)
-        |           IS NULL
-        |         OR tsu - lag(tsu) OVER (PARTITION BY user_id
-        |             ORDER BY tsu, event_id) > 43200000000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM e),
-        |sess AS (
-        |  SELECT user_id, event_id, tsu,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY tsu, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS idx
-        |  FROM flagged)
-        |SELECT user_id,
-        |  CAST(min(tsu) AS BIGINT) AS session_start,
-        |  CAST(max(tsu) - min(tsu) AS BIGINT) AS dur,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(min(event_id) AS BIGINT) AS first_event,
-        |  CAST(max(event_id) AS BIGINT) AS last_event
-        |FROM sess GROUP BY user_id, idx""".stripMargin) { (s, dir) =>
+    "q_stream_sessionize_append" -> Q(duckStreamSessions) { (s, dir) =>
       graft.streaming.StreamingPipeline.streamSessionizeAppend(s, dir)
     },
 
@@ -2758,18 +2693,7 @@ object AnalyticsQueries {
     // S5/§2.11.4 — nested design-doc completions shape:
     // [{"query":...,"frequency":...}] in rank order (JsonPack.nested).
     "q_nested" -> Q(
-      """WITH norm AS (
-        |  SELECT lower(trim(text)) AS query FROM documents
-        |  WHERE length(trim(text)) >= 2),
-        |counts AS (
-        |  SELECT prefix, query, CAST(count(*) AS BIGINT) AS frequency FROM (
-        |    SELECT substr(query, 1, l) AS prefix, query FROM norm,
-        |    LATERAL (SELECT unnest(generate_series(2, least(length(query), 60))) AS l) ls)
-        |  GROUP BY 1, 2),
-        |ranked AS (
-        |  SELECT prefix, query, frequency,
-        |    row_number() OVER (PARTITION BY prefix
-        |      ORDER BY frequency DESC, query) AS rnk FROM counts)
+      s"""WITH ${CoreQueries.duckPrefixRanked}
         |SELECT prefix,
         |  to_json(list(struct_pack(query := query, frequency := frequency)
         |    ORDER BY rnk)) AS completions

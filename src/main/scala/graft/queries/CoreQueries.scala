@@ -13,6 +13,26 @@ import graft.Pipeline
   */
 object CoreQueries {
 
+  // Normalized queries `norm(query)` and (prefix, query) frequencies
+  // `counts`, prefixes 2..60 chars.
+  private val duckPrefixCounts =
+    """norm AS (
+      |  SELECT lower(trim(text)) AS query FROM documents
+      |  WHERE length(trim(text)) >= 2),
+      |counts AS (
+      |  SELECT prefix, query, CAST(count(*) AS BIGINT) AS frequency FROM (
+      |    SELECT substr(query, 1, l) AS prefix, query FROM norm,
+      |    LATERAL (SELECT unnest(generate_series(2, least(length(query), 60))) AS l) ls)
+      |  GROUP BY 1, 2)""".stripMargin
+
+  // `counts` ranked per prefix by (frequency desc, query).
+  private[queries] val duckPrefixRanked =
+    s"""$duckPrefixCounts,
+      |ranked AS (
+      |  SELECT prefix, query, frequency,
+      |    row_number() OVER (PARTITION BY prefix
+      |      ORDER BY frequency DESC, query) AS rnk FROM counts)""".stripMargin
+
   val all: Map[String, Q] = Map(
 
     // P1 — null/short-line filter as a pushdown-friendly native predicate.
@@ -118,14 +138,7 @@ object CoreQueries {
     // Full autocomplete dataflow (flat ranked shape): normalize →
     // prefix-expand → count → window top-10 per prefix.
     "q_pipeline" -> Q(
-      """WITH norm AS (
-        |  SELECT lower(trim(text)) AS query FROM documents
-        |  WHERE length(trim(text)) >= 2),
-        |counts AS (
-        |  SELECT prefix, query, CAST(count(*) AS BIGINT) AS frequency FROM (
-        |    SELECT substr(query, 1, l) AS prefix, query FROM norm,
-        |    LATERAL (SELECT unnest(generate_series(2, least(length(query), 60))) AS l) ls)
-        |  GROUP BY 1, 2)
+      s"""WITH $duckPrefixCounts
         |SELECT prefix, query, frequency, CAST(rnk AS INTEGER) AS rnk FROM (
         |  SELECT prefix, query, frequency,
         |    row_number() OVER (PARTITION BY prefix
@@ -140,18 +153,7 @@ object CoreQueries {
 
     // A3 — ordered collect_list + to_json (the prefix_suggestions shape).
     "q_topk_collect" -> Q(
-      """WITH norm AS (
-        |  SELECT lower(trim(text)) AS query FROM documents
-        |  WHERE length(trim(text)) >= 2),
-        |counts AS (
-        |  SELECT prefix, query, CAST(count(*) AS BIGINT) AS frequency FROM (
-        |    SELECT substr(query, 1, l) AS prefix, query FROM norm,
-        |    LATERAL (SELECT unnest(generate_series(2, least(length(query), 60))) AS l) ls)
-        |  GROUP BY 1, 2),
-        |ranked AS (
-        |  SELECT prefix, query, frequency,
-        |    row_number() OVER (PARTITION BY prefix
-        |      ORDER BY frequency DESC, query) AS rnk FROM counts)
+      s"""WITH $duckPrefixRanked
         |SELECT prefix, to_json(list(query ORDER BY rnk)) AS completions
         |FROM ranked WHERE rnk <= 5 GROUP BY prefix""".stripMargin) {
       (s, dir) =>

@@ -20,10 +20,16 @@ object ExtendedQueries {
   /** Exact integer cents of a double money column. */
   private def cents(c: Column): Column = round(c * 100).cast("long")
 
-  /** DuckDB twin of TextOps.shingleSet — the one definition in
-    * LlmQueries, shared so a shingling fix reaches every oracle.
-    */
-  private def duckShinglesExt = LlmQueries.duckShingles
+  // Docs sharing any shingle with the 5 probe docs; q_contamination and
+  // q_contamination_bloom share this oracle.
+  private val duckContamination =
+    s"""WITH ${LlmQueries.duckShingles},
+      |probe AS (
+      |  SELECT DISTINCT unnest(sh) g FROM base WHERE doc_id < 5),
+      |hits AS (
+      |  SELECT DISTINCT b.doc_id FROM base b, unnest(b.sh) AS t(g)
+      |  WHERE b.doc_id >= 5 AND g IN (SELECT g FROM probe))
+      |SELECT doc_id FROM hits""".stripMargin
 
   val all: Map[String, Q] = Map(
 
@@ -345,21 +351,14 @@ object ExtendedQueries {
     // the benchmark set. Probe shingles broadcast (bounded by the probe
     // corpus, not the train corpus); the train side explodes shingles and
     // semi-joins — no train-vs-train pairs ever form.
-    "q_contamination" -> Q(
-      s"""WITH $duckShinglesExt,
-        |probe AS (
-        |  SELECT DISTINCT unnest(sh) g FROM base WHERE doc_id < 5),
-        |hits AS (
-        |  SELECT DISTINCT b.doc_id FROM base b, unnest(b.sh) AS t(g)
-        |  WHERE b.doc_id >= 5 AND g IN (SELECT g FROM probe))
-        |SELECT doc_id FROM hits""".stripMargin) { (s, dir) =>
+    "q_contamination" -> Q(duckContamination) { (s, dir) =>
       val d = table(s, dir, "documents")
       Decontaminate.viaJoin(
         d.filter(col("doc_id") >= 5), d.filter(col("doc_id") < 5),
         "doc_id", "text", n = 3)
     },
 
-    // L14c — graded decontamination (r16): q_contamination is the binary
+    // L14c — graded decontamination: q_contamination is the binary
     // drop decision; this is the PaLM/GPT-3-appendix dirtiness SCORE —
     // per corpus doc, how many of its distinct 3-gram shingles appear in
     // the probe set, as count + ppm fraction, so a pipeline can drop
@@ -369,7 +368,7 @@ object ExtendedQueries {
     // clean docs surface with n_dirty = 0 via left join — the hash
     // certifies the zeros too, not just the hits.
     "q_contamination_frac" -> Q(
-      s"""WITH $duckShinglesExt,
+      s"""WITH ${LlmQueries.duckShingles},
         |probe AS (
         |  SELECT DISTINCT unnest(sh) g FROM base WHERE doc_id < 5),
         |tr AS (
@@ -394,14 +393,7 @@ object ExtendedQueries {
     // magnitude when the probe set is too big to broadcast comfortably —
     // result identical to q_contamination (FPs die in the exact join),
     // which is why the same oracle applies.
-    "q_contamination_bloom" -> Q(
-      s"""WITH $duckShinglesExt,
-        |probe AS (
-        |  SELECT DISTINCT unnest(sh) g FROM base WHERE doc_id < 5),
-        |hits AS (
-        |  SELECT DISTINCT b.doc_id FROM base b, unnest(b.sh) AS t(g)
-        |  WHERE b.doc_id >= 5 AND g IN (SELECT g FROM probe))
-        |SELECT doc_id FROM hits""".stripMargin) { (s, dir) =>
+    "q_contamination_bloom" -> Q(duckContamination) { (s, dir) =>
       val d = table(s, dir, "documents")
       Decontaminate.viaBloom(
         d.filter(col("doc_id") >= 5), d.filter(col("doc_id") < 5),
@@ -863,7 +855,7 @@ object ExtendedQueries {
     // merge order varies with partitioning; this shape is the
     // deterministic, scale-safe alternative.
     "q_corr_exact" -> Q(
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT l_returnflag,
         |    CAST(count(*) AS BIGINT) n,
         |    CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) sx,
@@ -876,10 +868,7 @@ object ExtendedQueries {
         |      * CAST(round(l_discount * 100) AS BIGINT)) AS BIGINT) syy
         |  FROM lineitem GROUP BY 1)
         |SELECT l_returnflag, n,
-        |  CAST(round(1000000 * (CAST(n AS DOUBLE) * sxy
-        |      - CAST(sx AS DOUBLE) * sy) /
-        |    (sqrt(CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) *
-        |     sqrt(CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)))
+        |${LlmQueries.duckPearsonMicro}
         |    AS BIGINT) AS corr_micro
         |FROM s""".stripMargin) { (s, dir) =>
       val li = table(s, dir, "lineitem")

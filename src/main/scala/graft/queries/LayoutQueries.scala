@@ -41,12 +41,16 @@ object LayoutQueries {
       min(col("doc_id")).as("min_id"),
       max(col("doc_id")).as("max_id"))
 
-  private val scanAggSql =
+  // The per-(lang, source) scan aggregate's select list.
+  private val duckScanAggSelect =
     """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
       |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
       |  CAST(sum(length(text)) AS BIGINT) AS total_len,
       |  CAST(min(doc_id) AS BIGINT) AS min_id,
-      |  CAST(max(doc_id) AS BIGINT) AS max_id
+      |  CAST(max(doc_id) AS BIGINT) AS max_id""".stripMargin
+
+  private val scanAggSql =
+    s"""$duckScanAggSelect
       |FROM documents GROUP BY 1, 2""".stripMargin
 
   /** Greedy-binning target for the manifest stand-in: small enough that
@@ -82,11 +86,7 @@ object LayoutQueries {
     // the flat parquet the same way, so a lost/mistyped partition value
     // or over-pruned read changes the hash.
     "q_scan_partitioned" -> Q(
-      """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
-        |  CAST(sum(length(text)) AS BIGINT) AS total_len,
-        |  CAST(min(doc_id) AS BIGINT) AS min_id,
-        |  CAST(max(doc_id) AS BIGINT) AS max_id
+      s"""$duckScanAggSelect
         |FROM documents WHERE lang IN ('en', 'fr')
         |GROUP BY 1, 2""".stripMargin) { (s, dir) =>
       scanAgg(
@@ -156,13 +156,7 @@ object LayoutQueries {
     // sorted variant is measured against.
     "q_zonemap" -> Q(
       s"""SELECT CAST(floor(doc_id / $zoneRows) AS BIGINT) AS zone,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(min(n_chars) AS BIGINT) AS n_chars_min,
-         |  CAST(max(n_chars) AS BIGINT) AS n_chars_max,
-         |  CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_chars_nulls,
-         |  coalesce(max(n_chars) < $predLo OR min(n_chars) > $predHi,
-         |    false) AS skip
+         |$duckZoneStats
          |FROM documents GROUP BY 1""".stripMargin) { (s, dir) =>
       val zones = ZoneMaps.build(table(s, dir, "documents"),
         floor(col("doc_id") / zoneRows), Seq("n_chars"))
@@ -183,15 +177,9 @@ object LayoutQueries {
          |    row_number() OVER (ORDER BY n_chars, doc_id) AS rn
          |  FROM documents)
          |SELECT CAST(floor((rn - 1) / $zoneRows) AS BIGINT) AS zone,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(min(n_chars) AS BIGINT) AS n_chars_min,
-         |  CAST(max(n_chars) AS BIGINT) AS n_chars_max,
-         |  CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_chars_nulls,
-         |  coalesce(max(n_chars) < $predLo OR min(n_chars) > $predHi,
-         |    false) AS skip
+         |$duckZoneStats
          |FROM ranked GROUP BY 1""".stripMargin) { (s, dir) =>
-      // rank via the distributed prefix sum (r16 verdict #1): a global
+      // rank via the distributed prefix sum: a global
       // row_number() plans as a SINGLE-PARTITION WindowExec — the whole
       // corpus on one reducer, the #1 remaining 100 TB killer shape.
       // row_number over a total order == inclusive running count of 1
@@ -234,32 +222,9 @@ object LayoutQueries {
     // math is the committed q_zorder formula; the oracle replays
     // bucket → interleave → rank → zone → stats → skip bit-for-bit.
     "q_zonemap_zorder" -> Q(
-      s"""WITH st AS (SELECT CAST(min(user_id) AS BIGINT) mnx,
-         |    CAST(max(user_id) AS BIGINT) mxx,
-         |    min(value) mny, max(value) mxy FROM events),
-         |b AS (SELECT event_id,
-         |  CASE WHEN user_id IS NULL OR mnx IS NULL OR mxx IS NULL
-         |      OR mnx = mxx THEN 0
-         |    ELSE greatest(0, least(255, CAST(floor(
-         |      ((CAST(user_id AS DOUBLE) - CAST(mnx AS DOUBLE)) * 256) /
-         |      (CAST(mxx AS DOUBLE) - CAST(mnx AS DOUBLE))) AS BIGINT)))
-         |    END zx,
-         |  CASE WHEN value IS NULL OR mny IS NULL OR mxy IS NULL
-         |      OR mny = mxy THEN 0
-         |    ELSE greatest(0, least(255, CAST(floor(
-         |      ((CAST(value AS DOUBLE) - CAST(mny AS DOUBLE)) * 256) /
-         |      (CAST(mxy AS DOUBLE) - CAST(mny AS DOUBLE))) AS BIGINT)))
-         |    END zy
-         |  FROM events, st),
+      s"""WITH ${MiningQueries.duckZBins},
          |k AS (SELECT event_id, zx, zy,
-         |  (((zx >> 0) & 1) << 0) + (((zy >> 0) & 1) << 1) +
-         |  (((zx >> 1) & 1) << 2) + (((zy >> 1) & 1) << 3) +
-         |  (((zx >> 2) & 1) << 4) + (((zy >> 2) & 1) << 5) +
-         |  (((zx >> 3) & 1) << 6) + (((zy >> 3) & 1) << 7) +
-         |  (((zx >> 4) & 1) << 8) + (((zy >> 4) & 1) << 9) +
-         |  (((zx >> 5) & 1) << 10) + (((zy >> 5) & 1) << 11) +
-         |  (((zx >> 6) & 1) << 12) + (((zy >> 6) & 1) << 13) +
-         |  (((zx >> 7) & 1) << 14) + (((zy >> 7) & 1) << 15) AS zkey
+         |${MiningQueries.duckZInterleave}
          |  FROM b),
          |r AS (SELECT zx, zy,
          |  row_number() OVER (ORDER BY zkey, event_id) AS rn FROM k)
@@ -289,6 +254,16 @@ object LayoutQueries {
   private val zoneRows = 50
   private val predLo = 300
   private val predHi = 400
+
+  // Zone stats over n_chars and the [predLo, predHi] skip decision.
+  private val duckZoneStats =
+    s"""  CAST(count(*) AS BIGINT) AS n_rows,
+      |  CAST(min(n_chars) AS BIGINT) AS n_chars_min,
+      |  CAST(max(n_chars) AS BIGINT) AS n_chars_max,
+      |  CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END)
+      |    AS BIGINT) AS n_chars_nulls,
+      |  coalesce(max(n_chars) < $predLo OR min(n_chars) > $predHi,
+      |    false) AS skip""".stripMargin
 
   /** Point-lookup probe for the bloom-zone query (a mid-range n_chars
     * value present in ~1 of 10 zones at every SF).
@@ -322,7 +297,7 @@ object LayoutQueries {
         graft.ops.ZOrder.bucket(col("value"), col("mny"), col("mxy"))
           .as("zy"))
       .withColumn("zkey", graft.ops.ZOrder.interleave(col("zx"), col("zy")))
-    // distributed curve rank (r16 verdict #1): row_number over the full
+    // distributed curve rank: row_number over the full
     // events table planned as a single-partition WindowExec; the
     // PrefixSum running count ranks via a range exchange on
     // (zkey, event_id) instead — see q_zonemap_sorted.

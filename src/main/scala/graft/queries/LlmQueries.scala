@@ -33,17 +33,144 @@ object LlmQueries {
       |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') toks
       |        FROM documents))""".stripMargin
 
-  /** DuckDB CTE chain (assumes `base` + `mh_banded` in scope) building the
-    * symmetrized kNN edge set `e2(src, dst)` — the shared graph substrate
-    * of q_label_prop / q_modularity / q_assortativity (the Spark twin is
-    * [[symmetricKnnEdges]] off [[SharedBases.knnEdges]]).
-    */
-  private val duckKnnE2 =
+  // The 8 MinHash signatures: per-slice minima of each shingle's sha256
+  // (`hs` in scope). Shared by the banding CTE and q_dedup_minhash.
+  private val duckMinhashSigs =
+    """  list_aggregate(list_transform(hs, h -> substr(h,  1, 8)), 'min') s0,
+      |  list_aggregate(list_transform(hs, h -> substr(h,  9, 8)), 'min') s1,
+      |  list_aggregate(list_transform(hs, h -> substr(h, 17, 8)), 'min') s2,
+      |  list_aggregate(list_transform(hs, h -> substr(h, 25, 8)), 'min') s3,
+      |  list_aggregate(list_transform(hs, h -> substr(h, 33, 8)), 'min') s4,
+      |  list_aggregate(list_transform(hs, h -> substr(h, 41, 8)), 'min') s5,
+      |  list_aggregate(list_transform(hs, h -> substr(h, 49, 8)), 'min') s6,
+      |  list_aggregate(list_transform(hs, h -> substr(h, 57, 8)), 'min') s7"""
+      .stripMargin
+
+  // DuckDB-side MinHash banding (mirrors Dedup.minhashBands with n=3,
+  // bands=4): chain after `base` (duckShingles); yields
+  // `mh_banded(doc_id, band, bkey)` (+ mh_sigs for calibration).
+  private val duckMinhashBands =
+    s"""mh_hashed AS (SELECT doc_id, sh,
+      |  list_transform(sh, x -> sha256(x)) hs FROM base),
+      |mh_sigs AS (SELECT doc_id, sh,
+      |$duckMinhashSigs
+      |  FROM mh_hashed),
+      |mh_banded AS (
+      |  SELECT doc_id, 0 band, s0 || s1 bkey FROM mh_sigs
+      |  UNION ALL SELECT doc_id, 1, s2 || s3 FROM mh_sigs
+      |  UNION ALL SELECT doc_id, 2, s4 || s5 FROM mh_sigs
+      |  UNION ALL SELECT doc_id, 3, s6 || s7 FROM mh_sigs)"""
+      .stripMargin
+
+  // DuckDB-side MinHash+LSH verified pairs (mirrors Dedup.minhashDedup with
+  // n=3, bands=4, num=8, den=10): chain after `base` (duckShingles); yields
+  // `mh_pairs(a, b)`. Kept byte-compatible with the q_dedup_minhash
+  // pipeline — shared by queries that consume the pair set downstream.
+  private val duckMinhashPairs =
+    s"""$duckMinhashBands,
+      |mh_cand AS (
+      |  SELECT DISTINCT l.doc_id a, r.doc_id b
+      |  FROM mh_banded l JOIN mh_banded r
+      |    ON l.band = r.band AND l.bkey = r.bkey AND l.doc_id < r.doc_id),
+      |mh_pairs AS (
+      |  SELECT c.a, c.b FROM mh_cand c
+      |  JOIN base ba ON ba.doc_id = c.a
+      |  JOIN base bb ON bb.doc_id = c.b
+      |  WHERE len(list_intersect(ba.sh, bb.sh)) * 10
+      |    >= (len(ba.sh) + len(bb.sh) - len(list_intersect(ba.sh, bb.sh))) * 8)"""
+      .stripMargin
+
+  // The q_dedup_minhash pipeline up to `verify(a, b, inter, uni)`:
+  // signatures, 4 bands, same-bucket candidates, exact shingle Jaccard
+  // terms. Shared with q_dedup_delta.
+  private val duckMinhashVerify =
+    s"""hashed AS (SELECT doc_id, sh,
+      |  list_transform(sh, x -> sha256(x)) hs FROM base),
+      |sigs AS (SELECT doc_id, sh,
+      |$duckMinhashSigs
+      |  FROM hashed),
+      |banded AS (
+      |  SELECT doc_id, 0 band, s0 || s1 bkey FROM sigs
+      |  UNION ALL SELECT doc_id, 1, s2 || s3 FROM sigs
+      |  UNION ALL SELECT doc_id, 2, s4 || s5 FROM sigs
+      |  UNION ALL SELECT doc_id, 3, s6 || s7 FROM sigs),
+      |cand AS (
+      |  SELECT DISTINCT l.doc_id a, r.doc_id b
+      |  FROM banded l JOIN banded r
+      |    ON l.band = r.band AND l.bkey = r.bkey AND l.doc_id < r.doc_id),
+      |verify AS (
+      |  SELECT c.a, c.b,
+      |    CAST(len(list_intersect(ba.sh, bb.sh)) AS INTEGER) inter,
+      |    CAST(len(ba.sh) + len(bb.sh)
+      |      - len(list_intersect(ba.sh, bb.sh)) AS INTEGER) uni
+      |  FROM cand c
+      |  JOIN base ba ON ba.doc_id = c.a
+      |  JOIN base bb ON bb.doc_id = c.b)""".stripMargin
+
+  // MinHash connected components `reps(node, rep)` and the stopword-count
+  // quality `scored(node, score)`: the survivor choice of q_keep_best and
+  // q_corpus_clean.
+  private val duckClusterScores =
+    s"""$duckMinhashPairs,
+      |${duckCc("mh_pairs")},
+      |reps AS (SELECT node, CAST(min(rep) AS BIGINT) rep
+      |         FROM cc GROUP BY node),
+      |scored AS (SELECT doc_id node,
+      |  CAST(len(regexp_extract_all(lower(trim(text)),
+      |    '\\b(the|a|and|of|to|in|is|for|on|with)\\b')) AS INTEGER) score
+      |  FROM documents)""".stripMargin
+
+  // `edges` = `pairs(a, b)` in both directions and `cc(node, rep)` = the
+  // recursive closure over it; callers take min(rep) per node.
+  private def duckCc(pairs: String) =
+    s"""edges AS (
+      |  SELECT a src, b dst FROM $pairs
+      |  UNION ALL SELECT b, a FROM $pairs),
+      |cc AS (
+      |  SELECT DISTINCT src AS node, src AS rep FROM edges
+      |  UNION
+      |  SELECT e.dst, cc.rep FROM cc, edges e WHERE cc.node = e.src)"""
+      .stripMargin
+
+  // Exact shingle-overlap counts `inter(a, b, inter)` and set sizes
+  // `sizes(doc_id, n_)` over `base`; `cmp` is "<" for unordered pairs and
+  // "<>" for both directions.
+  private def duckJaccardInter(cmp: String) =
+    s"""tok AS (SELECT doc_id, unnest(sh) g FROM base),
+      |sizes AS (SELECT doc_id, len(sh) n_ FROM base),
+      |inter AS (
+      |  SELECT l.doc_id a, r.doc_id b, CAST(count(*) AS INTEGER) inter
+      |  FROM tok l JOIN tok r ON l.g = r.g AND l.doc_id $cmp r.doc_id
+      |  GROUP BY 1, 2)""".stripMargin
+
+  // The `inter` pairs with Jaccard >= 0.8 (inter*10 >= uni*8).
+  private val duckJaccardPairs =
+    """pairs AS (
+      |  SELECT i.a, i.b FROM inter i
+      |  JOIN sizes sa ON sa.doc_id = i.a
+      |  JOIN sizes sb ON sb.doc_id = i.b
+      |  WHERE i.inter * 10 >= (sa.n_ + sb.n_ - i.inter) * 8)""".stripMargin
+
+  // Exact-Jaccard near-dup pairs and their connected components `cc`.
+  private val duckJaccardCc =
+    s"""${duckJaccardInter("<")},
+      |$duckJaccardPairs,
+      |${duckCc("pairs")}""".stripMargin
+
+  // Same-bucket kNN candidates `knn_cand(a, b)` over `mh_banded`, both
+  // directions, uncapped.
+  private val duckKnnCand =
     """knn_cand AS (
       |  SELECT DISTINCT l.doc_id a, r.doc_id b
       |  FROM mh_banded l JOIN mh_banded r
       |    ON l.band = r.band AND l.bkey = r.bkey
-      |    AND l.doc_id <> r.doc_id),
+      |    AND l.doc_id <> r.doc_id)""".stripMargin
+
+  // MinHash bands, then each doc's 5 nearest candidates by exact Jaccard
+  // ppm (ties to the lower id): `edges(src, dst)`. Needs `base`.
+  private val duckKnnEdges =
+    s"""$duckMinhashBands,
+      |$duckKnnCand,
       |scored AS (
       |  SELECT c.a doc_id, c.b nbr_id,
       |    (CAST(len(list_intersect(ba.sh, bb.sh)) AS BIGINT) * 1000000)
@@ -57,7 +184,16 @@ object LlmQueries {
       |    row_number() OVER (PARTITION BY doc_id
       |      ORDER BY jac_ppm DESC, nbr_id) rnk
       |  FROM scored),
-      |edges AS (SELECT doc_id src, nbr_id dst FROM rr WHERE rnk <= 5),
+      |edges AS (SELECT doc_id src, nbr_id dst FROM rr WHERE rnk <= 5)"""
+      .stripMargin
+
+  /** DuckDB CTE chain (assumes `base` in scope) building the MinHash
+    * bands and the symmetrized kNN edge set `e2(src, dst)` — the shared
+    * graph substrate of q_label_prop / q_modularity / q_assortativity
+    * (the Spark twin is [[symmetricKnnEdges]] off [[SharedBases.knnEdges]]).
+    */
+  private val duckKnnE2 =
+    s"""$duckKnnEdges,
       |e2 AS (SELECT src, dst FROM edges
       |       UNION SELECT dst, src FROM edges)""".stripMargin
 
@@ -87,12 +223,6 @@ object LlmQueries {
       |  FROM c3 JOIN m3 ON m3.id = c3.id AND c3.c = m3.mc GROUP BY 1)"""
       .stripMargin
 
-  /** Spark twin of [[duckLpa3]]: 3 synchronous majority-vote rounds over
-    * the symmetrized [[SharedBases.knnEdges]] set, self-seeded, exact
-    * integer counting with the (count desc, label asc) tie-break.
-    * Returns (e2, labels) — BOTH eagerly checkpointed (multi-branch
-    * consumers; see ops/llm/Dedup.scala "EAGER CHECKPOINT DISCIPLINE").
-    */
   /** Spark twin of [[duckKnnE2]]: the symmetrized kNN edge set, eagerly
     * checkpointed (it feeds every downstream graph branch — EAGER
     * CHECKPOINT DISCIPLINE, ops/llm/Dedup.scala).
@@ -105,6 +235,12 @@ object LlmQueries {
       .distinct().localCheckpoint(true)
   }
 
+  /** Spark twin of [[duckLpa3]]: 3 synchronous majority-vote rounds over
+    * the symmetrized [[SharedBases.knnEdges]] set, self-seeded, exact
+    * integer counting with the (count desc, label asc) tie-break.
+    * Returns (e2, labels) — BOTH eagerly checkpointed (multi-branch
+    * consumers; see ops/llm/Dedup.scala "EAGER CHECKPOINT DISCIPLINE").
+    */
   private def lpa3(s: org.apache.spark.sql.SparkSession, dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val e2 = symmetricKnnEdges(s, dir)
@@ -123,6 +259,76 @@ object LlmQueries {
     (e2, lbl)
   }
 
+  // MinHash bands and the candidates with exact intersection and union
+  // sizes: `scored(doc_id, nbr_id, inter, uni)`. Needs `base`.
+  private val duckKnnInterUni =
+    s"""$duckMinhashBands,
+      |$duckKnnCand,
+      |scored AS (
+      |  SELECT c.a doc_id, c.b nbr_id,
+      |    CAST(len(list_intersect(ba.sh, bb.sh)) AS INTEGER) inter,
+      |    CAST(len(ba.sh) + len(bb.sh)
+      |      - len(list_intersect(ba.sh, bb.sh)) AS INTEGER) uni
+      |  FROM knn_cand c
+      |  JOIN base ba ON ba.doc_id = c.a
+      |  JOIN base bb ON bb.doc_id = c.b)""".stripMargin
+
+  // Integer TF-IDF weights `w2(doc_id, term, wt)` (idf-0 terms dropped)
+  // and squared norms `norms(doc_id, n2)`.
+  private val duckTfidfWeights =
+    """tok AS (
+      |  SELECT doc_id,
+      |    unnest(string_split_regex(lower(trim(text)), '\s+')) term
+      |  FROM documents),
+      |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) tf
+      |       FROM tok GROUP BY 1, 2),
+      |dfq AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) df
+      |        FROM tok GROUP BY 1),
+      |nd AS (SELECT CAST(count(*) AS BIGINT) n_docs FROM documents),
+      |wts AS (
+      |  SELECT tf.doc_id, tf.term,
+      |    tf.tf * CAST(round(10000 * ln(CAST(n_docs AS DOUBLE)
+      |      / CAST(df AS DOUBLE))) AS BIGINT) wt
+      |  FROM tf JOIN dfq ON tf.term = dfq.term, nd),
+      |w2 AS (SELECT * FROM wts WHERE wt <> 0),
+      |norms AS (SELECT doc_id, CAST(sum(wt * wt) AS BIGINT) n2
+      |          FROM w2 GROUP BY 1)""".stripMargin
+
+  // Micro-quantized cosine of `dots(a, b, dot)` over `norms`: the end of
+  // a `scored` CTE (select item plus FROM clause).
+  private val duckTfidfCos =
+    """    CAST(round(1000000 * CAST(d.dot AS DOUBLE)
+      |      / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))))
+      |      AS BIGINT) cos_micro
+      |  FROM dots d
+      |  JOIN norms na ON na.doc_id = d.a
+      |  JOIN norms nb ON nb.doc_id = d.b""".stripMargin
+
+  // MinHash bands and the candidates scored by TF-IDF cosine:
+  // `scored(doc_id, nbr_id, cos_micro)`. Needs `base`.
+  private val duckTfidfKnnScored =
+    s"""$duckMinhashBands,
+      |$duckKnnCand,
+      |$duckTfidfWeights,
+      |dots AS (
+      |  SELECT c.a, c.b, CAST(sum(wa.wt * wb.wt) AS BIGINT) dot
+      |  FROM knn_cand c
+      |  JOIN w2 wa ON wa.doc_id = c.a
+      |  JOIN w2 wb ON wb.doc_id = c.b AND wb.term = wa.term
+      |  GROUP BY 1, 2),
+      |scored AS (
+      |  SELECT d.a doc_id, d.b nbr_id,
+      |$duckTfidfCos)""".stripMargin
+
+  // Embedding coordinates quantized to 1e-4: `xq(id, i, x)`.
+  private val duckQuantized =
+    """xq AS (
+      |  SELECT vec_id AS id, u.i AS i,
+      |    CAST(round(embedding[u.i]::DOUBLE * 10000) AS BIGINT) AS x
+      |  FROM embeddings,
+      |  LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) u)"""
+      .stripMargin
+
   /** DuckDB CTE chain replaying Pca.component verbatim: integer 1e-4
     * quantization → truncating per-dim means → centered coords →
     * covariance (scatter // n) → `rounds` unrolled power-iteration
@@ -132,11 +338,7 @@ object LlmQueries {
     */
   private def pcaCtes(rounds: Int): String = {
     val base =
-      """xq AS (
-        |  SELECT vec_id AS id, u.i AS i,
-        |    CAST(round(embedding[u.i]::DOUBLE * 10000) AS BIGINT) AS x
-        |  FROM embeddings,
-        |  LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) u),
+      s"""$duckQuantized,
         |means AS (SELECT i, sum(x) // count(*) AS m FROM xq GROUP BY 1),
         |cent AS (SELECT id, xq.i AS i, x - m AS c
         |  FROM xq JOIN means ON means.i = xq.i),
@@ -164,11 +366,7 @@ object LlmQueries {
     */
   private def kmeansCtes(k: Int, rounds: Int): String = {
     val base =
-      s"""xq AS (
-        |  SELECT vec_id AS id, u.i AS i,
-        |    CAST(round(embedding[u.i]::DOUBLE * 10000) AS BIGINT) AS x
-        |  FROM embeddings,
-        |  LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) u),
+      s"""$duckQuantized,
         |c0 AS (SELECT id AS cid, i, x AS m FROM xq WHERE id < $k)"""
         .stripMargin
     val assignOnly = (r: Int) =>
@@ -191,45 +389,375 @@ object LlmQueries {
     base + ",\n" + rs + ",\n" + assignOnly(rounds + 1)
   }
 
-  // DuckDB-side MinHash banding (mirrors Dedup.minhashBands with n=3,
-  // bands=4): chain after `base` (duckShingles); yields
-  // `mh_banded(doc_id, band, bkey)` (+ mh_sigs for calibration).
-  private val duckMinhashBands =
-    """mh_hashed AS (SELECT doc_id, sh,
-      |  list_transform(sh, x -> sha256(x)) hs FROM base),
-      |mh_sigs AS (SELECT doc_id, sh,
-      |  list_aggregate(list_transform(hs, h -> substr(h,  1, 8)), 'min') s0,
-      |  list_aggregate(list_transform(hs, h -> substr(h,  9, 8)), 'min') s1,
-      |  list_aggregate(list_transform(hs, h -> substr(h, 17, 8)), 'min') s2,
-      |  list_aggregate(list_transform(hs, h -> substr(h, 25, 8)), 'min') s3,
-      |  list_aggregate(list_transform(hs, h -> substr(h, 33, 8)), 'min') s4,
-      |  list_aggregate(list_transform(hs, h -> substr(h, 41, 8)), 'min') s5,
-      |  list_aggregate(list_transform(hs, h -> substr(h, 49, 8)), 'min') s6,
-      |  list_aggregate(list_transform(hs, h -> substr(h, 57, 8)), 'min') s7
-      |  FROM mh_hashed),
-      |mh_banded AS (
-      |  SELECT doc_id, 0 band, s0 || s1 bkey FROM mh_sigs
-      |  UNION ALL SELECT doc_id, 1, s2 || s3 FROM mh_sigs
-      |  UNION ALL SELECT doc_id, 2, s4 || s5 FROM mh_sigs
-      |  UNION ALL SELECT doc_id, 3, s6 || s7 FROM mh_sigs)"""
+  // Embeddings as DOUBLE[] `v` with their max-abs `mx`: the FROM clause
+  // of the int8 codes CTE.
+  private val duckEmbedMaxAbs =
+    """  FROM (SELECT vec_id, embedding::DOUBLE[] v,
+      |          list_aggregate(list_transform(embedding::DOUBLE[],
+      |            x -> abs(x)), 'max') mx
+      |        FROM embeddings)""".stripMargin
+
+  // Symmetric int8 codes of `v` scaled by its max-abs `mx`
+  // (Similarity's int8 quantizer).
+  private val duckInt8Codes =
+    """    CASE WHEN mx = 0 THEN list_transform(v, x -> CAST(0 AS BIGINT))
+      |      ELSE list_transform(v,
+      |        x -> CAST(greatest(-127, floor(x * 127 / mx)) AS BIGINT))
+      |      END codes""".stripMargin
+
+  // Every embedding's int8 codes and micro scale: `c(id, codes, mxm)`.
+  private val duckInt8C =
+    s"""c AS (
+      |  SELECT vec_id id,
+      |$duckInt8Codes,
+      |    CAST(floor(mx * 1000000) AS BIGINT) mxm
+      |$duckEmbedMaxAbs)""".stripMargin
+
+  // The same codes over a projected `e(id, v)`.
+  private val duckInt8COverE =
+    s"""c AS (
+      |  SELECT id,
+      |$duckInt8Codes,
+      |    CAST(floor(mx * 1000000) AS BIGINT) mxm
+      |  FROM (SELECT id, v, list_aggregate(list_transform(v,
+      |          x -> abs(x)), 'max') mx FROM e))""".stripMargin
+
+  // Exact-integer int8 scores `s(qid, id, score)` of the 10 lowest-id
+  // vectors (the queries) against every other vector in `c`.
+  private val duckInt8Scores =
+    """q AS (SELECT id qid, codes qc, mxm qm FROM c WHERE id < 10),
+      |s AS (SELECT q.qid, c.id,
+      |        CAST(list_sum(list_transform(
+      |          generate_series(1, len(c.codes)),
+      |          i -> c.codes[i] * q.qc[i])) AS BIGINT) * q.qm * c.mxm
+      |          AS score
+      |      FROM c, q WHERE c.id <> q.qid)""".stripMargin
+
+  // Each query's top 5 of `s(qid, id, score)`, ties to the lower id.
+  private val duckTop5 =
+    """r AS (SELECT qid, id, score, row_number() OVER (
+      |        PARTITION BY qid ORDER BY score DESC, id) rnk FROM s)
+      |SELECT qid, id, CAST(rnk AS INTEGER) AS rnk, score
+      |FROM r WHERE rnk <= 5""".stripMargin
+
+  // Brute-force int8 top-5 search over `c`.
+  private val duckInt8Top5 =
+    s"""$duckInt8Scores,
+      |$duckTop5""".stripMargin
+
+  // IVF centroids: the 16 codes first in sha256(id) order, with squared
+  // norms, `cents(cid, cc, cn2)`.
+  private val duckIvfCents =
+    """cents AS (
+      |  SELECT row_number() OVER (ORDER BY sha256(CAST(id AS VARCHAR)))
+      |      AS cid, codes cc,
+      |    greatest(CAST(list_sum(list_transform(
+      |      generate_series(1, len(codes)),
+      |      i -> codes[i] * codes[i])) AS BIGINT), 1) cn2
+      |  FROM c ORDER BY sha256(CAST(id AS VARCHAR)) LIMIT 16)""".stripMargin
+
+  // The end of an assignment CTE: each vector's nearest centroid by
+  // signed squared cosine, ties to the lower cid.
+  private val duckIvfNearest =
+    """        PARTITION BY c.id ORDER BY
+      |          CAST(d * abs(d) AS DOUBLE) / n.cn2 DESC, n.cid) rr
+      |    FROM c, cents n, LATERAL (SELECT CAST(list_sum(list_transform(
+      |      generate_series(1, len(c.codes)),
+      |      i -> c.codes[i] * n.cc[i])) AS BIGINT) AS d) dd)
+      |  WHERE rr = 1)""".stripMargin
+
+  // Hyperplane-LSH buckets per table `tt` over `c` and planes `pl`,
+  // same-bucket candidates, and each vector's top 5 by exact int8 score.
+  private val duckSimHashKnn =
+    """buck AS (
+      |  SELECT id, tt,
+      |    CAST(sum(CASE WHEN d >= 0 THEN 1 << p ELSE 0 END) AS BIGINT)
+      |      AS bucket
+      |  FROM (SELECT c.id, pl.tt, pl.p,
+      |          CAST(list_sum(list_transform(generate_series(1, 64),
+      |            i -> c.codes[i] * pl.w[i])) AS BIGINT) d
+      |        FROM c, pl)
+      |  GROUP BY id, tt),
+      |cand AS (
+      |  SELECT DISTINCT l.id a, r.id b
+      |  FROM buck l JOIN buck r
+      |    ON l.tt = r.tt AND l.bucket = r.bucket AND l.id <> r.id),
+      |s AS (
+      |  SELECT cand.a id, cand.b nbr_id,
+      |    CAST(list_sum(list_transform(
+      |      generate_series(1, len(ca.codes)),
+      |      i -> ca.codes[i] * cb.codes[i])) AS BIGINT)
+      |      * ca.mxm * cb.mxm AS score
+      |  FROM cand JOIN c ca ON ca.id = cand.a
+      |    JOIN c cb ON cb.id = cand.b),
+      |r AS (SELECT id, nbr_id, score, row_number() OVER (
+      |        PARTITION BY id ORDER BY score DESC, nbr_id) rnk FROM s)
+      |SELECT id, nbr_id, CAST(rnk AS INTEGER) AS rnk, score
+      |FROM r WHERE rnk <= 5""".stripMargin
+
+  // Sign-bit codes (two 32-bit words), the Hamming distances of the 10
+  // lowest-id queries, and their (dist, id) rank `r`.
+  private val duckHammingRanked =
+    """e AS (SELECT vec_id id, embedding::DOUBLE[] v
+      |           FROM embeddings),
+      |b AS (SELECT id, list_transform(generate_series(0, 1), w ->
+      |        CAST(list_sum(list_transform(generate_series(1, 32),
+      |          i -> CASE WHEN v[32*w+i] > 0
+      |               THEN (1::BIGINT << (i-1)) ELSE 0 END)) AS BIGINT))
+      |        AS wv
+      |      FROM e),
+      |q AS (SELECT id qid, wv qw FROM b WHERE id < 10),
+      |s AS (SELECT q.qid, b.id,
+      |        CAST(list_sum(list_transform(generate_series(1, 2),
+      |          j -> bit_count(xor(b.wv[j], q.qw[j])))) AS BIGINT)
+      |          AS dist
+      |      FROM b, q WHERE b.id <> q.qid),
+      |r AS (SELECT qid, id, dist, row_number() OVER (
+      |        PARTITION BY qid ORDER BY dist, id) rnk FROM s)""".stripMargin
+
+  // DBSCAN front end over embeddings: cosine >= 0.35 pairs, degrees, core
+  // points (>= 3 neighbors) and core-core components `corelab(id, cluster)`.
+  private val duckDbscanCore =
+    """e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
+      |p AS (
+      |  SELECT a.vec_id a, b.vec_id b FROM e a JOIN e b
+      |    ON a.vec_id < b.vec_id
+      |  WHERE list_cosine_similarity(a.v, b.v) >= 0.35),
+      |nbr AS (SELECT a src, b dst FROM p UNION ALL SELECT b, a FROM p),
+      |deg AS (SELECT src, count(*) d FROM nbr GROUP BY 1),
+      |core AS (SELECT src AS id FROM deg WHERE d >= 3),
+      |cedges AS (
+      |  SELECT n.src, n.dst FROM nbr n
+      |  WHERE n.src IN (SELECT id FROM core)
+      |    AND n.dst IN (SELECT id FROM core)),
+      |cc AS (
+      |  SELECT id AS node, id AS rep FROM core
+      |  UNION
+      |  SELECT e2.dst, cc.rep FROM cc, cedges e2 WHERE cc.node = e2.src),
+      |corelab AS (SELECT node AS id, min(rep) AS cluster
+      |            FROM cc GROUP BY 1)""".stripMargin
+
+  // The DBSCAN role assignment; q_dbscan_ann replays it verbatim.
+  private val duckDbscan =
+    s"""WITH RECURSIVE
+      |$duckDbscanCore,
+      |borderlab AS (
+      |  SELECT n.src AS id, min(c.cluster) AS cluster
+      |  FROM nbr n JOIN corelab c ON n.dst = c.id
+      |  WHERE n.src NOT IN (SELECT id FROM corelab)
+      |  GROUP BY 1),
+      |labeled AS (
+      |  SELECT id, 'core' AS role, cluster FROM corelab
+      |  UNION ALL
+      |  SELECT id, 'border', cluster FROM borderlab)
+      |SELECT CAST(e.vec_id AS BIGINT) AS vec_id,
+      |  coalesce(l.role, 'noise') AS role,
+      |  CAST(coalesce(l.cluster, -1) AS BIGINT) AS cluster
+      |FROM e LEFT JOIN labeled l ON e.vec_id = l.id""".stripMargin
+
+  // Whitespace word frequencies `w(word, freq)`.
+  private val duckWordFreq =
+    """w AS (
+      |  SELECT word, CAST(count(*) AS BIGINT) AS freq FROM (
+      |    SELECT unnest(string_split_regex(lower(trim(text)), '\s+'))
+      |      AS word FROM documents) t
+      |  WHERE word <> '' GROUP BY 1)""".stripMargin
+
+  // WordPiece: a 200-piece vocabulary and each word's greedy longest-match
+  // pieces `toks(word, piece)`.
+  private val duckWordPieceToks =
+    s"""$duckWordFreq,
+      |chars AS (
+      |  SELECT DISTINCT substr(word, i, 1) AS piece FROM w,
+      |  LATERAL (SELECT unnest(generate_series(1, length(word))) AS i) g),
+      |subs AS (
+      |  SELECT substr(word, i, l) AS piece, sum(freq) AS wt
+      |  FROM w,
+      |  LATERAL (SELECT unnest(generate_series(2, 4)) AS l) ls,
+      |  LATERAL (SELECT unnest(generate_series(1, length(word) - l + 1))
+      |    AS i) g
+      |  GROUP BY 1),
+      |topp AS (SELECT piece FROM subs ORDER BY wt DESC, piece LIMIT 200),
+      |vocab AS (SELECT piece FROM chars UNION SELECT piece FROM topp),
+      |matches AS (
+      |  SELECT word, pos, max(length(piece)) AS bestlen FROM (
+      |    SELECT w.word, g.i AS pos, v.piece
+      |    FROM w,
+      |    LATERAL (SELECT unnest(generate_series(1, length(w.word)))
+      |      AS i) g, vocab v
+      |    WHERE substr(w.word, g.i, length(v.piece)) = v.piece)
+      |  GROUP BY 1, 2),
+      |rec AS (
+      |  SELECT word, CAST(1 AS BIGINT) AS pos,
+      |    CAST(NULL AS VARCHAR) AS piece
+      |  FROM w
+      |  UNION ALL
+      |  SELECT r.word, r.pos + m.bestlen,
+      |    substr(r.word, CAST(r.pos AS INTEGER), CAST(m.bestlen AS INTEGER))
+      |  FROM rec r JOIN matches m ON m.word = r.word AND m.pos = r.pos),
+      |toks AS (SELECT word, piece FROM rec WHERE piece IS NOT NULL)"""
       .stripMargin
 
-  // DuckDB-side MinHash+LSH verified pairs (mirrors Dedup.minhashDedup with
-  // n=3, bands=4, num=8, den=10): chain after `base` (duckShingles); yields
-  // `mh_pairs(a, b)`. Kept byte-compatible with the q_dedup_minhash
-  // pipeline — shared by queries that consume the pair set downstream.
-  private val duckMinhashPairs =
-    s"""$duckMinhashBands,
-      |mh_cand AS (
-      |  SELECT DISTINCT l.doc_id a, r.doc_id b
-      |  FROM mh_banded l JOIN mh_banded r
-      |    ON l.band = r.band AND l.bkey = r.bkey AND l.doc_id < r.doc_id),
-      |mh_pairs AS (
-      |  SELECT c.a, c.b FROM mh_cand c
-      |  JOIN base ba ON ba.doc_id = c.a
-      |  JOIN base bb ON bb.doc_id = c.b
-      |  WHERE len(list_intersect(ba.sh, bb.sh)) * 10
-      |    >= (len(ba.sh) + len(bb.sh) - len(list_intersect(ba.sh, bb.sh))) * 8)"""
+  // Unigram: a 200-piece vocabulary with -ln costs and each word's Viterbi
+  // pieces `${p}toks(word, piece)`; `p` prefixes the CTE names so two
+  // tokenizers fit in one query.
+  private def duckUnigramToks(p: String) =
+    s"""${p}cand AS (
+      |  SELECT substr(word, i, l) AS piece, sum(freq) AS wt
+      |  FROM w,
+      |  LATERAL (SELECT unnest(generate_series(1, 4)) AS l) ls,
+      |  LATERAL (SELECT unnest(generate_series(1, length(word) - l + 1))
+      |    AS i) g
+      |  GROUP BY 1),
+      |${p}keep AS (
+      |  SELECT piece, wt FROM ${p}cand WHERE length(piece) = 1
+      |  UNION ALL
+      |  SELECT piece, wt FROM (SELECT piece, wt FROM ${p}cand
+      |    WHERE length(piece) >= 2 ORDER BY wt DESC, piece LIMIT 200)),
+      |${p}tot AS (SELECT CAST(sum(wt) AS DOUBLE) AS total FROM ${p}keep),
+      |${p}vocab AS (SELECT piece,
+      |  CAST(round(-ln(wt / total) * 10000) AS BIGINT) AS cost
+      |  FROM ${p}keep, ${p}tot),
+      |seg AS (
+      |  SELECT word, CAST(0 AS BIGINT) AS pos,
+      |    CAST('' AS VARCHAR) AS path, CAST(0 AS BIGINT) AS cost
+      |  FROM w
+      |  UNION ALL
+      |  SELECT s.word, s.pos + length(v.piece),
+      |    CASE WHEN s.path = '' THEN v.piece
+      |         ELSE s.path || chr(1) || v.piece END,
+      |    s.cost + v.cost
+      |  FROM seg s JOIN ${p}vocab v
+      |    ON s.pos < length(s.word)
+      |   AND substr(s.word, CAST(s.pos + 1 AS INTEGER),
+      |         length(v.piece)) = v.piece),
+      |best AS (
+      |  SELECT word, path FROM (
+      |    SELECT word, path,
+      |      row_number() OVER (PARTITION BY word
+      |        ORDER BY cost, path) AS rn
+      |    FROM seg WHERE pos = length(word))
+      |  WHERE rn = 1),
+      |${p}toks AS (SELECT b.word, unnest(string_split(b.path, chr(1)))
+      |    AS piece
+      |  FROM best b)""".stripMargin
+
+  // The BPE base and three merge iterations.
+  private val duckBpe3 =
+    s"""$duckBpeBase,
+      |${bpeIterSql(1)},
+      |${bpeIterSql(2)},
+      |${bpeIterSql(3)}""".stripMargin
+
+  // q_bpe_train's oracle, shared by q_bpe_train_chained.
+  private val duckBpeTrain =
+    s"""WITH $duckBpe3
+      |SELECT * FROM (
+      |  SELECT CAST(1 AS INTEGER) AS it, pr AS pair,
+      |    CAST(cnt AS BIGINT) AS cnt FROM b1
+      |  UNION ALL SELECT CAST(2 AS INTEGER), pr, CAST(cnt AS BIGINT)
+      |    FROM b2
+      |  UNION ALL SELECT CAST(3 AS INTEGER), pr, CAST(cnt AS BIGINT)
+      |    FROM b3)""".stripMargin
+
+  // Docs with their content-addressed shard and token count, and the
+  // per-shard running token sum `c(doc_id, shard, n_tok, cum)`.
+  private val duckPackCum =
+    """t AS (
+      |  SELECT doc_id,
+      |    CAST(('0x' || substr(sha256(lower(trim(text))), 1, 8))::UBIGINT
+      |      % 10 AS INTEGER) AS shard,
+      |    CAST(len(string_split_regex(lower(trim(text)), '\s+'))
+      |      AS BIGINT) AS n_tok
+      |  FROM documents),
+      |c AS (
+      |  SELECT doc_id, shard, n_tok,
+      |    sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+      |  FROM t)""".stripMargin
+
+  // The training-mix tail over `src(doc_id, lang, q)`: token and vocab
+  // counts (CTE `tok`), the density gate, the 5000-token budget and the
+  // per-lang report.
+  private def duckRecipeMix(tok: String, src: String) =
+    s"""$tok AS (
+      |  SELECT doc_id, lang,
+      |    CAST(len(string_split_regex(q, '\\s+')) AS BIGINT) AS n_tok,
+      |    CAST(len(list_distinct(string_split_regex(q, '\\s+')))
+      |      AS BIGINT) AS n_vocab
+      |  FROM $src),
+      |qual AS (
+      |  SELECT doc_id, lang, n_tok,
+      |    (n_vocab * 1000000) // n_tok AS density_ppm
+      |  FROM $tok WHERE n_tok >= 3),
+      |sel AS (
+      |  SELECT lang, n_tok, density_ppm,
+      |    CAST(sum(n_tok) OVER (ORDER BY density_ppm DESC, doc_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+      |      AS BIGINT) AS tok_cum
+      |  FROM qual)
+      |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+      |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+      |  CAST(min(density_ppm) AS BIGINT) AS min_density_ppm
+      |FROM sel WHERE tok_cum - n_tok < 5000
+      |GROUP BY lang""".stripMargin
+
+  // Per-doc SimHash bit votes `votes(doc_id, j, v)` over 60-bit sha256
+  // token hashes.
+  private val duckSimHashVotes =
+    """tok AS (
+      |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) t
+      |  FROM documents),
+      |h AS (SELECT doc_id, ('0x' || substr(sha256(t), 1, 15))::UBIGINT h
+      |      FROM tok),
+      |votes AS (
+      |  SELECT doc_id, j,
+      |    sum(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) v
+      |  FROM h, (SELECT unnest(generate_series(0, 59)) j) js
+      |  GROUP BY 1, 2)""".stripMargin
+
+  // Every adjacent-word bigram occurrence: `big(bigram)`.
+  private val duckBigramOccs =
+    """toks AS (
+      |  SELECT string_split_regex(lower(trim(text)), '\s+') t
+      |  FROM documents),
+      |big AS (
+      |  SELECT unnest(list_transform(generate_series(1, len(t) - 1),
+      |    i -> t[i] || ' ' || t[i+1])) bigram
+      |  FROM toks WHERE len(t) >= 2)""".stripMargin
+
+  // Unigram surprisal costs `m(term, micro)` from term counts `tf`.
+  private[queries] val duckTermCosts =
+    """f AS (SELECT term, CAST(sum(tf) AS BIGINT) AS freq FROM tf
+      |      GROUP BY 1),
+      |n AS (SELECT CAST(sum(freq) AS DOUBLE) AS total FROM f),
+      |m AS (SELECT term,
+      |        CAST(round(-ln(freq / total) * 10000) AS BIGINT) AS micro
+      |      FROM f, n)""".stripMargin
+
+  // Per-doc chunk count and duplicate share from `w(doc_id, cnt)`.
+  private val duckChunkDupStats =
+    """SELECT doc_id, CAST(count(*) AS BIGINT) n_chunks,
+      |  CAST(count(*) FILTER (WHERE cnt > 1) AS BIGINT) dup_chunks,
+      |  (CAST(count(*) FILTER (WHERE cnt > 1) AS BIGINT) * 1000)
+      |    // CAST(count(*) AS BIGINT) AS dup_permille
+      |FROM w GROUP BY 1""".stripMargin
+
+  // Per-(lang, source) doc counts and their exact square root in milli
+  // units.
+  private val duckSqrtMix =
+    """g AS (SELECT lang, source, CAST(count(*) AS BIGINT) n
+      |           FROM documents GROUP BY 1, 2),
+      |s AS (SELECT lang, source, n,
+      |  CAST(floor(sqrt(CAST(n * 1000000 AS DOUBLE))) AS BIGINT)
+      |    sqrt_milli FROM g)""".stripMargin
+
+  // Pearson r in micro units from the sums n, sx, sy, sxx, syy, sxy.
+  private[queries] val duckPearsonMicro =
+    """  CAST(round(1000000 * (CAST(n AS DOUBLE) * sxy
+      |      - CAST(sx AS DOUBLE) * sy) /
+      |    (sqrt(CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) *
+      |     sqrt(CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)))"""
       .stripMargin
 
   val all: Map[String, Q] = Map(
@@ -308,7 +836,7 @@ object LlmQueries {
           .as("is_quality"))
     },
 
-    // L7c — term-blocklist filter (r16): the C4 "bad-words" document
+    // L7c — term-blocklist filter: the C4 "bad-words" document
     // gate (Raffel et al. 2020 §2.2 drop any doc containing a listed
     // term; the list here is a neutral stand-in — the operator is the
     // list-driven gate, not the list). Per doc: token total, blocked
@@ -420,8 +948,8 @@ object LlmQueries {
     // 100 TB a per-source window is source-sized; the support-sized
     // block-rank alternative is the q_auc shape.
     "q_spearman" -> Q(
-      """WITH t AS (SELECT source, CAST(n_chars AS BIGINT) x,
-        |    CAST(len(string_split_regex(lower(trim(text)), '\s+'))
+      s"""WITH t AS (SELECT source, CAST(n_chars AS BIGINT) x,
+        |    CAST(len(string_split_regex(lower(trim(text)), '\\s+'))
         |      AS BIGINT) y
         |  FROM documents),
         |r AS (SELECT source,
@@ -437,10 +965,7 @@ object LlmQueries {
         |    CAST(sum(ry * ry) AS BIGINT) syy
         |  FROM r GROUP BY 1)
         |SELECT source, n,
-        |  CAST(round(1000000 * (CAST(n AS DOUBLE) * sxy
-        |      - CAST(sx AS DOUBLE) * sy) /
-        |    (sqrt(CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) *
-        |     sqrt(CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)))
+        |$duckPearsonMicro
         |    AS BIGINT) AS spearman_micro
         |FROM s
         |WHERE CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx > 0
@@ -577,18 +1102,7 @@ object LlmQueries {
     // the parallelism unit (production uses thousands), so the window sort
     // is per-shard-partition, never global. All-integer output.
     "q_seq_pack" -> Q(
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(('0x' || substr(sha256(lower(trim(text))), 1, 8))::UBIGINT
-        |      % 10 AS INTEGER) AS shard,
-        |    CAST(len(string_split_regex(lower(trim(text)), '\s+'))
-        |      AS BIGINT) AS n_tok
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, shard, n_tok,
-        |    sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM t)
+      s"""WITH $duckPackCum
         |SELECT doc_id, shard, n_tok,
         |  CAST((cum - n_tok) // 2048 AS BIGINT) AS seq_id,
         |  CAST((cum - n_tok) % 2048 AS BIGINT) AS seq_offset
@@ -612,18 +1126,7 @@ object LlmQueries {
     // front-end, then one partial-agg'd groupBy on the tiny (shard,
     // seq_id) key space.
     "q_pack_stats" -> Q(
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(('0x' || substr(sha256(lower(trim(text))), 1, 8))::UBIGINT
-        |      % 10 AS INTEGER) AS shard,
-        |    CAST(len(string_split_regex(lower(trim(text)), '\s+'))
-        |      AS BIGINT) AS n_tok
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, shard, n_tok,
-        |    sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM t),
+      s"""WITH $duckPackCum,
         |k AS (
         |  SELECT shard, CAST((cum - n_tok) // 2048 AS BIGINT) AS seq_id,
         |    n_tok, cum
@@ -656,16 +1159,11 @@ object LlmQueries {
     // Corpus total tokens is a broadcast 1-row aggregate, never a
     // driver-side count.
     "q_surprisal" -> Q(
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)),
-        |    '\s+')) AS term FROM documents),
+        |    '\\s+')) AS term FROM documents),
         |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |f AS (SELECT term, CAST(sum(tf) AS BIGINT) AS freq FROM tf
-        |      GROUP BY 1),
-        |n AS (SELECT CAST(sum(freq) AS DOUBLE) AS total FROM f),
-        |m AS (SELECT term,
-        |        CAST(round(-ln(freq / total) * 10000) AS BIGINT) AS micro
-        |      FROM f, n)
+        |$duckTermCosts
         |SELECT tf.doc_id,
         |  CAST(sum(tf.tf * m.micro) AS BIGINT) AS surprisal_micro4,
         |  CAST(sum(tf.tf) AS BIGINT) AS n_tok
@@ -769,12 +1267,7 @@ object LlmQueries {
     // inverted-index join (integer threshold: inter*10 >= uni*8).
     "q_ngram_jaccard" -> Q(
       s"""WITH $duckShingles,
-        |tok AS (SELECT doc_id, unnest(sh) g FROM base),
-        |sizes AS (SELECT doc_id, len(sh) n_ FROM base),
-        |inter AS (
-        |  SELECT l.doc_id a, r.doc_id b, CAST(count(*) AS INTEGER) inter
-        |  FROM tok l JOIN tok r ON l.g = r.g AND l.doc_id < r.doc_id
-        |  GROUP BY 1, 2)
+        |${duckJaccardInter("<")}
         |SELECT i.a, i.b, i.inter,
         |  CAST(sa.n_ + sb.n_ - i.inter AS INTEGER) AS uni
         |FROM inter i
@@ -793,12 +1286,7 @@ object LlmQueries {
     // completeness, not just verification math.
     "q_containment" -> Q(
       s"""WITH $duckShingles,
-        |tok AS (SELECT doc_id, unnest(sh) g FROM base),
-        |sizes AS (SELECT doc_id, len(sh) n_ FROM base),
-        |inter AS (
-        |  SELECT l.doc_id a, r.doc_id b, CAST(count(*) AS INTEGER) inter
-        |  FROM tok l JOIN tok r ON l.g = r.g AND l.doc_id <> r.doc_id
-        |  GROUP BY 1, 2)
+        |${duckJaccardInter("<>")}
         |SELECT i.a, i.b, i.inter, CAST(sa.n_ AS INTEGER) na
         |FROM inter i JOIN sizes sa ON sa.doc_id = i.a
         |WHERE i.inter * 10 >= sa.n_ * 9""".stripMargin) { (s, dir) =>
@@ -814,12 +1302,7 @@ object LlmQueries {
     // window, so the hash certifies the cut's determinism too.
     "q_containment_topk" -> Q(
       s"""WITH $duckShingles,
-        |tok AS (SELECT doc_id, unnest(sh) g FROM base),
-        |sizes AS (SELECT doc_id, len(sh) n_ FROM base),
-        |inter AS (
-        |  SELECT l.doc_id a, r.doc_id b, CAST(count(*) AS INTEGER) inter
-        |  FROM tok l JOIN tok r ON l.g = r.g AND l.doc_id <> r.doc_id
-        |  GROUP BY 1, 2),
+        |${duckJaccardInter("<>")},
         |p AS (SELECT i.a, i.b, i.inter, CAST(sa.n_ AS INTEGER) na
         |  FROM inter i JOIN sizes sa ON sa.doc_id = i.a
         |  WHERE i.inter * 10 >= sa.n_ * 9),
@@ -843,11 +1326,7 @@ object LlmQueries {
     "q_containment_graph" -> Q(
       s"""WITH $duckShingles,
         |$duckMinhashBands,
-        |knn_cand AS (
-        |  SELECT DISTINCT l.doc_id a, r.doc_id b
-        |  FROM mh_banded l JOIN mh_banded r
-        |    ON l.band = r.band AND l.bkey = r.bkey
-        |    AND l.doc_id <> r.doc_id),
+        |$duckKnnCand,
         |scored AS (
         |  SELECT c.a, c.b,
         |    CAST(len(list_intersect(ba.sh, bb.sh)) AS INTEGER) inter,
@@ -913,35 +1392,7 @@ object LlmQueries {
     // sha256 on both engines.
     "q_dedup_minhash" -> Q(
       s"""WITH $duckShingles,
-        |hashed AS (SELECT doc_id, sh,
-        |  list_transform(sh, x -> sha256(x)) hs FROM base),
-        |sigs AS (SELECT doc_id, sh,
-        |  list_aggregate(list_transform(hs, h -> substr(h,  1, 8)), 'min') s0,
-        |  list_aggregate(list_transform(hs, h -> substr(h,  9, 8)), 'min') s1,
-        |  list_aggregate(list_transform(hs, h -> substr(h, 17, 8)), 'min') s2,
-        |  list_aggregate(list_transform(hs, h -> substr(h, 25, 8)), 'min') s3,
-        |  list_aggregate(list_transform(hs, h -> substr(h, 33, 8)), 'min') s4,
-        |  list_aggregate(list_transform(hs, h -> substr(h, 41, 8)), 'min') s5,
-        |  list_aggregate(list_transform(hs, h -> substr(h, 49, 8)), 'min') s6,
-        |  list_aggregate(list_transform(hs, h -> substr(h, 57, 8)), 'min') s7
-        |  FROM hashed),
-        |banded AS (
-        |  SELECT doc_id, 0 band, s0 || s1 bkey FROM sigs
-        |  UNION ALL SELECT doc_id, 1, s2 || s3 FROM sigs
-        |  UNION ALL SELECT doc_id, 2, s4 || s5 FROM sigs
-        |  UNION ALL SELECT doc_id, 3, s6 || s7 FROM sigs),
-        |cand AS (
-        |  SELECT DISTINCT l.doc_id a, r.doc_id b
-        |  FROM banded l JOIN banded r
-        |    ON l.band = r.band AND l.bkey = r.bkey AND l.doc_id < r.doc_id),
-        |verify AS (
-        |  SELECT c.a, c.b,
-        |    CAST(len(list_intersect(ba.sh, bb.sh)) AS INTEGER) inter,
-        |    CAST(len(ba.sh) + len(bb.sh)
-        |      - len(list_intersect(ba.sh, bb.sh)) AS INTEGER) uni
-        |  FROM cand c
-        |  JOIN base ba ON ba.doc_id = c.a
-        |  JOIN base bb ON bb.doc_id = c.b)
+        |$duckMinhashVerify
         |SELECT a, b, inter, uni FROM verify
         |WHERE inter * 10 >= uni * 8""".stripMargin) { (s, dir) =>
       Dedup.minhashDedup(table(s, dir, "documents"), "doc_id", "text",
@@ -960,35 +1411,7 @@ object LlmQueries {
         |  SELECT doc_id FROM documents
         |  WHERE ('0x' || substr(sha256(lower(trim(text))), 1, 8))::UBIGINT
         |    % 10 = 0),
-        |hashed AS (SELECT doc_id, sh,
-        |  list_transform(sh, x -> sha256(x)) hs FROM base),
-        |sigs AS (SELECT doc_id, sh,
-        |  list_aggregate(list_transform(hs, h -> substr(h,  1, 8)), 'min') s0,
-        |  list_aggregate(list_transform(hs, h -> substr(h,  9, 8)), 'min') s1,
-        |  list_aggregate(list_transform(hs, h -> substr(h, 17, 8)), 'min') s2,
-        |  list_aggregate(list_transform(hs, h -> substr(h, 25, 8)), 'min') s3,
-        |  list_aggregate(list_transform(hs, h -> substr(h, 33, 8)), 'min') s4,
-        |  list_aggregate(list_transform(hs, h -> substr(h, 41, 8)), 'min') s5,
-        |  list_aggregate(list_transform(hs, h -> substr(h, 49, 8)), 'min') s6,
-        |  list_aggregate(list_transform(hs, h -> substr(h, 57, 8)), 'min') s7
-        |  FROM hashed),
-        |banded AS (
-        |  SELECT doc_id, 0 band, s0 || s1 bkey FROM sigs
-        |  UNION ALL SELECT doc_id, 1, s2 || s3 FROM sigs
-        |  UNION ALL SELECT doc_id, 2, s4 || s5 FROM sigs
-        |  UNION ALL SELECT doc_id, 3, s6 || s7 FROM sigs),
-        |cand AS (
-        |  SELECT DISTINCT l.doc_id a, r.doc_id b
-        |  FROM banded l JOIN banded r
-        |    ON l.band = r.band AND l.bkey = r.bkey AND l.doc_id < r.doc_id),
-        |verify AS (
-        |  SELECT c.a, c.b,
-        |    CAST(len(list_intersect(ba.sh, bb.sh)) AS INTEGER) inter,
-        |    CAST(len(ba.sh) + len(bb.sh)
-        |      - len(list_intersect(ba.sh, bb.sh)) AS INTEGER) uni
-        |  FROM cand c
-        |  JOIN base ba ON ba.doc_id = c.a
-        |  JOIN base bb ON bb.doc_id = c.b)
+        |$duckMinhashVerify
         |SELECT v.a, v.b, v.inter, v.uni FROM verify v
         |WHERE (v.a IN (SELECT doc_id FROM delta)
         |    OR v.b IN (SELECT doc_id FROM delta))
@@ -1007,24 +1430,7 @@ object LlmQueries {
     // the same fixpoint with a recursive CTE.
     "q_dedup_clusters" -> Q(
       s"""WITH RECURSIVE $duckShingles,
-        |tok AS (SELECT doc_id, unnest(sh) g FROM base),
-        |sizes AS (SELECT doc_id, len(sh) n_ FROM base),
-        |inter AS (
-        |  SELECT l.doc_id a, r.doc_id b, CAST(count(*) AS INTEGER) inter
-        |  FROM tok l JOIN tok r ON l.g = r.g AND l.doc_id < r.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT i.a, i.b FROM inter i
-        |  JOIN sizes sa ON sa.doc_id = i.a
-        |  JOIN sizes sb ON sb.doc_id = i.b
-        |  WHERE i.inter * 10 >= (sa.n_ + sb.n_ - i.inter) * 8),
-        |edges AS (
-        |  SELECT a src, b dst FROM pairs
-        |  UNION ALL SELECT b, a FROM pairs),
-        |cc AS (
-        |  SELECT DISTINCT src AS node, src AS rep FROM edges
-        |  UNION
-        |  SELECT e.dst, cc.rep FROM cc, edges e WHERE cc.node = e.src)
+        |$duckJaccardCc
         |SELECT node AS doc_id, CAST(min(rep) AS BIGINT) AS rep
         |FROM cc GROUP BY node""".stripMargin) { (s, dir) =>
       val pairs = SharedBases.jaccardPairs(s, dir)
@@ -1032,7 +1438,7 @@ object LlmQueries {
         .select(col("node").as("doc_id"), col("rep"))
     },
 
-    // L103 — soft-dedup repeat weighting (r16; the data-constrained
+    // L103 — soft-dedup repeat weighting (the data-constrained
     // recipe of Muennighoff et al. 2023): instead of DROPPING
     // near-duplicates, keep every copy and down-weight it by its
     // cluster size — weight_ppm = 1e6 div |cluster| — so each near-dup
@@ -1043,24 +1449,7 @@ object LlmQueries {
     // (singletons weight 1e6). Exact integers end to end.
     "q_dup_weights" -> Q(
       s"""WITH RECURSIVE $duckShingles,
-        |tok AS (SELECT doc_id, unnest(sh) g FROM base),
-        |sizes AS (SELECT doc_id, len(sh) n_ FROM base),
-        |inter AS (
-        |  SELECT l.doc_id a, r.doc_id b, CAST(count(*) AS INTEGER) inter
-        |  FROM tok l JOIN tok r ON l.g = r.g AND l.doc_id < r.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT i.a, i.b FROM inter i
-        |  JOIN sizes sa ON sa.doc_id = i.a
-        |  JOIN sizes sb ON sb.doc_id = i.b
-        |  WHERE i.inter * 10 >= (sa.n_ + sb.n_ - i.inter) * 8),
-        |edges AS (
-        |  SELECT a src, b dst FROM pairs
-        |  UNION ALL SELECT b, a FROM pairs),
-        |cc AS (
-        |  SELECT DISTINCT src AS node, src AS rep FROM edges
-        |  UNION
-        |  SELECT e.dst, cc.rep FROM cc, edges e WHERE cc.node = e.src),
+        |$duckJaccardCc,
         |reps AS (SELECT node, CAST(min(rep) AS BIGINT) rep FROM cc
         |         GROUP BY node),
         |csz AS (SELECT rep, CAST(count(*) AS BIGINT) csize FROM reps
@@ -1087,24 +1476,7 @@ object LlmQueries {
     // representative).
     "q_dedup_keep" -> Q(
       s"""WITH RECURSIVE $duckShingles,
-        |tok AS (SELECT doc_id, unnest(sh) g FROM base),
-        |sizes AS (SELECT doc_id, len(sh) n_ FROM base),
-        |inter AS (
-        |  SELECT l.doc_id a, r.doc_id b, CAST(count(*) AS INTEGER) inter
-        |  FROM tok l JOIN tok r ON l.g = r.g AND l.doc_id < r.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT i.a, i.b FROM inter i
-        |  JOIN sizes sa ON sa.doc_id = i.a
-        |  JOIN sizes sb ON sb.doc_id = i.b
-        |  WHERE i.inter * 10 >= (sa.n_ + sb.n_ - i.inter) * 8),
-        |edges AS (
-        |  SELECT a src, b dst FROM pairs
-        |  UNION ALL SELECT b, a FROM pairs),
-        |cc AS (
-        |  SELECT DISTINCT src AS node, src AS rep FROM edges
-        |  UNION
-        |  SELECT e.dst, cc.rep FROM cc, edges e WHERE cc.node = e.src),
+        |$duckJaccardCc,
         |reps AS (SELECT node AS doc_id, min(rep) AS rep FROM cc GROUP BY node)
         |SELECT d.doc_id FROM documents d
         |LEFT JOIN reps r ON d.doc_id = r.doc_id
@@ -1126,13 +1498,7 @@ object LlmQueries {
     "q_cluster_sizes" -> Q(
       s"""WITH RECURSIVE $duckShingles,
         |$duckMinhashPairs,
-        |edges AS (
-        |  SELECT a src, b dst FROM mh_pairs
-        |  UNION ALL SELECT b, a FROM mh_pairs),
-        |cc AS (
-        |  SELECT DISTINCT src AS node, src AS rep FROM edges
-        |  UNION
-        |  SELECT e.dst, cc.rep FROM cc, edges e WHERE cc.node = e.src),
+        |${duckCc("mh_pairs")},
         |reps AS (SELECT node, min(rep) rep FROM cc GROUP BY node),
         |sizes AS (SELECT rep, CAST(count(*) AS BIGINT) cluster_size
         |          FROM reps GROUP BY rep)
@@ -1152,20 +1518,7 @@ object LlmQueries {
     // argmax; only docs appearing in a pair participate.
     "q_keep_best" -> Q(
       s"""WITH RECURSIVE $duckShingles,
-        |$duckMinhashPairs,
-        |edges AS (
-        |  SELECT a src, b dst FROM mh_pairs
-        |  UNION ALL SELECT b, a FROM mh_pairs),
-        |cc AS (
-        |  SELECT DISTINCT src AS node, src AS rep FROM edges
-        |  UNION
-        |  SELECT e.dst, cc.rep FROM cc, edges e WHERE cc.node = e.src),
-        |reps AS (SELECT node, CAST(min(rep) AS BIGINT) rep
-        |         FROM cc GROUP BY node),
-        |scored AS (SELECT doc_id node,
-        |  CAST(len(regexp_extract_all(lower(trim(text)),
-        |    '\\b(the|a|and|of|to|in|is|for|on|with)\\b')) AS INTEGER) score
-        |  FROM documents),
+        |$duckClusterScores,
         |ranked AS (
         |  SELECT r.rep, r.node, s.score,
         |    row_number() OVER (PARTITION BY r.rep
@@ -1232,11 +1585,7 @@ object LlmQueries {
         |$duckMinhashBands,
         |nrm AS (SELECT doc_id, substr(lower(trim(text)), 1, 64) s
         |        FROM documents),
-        |knn_cand AS (
-        |  SELECT DISTINCT l.doc_id a, r.doc_id b
-        |  FROM mh_banded l JOIN mh_banded r
-        |    ON l.band = r.band AND l.bkey = r.bkey
-        |    AND l.doc_id <> r.doc_id),
+        |$duckKnnCand,
         |scored AS (
         |  SELECT c.a doc_id, c.b nbr_id,
         |    CAST(levenshtein(na.s, nb.s) AS INTEGER) dist
@@ -1282,20 +1631,7 @@ object LlmQueries {
     // runs, and the whole chain stays hash-checked.
     "q_corpus_clean" -> Q(
       s"""WITH RECURSIVE $duckShingles,
-        |$duckMinhashPairs,
-        |edges AS (
-        |  SELECT a src, b dst FROM mh_pairs
-        |  UNION ALL SELECT b, a FROM mh_pairs),
-        |cc AS (
-        |  SELECT DISTINCT src AS node, src AS rep FROM edges
-        |  UNION
-        |  SELECT e.dst, cc.rep FROM cc, edges e WHERE cc.node = e.src),
-        |reps AS (SELECT node, CAST(min(rep) AS BIGINT) rep
-        |         FROM cc GROUP BY node),
-        |scored AS (SELECT doc_id node,
-        |  CAST(len(regexp_extract_all(lower(trim(text)),
-        |    '\\b(the|a|and|of|to|in|is|for|on|with)\\b')) AS INTEGER) score
-        |  FROM documents),
+        |$duckClusterScores,
         |ranked AS (SELECT r.node,
         |    row_number() OVER (PARTITION BY r.rep
         |      ORDER BY s.score DESC, r.node ASC) rn
@@ -1392,25 +1728,21 @@ object LlmQueries {
     // Chunk text is sha256'd at the scan — only digests shuffle; the count
     // is a window over the digest (one exchange, not groupBy+join-back).
     "q_para_dedup" -> Q(
-      """WITH ch AS (
+      s"""WITH ch AS (
         |  SELECT doc_id, sha256(c) csha FROM (
         |    SELECT doc_id, unnest(list_transform(
         |        generate_series(1, len(toks) // 10),
         |        i -> array_to_string(toks[(i-1)*10+1:(i-1)*10+10], ' '))) c
         |    FROM (SELECT doc_id,
-        |            string_split_regex(lower(trim(text)), '\s+') toks
+        |            string_split_regex(lower(trim(text)), '\\s+') toks
         |          FROM documents))),
         |w AS (SELECT doc_id, count(*) OVER (PARTITION BY csha) cnt FROM ch)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) n_chunks,
-        |  CAST(count(*) FILTER (WHERE cnt > 1) AS BIGINT) dup_chunks,
-        |  (CAST(count(*) FILTER (WHERE cnt > 1) AS BIGINT) * 1000)
-        |    // CAST(count(*) AS BIGINT) AS dup_permille
-        |FROM w GROUP BY 1""".stripMargin) { (s, dir) =>
+        |$duckChunkDupStats""".stripMargin) { (s, dir) =>
       Dedup.chunkDupStats(table(s, dir, "documents"), "doc_id", "text",
         w = 10)
     },
 
-    // L104 — chunk-dedup APPLICATION (r16): q_para_dedup profiles the
+    // L104 — chunk-dedup APPLICATION: q_para_dedup profiles the
     // duplication, this executes the removal decision — global
     // FIRST-OCCURRENCE-wins at 10-token-chunk granularity (the Lee et
     // al. 2022 exact-dedup policy applied blockwise: later copies of a
@@ -1455,7 +1787,7 @@ object LlmQueries {
           ((col("n_chunks") - col("n_dropped")) * 10).as("kept_tokens"))
     },
 
-    // L105 — content-defined-chunking dup profile (r16): the third
+    // L105 — content-defined-chunking dup profile: the third
     // segmentation in the dedup-profile family. q_para_dedup's fixed
     // 10-token blocks break entirely when a copy inserts/deletes ONE
     // token (every later block shifts out of phase); q_substring_dup
@@ -1469,8 +1801,8 @@ object LlmQueries {
     // expressions, sha256'd at the scan, ONE digest window, map-side
     // rollup; only (doc, digest) rows shuffle.
     "q_cdc_dedup" -> Q(
-      """WITH tk AS (
-        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') toks
+      s"""WITH tk AS (
+        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') toks
         |  FROM documents),
         |cut AS (
         |  SELECT doc_id, toks,
@@ -1489,11 +1821,7 @@ object LlmQueries {
         |  FROM st,
         |  LATERAL (SELECT unnest(generate_series(1, len(starts))) AS k) u),
         |w AS (SELECT doc_id, count(*) OVER (PARTITION BY usha) cnt FROM ch)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) n_chunks,
-        |  CAST(count(*) FILTER (WHERE cnt > 1) AS BIGINT) dup_chunks,
-        |  (CAST(count(*) FILTER (WHERE cnt > 1) AS BIGINT) * 1000)
-        |    // CAST(count(*) AS BIGINT) AS dup_permille
-        |FROM w GROUP BY 1""".stripMargin) { (s, dir) =>
+        |$duckChunkDupStats""".stripMargin) { (s, dir) =>
       Dedup.cdcDupStats(table(s, dir, "documents"), "doc_id", "text")
     },
 
@@ -1593,39 +1921,7 @@ object LlmQueries {
     // minPts is an exact integer degree cut. The oracle replays the whole
     // chain incl. recursive-CTE CC, so the hash certifies role assignment
     // and cluster labels end-to-end.
-    "q_dbscan" -> Q(
-      """WITH RECURSIVE
-        |e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-        |p AS (
-        |  SELECT a.vec_id a, b.vec_id b FROM e a JOIN e b
-        |    ON a.vec_id < b.vec_id
-        |  WHERE list_cosine_similarity(a.v, b.v) >= 0.35),
-        |nbr AS (SELECT a src, b dst FROM p UNION ALL SELECT b, a FROM p),
-        |deg AS (SELECT src, count(*) d FROM nbr GROUP BY 1),
-        |core AS (SELECT src AS id FROM deg WHERE d >= 3),
-        |cedges AS (
-        |  SELECT n.src, n.dst FROM nbr n
-        |  WHERE n.src IN (SELECT id FROM core)
-        |    AND n.dst IN (SELECT id FROM core)),
-        |cc AS (
-        |  SELECT id AS node, id AS rep FROM core
-        |  UNION
-        |  SELECT e2.dst, cc.rep FROM cc, cedges e2 WHERE cc.node = e2.src),
-        |corelab AS (SELECT node AS id, min(rep) AS cluster
-        |            FROM cc GROUP BY 1),
-        |borderlab AS (
-        |  SELECT n.src AS id, min(c.cluster) AS cluster
-        |  FROM nbr n JOIN corelab c ON n.dst = c.id
-        |  WHERE n.src NOT IN (SELECT id FROM corelab)
-        |  GROUP BY 1),
-        |labeled AS (
-        |  SELECT id, 'core' AS role, cluster FROM corelab
-        |  UNION ALL
-        |  SELECT id, 'border', cluster FROM borderlab)
-        |SELECT CAST(e.vec_id AS BIGINT) AS vec_id,
-        |  coalesce(l.role, 'noise') AS role,
-        |  CAST(coalesce(l.cluster, -1) AS BIGINT) AS cluster
-        |FROM e LEFT JOIN labeled l ON e.vec_id = l.id""".stripMargin) {
+    "q_dbscan" -> Q(duckDbscan) {
       (s, dir) =>
         // shared with q_dbscan_prune (SharedBases.dbscanRoles): both pay
         // the same exact pair-mining front-end
@@ -1645,39 +1941,7 @@ object LlmQueries {
     // unchanged. DbscanSpec pins the contract where parameters are
     // deliberately starved: ANN can only DEMOTE (core set shrinks,
     // noise grows), never invent neighbors.
-    "q_dbscan_ann" -> Q(
-      """WITH RECURSIVE
-        |e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-        |p AS (
-        |  SELECT a.vec_id a, b.vec_id b FROM e a JOIN e b
-        |    ON a.vec_id < b.vec_id
-        |  WHERE list_cosine_similarity(a.v, b.v) >= 0.35),
-        |nbr AS (SELECT a src, b dst FROM p UNION ALL SELECT b, a FROM p),
-        |deg AS (SELECT src, count(*) d FROM nbr GROUP BY 1),
-        |core AS (SELECT src AS id FROM deg WHERE d >= 3),
-        |cedges AS (
-        |  SELECT n.src, n.dst FROM nbr n
-        |  WHERE n.src IN (SELECT id FROM core)
-        |    AND n.dst IN (SELECT id FROM core)),
-        |cc AS (
-        |  SELECT id AS node, id AS rep FROM core
-        |  UNION
-        |  SELECT e2.dst, cc.rep FROM cc, cedges e2 WHERE cc.node = e2.src),
-        |corelab AS (SELECT node AS id, min(rep) AS cluster
-        |            FROM cc GROUP BY 1),
-        |borderlab AS (
-        |  SELECT n.src AS id, min(c.cluster) AS cluster
-        |  FROM nbr n JOIN corelab c ON n.dst = c.id
-        |  WHERE n.src NOT IN (SELECT id FROM corelab)
-        |  GROUP BY 1),
-        |labeled AS (
-        |  SELECT id, 'core' AS role, cluster FROM corelab
-        |  UNION ALL
-        |  SELECT id, 'border', cluster FROM borderlab)
-        |SELECT CAST(e.vec_id AS BIGINT) AS vec_id,
-        |  coalesce(l.role, 'noise') AS role,
-        |  CAST(coalesce(l.cluster, -1) AS BIGINT) AS cluster
-        |FROM e LEFT JOIN labeled l ON e.vec_id = l.id""".stripMargin) {
+    "q_dbscan_ann" -> Q(duckDbscan) {
       (s, dir) =>
         val e = table(s, dir, "embeddings")
         graft.ops.llm.Similarity.dbscanAnn(
@@ -1692,25 +1956,8 @@ object LlmQueries {
     // cluster and are pruned with it. This is SemDeDup-style semantic
     // pruning but density-aware: sparse regions are never thinned.
     "q_dbscan_prune" -> Q(
-      """WITH RECURSIVE
-        |e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-        |p AS (
-        |  SELECT a.vec_id a, b.vec_id b FROM e a JOIN e b
-        |    ON a.vec_id < b.vec_id
-        |  WHERE list_cosine_similarity(a.v, b.v) >= 0.35),
-        |nbr AS (SELECT a src, b dst FROM p UNION ALL SELECT b, a FROM p),
-        |deg AS (SELECT src, count(*) d FROM nbr GROUP BY 1),
-        |core AS (SELECT src AS id FROM deg WHERE d >= 3),
-        |cedges AS (
-        |  SELECT n.src, n.dst FROM nbr n
-        |  WHERE n.src IN (SELECT id FROM core)
-        |    AND n.dst IN (SELECT id FROM core)),
-        |cc AS (
-        |  SELECT id AS node, id AS rep FROM core
-        |  UNION
-        |  SELECT e2.dst, cc.rep FROM cc, cedges e2 WHERE cc.node = e2.src),
-        |corelab AS (SELECT node AS id, min(rep) AS cluster
-        |            FROM cc GROUP BY 1),
+      s"""WITH RECURSIVE
+        |$duckDbscanCore,
         |labeled AS (
         |  SELECT id FROM corelab
         |  UNION
@@ -1736,11 +1983,7 @@ object LlmQueries {
     // broadcast 1-row aggregate (scalar-subquery shape), weights in ppm
     // by integer division.
     "q_mix_weights" -> Q(
-      """WITH g AS (SELECT lang, source, CAST(count(*) AS BIGINT) n
-        |           FROM documents GROUP BY 1, 2),
-        |s AS (SELECT lang, source, n,
-        |  CAST(floor(sqrt(CAST(n * 1000000 AS DOUBLE))) AS BIGINT)
-        |    sqrt_milli FROM g),
+      s"""WITH $duckSqrtMix,
         |t AS (SELECT CAST(sum(sqrt_milli) AS BIGINT) tot FROM s)
         |SELECT lang, source, n, sqrt_milli,
         |  (sqrt_milli * 1000000) // t.tot AS weight_ppm
@@ -1766,11 +2009,7 @@ object LlmQueries {
     // a tiny broadcast; acceptance is a scan-side filter — sampling 100
     // TB costs one pass and no shuffle.
     "q_mix_apply" -> Q(
-      """WITH g AS (SELECT lang, source, CAST(count(*) AS BIGINT) n
-        |           FROM documents GROUP BY 1, 2),
-        |s AS (SELECT lang, source, n,
-        |  CAST(floor(sqrt(CAST(n * 1000000 AS DOUBLE))) AS BIGINT)
-        |    sqrt_milli FROM g),
+      s"""WITH $duckSqrtMix,
         |t AS (SELECT CAST(sum(sqrt_milli) AS BIGINT) tot,
         |             CAST(sum(n) AS BIGINT) corpus FROM s),
         |r AS (SELECT lang, source, n,
@@ -1840,20 +2079,7 @@ object LlmQueries {
     // shape. The oracle enumerates the same band buckets.
     "q_knn_graph" -> Q(
       s"""WITH $duckShingles,
-        |$duckMinhashBands,
-        |knn_cand AS (
-        |  SELECT DISTINCT l.doc_id a, r.doc_id b
-        |  FROM mh_banded l JOIN mh_banded r
-        |    ON l.band = r.band AND l.bkey = r.bkey
-        |    AND l.doc_id <> r.doc_id),
-        |scored AS (
-        |  SELECT c.a doc_id, c.b nbr_id,
-        |    CAST(len(list_intersect(ba.sh, bb.sh)) AS INTEGER) inter,
-        |    CAST(len(ba.sh) + len(bb.sh)
-        |      - len(list_intersect(ba.sh, bb.sh)) AS INTEGER) uni
-        |  FROM knn_cand c
-        |  JOIN base ba ON ba.doc_id = c.a
-        |  JOIN base bb ON bb.doc_id = c.b),
+        |$duckKnnInterUni,
         |rr AS (
         |  SELECT doc_id, nbr_id, inter, uni,
         |    (CAST(inter AS BIGINT) * 1000000) // uni AS jac_ppm,
@@ -1881,43 +2107,7 @@ object LlmQueries {
     // stopwords carry idf 0 and are cut BEFORE the pair join.
     "q_tfidf_knn" -> Q(
       s"""WITH $duckShingles,
-        |$duckMinhashBands,
-        |knn_cand AS (
-        |  SELECT DISTINCT l.doc_id a, r.doc_id b
-        |  FROM mh_banded l JOIN mh_banded r
-        |    ON l.band = r.band AND l.bkey = r.bkey
-        |    AND l.doc_id <> r.doc_id),
-        |tok AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(lower(trim(text)), '\\s+')) term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) tf
-        |       FROM tok GROUP BY 1, 2),
-        |dfq AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) df
-        |        FROM tok GROUP BY 1),
-        |nd AS (SELECT CAST(count(*) AS BIGINT) n_docs FROM documents),
-        |wts AS (
-        |  SELECT tf.doc_id, tf.term,
-        |    tf.tf * CAST(round(10000 * ln(CAST(n_docs AS DOUBLE)
-        |      / CAST(df AS DOUBLE))) AS BIGINT) wt
-        |  FROM tf JOIN dfq ON tf.term = dfq.term, nd),
-        |w2 AS (SELECT * FROM wts WHERE wt <> 0),
-        |norms AS (SELECT doc_id, CAST(sum(wt * wt) AS BIGINT) n2
-        |          FROM w2 GROUP BY 1),
-        |dots AS (
-        |  SELECT c.a, c.b, CAST(sum(wa.wt * wb.wt) AS BIGINT) dot
-        |  FROM knn_cand c
-        |  JOIN w2 wa ON wa.doc_id = c.a
-        |  JOIN w2 wb ON wb.doc_id = c.b AND wb.term = wa.term
-        |  GROUP BY 1, 2),
-        |scored AS (
-        |  SELECT d.a doc_id, d.b nbr_id,
-        |    CAST(round(1000000 * CAST(d.dot AS DOUBLE)
-        |      / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))))
-        |      AS BIGINT) cos_micro
-        |  FROM dots d
-        |  JOIN norms na ON na.doc_id = d.a
-        |  JOIN norms nb ON nb.doc_id = d.b),
+        |$duckTfidfKnnScored,
         |rr AS (
         |  SELECT doc_id, nbr_id, cos_micro,
         |    row_number() OVER (PARTITION BY doc_id
@@ -1929,7 +2119,7 @@ object LlmQueries {
         "doc_id", "text", k = 5)
     },
 
-    // L100 — contrastive hard-negative mining (r16): for each anchor
+    // L100 — contrastive hard-negative mining: for each anchor
     // document, the k lexically-CLOSEST documents that are NOT its
     // near-duplicates — exactly what contrastive/embedding training
     // mines (positives = near-dups, hard negatives = high-similarity
@@ -1954,23 +2144,7 @@ object LlmQueries {
         |  JOIN sizes sa ON sa.doc_id = i.a
         |  JOIN sizes sb ON sb.doc_id = i.b
         |  WHERE i.inter * 10 >= (sa.n_ + sb.n_ - i.inter) * 8),
-        |tok AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(lower(trim(text)), '\\s+')) term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) tf
-        |       FROM tok GROUP BY 1, 2),
-        |dfq AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) df
-        |        FROM tok GROUP BY 1),
-        |nd AS (SELECT CAST(count(*) AS BIGINT) n_docs FROM documents),
-        |wts AS (
-        |  SELECT tf.doc_id, tf.term,
-        |    tf.tf * CAST(round(10000 * ln(CAST(n_docs AS DOUBLE)
-        |      / CAST(df AS DOUBLE))) AS BIGINT) wt
-        |  FROM tf JOIN dfq ON tf.term = dfq.term, nd),
-        |w2 AS (SELECT * FROM wts WHERE wt <> 0),
-        |norms AS (SELECT doc_id, CAST(sum(wt * wt) AS BIGINT) n2
-        |          FROM w2 GROUP BY 1),
+        |$duckTfidfWeights,
         |dots AS (
         |  SELECT qa.doc_id a, wb.doc_id b,
         |    CAST(sum(qa.wt * wb.wt) AS BIGINT) dot
@@ -1980,12 +2154,7 @@ object LlmQueries {
         |  GROUP BY 1, 2),
         |scored AS (
         |  SELECT d.a, d.b,
-        |    CAST(round(1000000 * CAST(d.dot AS DOUBLE)
-        |      / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))))
-        |      AS BIGINT) cos_micro
-        |  FROM dots d
-        |  JOIN norms na ON na.doc_id = d.a
-        |  JOIN norms nb ON nb.doc_id = d.b
+        |$duckTfidfCos
         |  WHERE d.dot <> 0),
         |negs AS (
         |  SELECT s.* FROM scored s
@@ -2066,26 +2235,7 @@ object LlmQueries {
     // surviving out-edges) follows the standard drop convention.
     "q_pagerank" -> Q(
       s"""WITH $duckShingles,
-        |$duckMinhashBands,
-        |knn_cand AS (
-        |  SELECT DISTINCT l.doc_id a, r.doc_id b
-        |  FROM mh_banded l JOIN mh_banded r
-        |    ON l.band = r.band AND l.bkey = r.bkey
-        |    AND l.doc_id <> r.doc_id),
-        |scored AS (
-        |  SELECT c.a doc_id, c.b nbr_id,
-        |    (CAST(len(list_intersect(ba.sh, bb.sh)) AS BIGINT) * 1000000)
-        |      // CAST(len(ba.sh) + len(bb.sh)
-        |        - len(list_intersect(ba.sh, bb.sh)) AS BIGINT) jac_ppm
-        |  FROM knn_cand c
-        |  JOIN base ba ON ba.doc_id = c.a
-        |  JOIN base bb ON bb.doc_id = c.b),
-        |rr AS (
-        |  SELECT doc_id, nbr_id,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY jac_ppm DESC, nbr_id) rnk
-        |  FROM scored),
-        |edges AS (SELECT doc_id src, nbr_id dst FROM rr WHERE rnk <= 5),
+        |$duckKnnEdges,
         |deg AS (SELECT src, CAST(count(*) AS BIGINT) deg FROM edges
         |        GROUP BY 1),
         |nodes AS (SELECT DISTINCT src AS id FROM edges
@@ -2172,26 +2322,7 @@ object LlmQueries {
     // max broadcast; score tables checkpointed per round.
     "q_hits" -> Q(
       s"""WITH $duckShingles,
-        |$duckMinhashBands,
-        |knn_cand AS (
-        |  SELECT DISTINCT l.doc_id a, r.doc_id b
-        |  FROM mh_banded l JOIN mh_banded r
-        |    ON l.band = r.band AND l.bkey = r.bkey
-        |    AND l.doc_id <> r.doc_id),
-        |scored AS (
-        |  SELECT c.a doc_id, c.b nbr_id,
-        |    (CAST(len(list_intersect(ba.sh, bb.sh)) AS BIGINT) * 1000000)
-        |      // CAST(len(ba.sh) + len(bb.sh)
-        |        - len(list_intersect(ba.sh, bb.sh)) AS BIGINT) jac_ppm
-        |  FROM knn_cand c
-        |  JOIN base ba ON ba.doc_id = c.a
-        |  JOIN base bb ON bb.doc_id = c.b),
-        |rr AS (
-        |  SELECT doc_id, nbr_id,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY jac_ppm DESC, nbr_id) rnk
-        |  FROM scored),
-        |edges AS (SELECT doc_id src, nbr_id dst FROM rr WHERE rnk <= 5),
+        |$duckKnnEdges,
         |nodes AS (SELECT DISTINCT src AS id FROM edges
         |          UNION SELECT DISTINCT dst FROM edges),
         |h0 AS (SELECT id, CAST(1000000 AS BIGINT) v FROM nodes),
@@ -2270,7 +2401,6 @@ object LlmQueries {
     // table checkpointed per round (the CC/BPE driver-loop precedent).
     "q_label_prop" -> Q(
       s"""WITH $duckShingles,
-        |$duckMinhashBands,
         |$duckKnnE2,
         |$duckLpa3,
         |cs AS (SELECT lbl, CAST(count(*) AS BIGINT) community_size
@@ -2286,7 +2416,7 @@ object LlmQueries {
           col("community_size"))
     },
 
-    // L89b — Newman modularity of the LPA communities (r16): the
+    // L89b — Newman modularity of the LPA communities: the
     // QUALITY certificate for q_label_prop — did the vote actually find
     // dense neighborhoods, or arbitrary cuts? Q = Σ_c [e_c/m −
     // (d_c/2m)²] over the same symmetrized kNN edge set, computed in
@@ -2303,7 +2433,6 @@ object LlmQueries {
     // ppm step); past that, promote contrib to DECIMAL(38,0).
     "q_modularity" -> Q(
       s"""WITH $duckShingles,
-        |$duckMinhashBands,
         |$duckKnnE2,
         |$duckLpa3,
         |deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) d
@@ -2360,7 +2489,7 @@ object LlmQueries {
           col("deg_sum"), col("contrib"), col("modularity_ppm"))
     },
 
-    // L107 — degree assortativity of the kNN document graph (r16): do
+    // L107 — degree assortativity of the kNN document graph: do
     // high-degree docs (boilerplate hubs, template families) link to
     // each other or to the periphery? — the Newman degree-correlation
     // coefficient, the standard structure diagnostic next to
@@ -2376,7 +2505,6 @@ object LlmQueries {
     // e2 + a 1-row global agg — no windows, no driver state.
     "q_assortativity" -> Q(
       s"""WITH $duckShingles,
-        |$duckMinhashBands,
         |$duckKnnE2,
         |deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) d
         |  FROM e2 GROUP BY 1),
@@ -2414,7 +2542,7 @@ object LlmQueries {
     },
 
     // L108 — local clustering coefficient over the kNN document graph
-    // (r16): the third structure diagnostic on the shared e2 substrate
+    // — the third structure diagnostic on the shared e2 substrate
     // (modularity: partition quality; assortativity: hub mixing; this:
     // neighborhood closure — template families close into cliques,
     // topical neighborhoods stay open). Exact rational per node:
@@ -2428,7 +2556,6 @@ object LlmQueries {
     // closure count, bucket-capped upstream like every SB1 consumer.
     "q_clustering_coeff" -> Q(
       s"""WITH $duckShingles,
-        |$duckMinhashBands,
         |$duckKnnE2,
         |el AS (SELECT src x, dst y FROM e2 WHERE src < dst),
         |tri AS (
@@ -2650,43 +2777,7 @@ object LlmQueries {
     // k-bounded per doc.
     "q_ndcg" -> Q(
       s"""WITH $duckShingles,
-        |$duckMinhashBands,
-        |knn_cand AS (
-        |  SELECT DISTINCT l.doc_id a, r.doc_id b
-        |  FROM mh_banded l JOIN mh_banded r
-        |    ON l.band = r.band AND l.bkey = r.bkey
-        |    AND l.doc_id <> r.doc_id),
-        |tok AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(lower(trim(text)), '\\s+')) term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) tf
-        |       FROM tok GROUP BY 1, 2),
-        |dfq AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) df
-        |        FROM tok GROUP BY 1),
-        |nd AS (SELECT CAST(count(*) AS BIGINT) n_docs FROM documents),
-        |wts AS (
-        |  SELECT tf.doc_id, tf.term,
-        |    tf.tf * CAST(round(10000 * ln(CAST(n_docs AS DOUBLE)
-        |      / CAST(df AS DOUBLE))) AS BIGINT) wt
-        |  FROM tf JOIN dfq ON tf.term = dfq.term, nd),
-        |w2 AS (SELECT * FROM wts WHERE wt <> 0),
-        |norms AS (SELECT doc_id, CAST(sum(wt * wt) AS BIGINT) n2
-        |          FROM w2 GROUP BY 1),
-        |dots AS (
-        |  SELECT c.a, c.b, CAST(sum(wa.wt * wb.wt) AS BIGINT) dot
-        |  FROM knn_cand c
-        |  JOIN w2 wa ON wa.doc_id = c.a
-        |  JOIN w2 wb ON wb.doc_id = c.b AND wb.term = wa.term
-        |  GROUP BY 1, 2),
-        |scored AS (
-        |  SELECT d.a doc_id, d.b nbr_id,
-        |    CAST(round(1000000 * CAST(d.dot AS DOUBLE)
-        |      / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))))
-        |      AS BIGINT) cos_micro
-        |  FROM dots d
-        |  JOIN norms na ON na.doc_id = d.a
-        |  JOIN norms nb ON nb.doc_id = d.b),
+        |$duckTfidfKnnScored,
         |knn AS (
         |  SELECT doc_id, nbr_id, rnk FROM (
         |    SELECT doc_id, nbr_id,
@@ -2765,20 +2856,7 @@ object LlmQueries {
     // components. Completes the graph→clusters story over q_knn_graph.
     "q_knn_clusters" -> Q(
       s"""WITH RECURSIVE $duckShingles,
-        |$duckMinhashBands,
-        |knn_cand AS (
-        |  SELECT DISTINCT l.doc_id a, r.doc_id b
-        |  FROM mh_banded l JOIN mh_banded r
-        |    ON l.band = r.band AND l.bkey = r.bkey
-        |    AND l.doc_id <> r.doc_id),
-        |scored AS (
-        |  SELECT c.a doc_id, c.b nbr_id,
-        |    CAST(len(list_intersect(ba.sh, bb.sh)) AS INTEGER) inter,
-        |    CAST(len(ba.sh) + len(bb.sh)
-        |      - len(list_intersect(ba.sh, bb.sh)) AS INTEGER) uni
-        |  FROM knn_cand c
-        |  JOIN base ba ON ba.doc_id = c.a
-        |  JOIN base bb ON bb.doc_id = c.b),
+        |$duckKnnInterUni,
         |topk AS (
         |  SELECT doc_id, nbr_id FROM (
         |    SELECT doc_id, nbr_id, row_number() OVER (PARTITION BY doc_id
@@ -2789,13 +2867,7 @@ object LlmQueries {
         |  SELECT e.doc_id a, e.nbr_id b FROM topk e
         |  JOIN topk r ON r.doc_id = e.nbr_id AND r.nbr_id = e.doc_id
         |  WHERE e.doc_id < e.nbr_id),
-        |edges AS (
-        |  SELECT a src, b dst FROM mutual
-        |  UNION ALL SELECT b, a FROM mutual),
-        |cc AS (
-        |  SELECT DISTINCT src AS node, src AS rep FROM edges
-        |  UNION
-        |  SELECT e.dst, cc.rep FROM cc, edges e WHERE cc.node = e.src)
+        |${duckCc("mutual")}
         |SELECT node AS doc_id, CAST(min(rep) AS BIGINT) AS rep
         |FROM cc GROUP BY node""".stripMargin) { (s, dir) =>
       // edge set served from the shared kNN base (SharedBases.knnEdges)
@@ -2833,20 +2905,7 @@ object LlmQueries {
     // (Dedup.bucketCapAudit over the same documents banding).
     "q_single_linkage" -> Q(
       s"""WITH RECURSIVE $duckShingles,
-        |$duckMinhashBands,
-        |knn_cand AS (
-        |  SELECT DISTINCT l.doc_id a, r.doc_id b
-        |  FROM mh_banded l JOIN mh_banded r
-        |    ON l.band = r.band AND l.bkey = r.bkey
-        |    AND l.doc_id <> r.doc_id),
-        |scored AS (
-        |  SELECT c.a doc_id, c.b nbr_id,
-        |    CAST(len(list_intersect(ba.sh, bb.sh)) AS INTEGER) inter,
-        |    CAST(len(ba.sh) + len(bb.sh)
-        |      - len(list_intersect(ba.sh, bb.sh)) AS INTEGER) uni
-        |  FROM knn_cand c
-        |  JOIN base ba ON ba.doc_id = c.a
-        |  JOIN base bb ON bb.doc_id = c.b),
+        |$duckKnnInterUni,
         |topk AS (
         |  SELECT doc_id, nbr_id,
         |    (CAST(inter AS BIGINT) * 1000000) // uni jac FROM (
@@ -2922,7 +2981,7 @@ object LlmQueries {
     // four CTE rounds. Substrate: Dedup.candidatePairs — the banded
     // bucket self-join with the knnGraph hot-bucket cap, so the edge
     // set is Σ|bucket|·min(|bucket|, cap) at any corpus size.
-    // CAP ASSUMPTION (r14 ADVICE): the oracle's `cand` CTE mines the
+    // CAP ASSUMPTION: the oracle's `cand` CTE mines the
     // bucket self-join UNCAPPED — the two engines agree only while no
     // (band, bkey) bucket reaches candidatePairs' maxBucket = 4096.
     // That precondition is MEASURED, not assumed: BoundChecks promotes
@@ -3078,11 +3137,7 @@ object LlmQueries {
     "q_rrf_fusion" -> Q(
       s"""WITH $duckShingles,
         |$duckMinhashBands,
-        |knn_cand AS (
-        |  SELECT DISTINCT l.doc_id a, r.doc_id b
-        |  FROM mh_banded l JOIN mh_banded r
-        |    ON l.band = r.band AND l.bkey = r.bkey
-        |    AND l.doc_id <> r.doc_id),
+        |$duckKnnCand,
         |scored AS (
         |  SELECT c.a, c.b,
         |    CAST(len(list_intersect(ba.sh, bb.sh)) AS INTEGER) inter,
@@ -3209,13 +3264,7 @@ object LlmQueries {
     "q_dedup_impact" -> Q(
       s"""WITH RECURSIVE $duckShingles,
         |$duckMinhashPairs,
-        |edges AS (
-        |  SELECT a src, b dst FROM mh_pairs
-        |  UNION ALL SELECT b, a FROM mh_pairs),
-        |cc AS (
-        |  SELECT DISTINCT src AS node, src AS rep FROM edges
-        |  UNION
-        |  SELECT e.dst, cc.rep FROM cc, edges e WHERE cc.node = e.src),
+        |${duckCc("mh_pairs")},
         |drops AS (SELECT node FROM cc GROUP BY node
         |          HAVING node <> min(rep)),
         |t AS (SELECT source, doc_id,
@@ -3256,13 +3305,7 @@ object LlmQueries {
     // counts; the window runs over the (much smaller) distinct table and
     // the rank filter compiles to two-phase WindowGroupLimit.
     "q_ngram_lm" -> Q(
-      """WITH toks AS (
-        |  SELECT string_split_regex(lower(trim(text)), '\s+') t
-        |  FROM documents),
-        |big AS (
-        |  SELECT unnest(list_transform(generate_series(1, len(t) - 1),
-        |    i -> t[i] || ' ' || t[i+1])) bigram
-        |  FROM toks WHERE len(t) >= 2),
+      s"""WITH $duckBigramOccs,
         |c AS (SELECT bigram, CAST(count(*) AS BIGINT) cnt
         |      FROM big GROUP BY 1),
         |h AS (SELECT bigram, cnt, split_part(bigram, ' ', 1) head,
@@ -3313,13 +3356,7 @@ object LlmQueries {
     // BIGINT-safe while 1e6·4·c·B < 2⁶³ (c·B ≲ 2.3e12; beyond:
     // DECIMAL(38), the X51 pattern).
     "q_kneser_ney" -> Q(
-      """WITH toks AS (
-        |  SELECT string_split_regex(lower(trim(text)), '\s+') t
-        |  FROM documents),
-        |big AS (
-        |  SELECT unnest(list_transform(generate_series(1, len(t) - 1),
-        |    i -> t[i] || ' ' || t[i+1])) bigram
-        |  FROM toks WHERE len(t) >= 2),
+      s"""WITH $duckBigramOccs,
         |c AS (SELECT bigram, split_part(bigram, ' ', 1) head,
         |    split_part(bigram, ' ', 2) tail,
         |    CAST(count(*) AS BIGINT) cnt
@@ -3403,16 +3440,7 @@ object LlmQueries {
     // The xxhash64 production variant (simhashBits) stays spec-covered in
     // SimHashSpec.
     "q_simhash" -> Q(
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) t
-        |  FROM documents),
-        |h AS (SELECT doc_id, ('0x' || substr(sha256(t), 1, 15))::UBIGINT h
-        |      FROM tok),
-        |votes AS (
-        |  SELECT doc_id, j,
-        |    sum(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) v
-        |  FROM h, (SELECT unnest(generate_series(0, 59)) j) js
-        |  GROUP BY 1, 2)
+      s"""WITH $duckSimHashVotes
         |SELECT doc_id,
         |  CAST(sum(CASE WHEN v > 0 THEN (1::UBIGINT << j)
         |    ELSE 0::UBIGINT END) AS BIGINT) AS simhash
@@ -3427,16 +3455,7 @@ object LlmQueries {
     // bit_count(a^b) verify in-bucket. The banded plan provably equals the
     // all-pairs scan the oracle runs — LSH completeness, checked by hash.
     "q_simhash_dedup" -> Q(
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) t
-        |  FROM documents),
-        |h AS (SELECT doc_id, ('0x' || substr(sha256(t), 1, 15))::UBIGINT h
-        |      FROM tok),
-        |votes AS (
-        |  SELECT doc_id, j,
-        |    sum(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) v
-        |  FROM h, (SELECT unnest(generate_series(0, 59)) j) js
-        |  GROUP BY 1, 2),
+      s"""WITH $duckSimHashVotes,
         |sim AS (
         |  SELECT doc_id, sum(CASE WHEN v > 0 THEN (1::UBIGINT << j)
         |    ELSE 0::UBIGINT END) AS sh
@@ -3614,7 +3633,7 @@ object LlmQueries {
         e.select(e("vec_id"), e("embedding").cast("array<double>")))
     },
 
-    // L109 — per-dimension embedding profile (r16): the vector-column
+    // L109 — per-dimension embedding profile: the vector-column
     // health check a pipeline runs before building any index — dead
     // dims (sum ≡ sumsq ≡ 0), dominant dims, per-dim drift vs a prior
     // snapshot. X33's generic profiler treats columns; this treats the
@@ -3654,7 +3673,7 @@ object LlmQueries {
           expr("sum_micro div n_vecs").as("mean_micro"))
     },
 
-    // L30e — int8 reconstruction-error audit (r16): the quantizer's
+    // L30e — int8 reconstruction-error audit: the quantizer's
     // "one step per element" error bound, certified per vector instead
     // of asserted in scaladoc. Integer micro-units end to end (floor /
     // truncating div, identical in both engines); a bound violation
@@ -3696,28 +3715,8 @@ object LlmQueries {
     // — the reproducibility property float cosine can't give — and
     // therefore oracle-checkable end to end, unlike float ANN.
     "q_similarity_int8" -> Q(
-      """WITH c AS (
-        |  SELECT vec_id id,
-        |    CASE WHEN mx = 0 THEN list_transform(v, x -> CAST(0 AS BIGINT))
-        |      ELSE list_transform(v,
-        |        x -> CAST(greatest(-127, floor(x * 127 / mx)) AS BIGINT))
-        |      END codes,
-        |    CAST(floor(mx * 1000000) AS BIGINT) mxm
-        |  FROM (SELECT vec_id, embedding::DOUBLE[] v,
-        |          list_aggregate(list_transform(embedding::DOUBLE[],
-        |            x -> abs(x)), 'max') mx
-        |        FROM embeddings)),
-        |q AS (SELECT id qid, codes qc, mxm qm FROM c WHERE id < 10),
-        |s AS (SELECT q.qid, c.id,
-        |        CAST(list_sum(list_transform(
-        |          generate_series(1, len(c.codes)),
-        |          i -> c.codes[i] * q.qc[i])) AS BIGINT) * q.qm * c.mxm
-        |          AS score
-        |      FROM c, q WHERE c.id <> q.qid),
-        |r AS (SELECT qid, id, score, row_number() OVER (
-        |        PARTITION BY qid ORDER BY score DESC, id) rnk FROM s)
-        |SELECT qid, id, CAST(rnk AS INTEGER) AS rnk, score
-        |FROM r WHERE rnk <= 5""".stripMargin) { (s, dir) =>
+      s"""WITH $duckInt8C,
+        |$duckInt8Top5""".stripMargin) { (s, dir) =>
       val e = table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>"))
       Similarity.int8TopK(e, e.filter(col("vec_id") < 10), 5)
@@ -3730,22 +3729,7 @@ object LlmQueries {
     // the same 32-bit words (1 << (i-1), no sign-bit contact) and xors
     // them with bit_count.
     "q_similarity_hamming" -> Q(
-      """WITH e AS (SELECT vec_id id, embedding::DOUBLE[] v
-        |           FROM embeddings),
-        |b AS (SELECT id, list_transform(generate_series(0, 1), w ->
-        |        CAST(list_sum(list_transform(generate_series(1, 32),
-        |          i -> CASE WHEN v[32*w+i] > 0
-        |               THEN (1::BIGINT << (i-1)) ELSE 0 END)) AS BIGINT))
-        |        AS wv
-        |      FROM e),
-        |q AS (SELECT id qid, wv qw FROM b WHERE id < 10),
-        |s AS (SELECT q.qid, b.id,
-        |        CAST(list_sum(list_transform(generate_series(1, 2),
-        |          j -> bit_count(xor(b.wv[j], q.qw[j])))) AS BIGINT)
-        |          AS dist
-        |      FROM b, q WHERE b.id <> q.qid),
-        |r AS (SELECT qid, id, dist, row_number() OVER (
-        |        PARTITION BY qid ORDER BY dist, id) rnk FROM s)
+      s"""WITH $duckHammingRanked
         |SELECT qid, id, CAST(rnk AS INTEGER) AS rnk, dist
         |FROM r WHERE rnk <= 5""".stripMargin) { (s, dir) =>
       val e = table(s, dir, "embeddings")
@@ -3760,22 +3744,7 @@ object LlmQueries {
     // scores — the oracle replays bit-for-bit (the LSH/IVF production
     // entries certify only their exact twins).
     "q_similarity_hamming_rerank" -> Q(
-      """WITH e AS (SELECT vec_id id, embedding::DOUBLE[] v
-        |           FROM embeddings),
-        |b AS (SELECT id, list_transform(generate_series(0, 1), w ->
-        |        CAST(list_sum(list_transform(generate_series(1, 32),
-        |          i -> CASE WHEN v[32*w+i] > 0
-        |               THEN (1::BIGINT << (i-1)) ELSE 0 END)) AS BIGINT))
-        |        AS wv
-        |      FROM e),
-        |q AS (SELECT id qid, wv qw FROM b WHERE id < 10),
-        |s AS (SELECT q.qid, b.id,
-        |        CAST(list_sum(list_transform(generate_series(1, 2),
-        |          j -> bit_count(xor(b.wv[j], q.qw[j])))) AS BIGINT)
-        |          AS dist
-        |      FROM b, q WHERE b.id <> q.qid),
-        |r AS (SELECT qid, id, dist, row_number() OVER (
-        |        PARTITION BY qid ORDER BY dist, id) rnk FROM s),
+      s"""WITH $duckHammingRanked,
         |m AS (SELECT id, list_transform(v,
         |        x -> CAST(round(x * 1000000) AS BIGINT)) mv FROM e),
         |s2 AS (SELECT r.qid, r.id, r.dist,
@@ -3801,28 +3770,10 @@ object LlmQueries {
     // exact-integer discipline, so the DuckDB oracle replays the
     // ranking bit-for-bit.
     "q_similarity_prefix" -> Q(
-      """WITH e AS (SELECT vec_id id, (embedding::DOUBLE[])[1:16] v
+      s"""WITH e AS (SELECT vec_id id, (embedding::DOUBLE[])[1:16] v
         |           FROM embeddings),
-        |c AS (
-        |  SELECT id,
-        |    CASE WHEN mx = 0 THEN list_transform(v, x -> CAST(0 AS BIGINT))
-        |      ELSE list_transform(v,
-        |        x -> CAST(greatest(-127, floor(x * 127 / mx)) AS BIGINT))
-        |      END codes,
-        |    CAST(floor(mx * 1000000) AS BIGINT) mxm
-        |  FROM (SELECT id, v, list_aggregate(list_transform(v,
-        |          x -> abs(x)), 'max') mx FROM e)),
-        |q AS (SELECT id qid, codes qc, mxm qm FROM c WHERE id < 10),
-        |s AS (SELECT q.qid, c.id,
-        |        CAST(list_sum(list_transform(
-        |          generate_series(1, len(c.codes)),
-        |          i -> c.codes[i] * q.qc[i])) AS BIGINT) * q.qm * c.mxm
-        |          AS score
-        |      FROM c, q WHERE c.id <> q.qid),
-        |r AS (SELECT qid, id, score, row_number() OVER (
-        |        PARTITION BY qid ORDER BY score DESC, id) rnk FROM s)
-        |SELECT qid, id, CAST(rnk AS INTEGER) AS rnk, score
-        |FROM r WHERE rnk <= 5""".stripMargin) { (s, dir) =>
+        |$duckInt8COverE,
+        |$duckInt8Top5""".stripMargin) { (s, dir) =>
       val e = table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>"))
       Similarity.prefixTopK(e, e.filter(col("vec_id") < 10), 5, dims = 16)
@@ -3835,18 +3786,10 @@ object LlmQueries {
     // the 4x-smaller prefix index streams, full-width codes serve only
     // |queries|x20 point lookups.
     "q_similarity_prefix_rerank" -> Q(
-      """WITH ef AS (SELECT vec_id id, embedding::DOUBLE[] vf
+      s"""WITH ef AS (SELECT vec_id id, embedding::DOUBLE[] vf
         |            FROM embeddings),
         |e AS (SELECT id, vf[1:16] v FROM ef),
-        |c AS (
-        |  SELECT id,
-        |    CASE WHEN mx = 0 THEN list_transform(v, x -> CAST(0 AS BIGINT))
-        |      ELSE list_transform(v,
-        |        x -> CAST(greatest(-127, floor(x * 127 / mx)) AS BIGINT))
-        |      END codes,
-        |    CAST(floor(mx * 1000000) AS BIGINT) mxm
-        |  FROM (SELECT id, v, list_aggregate(list_transform(v,
-        |          x -> abs(x)), 'max') mx FROM e)),
+        |$duckInt8COverE,
         |cf AS (
         |  SELECT id,
         |    CASE WHEN mx = 0 THEN list_transform(vf, x -> CAST(0 AS BIGINT))
@@ -3856,13 +3799,7 @@ object LlmQueries {
         |    CAST(floor(mx * 1000000) AS BIGINT) mxm
         |  FROM (SELECT id, vf, list_aggregate(list_transform(vf,
         |          x -> abs(x)), 'max') mx FROM ef)),
-        |q AS (SELECT id qid, codes qc, mxm qm FROM c WHERE id < 10),
-        |s AS (SELECT q.qid, c.id,
-        |        CAST(list_sum(list_transform(
-        |          generate_series(1, len(c.codes)),
-        |          i -> c.codes[i] * q.qc[i])) AS BIGINT) * q.qm * c.mxm
-        |          AS score
-        |      FROM c, q WHERE c.id <> q.qid),
+        |$duckInt8Scores,
         |short AS (SELECT qid, id FROM (
         |    SELECT qid, id, row_number() OVER (
         |      PARTITION BY qid ORDER BY score DESC, id) rnk FROM s)
@@ -4019,33 +3956,12 @@ object LlmQueries {
     // not just a recall bound (q_similarity_int8 proved flat scoring;
     // q_similarity_ivf stays the float/Lloyd production variant).
     "q_similarity_ivf_exact" -> Q(
-      """WITH c AS (
-        |  SELECT vec_id id,
-        |    CASE WHEN mx = 0 THEN list_transform(v, x -> CAST(0 AS BIGINT))
-        |      ELSE list_transform(v,
-        |        x -> CAST(greatest(-127, floor(x * 127 / mx)) AS BIGINT))
-        |      END codes,
-        |    CAST(floor(mx * 1000000) AS BIGINT) mxm
-        |  FROM (SELECT vec_id, embedding::DOUBLE[] v,
-        |          list_aggregate(list_transform(embedding::DOUBLE[],
-        |            x -> abs(x)), 'max') mx
-        |        FROM embeddings)),
-        |cents AS (
-        |  SELECT row_number() OVER (ORDER BY sha256(CAST(id AS VARCHAR)))
-        |      AS cid, codes cc,
-        |    greatest(CAST(list_sum(list_transform(
-        |      generate_series(1, len(codes)),
-        |      i -> codes[i] * codes[i])) AS BIGINT), 1) cn2
-        |  FROM c ORDER BY sha256(CAST(id AS VARCHAR)) LIMIT 16),
+      s"""WITH $duckInt8C,
+        |$duckIvfCents,
         |ass AS (
         |  SELECT cid, id, codes, mxm FROM (
         |    SELECT n.cid, c.id, c.codes, c.mxm, row_number() OVER (
-        |        PARTITION BY c.id ORDER BY
-        |          CAST(d * abs(d) AS DOUBLE) / n.cn2 DESC, n.cid) rr
-        |    FROM c, cents n, LATERAL (SELECT CAST(list_sum(list_transform(
-        |      generate_series(1, len(c.codes)),
-        |      i -> c.codes[i] * n.cc[i])) AS BIGINT) AS d) dd)
-        |  WHERE rr = 1),
+        |$duckIvfNearest,
         |q AS (SELECT id qid, codes qc, mxm qm FROM c WHERE id < 10),
         |probes AS (
         |  SELECT cid, qid, qc, qm FROM (
@@ -4063,10 +3979,7 @@ object LlmQueries {
         |          AS score
         |      FROM ass a JOIN probes p ON a.cid = p.cid
         |      WHERE a.id <> p.qid),
-        |r AS (SELECT qid, id, score, row_number() OVER (
-        |        PARTITION BY qid ORDER BY score DESC, id) rnk FROM s)
-        |SELECT qid, id, CAST(rnk AS INTEGER) AS rnk, score
-        |FROM r WHERE rnk <= 5""".stripMargin) { (s, dir) =>
+        |$duckTop5""".stripMargin) { (s, dir) =>
       val e = table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>"))
       Ivf.int8TopKExact(e, e.filter(col("vec_id") < 10), k = 5,
@@ -4086,32 +3999,15 @@ object LlmQueries {
     // accumulated corpus: the hash certifies that arrival order and
     // batch composition cannot move any vector's cell.
     "q_stream_ivf_assign" -> Q(
-      """WITH c AS (
+      s"""WITH c AS (
         |  SELECT vec_id id,
-        |    CASE WHEN mx = 0 THEN list_transform(v, x -> CAST(0 AS BIGINT))
-        |      ELSE list_transform(v,
-        |        x -> CAST(greatest(-127, floor(x * 127 / mx)) AS BIGINT))
-        |      END codes
-        |  FROM (SELECT vec_id, embedding::DOUBLE[] v,
-        |          list_aggregate(list_transform(embedding::DOUBLE[],
-        |            x -> abs(x)), 'max') mx
-        |        FROM embeddings)),
-        |cents AS (
-        |  SELECT row_number() OVER (ORDER BY sha256(CAST(id AS VARCHAR)))
-        |      AS cid, codes cc,
-        |    greatest(CAST(list_sum(list_transform(
-        |      generate_series(1, len(codes)),
-        |      i -> codes[i] * codes[i])) AS BIGINT), 1) cn2
-        |  FROM c ORDER BY sha256(CAST(id AS VARCHAR)) LIMIT 16),
+        |$duckInt8Codes
+        |$duckEmbedMaxAbs),
+        |$duckIvfCents,
         |ass AS (
         |  SELECT id, cid FROM (
         |    SELECT n.cid, c.id, row_number() OVER (
-        |        PARTITION BY c.id ORDER BY
-        |          CAST(d * abs(d) AS DOUBLE) / n.cn2 DESC, n.cid) rr
-        |    FROM c, cents n, LATERAL (SELECT CAST(list_sum(list_transform(
-        |      generate_series(1, len(c.codes)),
-        |      i -> c.codes[i] * n.cc[i])) AS BIGINT) AS d) dd)
-        |  WHERE rr = 1)
+        |$duckIvfNearest
         |SELECT id AS vec_id, CAST(cid AS BIGINT) AS cid
         |FROM ass""".stripMargin) { (s, dir) =>
       graft.streaming.StreamingPipeline.streamIvfAssign(s, dir)
@@ -4125,17 +4021,7 @@ object LlmQueries {
     // match certifies the LSH candidate enumeration itself (bucket
     // assignment + probe set + collision join), not just the rescoring.
     "q_similarity_ann_exact" -> Q(
-      """WITH c AS (
-        |  SELECT vec_id id,
-        |    CASE WHEN mx = 0 THEN list_transform(v, x -> CAST(0 AS BIGINT))
-        |      ELSE list_transform(v,
-        |        x -> CAST(greatest(-127, floor(x * 127 / mx)) AS BIGINT))
-        |      END codes,
-        |    CAST(floor(mx * 1000000) AS BIGINT) mxm
-        |  FROM (SELECT vec_id, embedding::DOUBLE[] v,
-        |          list_aggregate(list_transform(embedding::DOUBLE[],
-        |            x -> abs(x)), 'max') mx
-        |        FROM embeddings)),
+      s"""WITH $duckInt8C,
         |pl AS (
         |  SELECT p, list_transform(generate_series(0, 63),
         |    i -> ((1103515245 * (p * 64 + i) + 12345 + 42)
@@ -4163,10 +4049,7 @@ object LlmQueries {
         |      AS score
         |  FROM buck b JOIN probes p ON b.bucket = p.probe
         |  WHERE b.id <> p.qid),
-        |r AS (SELECT qid, id, score, row_number() OVER (
-        |        PARTITION BY qid ORDER BY score DESC, id) rnk FROM s)
-        |SELECT qid, id, CAST(rnk AS INTEGER) AS rnk, score
-        |FROM r WHERE rnk <= 5""".stripMargin) { (s, dir) =>
+        |$duckTop5""".stripMargin) { (s, dir) =>
       val e = table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>"))
       Similarity.annTopKExactInt(e, e.filter(col("vec_id") < 10), k = 5,
@@ -4179,47 +4062,13 @@ object LlmQueries {
     // deterministic ties. The oracle enumerates the same buckets of
     // both tables — the graph construction itself is hash-certified.
     "q_knn_graph_embed" -> Q(
-      """WITH c AS (
-        |  SELECT vec_id id,
-        |    CASE WHEN mx = 0 THEN list_transform(v, x -> CAST(0 AS BIGINT))
-        |      ELSE list_transform(v,
-        |        x -> CAST(greatest(-127, floor(x * 127 / mx)) AS BIGINT))
-        |      END codes,
-        |    CAST(floor(mx * 1000000) AS BIGINT) mxm
-        |  FROM (SELECT vec_id, embedding::DOUBLE[] v,
-        |          list_aggregate(list_transform(embedding::DOUBLE[],
-        |            x -> abs(x)), 'max') mx
-        |        FROM embeddings)),
+      s"""WITH $duckInt8C,
         |pl AS (
         |  SELECT tt, p, list_transform(generate_series(0, 63),
         |    i -> ((1103515245 * (p * 64 + i) + 12345 + 42 + tt * 7919)
         |          % 2147483648) % 17 - 8) w
         |  FROM generate_series(0, 7) t1(p), generate_series(0, 1) t2(tt)),
-        |buck AS (
-        |  SELECT id, tt,
-        |    CAST(sum(CASE WHEN d >= 0 THEN 1 << p ELSE 0 END) AS BIGINT)
-        |      AS bucket
-        |  FROM (SELECT c.id, pl.tt, pl.p,
-        |          CAST(list_sum(list_transform(generate_series(1, 64),
-        |            i -> c.codes[i] * pl.w[i])) AS BIGINT) d
-        |        FROM c, pl)
-        |  GROUP BY id, tt),
-        |cand AS (
-        |  SELECT DISTINCT l.id a, r.id b
-        |  FROM buck l JOIN buck r
-        |    ON l.tt = r.tt AND l.bucket = r.bucket AND l.id <> r.id),
-        |s AS (
-        |  SELECT cand.a id, cand.b nbr_id,
-        |    CAST(list_sum(list_transform(
-        |      generate_series(1, len(ca.codes)),
-        |      i -> ca.codes[i] * cb.codes[i])) AS BIGINT)
-        |      * ca.mxm * cb.mxm AS score
-        |  FROM cand JOIN c ca ON ca.id = cand.a
-        |    JOIN c cb ON cb.id = cand.b),
-        |r AS (SELECT id, nbr_id, score, row_number() OVER (
-        |        PARTITION BY id ORDER BY score DESC, nbr_id) rnk FROM s)
-        |SELECT id, nbr_id, CAST(rnk AS INTEGER) AS rnk, score
-        |FROM r WHERE rnk <= 5""".stripMargin) { (s, dir) =>
+        |$duckSimHashKnn""".stripMargin) { (s, dir) =>
       val e = table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>"))
       Similarity.knnGraphExactInt(e, k = 5, dim = 64, planes = 8,
@@ -4234,17 +4083,7 @@ object LlmQueries {
     // count, so the per-table parameterization itself is
     // hash-certified.
     "q_knn_graph_mixed" -> Q(
-      """WITH c AS (
-        |  SELECT vec_id id,
-        |    CASE WHEN mx = 0 THEN list_transform(v, x -> CAST(0 AS BIGINT))
-        |      ELSE list_transform(v,
-        |        x -> CAST(greatest(-127, floor(x * 127 / mx)) AS BIGINT))
-        |      END codes,
-        |    CAST(floor(mx * 1000000) AS BIGINT) mxm
-        |  FROM (SELECT vec_id, embedding::DOUBLE[] v,
-        |          list_aggregate(list_transform(embedding::DOUBLE[],
-        |            x -> abs(x)), 'max') mx
-        |        FROM embeddings)),
+      s"""WITH $duckInt8C,
         |cfg(tt, np) AS (VALUES (0, 4), (1, 8)),
         |pl AS (
         |  SELECT cfg.tt, p, list_transform(generate_series(0, 63),
@@ -4252,31 +4091,7 @@ object LlmQueries {
         |          % 2147483648) % 17 - 8) w
         |  FROM cfg, generate_series(0, 7) t1(p)
         |  WHERE p < cfg.np),
-        |buck AS (
-        |  SELECT id, tt,
-        |    CAST(sum(CASE WHEN d >= 0 THEN 1 << p ELSE 0 END) AS BIGINT)
-        |      AS bucket
-        |  FROM (SELECT c.id, pl.tt, pl.p,
-        |          CAST(list_sum(list_transform(generate_series(1, 64),
-        |            i -> c.codes[i] * pl.w[i])) AS BIGINT) d
-        |        FROM c, pl)
-        |  GROUP BY id, tt),
-        |cand AS (
-        |  SELECT DISTINCT l.id a, r.id b
-        |  FROM buck l JOIN buck r
-        |    ON l.tt = r.tt AND l.bucket = r.bucket AND l.id <> r.id),
-        |s AS (
-        |  SELECT cand.a id, cand.b nbr_id,
-        |    CAST(list_sum(list_transform(
-        |      generate_series(1, len(ca.codes)),
-        |      i -> ca.codes[i] * cb.codes[i])) AS BIGINT)
-        |      * ca.mxm * cb.mxm AS score
-        |  FROM cand JOIN c ca ON ca.id = cand.a
-        |    JOIN c cb ON cb.id = cand.b),
-        |r AS (SELECT id, nbr_id, score, row_number() OVER (
-        |        PARTITION BY id ORDER BY score DESC, nbr_id) rnk FROM s)
-        |SELECT id, nbr_id, CAST(rnk AS INTEGER) AS rnk, score
-        |FROM r WHERE rnk <= 5""".stripMargin) { (s, dir) =>
+        |$duckSimHashKnn""".stripMargin) { (s, dir) =>
       val e = table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>"))
       Similarity.knnGraphExactInt(e, k = 5, dim = 64,
@@ -4292,28 +4107,8 @@ object LlmQueries {
     // rescore + tie order. The small-shortlist approximate path stays
     // covered by q_pq_search's recall spec.
     "q_pq_refine" -> Q(
-      """WITH c AS (
-        |  SELECT vec_id id,
-        |    CASE WHEN mx = 0 THEN list_transform(v, x -> CAST(0 AS BIGINT))
-        |      ELSE list_transform(v,
-        |        x -> CAST(greatest(-127, floor(x * 127 / mx)) AS BIGINT))
-        |      END codes,
-        |    CAST(floor(mx * 1000000) AS BIGINT) mxm
-        |  FROM (SELECT vec_id, embedding::DOUBLE[] v,
-        |          list_aggregate(list_transform(embedding::DOUBLE[],
-        |            x -> abs(x)), 'max') mx
-        |        FROM embeddings)),
-        |q AS (SELECT id qid, codes qc, mxm qm FROM c WHERE id < 10),
-        |s AS (SELECT q.qid, c.id,
-        |        CAST(list_sum(list_transform(
-        |          generate_series(1, len(c.codes)),
-        |          i -> c.codes[i] * q.qc[i])) AS BIGINT) * q.qm * c.mxm
-        |          AS score
-        |      FROM c, q WHERE c.id <> q.qid),
-        |r AS (SELECT qid, id, score, row_number() OVER (
-        |        PARTITION BY qid ORDER BY score DESC, id) rnk FROM s)
-        |SELECT qid, id, CAST(rnk AS INTEGER) AS rnk, score
-        |FROM r WHERE rnk <= 5""".stripMargin) { (s, dir) =>
+      s"""WITH $duckInt8C,
+        |$duckInt8Top5""".stripMargin) { (s, dir) =>
       val e = table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val vecs = e.toDF("id", "vec")
@@ -4545,7 +4340,7 @@ object LlmQueries {
     // certifies stage BOUNDARIES too (what dedup feeds selection, what
     // selection feeds the report), not just each operator alone.
     "q_data_recipe" -> Q(
-      """WITH norm AS (
+      s"""WITH norm AS (
         |  SELECT doc_id, lang, lower(trim(text)) AS q
         |  FROM documents WHERE length(trim(text)) >= 2),
         |dedup AS (
@@ -4553,27 +4348,7 @@ object LlmQueries {
         |    SELECT doc_id, lang, q, row_number() OVER (
         |      PARTITION BY sha256(q) ORDER BY doc_id) AS rn
         |    FROM norm) WHERE rn = 1),
-        |tok AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(string_split_regex(q, '\s+')) AS BIGINT) AS n_tok,
-        |    CAST(len(list_distinct(string_split_regex(q, '\s+')))
-        |      AS BIGINT) AS n_vocab
-        |  FROM dedup),
-        |qual AS (
-        |  SELECT doc_id, lang, n_tok,
-        |    (n_vocab * 1000000) // n_tok AS density_ppm
-        |  FROM tok WHERE n_tok >= 3),
-        |sel AS (
-        |  SELECT lang, n_tok, density_ppm,
-        |    CAST(sum(n_tok) OVER (ORDER BY density_ppm DESC, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS tok_cum
-        |  FROM qual)
-        |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-        |  CAST(min(density_ppm) AS BIGINT) AS min_density_ppm
-        |FROM sel WHERE tok_cum - n_tok < 5000
-        |GROUP BY lang""".stripMargin) { (s, dir) =>
+        |${duckRecipeMix("tok", "dedup")}""".stripMargin) { (s, dir) =>
       val d = table(s, dir, "documents")
       val norm = d.filter(length(trim(d("text"))) >= 2)
         .select(d("doc_id"), d("lang"),
@@ -4623,18 +4398,8 @@ object LlmQueries {
         |  SELECT l.doc_id a, r.doc_id b, CAST(count(*) AS INTEGER) inter
         |  FROM tok_sh l JOIN tok_sh r ON l.g = r.g AND l.doc_id < r.doc_id
         |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT i.a, i.b FROM inter i
-        |  JOIN sizes sa ON sa.doc_id = i.a
-        |  JOIN sizes sb ON sb.doc_id = i.b
-        |  WHERE i.inter * 10 >= (sa.n_ + sb.n_ - i.inter) * 8),
-        |edges AS (
-        |  SELECT a src, b dst FROM pairs
-        |  UNION ALL SELECT b, a FROM pairs),
-        |cc AS (
-        |  SELECT DISTINCT src AS node, src AS rep FROM edges
-        |  UNION
-        |  SELECT e.dst, cc.rep FROM cc, edges e WHERE cc.node = e.src),
+        |$duckJaccardPairs,
+        |${duckCc("pairs")},
         |reps AS (SELECT node AS doc_id, min(rep) AS rep FROM cc
         |         GROUP BY node),
         |surv AS (
@@ -4642,27 +4407,7 @@ object LlmQueries {
         |  FROM documents d
         |  LEFT JOIN reps r ON d.doc_id = r.doc_id
         |  WHERE r.rep IS NULL OR r.rep = d.doc_id),
-        |tokc AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(string_split_regex(q, '\\s+')) AS BIGINT) AS n_tok,
-        |    CAST(len(list_distinct(string_split_regex(q, '\\s+')))
-        |      AS BIGINT) AS n_vocab
-        |  FROM surv),
-        |qual AS (
-        |  SELECT doc_id, lang, n_tok,
-        |    (n_vocab * 1000000) // n_tok AS density_ppm
-        |  FROM tokc WHERE n_tok >= 3),
-        |sel AS (
-        |  SELECT lang, n_tok, density_ppm,
-        |    CAST(sum(n_tok) OVER (ORDER BY density_ppm DESC, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS tok_cum
-        |  FROM qual)
-        |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-        |  CAST(min(density_ppm) AS BIGINT) AS min_density_ppm
-        |FROM sel WHERE tok_cum - n_tok < 5000
-        |GROUP BY lang""".stripMargin) { (s, dir) =>
+        |${duckRecipeMix("tokc", "surv")}""".stripMargin) { (s, dir) =>
       val d = table(s, dir, "documents")
       val pairs = SharedBases.jaccardPairs(s, dir)
       val reps = Dedup.connectedComponents(pairs)
@@ -4702,42 +4447,20 @@ object LlmQueries {
     // exactly like a greedy BPE pass in BOTH engines (see ops/llm/Bpe).
     // The oracle unrolls the three (pair-count → argmax → replace)
     // iterations as CTEs; argmax tie-break is (count desc, pair asc).
-    "q_bpe_train" -> Q(
-      raw"""WITH $duckBpeBase,
-        |${bpeIterSql(1)},
-        |${bpeIterSql(2)},
-        |${bpeIterSql(3)}
-        |SELECT * FROM (
-        |  SELECT CAST(1 AS INTEGER) AS it, pr AS pair,
-        |    CAST(cnt AS BIGINT) AS cnt FROM b1
-        |  UNION ALL SELECT CAST(2 AS INTEGER), pr, CAST(cnt AS BIGINT)
-        |    FROM b2
-        |  UNION ALL SELECT CAST(3 AS INTEGER), pr, CAST(cnt AS BIGINT)
-        |    FROM b3)""".stripMargin) { (s, dir) =>
+    "q_bpe_train" -> Q(duckBpeTrain) { (s, dir) =>
       import s.implicits._
       Bpe.train(table(s, dir, "documents"), "text", 3)
         .toDF("it", "pair", "cnt")
     },
 
-    // L56c — the SCALE form of the BPE trainer (r13 verdict #7): the
+    // L56c — the SCALE form of the BPE trainer: the
     // per-iteration argmax stays a 1-row DataFrame broadcast-joined into
     // the word state instead of a driver collect, so the k-merge chain is
     // ONE lazy plan and one action — no per-merge driver round-trips (the
     // train() loop's declared 30k-merge boundary). Same unrolled-CTE
     // oracle as q_bpe_train: the hash certifies the two trainers
     // equivalent.
-    "q_bpe_train_chained" -> Q(
-      raw"""WITH $duckBpeBase,
-        |${bpeIterSql(1)},
-        |${bpeIterSql(2)},
-        |${bpeIterSql(3)}
-        |SELECT * FROM (
-        |  SELECT CAST(1 AS INTEGER) AS it, pr AS pair,
-        |    CAST(cnt AS BIGINT) AS cnt FROM b1
-        |  UNION ALL SELECT CAST(2 AS INTEGER), pr, CAST(cnt AS BIGINT)
-        |    FROM b2
-        |  UNION ALL SELECT CAST(3 AS INTEGER), pr, CAST(cnt AS BIGINT)
-        |    FROM b3)""".stripMargin) { (s, dir) =>
+    "q_bpe_train_chained" -> Q(duckBpeTrain) { (s, dir) =>
       Bpe.trainChained(table(s, dir, "documents"), "text", 3)
     },
 
@@ -4748,10 +4471,7 @@ object LlmQueries {
     // limit-then-number cut. Certifies the trained merge table actually
     // produces the merged vocabulary both engines agree on.
     "q_bpe_apply" -> Q(
-      raw"""WITH $duckBpeBase,
-        |${bpeIterSql(1)},
-        |${bpeIterSql(2)},
-        |${bpeIterSql(3)},
+      raw"""WITH $duckBpe3,
         |ap AS (SELECT unnest(string_split_regex(trim(s), '\s+')) AS token,
         |         c FROM s3),
         |tc AS (SELECT token, sum(c) AS cnt FROM ap GROUP BY 1)
@@ -4782,40 +4502,7 @@ object LlmQueries {
     // frequency table.
     "q_wordpiece_apply" -> Q(
       raw"""WITH RECURSIVE
-        |w AS (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS freq FROM (
-        |    SELECT unnest(string_split_regex(lower(trim(text)), '\s+'))
-        |      AS word FROM documents) t
-        |  WHERE word <> '' GROUP BY 1),
-        |chars AS (
-        |  SELECT DISTINCT substr(word, i, 1) AS piece FROM w,
-        |  LATERAL (SELECT unnest(generate_series(1, length(word))) AS i) g),
-        |subs AS (
-        |  SELECT substr(word, i, l) AS piece, sum(freq) AS wt
-        |  FROM w,
-        |  LATERAL (SELECT unnest(generate_series(2, 4)) AS l) ls,
-        |  LATERAL (SELECT unnest(generate_series(1, length(word) - l + 1))
-        |    AS i) g
-        |  GROUP BY 1),
-        |topp AS (SELECT piece FROM subs ORDER BY wt DESC, piece LIMIT 200),
-        |vocab AS (SELECT piece FROM chars UNION SELECT piece FROM topp),
-        |matches AS (
-        |  SELECT word, pos, max(length(piece)) AS bestlen FROM (
-        |    SELECT w.word, g.i AS pos, v.piece
-        |    FROM w,
-        |    LATERAL (SELECT unnest(generate_series(1, length(w.word)))
-        |      AS i) g, vocab v
-        |    WHERE substr(w.word, g.i, length(v.piece)) = v.piece)
-        |  GROUP BY 1, 2),
-        |rec AS (
-        |  SELECT word, CAST(1 AS BIGINT) AS pos,
-        |    CAST(NULL AS VARCHAR) AS piece
-        |  FROM w
-        |  UNION ALL
-        |  SELECT r.word, r.pos + m.bestlen,
-        |    substr(r.word, CAST(r.pos AS INTEGER), CAST(m.bestlen AS INTEGER))
-        |  FROM rec r JOIN matches m ON m.word = r.word AND m.pos = r.pos),
-        |toks AS (SELECT word, piece FROM rec WHERE piece IS NOT NULL)
+        |$duckWordPieceToks
         |SELECT t.piece, CAST(sum(w.freq) AS BIGINT) AS occurrences
         |FROM toks t JOIN w ON t.word = w.word GROUP BY 1""".stripMargin) {
       (s, dir) =>
@@ -4835,50 +4522,8 @@ object LlmQueries {
     // bounded by the distinct-word table.
     "q_unigram_viterbi" -> Q(
       raw"""WITH RECURSIVE
-        |w AS (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS freq FROM (
-        |    SELECT unnest(string_split_regex(lower(trim(text)), '\s+'))
-        |      AS word FROM documents) t
-        |  WHERE word <> '' GROUP BY 1),
-        |cand AS (
-        |  SELECT substr(word, i, l) AS piece, sum(freq) AS wt
-        |  FROM w,
-        |  LATERAL (SELECT unnest(generate_series(1, 4)) AS l) ls,
-        |  LATERAL (SELECT unnest(generate_series(1, length(word) - l + 1))
-        |    AS i) g
-        |  GROUP BY 1),
-        |keep AS (
-        |  SELECT piece, wt FROM cand WHERE length(piece) = 1
-        |  UNION ALL
-        |  SELECT piece, wt FROM (SELECT piece, wt FROM cand
-        |    WHERE length(piece) >= 2 ORDER BY wt DESC, piece LIMIT 200)),
-        |tot AS (SELECT CAST(sum(wt) AS DOUBLE) AS total FROM keep),
-        |vocab AS (SELECT piece,
-        |  CAST(round(-ln(wt / total) * 10000) AS BIGINT) AS cost
-        |  FROM keep, tot),
-        |seg AS (
-        |  SELECT word, CAST(0 AS BIGINT) AS pos,
-        |    CAST('' AS VARCHAR) AS path, CAST(0 AS BIGINT) AS cost
-        |  FROM w
-        |  UNION ALL
-        |  SELECT s.word, s.pos + length(v.piece),
-        |    CASE WHEN s.path = '' THEN v.piece
-        |         ELSE s.path || chr(1) || v.piece END,
-        |    s.cost + v.cost
-        |  FROM seg s JOIN vocab v
-        |    ON s.pos < length(s.word)
-        |   AND substr(s.word, CAST(s.pos + 1 AS INTEGER),
-        |         length(v.piece)) = v.piece),
-        |best AS (
-        |  SELECT word, path FROM (
-        |    SELECT word, path,
-        |      row_number() OVER (PARTITION BY word
-        |        ORDER BY cost, path) AS rn
-        |    FROM seg WHERE pos = length(word))
-        |  WHERE rn = 1),
-        |toks AS (SELECT b.word, unnest(string_split(b.path, chr(1)))
-        |    AS piece
-        |  FROM best b)
+        |$duckWordFreq,
+        |${duckUnigramToks("")}
         |SELECT t.piece, CAST(sum(w.freq) AS BIGINT) AS occurrences
         |FROM toks t JOIN w ON t.word = w.word GROUP BY 1""".stripMargin) {
       (s, dir) =>
@@ -4897,83 +4542,9 @@ object LlmQueries {
     // replayed identically by the oracle.
     "q_tokenizer_compare" -> Q(
       raw"""WITH RECURSIVE
-        |w AS (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS freq FROM (
-        |    SELECT unnest(string_split_regex(lower(trim(text)), '\s+'))
-        |      AS word FROM documents) t
-        |  WHERE word <> '' GROUP BY 1),
-        |chars AS (
-        |  SELECT DISTINCT substr(word, i, 1) AS piece FROM w,
-        |  LATERAL (SELECT unnest(generate_series(1, length(word))) AS i) g),
-        |subs AS (
-        |  SELECT substr(word, i, l) AS piece, sum(freq) AS wt
-        |  FROM w,
-        |  LATERAL (SELECT unnest(generate_series(2, 4)) AS l) ls,
-        |  LATERAL (SELECT unnest(generate_series(1, length(word) - l + 1))
-        |    AS i) g
-        |  GROUP BY 1),
-        |topp AS (SELECT piece FROM subs ORDER BY wt DESC, piece LIMIT 200),
-        |vocab AS (SELECT piece FROM chars UNION SELECT piece FROM topp),
-        |matches AS (
-        |  SELECT word, pos, max(length(piece)) AS bestlen FROM (
-        |    SELECT w.word, g.i AS pos, v.piece
-        |    FROM w,
-        |    LATERAL (SELECT unnest(generate_series(1, length(w.word)))
-        |      AS i) g, vocab v
-        |    WHERE substr(w.word, g.i, length(v.piece)) = v.piece)
-        |  GROUP BY 1, 2),
-        |rec AS (
-        |  SELECT word, CAST(1 AS BIGINT) AS pos,
-        |    CAST(NULL AS VARCHAR) AS piece
-        |  FROM w
-        |  UNION ALL
-        |  SELECT r.word, r.pos + m.bestlen,
-        |    substr(r.word, CAST(r.pos AS INTEGER), CAST(m.bestlen AS INTEGER))
-        |  FROM rec r JOIN matches m ON m.word = r.word AND m.pos = r.pos),
-        |toks AS (SELECT word, piece FROM rec WHERE piece IS NOT NULL),
-        |ucand AS (
-        |  SELECT substr(word, i, l) AS piece, sum(freq) AS wt
-        |  FROM w,
-        |  LATERAL (SELECT unnest(generate_series(1, 4)) AS l) ls,
-        |  LATERAL (SELECT unnest(generate_series(1, length(word) - l + 1))
-        |    AS i) g
-        |  GROUP BY 1),
-        |ukeep AS (
-        |  SELECT piece, wt FROM ucand WHERE length(piece) = 1
-        |  UNION ALL
-        |  SELECT piece, wt FROM (SELECT piece, wt FROM ucand
-        |    WHERE length(piece) >= 2 ORDER BY wt DESC, piece LIMIT 200)),
-        |utot AS (SELECT CAST(sum(wt) AS DOUBLE) AS total FROM ukeep),
-        |uvocab AS (SELECT piece,
-        |  CAST(round(-ln(wt / total) * 10000) AS BIGINT) AS cost
-        |  FROM ukeep, utot),
-        |seg AS (
-        |  SELECT word, CAST(0 AS BIGINT) AS pos,
-        |    CAST('' AS VARCHAR) AS path, CAST(0 AS BIGINT) AS cost
-        |  FROM w
-        |  UNION ALL
-        |  SELECT s.word, s.pos + length(v.piece),
-        |    CASE WHEN s.path = '' THEN v.piece
-        |         ELSE s.path || chr(1) || v.piece END,
-        |    s.cost + v.cost
-        |  FROM seg s JOIN uvocab v
-        |    ON s.pos < length(s.word)
-        |   AND substr(s.word, CAST(s.pos + 1 AS INTEGER),
-        |         length(v.piece)) = v.piece),
-        |best AS (
-        |  SELECT word, path FROM (
-        |    SELECT word, path,
-        |      row_number() OVER (PARTITION BY word
-        |        ORDER BY cost, path) AS rn
-        |    FROM seg WHERE pos = length(word))
-        |  WHERE rn = 1),
-        |utoks AS (SELECT b.word, unnest(string_split(b.path, chr(1)))
-        |    AS piece
-        |  FROM best b),
-        |$duckBpeBase,
-        |${bpeIterSql(1)},
-        |${bpeIterSql(2)},
-        |${bpeIterSql(3)},
+        |$duckWordPieceToks,
+        |${duckUnigramToks("u")},
+        |$duckBpe3,
         |nw AS (SELECT CAST(sum(freq) AS BIGINT) AS nwords FROM w),
         |f_wp AS (SELECT CAST(sum(w2.freq) AS BIGINT) AS np
         |  FROM toks t JOIN w w2 ON t.word = w2.word),

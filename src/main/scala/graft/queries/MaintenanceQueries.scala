@@ -24,6 +24,13 @@ import graft.Tables.table
   */
 object MaintenanceQueries {
 
+  /** The deterministic change feed over sfDir's documents — exposed for
+    * StreamStaging so the CDC stream entries share one staged copy.
+    */
+  private[queries] def cdcChangesFor(s: SparkSession,
+                                     sfDir: String): DataFrame =
+    cdcChanges(table(s, sfDir, "documents"))
+
   /** The deterministic CDC feed shared by q_cdc_merge and q_snapshot_diff
     * (and replayed verbatim by their oracles):
     *   - v1 updates: every doc_id % 7 == 0 re-sourced to `cdc_update_v1`;
@@ -40,13 +47,6 @@ object MaintenanceQueries {
     * the tie-break is (version DESC, op ASC), so 'D' < 'U' means the
     * delete wins — pinned in MaintenanceSpec on a constructed table.
     */
-  /** The deterministic change feed over sfDir's documents — exposed for
-    * StreamStaging so the CDC stream entries share one staged copy.
-    */
-  private[queries] def cdcChangesFor(s: SparkSession,
-                                     sfDir: String): DataFrame =
-    cdcChanges(table(s, sfDir, "documents"))
-
   private def cdcChanges(d: DataFrame): DataFrame = {
     def slice(cond: Column, op: String, ver: Int, src: Column,
               key: Column): DataFrame =
@@ -120,23 +120,27 @@ object MaintenanceQueries {
   private def cdcMerged(d: DataFrame): DataFrame =
     applyLatest(d, latestChange(d))
 
+  // The merged snapshot: q_cdc_merge's oracle, shared by both stream
+  // twins.
+  private val duckCdcMerge =
+    s"""WITH $duckLatest
+      |SELECT COALESCE(l.doc_id, b.doc_id) AS doc_id,
+      |  CASE WHEN l.doc_id IS NOT NULL THEN l.lang ELSE b.lang END
+      |    AS lang,
+      |  CASE WHEN l.doc_id IS NOT NULL THEN l.source ELSE b.source END
+      |    AS source,
+      |  CASE WHEN l.doc_id IS NOT NULL THEN l.n_chars ELSE b.n_chars
+      |    END AS n_chars
+      |FROM documents b FULL OUTER JOIN latest l ON b.doc_id = l.doc_id
+      |WHERE l.op IS NULL OR l.op <> 'D'""".stripMargin
+
   val all: Map[String, Q] = Map(
 
     // L63 — CDC/MERGE upsert apply: the full post-merge snapshot, so the
     // hash certifies every row-level outcome class at once (update
     // applied, later version winning, delete removing, insert appearing,
     // untouched rows passing through byte-identical).
-    "q_cdc_merge" -> Q(
-      s"""WITH $duckLatest
-         |SELECT COALESCE(l.doc_id, b.doc_id) AS doc_id,
-         |  CASE WHEN l.doc_id IS NOT NULL THEN l.lang ELSE b.lang END
-         |    AS lang,
-         |  CASE WHEN l.doc_id IS NOT NULL THEN l.source ELSE b.source END
-         |    AS source,
-         |  CASE WHEN l.doc_id IS NOT NULL THEN l.n_chars ELSE b.n_chars
-         |    END AS n_chars
-         |FROM documents b FULL OUTER JOIN latest l ON b.doc_id = l.doc_id
-         |WHERE l.op IS NULL OR l.op <> 'D'""".stripMargin) { (s, dir) =>
+    "q_cdc_merge" -> Q(duckCdcMerge) { (s, dir) =>
       cdcMerged(table(s, dir, "documents"))
     },
 
@@ -338,17 +342,7 @@ object MaintenanceQueries {
     // (StreamingPipeline.streamCdcComplete). The streamed state, applied
     // to the base, must be bit-identical to the batch q_cdc_merge
     // snapshot. Oracle = q_cdc_merge's SQL verbatim.
-    "q_stream_cdc" -> Q(
-      s"""WITH $duckLatest
-         |SELECT COALESCE(l.doc_id, b.doc_id) AS doc_id,
-         |  CASE WHEN l.doc_id IS NOT NULL THEN l.lang ELSE b.lang END
-         |    AS lang,
-         |  CASE WHEN l.doc_id IS NOT NULL THEN l.source ELSE b.source END
-         |    AS source,
-         |  CASE WHEN l.doc_id IS NOT NULL THEN l.n_chars ELSE b.n_chars
-         |    END AS n_chars
-         |FROM documents b FULL OUTER JOIN latest l ON b.doc_id = l.doc_id
-         |WHERE l.op IS NULL OR l.op <> 'D'""".stripMargin) { (s, dir) =>
+    "q_stream_cdc" -> Q(duckCdcMerge) { (s, dir) =>
       val d = table(s, dir, "documents")
       graft.streaming.StreamingPipeline.streamCdcComplete(s, dir,
         latest => applyLatest(d, latest))
@@ -361,17 +355,7 @@ object MaintenanceQueries {
     // base snapshot is a READ-side join — the state-table-plus-view split
     // a real CDC consumer serves from. Oracle = q_cdc_merge's SQL verbatim, the
     // same certification as the complete-mode twin.
-    "q_stream_cdc_update" -> Q(
-      s"""WITH $duckLatest
-         |SELECT COALESCE(l.doc_id, b.doc_id) AS doc_id,
-         |  CASE WHEN l.doc_id IS NOT NULL THEN l.lang ELSE b.lang END
-         |    AS lang,
-         |  CASE WHEN l.doc_id IS NOT NULL THEN l.source ELSE b.source END
-         |    AS source,
-         |  CASE WHEN l.doc_id IS NOT NULL THEN l.n_chars ELSE b.n_chars
-         |    END AS n_chars
-         |FROM documents b FULL OUTER JOIN latest l ON b.doc_id = l.doc_id
-         |WHERE l.op IS NULL OR l.op <> 'D'""".stripMargin) { (s, dir) =>
+    "q_stream_cdc_update" -> Q(duckCdcMerge) { (s, dir) =>
       val d = table(s, dir, "documents")
       graft.streaming.StreamingPipeline.streamCdcUpdate(s, dir,
         latest => applyLatest(d, latest))

@@ -55,6 +55,48 @@ object MiningQueries {
       |  LATERAL (SELECT unnest(generate_series(1, len(toks) - 1)) AS i) g)"""
       .stripMargin
 
+  // user_id and value scaled to 8-bit buckets: `b(event_id, zx, zy)`.
+  private[queries] val duckZBins =
+    """st AS (SELECT CAST(min(user_id) AS BIGINT) mnx,
+      |    CAST(max(user_id) AS BIGINT) mxx,
+      |    min(value) mny, max(value) mxy FROM events),
+      |b AS (SELECT event_id,
+      |  CASE WHEN user_id IS NULL OR mnx IS NULL OR mxx IS NULL
+      |      OR mnx = mxx THEN 0
+      |    ELSE greatest(0, least(255, CAST(floor(
+      |      ((CAST(user_id AS DOUBLE) - CAST(mnx AS DOUBLE)) * 256) /
+      |      (CAST(mxx AS DOUBLE) - CAST(mnx AS DOUBLE))) AS BIGINT)))
+      |    END zx,
+      |  CASE WHEN value IS NULL OR mny IS NULL OR mxy IS NULL
+      |      OR mny = mxy THEN 0
+      |    ELSE greatest(0, least(255, CAST(floor(
+      |      ((CAST(value AS DOUBLE) - CAST(mny AS DOUBLE)) * 256) /
+      |      (CAST(mxy AS DOUBLE) - CAST(mny AS DOUBLE))) AS BIGINT)))
+      |    END zy
+      |  FROM events, st)""".stripMargin
+
+  // The 16-bit Morton key of (zx, zy) as select item `zkey`.
+  private[queries] val duckZInterleave =
+    """  (((zx >> 0) & 1) << 0) + (((zy >> 0) & 1) << 1) +
+      |  (((zx >> 1) & 1) << 2) + (((zy >> 1) & 1) << 3) +
+      |  (((zx >> 2) & 1) << 4) + (((zy >> 2) & 1) << 5) +
+      |  (((zx >> 3) & 1) << 6) + (((zy >> 3) & 1) << 7) +
+      |  (((zx >> 4) & 1) << 8) + (((zy >> 4) & 1) << 9) +
+      |  (((zx >> 5) & 1) << 10) + (((zy >> 5) & 1) << 11) +
+      |  (((zx >> 6) & 1) << 12) + (((zy >> 6) & 1) << 13) +
+      |  (((zx >> 7) & 1) << 14) + (((zy >> 7) & 1) << 15) AS zkey"""
+      .stripMargin
+
+  // Per-doc character histograms `h(doc_id, ch, cnt)` of the normalized
+  // text.
+  private val duckCharHist =
+    """s AS (SELECT doc_id, lower(trim(text)) s FROM documents
+      |           WHERE length(lower(trim(text))) >= 1),
+      |c AS (SELECT doc_id, substr(s, i, 1) ch FROM s,
+      |  LATERAL (SELECT unnest(generate_series(1, length(s))) AS i) g),
+      |h AS (SELECT doc_id, ch, CAST(count(*) AS BIGINT) cnt FROM c
+      |      GROUP BY 1, 2)""".stripMargin
+
   val all: Map[String, Q] = Map(
 
     // BM25 (k1=1.2, b=0.75) relevance of every document against the
@@ -385,12 +427,7 @@ object MiningQueries {
     // ever shuffles, the query is a straight projection over the scan
     // (the interpreted-HOF form measured 66 s at sf0.1; this is ~0.5 s).
     "q_char_diversity" -> Q(
-      """WITH s AS (SELECT doc_id, lower(trim(text)) s FROM documents
-        |           WHERE length(lower(trim(text))) >= 1),
-        |c AS (SELECT doc_id, substr(s, i, 1) ch FROM s,
-        |  LATERAL (SELECT unnest(generate_series(1, length(s))) AS i) g),
-        |h AS (SELECT doc_id, ch, CAST(count(*) AS BIGINT) cnt FROM c
-        |      GROUP BY 1, 2),
+      s"""WITH $duckCharHist,
         |a AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) n,
         |             CAST(count(*) AS BIGINT) d,
         |             CAST(sum(cnt * cnt) AS BIGINT) ss FROM h GROUP BY 1)
@@ -414,7 +451,7 @@ object MiningQueries {
             .cast("long").as("gini_ppm"))
     },
 
-    // L106 — per-doc character Shannon entropy (r16): the
+    // L106 — per-doc character Shannon entropy: the
     // gibberish/encoding-noise detector next to q_char_diversity's Gini
     // (entropy separates "few chars, evenly used" from "many chars,
     // one dominating" — the two signals disagree exactly on the spammy
@@ -427,12 +464,7 @@ object MiningQueries {
     // ever shuffles; the explode form ships every character of the
     // corpus through an exchange).
     "q_char_entropy" -> Q(
-      """WITH s AS (SELECT doc_id, lower(trim(text)) s FROM documents
-        |           WHERE length(lower(trim(text))) >= 1),
-        |c AS (SELECT doc_id, substr(s, i, 1) ch FROM s,
-        |  LATERAL (SELECT unnest(generate_series(1, length(s))) AS i) g),
-        |h AS (SELECT doc_id, ch, CAST(count(*) AS BIGINT) cnt FROM c
-        |      GROUP BY 1, 2),
+      s"""WITH $duckCharHist,
         |n AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) n,
         |             CAST(count(*) AS BIGINT) d FROM h GROUP BY 1),
         |e AS (SELECT h.doc_id,
@@ -543,32 +575,9 @@ object MiningQueries {
     // column-wide bounds ride in as a 1-row broadcast aggregate, so the
     // key is a scan-side projection.
     "q_zorder" -> Q(
-      """WITH st AS (SELECT CAST(min(user_id) AS BIGINT) mnx,
-        |    CAST(max(user_id) AS BIGINT) mxx,
-        |    min(value) mny, max(value) mxy FROM events),
-        |b AS (SELECT event_id,
-        |  CASE WHEN user_id IS NULL OR mnx IS NULL OR mxx IS NULL
-        |      OR mnx = mxx THEN 0
-        |    ELSE greatest(0, least(255, CAST(floor(
-        |      ((CAST(user_id AS DOUBLE) - CAST(mnx AS DOUBLE)) * 256) /
-        |      (CAST(mxx AS DOUBLE) - CAST(mnx AS DOUBLE))) AS BIGINT)))
-        |    END zx,
-        |  CASE WHEN value IS NULL OR mny IS NULL OR mxy IS NULL
-        |      OR mny = mxy THEN 0
-        |    ELSE greatest(0, least(255, CAST(floor(
-        |      ((CAST(value AS DOUBLE) - CAST(mny AS DOUBLE)) * 256) /
-        |      (CAST(mxy AS DOUBLE) - CAST(mny AS DOUBLE))) AS BIGINT)))
-        |    END zy
-        |  FROM events, st)
+      s"""WITH $duckZBins
         |SELECT event_id, zx, zy,
-        |  (((zx >> 0) & 1) << 0) + (((zy >> 0) & 1) << 1) +
-        |  (((zx >> 1) & 1) << 2) + (((zy >> 1) & 1) << 3) +
-        |  (((zx >> 2) & 1) << 4) + (((zy >> 2) & 1) << 5) +
-        |  (((zx >> 3) & 1) << 6) + (((zy >> 3) & 1) << 7) +
-        |  (((zx >> 4) & 1) << 8) + (((zy >> 4) & 1) << 9) +
-        |  (((zx >> 5) & 1) << 10) + (((zy >> 5) & 1) << 11) +
-        |  (((zx >> 6) & 1) << 12) + (((zy >> 6) & 1) << 13) +
-        |  (((zx >> 7) & 1) << 14) + (((zy >> 7) & 1) << 15) AS zkey
+        |$duckZInterleave
         |FROM b""".stripMargin) { (s, dir) =>
       val e = table(s, dir, "events")
       val st = e.agg(min("user_id").as("mnx"), max("user_id").as("mxx"),
@@ -590,23 +599,7 @@ object MiningQueries {
     // under whole-stage codegen); the oracle replays the identical
     // unrolled levels bit-for-bit.
     "q_hilbert" -> Q(
-      s"""WITH st AS (SELECT CAST(min(user_id) AS BIGINT) mnx,
-        |    CAST(max(user_id) AS BIGINT) mxx,
-        |    min(value) mny, max(value) mxy FROM events),
-        |b AS (SELECT event_id,
-        |  CASE WHEN user_id IS NULL OR mnx IS NULL OR mxx IS NULL
-        |      OR mnx = mxx THEN 0
-        |    ELSE greatest(0, least(255, CAST(floor(
-        |      ((CAST(user_id AS DOUBLE) - CAST(mnx AS DOUBLE)) * 256) /
-        |      (CAST(mxx AS DOUBLE) - CAST(mnx AS DOUBLE))) AS BIGINT)))
-        |    END zx,
-        |  CASE WHEN value IS NULL OR mny IS NULL OR mxy IS NULL
-        |      OR mny = mxy THEN 0
-        |    ELSE greatest(0, least(255, CAST(floor(
-        |      ((CAST(value AS DOUBLE) - CAST(mny AS DOUBLE)) * 256) /
-        |      (CAST(mxy AS DOUBLE) - CAST(mny AS DOUBLE))) AS BIGINT)))
-        |    END zy
-        |  FROM events, st),
+      s"""WITH $duckZBins,
         |${hilbertCtes(8)}
         |SELECT event_id, zx, zy, d AS hkey FROM h0""".stripMargin) {
       (s, dir) =>

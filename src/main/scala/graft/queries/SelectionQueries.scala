@@ -36,12 +36,10 @@ object SelectionQueries {
       sum(when(col("fd") === col("doc_id"), 1L).otherwise(0L)).as("n_new"))
   }
 
-  /** The L69b Naive-Bayes train→serve chain (oracle SQL + Spark form),
-    * shared by q_nb_classify and the q_confusion rollup so the model
-    * under evaluation is the literally-same derivation.
-    */
-  private val nbClassifySql: String =
-    """WITH tok AS (
+  // Naive-Bayes counts: per-(lang, term) `cnt`, per-lang totals `tot` and
+  // the vocabulary size `v`.
+  private val duckNbCounts =
+    """tok AS (
       |  SELECT doc_id, lang,
       |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
       |  FROM documents),
@@ -49,7 +47,15 @@ object SelectionQueries {
       |        FROM tok GROUP BY 1, 2),
       |tot AS (SELECT lang, CAST(sum(c) AS BIGINT) tl
       |        FROM cnt GROUP BY 1),
-      |v AS (SELECT CAST(count(DISTINCT term) AS BIGINT) v FROM tok),
+      |v AS (SELECT CAST(count(DISTINCT term) AS BIGINT) v FROM tok)"""
+      .stripMargin
+
+  /** The L69b Naive-Bayes train→serve chain (oracle SQL + Spark form),
+    * shared by q_nb_classify and the q_confusion rollup so the model
+    * under evaluation is the literally-same derivation.
+    */
+  private val nbClassifySql: String =
+    s"""WITH $duckNbCounts,
       |model AS (
       |  SELECT cnt.lang AS mlang, cnt.term,
       |    CAST(round(-ln((cnt.c + 1) / CAST(tot.tl + v.v AS DOUBLE))
@@ -141,6 +147,37 @@ object SelectionQueries {
           .as("correct"))
   }
 
+  // The hashed quality scorer's per-token weights `w(doc_id, $cols, wt)`
+  // (first sha256 hex char → {-2, -1, 1, 2}).
+  private def duckWordWeights(cols: String) =
+    s"""occ AS (
+      |  SELECT doc_id, $cols,
+      |    unnest(string_split_regex(lower(trim(text)), '\\s+')) AS t
+      |  FROM documents),
+      |w AS (
+      |  SELECT doc_id, $cols,
+      |    CASE WHEN substr(sha256(t), 1, 1) <= '3' THEN -2
+      |         WHEN substr(sha256(t), 1, 1) <= '7' THEN -1
+      |         WHEN substr(sha256(t), 1, 1) <= 'b' THEN 1
+      |         ELSE 2 END AS wt
+      |  FROM occ)""".stripMargin
+
+  // Word weights and the head of a per-doc `ds` CTE with the English label
+  // `pos`; callers add the score column.
+  private val duckWordWeightsPos =
+    s"""${duckWordWeights("source, lang")},
+      |ds AS (
+      |  SELECT doc_id, source,
+      |    CAST(max(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
+      |      AS pos""".stripMargin
+
+  // Shingle occurrences `ex(doc_id, g)` and each shingle's first doc
+  // `fs(g, fd)`.
+  private val duckFirstSeen =
+    s"""${LlmQueries.duckShingles},
+      |ex AS (SELECT doc_id, unnest(sh) AS g FROM base),
+      |fs AS (SELECT g, min(doc_id) AS fd FROM ex GROUP BY 1)""".stripMargin
+
   val all: Map[String, Q] = Map(
 
     // L52 — curriculum ordering: difficulty-ascending training order with
@@ -203,17 +240,7 @@ object SelectionQueries {
     // weight expression becomes a broadcast dictionary join). keep/drop =
     // sign of the per-doc score.
     "q_quality_classifier" -> Q(
-      """WITH occ AS (
-        |  SELECT doc_id, source, lang,
-        |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id, source, lang,
-        |    CASE WHEN substr(sha256(t), 1, 1) <= '3' THEN -2
-        |         WHEN substr(sha256(t), 1, 1) <= '7' THEN -1
-        |         WHEN substr(sha256(t), 1, 1) <= 'b' THEN 1
-        |         ELSE 2 END AS wt
-        |  FROM occ),
+      s"""WITH ${duckWordWeights("source, lang")},
         |ds AS (
         |  SELECT doc_id, source, lang, sum(wt) AS score
         |  FROM w GROUP BY 1, 2, 3)
@@ -259,21 +286,7 @@ object SelectionQueries {
     // docs per group (beyond that, promote num2 to DECIMAL(38) per the
     // q_ab_test pattern).
     "q_auc" -> Q(
-      """WITH occ AS (
-        |  SELECT doc_id, source, lang,
-        |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id, source, lang,
-        |    CASE WHEN substr(sha256(t), 1, 1) <= '3' THEN -2
-        |         WHEN substr(sha256(t), 1, 1) <= '7' THEN -1
-        |         WHEN substr(sha256(t), 1, 1) <= 'b' THEN 1
-        |         ELSE 2 END AS wt
-        |  FROM occ),
-        |ds AS (
-        |  SELECT doc_id, source,
-        |    CAST(max(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS pos,
+      s"""WITH $duckWordWeightsPos,
         |    CAST(sum(wt) AS BIGINT) AS score
         |  FROM w GROUP BY 1, 2),
         |g AS (
@@ -340,21 +353,7 @@ object SelectionQueries {
     // DECIMAL(38), X51 pattern). Scale: one doc-rank window per source
     // + a decile-sized everything-else.
     "q_lift" -> Q(
-      """WITH occ AS (
-        |  SELECT doc_id, source, lang,
-        |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id, source, lang,
-        |    CASE WHEN substr(sha256(t), 1, 1) <= '3' THEN -2
-        |         WHEN substr(sha256(t), 1, 1) <= '7' THEN -1
-        |         WHEN substr(sha256(t), 1, 1) <= 'b' THEN 1
-        |         ELSE 2 END AS wt
-        |  FROM occ),
-        |ds AS (
-        |  SELECT doc_id, source,
-        |    CAST(max(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS pos,
+      s"""WITH $duckWordWeightsPos,
         |    CAST(sum(wt) AS BIGINT) AS score
         |  FROM w GROUP BY 1, 2),
         |rk AS (SELECT source, pos,
@@ -435,17 +434,7 @@ object SelectionQueries {
     // both engines (numerator never negative: score ≥ mn). Scale:
     // after the per-doc score agg everything is bin-count-sized.
     "q_calibration" -> Q(
-      """WITH occ AS (
-        |  SELECT doc_id, lang,
-        |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id, lang,
-        |    CASE WHEN substr(sha256(t), 1, 1) <= '3' THEN -2
-        |         WHEN substr(sha256(t), 1, 1) <= '7' THEN -1
-        |         WHEN substr(sha256(t), 1, 1) <= 'b' THEN 1
-        |         ELSE 2 END AS wt
-        |  FROM occ),
+      s"""WITH ${duckWordWeights("lang")},
         |ds AS (
         |  SELECT doc_id,
         |    CAST(max(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
@@ -502,7 +491,7 @@ object SelectionQueries {
     // mirrored double division, micro-quantized; the degenerate
     // denominator (both raters constant) is filtered by the same exact
     // test on both engines. Scale: output is source-count-sized.
-    // L101 — Wilson lower-bound source ranking (r16): rank each
+    // L101 — Wilson lower-bound source ranking: rank each
     // (lang, source) slice by the LOWER confidence bound of its
     // quality-pass rate instead of the raw proportion — the
     // small-sample correction every "which sources do we trust"
@@ -542,21 +531,7 @@ object SelectionQueries {
     },
 
     "q_kappa" -> Q(
-      """WITH occ AS (
-        |  SELECT doc_id, source, lang,
-        |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id, source, lang,
-        |    CASE WHEN substr(sha256(t), 1, 1) <= '3' THEN -2
-        |         WHEN substr(sha256(t), 1, 1) <= '7' THEN -1
-        |         WHEN substr(sha256(t), 1, 1) <= 'b' THEN 1
-        |         ELSE 2 END AS wt
-        |  FROM occ),
-        |ds AS (
-        |  SELECT doc_id, source,
-        |    CAST(max(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS pos,
+      s"""WITH $duckWordWeightsPos,
         |    CASE WHEN sum(wt) >= 0 THEN 1 ELSE 0 END AS acc
         |  FROM w GROUP BY 1, 2),
         |cf AS (
@@ -620,15 +595,7 @@ object SelectionQueries {
     // absent terms take the class's smoothing floor, derived from the
     // same totals (see q_nb_classify).
     "q_nb_train" -> Q(
-      """WITH tok AS (
-        |  SELECT doc_id, lang,
-        |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-        |  FROM documents),
-        |cnt AS (SELECT lang, term, CAST(count(*) AS BIGINT) c
-        |        FROM tok GROUP BY 1, 2),
-        |tot AS (SELECT lang, CAST(sum(c) AS BIGINT) tl
-        |        FROM cnt GROUP BY 1),
-        |v AS (SELECT CAST(count(DISTINCT term) AS BIGINT) v FROM tok)
+      s"""WITH $duckNbCounts
         |SELECT cnt.lang, cnt.term, cnt.c,
         |  CAST(round(-ln((cnt.c + 1) / CAST(tot.tl + v.v AS DOUBLE))
         |    * 10000) AS BIGINT) AS micro4
@@ -751,7 +718,7 @@ object SelectionQueries {
       // join) — eager-checkpoint per the EAGER CHECKPOINT DISCIPLINE
       // (ops/llm/Dedup.scala) so the corpus-token explode+distinct
       // shuffle runs ONCE; everything above npl is vocab-sized. The
-      // initial plan carried 31 Exchanges (PlanScan census, r17) with
+      // initial plan carried 31 Exchanges (PlanScan census) with
       // the token pass replicated under each branch — runtime exchange
       // reuse usually collapses them, but reuse is opportunistic and a
       // 100 TB token stream re-scanned per branch is the failure mode
@@ -901,9 +868,7 @@ object SelectionQueries {
     // as q_curriculum. Shares the duckShingles CTE so the shingle unit
     // stays byte-identical with the dedup family.
     "q_novelty" -> Q(
-      s"""WITH ${LlmQueries.duckShingles},
-        |ex AS (SELECT doc_id, unnest(sh) AS g FROM base),
-        |fs AS (SELECT g, min(doc_id) AS fd FROM ex GROUP BY 1),
+      s"""WITH $duckFirstSeen,
         |per AS (
         |  SELECT e.doc_id,
         |    CAST(count(*) AS BIGINT) AS n_shingles,
@@ -980,9 +945,7 @@ object SelectionQueries {
     // curve is what tells you when a source is mined out (diminishing
     // new-vocab per token) — the stop-crawling signal.
     "q_vocab_growth" -> Q(
-      s"""WITH ${LlmQueries.duckShingles},
-        |ex AS (SELECT doc_id, unnest(sh) AS g FROM base),
-        |fs AS (SELECT g, min(doc_id) AS fd FROM ex GROUP BY 1),
+      s"""WITH $duckFirstSeen,
         |per AS (
         |  SELECT e.doc_id,
         |    sum(CASE WHEN f.fd = e.doc_id THEN 1 ELSE 0 END) AS n_new
@@ -1065,17 +1028,12 @@ object SelectionQueries {
     // languages, never a single global sort) and the 2-row-per-lang
     // boundary table broadcasts back.
     "q_ppl_bucket" -> Q(
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id, lang, unnest(string_split_regex(lower(trim(text)),
-        |    '\s+')) AS term FROM documents),
+        |    '\\s+')) AS term FROM documents),
         |tf AS (SELECT doc_id, lang, term, count(*) AS tf FROM tok
         |       GROUP BY 1, 2, 3),
-        |f AS (SELECT term, CAST(sum(tf) AS BIGINT) AS freq FROM tf
-        |      GROUP BY 1),
-        |n AS (SELECT CAST(sum(freq) AS DOUBLE) AS total FROM f),
-        |m AS (SELECT term,
-        |        CAST(round(-ln(freq / total) * 10000) AS BIGINT) AS micro
-        |      FROM f, n),
+        |${LlmQueries.duckTermCosts},
         |per AS (
         |  SELECT tf.doc_id, tf.lang,
         |    CAST(sum(tf.tf * m.micro) AS BIGINT) AS sur,

@@ -24,6 +24,13 @@ import graft.Tables.table
   */
 object TemporalQueries {
 
+  // Per-(event_type, day) event counts `e(event_type, day, $n)`.
+  private def duckDailyCounts(n: String) =
+    s"""e AS (
+      |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+      |    CAST(count(*) AS BIGINT) $n
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+
   val all: Map[String, Q] = Map(
 
     // X52 — trailing-window z-score anomaly detection (the metrics-ops
@@ -39,10 +46,7 @@ object TemporalQueries {
     // exact test. Scale: everything after the count agg is
     // series×days-sized.
     "q_anomaly" -> Q(
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) cnt
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${duckDailyCounts("cnt")},
         |w AS (
         |  SELECT event_type, day, cnt,
         |    CAST(count(cnt) OVER tw AS BIGINT) n,
@@ -194,10 +198,7 @@ object TemporalQueries {
     // (n_days·s_all) overflows BIGINT at ~1e13 daily events, so the
     // doubles carry it (beyond: DECIMAL(38) per the X51 pattern).
     "q_seasonality" -> Q(
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) cnt
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${duckDailyCounts("cnt")},
         |d AS (SELECT event_type, day % 7 AS dow, cnt FROM e),
         |g AS (
         |  SELECT event_type, dow, CAST(count(*) AS BIGINT) n_days,
@@ -249,10 +250,7 @@ object TemporalQueries {
     // daily rollup everything is (series × days)-sized; the windows
     // partition by series.
     "q_cusum" -> Q(
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) x
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${duckDailyCounts("x")},
         |t AS (
         |  SELECT event_type, day, x,
         |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) n,
@@ -300,10 +298,7 @@ object TemporalQueries {
     // one mirrored double division (NOT an integer div: S < 0 would
     // hit the trunc-vs-floor divergence), micro-quantized.
     "q_trend_mk" -> Q(
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) x
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${duckDailyCounts("x")},
         |pr AS (
         |  SELECT a.event_type,
         |    CAST(CASE WHEN b.x > a.x THEN 1
@@ -361,10 +356,7 @@ object TemporalQueries {
     // (series² × lags × days)-sized — calendar-bounded, never
     // event-volume-bounded.
     "q_xcorr" -> Q(
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) x
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${duckDailyCounts("x")},
         |lags AS (SELECT unnest([0, 1, 2, 3]) AS lag),
         |al AS (
         |  SELECT a.event_type lead_type, b.event_type lag_type, l.lag,

@@ -138,8 +138,9 @@ class SinksSpec extends SparkSpec {
     graft.io.Sinks.writeBucketed(base, baseT, buckets = 4,
       keys = Seq("doc"))
     // increments mine against the STORED tables - no corpus rescan
+    val (dBands, dBase) = Dedup.minhashIndex(delta, "doc_id", "text")
     val got = Dedup.minhashDeltaPairsIndexed(spark.table(bandsT),
-      spark.table(baseT), delta, "doc_id", "text")
+      spark.table(baseT), dBands, dBase, num = 8, den = 10)
     val expected = Dedup.minhashDeltaPairs(corpus, delta,
       "doc_id", "text")
     assert(got.collect().map(_.toString).sorted.toSeq ==
