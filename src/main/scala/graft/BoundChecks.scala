@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Error/recall certification for the rows-only gate queries — the
   * checks ApproxDistinctSpec/SimilaritySpec assert, promoted into the
-  * correctness artifact itself (round-9 advice #6): seven queries are
+  * correctness artifact itself: seven queries are
   * genuinely approximate (sketches, float ANN) and have no bit-stable
   * DuckDB form, so the driver records them rows-only. Each HAS a
   * hash-certified exact twin, and each estimate obeys a published bound
@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   *    value over random probing; the artifact records the measured
   *    recall so the lift is visible;
   *  - q_kcore: not an approximation bound but an ORACLE-VALIDITY
-  *    precondition (r14 ADVICE) — the capped-candidate family's DuckDB
+  *    precondition — the capped-candidate family's DuckDB
   *    twins mine LSH buckets uncapped, so the number of buckets at/over
   *    the Spark-side cap must be 0 for the hash compare to be
   *    meaningful; measured by Dedup.bucketCapAudit on the same corpus.
@@ -127,8 +127,8 @@ object BoundChecks {
         val r = recallVsBrute(dump, "q_pq_search")
         Bound("recall_at_5", r, 0.8, r >= 0.8)
       },
-      // Not a sketch bound but the same artifact-certification shape
-      // (r14 ADVICE): the capped-candidate family's oracles (q_kcore,
+      // Not a sketch bound but the same artifact-certification shape:
+      // the capped-candidate family's oracles (q_kcore,
       // q_single_linkage, the kNN-graph tier) mine LSH buckets UNCAPPED
       // while the Spark side samples inside buckets over maxBucket =
       // 4096 — the engines agree only while no bucket reaches the cap.

@@ -10,7 +10,7 @@ import graft.queries._
   */
 object SparkEntry {
 
-  private def registry: Map[String, Q] =
+  private lazy val registry: Map[String, Q] =
     CoreQueries.all ++ AnalyticsQueries.all ++ LlmQueries.all ++
       ExtendedQueries.all ++ MiningQueries.all ++ TemporalQueries.all ++
       LayoutQueries.all ++ SelectionQueries.all ++ MaintenanceQueries.all
@@ -20,12 +20,12 @@ object SparkEntry {
     registry("q_pipeline").fn(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.view.mapValues(_.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     registry.collect { case (k, q) if q.sql.isDefined => k -> q.sql.get }
 }

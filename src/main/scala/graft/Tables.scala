@@ -19,7 +19,7 @@ object Tables {
     * (surfaced as Long via `spark.sql.legacy.parquet.nanosAsLong`, set in
     * GraftSession.builder — the flag only affects NANOS columns) and
     * µs-precision (surfaced as Timestamp/TimestampNTZ, on which nanosAsLong
-    * is a no-op — the round-8 sweep broke 12 temporal queries exactly this
+    * is a no-op — unnormalized, 12 temporal queries broke exactly this
     * way). Normalize HERE, at the one load point, so the contract holds
     * under either encoding; `unix_micros` is exact (no float path) and the
     * UTC session timezone makes the NTZ cast the identity on the instant,

@@ -16,8 +16,8 @@ object Verify {
     // A query that fails must STILL produce an output entry: the driver's
     // correctness harness iterates over the dumped dirs, so a missing dir
     // silently drops the query from CORRECTNESS_r{N}.json and an all-green
-    // artifact can mask broken queries (round 8: 12 temporal failures were
-    // invisible). The sentinel is a 1-row frame whose schema (graft_error)
+    // artifact can mask broken queries (12 temporal failures once went
+    // unseen this way). The sentinel is a 1-row frame whose schema (graft_error)
     // can never match any oracle — the failure surfaces as a FAIL entry.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val declared = SparkEntry.queries.keys.toSeq
@@ -72,7 +72,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v.take(300))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
-    // Rows-only bound certification (r9 advice #6): the 7 approximate
+    // Rows-only bound certification: the 7 approximate
     // queries' error/recall bounds, evaluated against the DUMPED rows —
     // the artifact itself then certifies what the specs assert.
     val dumpedOk = declared.filterNot(errors.contains).toSet

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * pins the idempotence and the gate query carries 2 spare rounds over
   * the observed depth.
   *
-  * Fixpoint observability (r14 verdict/ADVICE): a fixed round count
+  * Fixpoint observability: a fixed round count
   * under-provisioned for the data-dependent peel depth silently returns
   * a SUPERGRAPH of the true k-core. [[peelAudited]] therefore records
   * each round's survivor count — the rounds are eagerly checkpointed,

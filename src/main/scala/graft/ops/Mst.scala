@@ -42,7 +42,7 @@ object Mst {
   /** Minimum spanning forest of an undirected weighted graph.
     *
     * The returned frame is a lazy union of up to `maxRounds` per-round
-    * checkpointed parts (r16 ADVICE): a multi-consumer caller should
+    * checkpointed parts: a multi-consumer caller should
     * checkpoint it once (as [[singleLinkage]] does) — consuming the raw
     * union repeatedly re-reads every per-round checkpoint block and
     * pins them until the last consumer finishes.
@@ -58,7 +58,7 @@ object Mst {
       .union(e0.select(col("b").as("node")))
       .distinct()
       .withColumn("comp", col("node")))
-    // Forest rows accumulate LAZILY (r16 optimization): each round's
+    // Forest rows accumulate LAZILY: each round's
     // picked frame is already eagerly checkpointed, so re-checkpointing
     // the growing union every round was one extra full job per round
     // for data that nothing reads until the loop ends.
@@ -69,7 +69,7 @@ object Mst {
     while (!done && round < maxRounds) {
       round += 1
       // edges whose endpoints sit in different components. NOT
-      // materialized on its own (r16 optimization): the only consumers
+      // materialized on its own: the only consumers
       // are the two directional selects inside `cand` below — computing
       // the label join twice inside the ONE picked job is cheaper than
       // a separate checkpoint job + count job per round (the join output
@@ -89,7 +89,7 @@ object Mst {
           col("cb").as("other"))
         .unionByName(cross.select(col("cb").as("comp"), col("w"),
           col("a"), col("b"), col("ca").as("other")))
-      // row count rides the checkpoint via Observation (r17, same
+      // row count rides the checkpoint via Observation (the same
       // fusion as the CC loop): the separate count() was one extra
       // driver-scheduled job per round on a forest-sized frame
       val pickedObs = new org.apache.spark.sql.Observation()
@@ -118,7 +118,7 @@ object Mst {
         // picked-edge graph a PATH, and a silently-unconverged label
         // table here leaves one merged component under two labels — the
         // merging edge is then re-picked next round and the forest gains
-        // a duplicate row (r14 ADVICE). Loud beats wrong.
+        // a duplicate row. Loud beats wrong.
         // `picked` is already checkpointed and counted, so CC skips its
         // own input checkpoint + sizing count (two jobs per round).
         val merged = Dedup.connectedComponents(
@@ -155,7 +155,7 @@ object Mst {
     val nodes = ckpt(edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node")))
       .distinct())
-    // ONE label-propagation run answers EVERY cut (r16 optimization):
+    // ONE label-propagation run answers EVERY cut:
     // per-cut CC loops are pure fixed cost on a forest-sized graph
     // (~8-10 driver-scheduled jobs each), and the cut graphs are
     // independent, so they batch: tag each forest edge with every cut it

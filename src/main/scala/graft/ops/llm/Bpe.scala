@@ -99,7 +99,7 @@ object Bpe {
     merges.toList
   }
 
-  /** The scale form of [[train]] (r13 verdict #7): the per-iteration
+  /** The scale form of [[train]]: the per-iteration
     * argmax stays a 1-row DATAFRAME instead of a driver collect — the
     * merge is applied by broadcast-joining that row into the word state
     * and deriving the replace pattern from the pair COLUMN, so the pair
@@ -118,7 +118,7 @@ object Bpe {
     * State pinning is EAGER localCheckpoint, per the repo-wide checkpoint
     * discipline (CheckpointRaceSpec: a lazily-checkpointed base with
     * concurrent consumers — exactly this union's branches plus the AQE
-    * broadcast futures — can hit the r9 lock-order-inversion deadlock
+    * broadcast futures — can hit the lock-order-inversion deadlock
     * inside Spark). The eager job also truncates lineage every
     * iteration, so the chain stays O(k) work and O(1) plan depth at any
     * k — what a real 30k-merge trainer needs.

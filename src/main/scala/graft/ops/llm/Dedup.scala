@@ -30,27 +30,12 @@ object Dedup {
     df.groupBy(sha2(TextOps.normalized(df(textCol)), 256).as("text_sha"))
       .agg(min(df(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Pairs (a < b) whose distinct n-word-shingle Jaccard >= num/den.
-    * Output: (a, b, inter, uni) — jaccard = inter/uni. Exact, via
-    * PPJoin-style prefix filtering:
-    *
-    *  1. global shingle order = (document frequency asc, shingle) —
-    *     rarest first;
-    *  2. a pair with J >= τ has overlap >= ⌈τ·|A|⌉, so (pigeonhole) its
-    *     prefix of length p = |A| - ⌈τ·|A|⌉ + 1 in that order must contain
-    *     a shared shingle — only prefix postings are indexed, and the join
-    *     meets mostly on RARE shingles (tiny buckets);
-    *  3. size-ratio prune in the join condition
-    *     (J <= min(|A|,|B|)/max(|A|,|B|));
-    *  4. candidates verified exactly with `array_intersect` on the full
-    *     sets.
-    *
-    * Provably the same result as the naive inverted-index join (which the
-    * DuckDB oracle runs), at a fraction of the join volume — the property
-    * that lets exact near-dup mining survive web-scale corpora.
+  /** The exact pair miners' front end: each doc's distinct `n`-word
+    * shingle set `(doc, shs, n_)`, eagerly checkpointed, and its postings
+    * `(doc, n_, g)`.
     */
-  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        n: Int, num: Int, den: Int): DataFrame = {
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String,
+                          n: Int): (DataFrame, DataFrame) = {
     // materialize the shingle sets once: the plan branches (postings →
     // dfreq, prefix, and both verify sides) would otherwise each re-run
     // the tokenize+shingle pass, which dominates the query. localCheckpoint
@@ -80,6 +65,42 @@ object Dedup {
       .localCheckpoint(true)
     val post = withSet.select(col("doc"), col("n_"),
       explode(col("shs")).as("g"))
+    (withSet, post)
+  }
+
+  /** Candidate pairs `(a, b)` joined to both docs' shingle sets `sa`, `sb`.
+    */
+  private def withSetsAB(cand: DataFrame, withSet: DataFrame): DataFrame = {
+    val sets = withSet.select(col("doc"), col("shs"))
+    cand
+      .join(sets.toDF("a", "sa"), "a")
+      .join(sets.toDF("b", "sb"), "b")
+  }
+
+  private def interAB: Column = size(array_intersect(col("sa"), col("sb")))
+
+  /** Pairs (a < b) whose distinct n-word-shingle Jaccard >= num/den.
+    * Output: (a, b, inter, uni) — jaccard = inter/uni. Exact, via
+    * PPJoin-style prefix filtering:
+    *
+    *  1. global shingle order = (document frequency asc, shingle) —
+    *     rarest first;
+    *  2. a pair with J >= τ has overlap >= ⌈τ·|A|⌉, so (pigeonhole) its
+    *     prefix of length p = |A| - ⌈τ·|A|⌉ + 1 in that order must contain
+    *     a shared shingle — only prefix postings are indexed, and the join
+    *     meets mostly on RARE shingles (tiny buckets);
+    *  3. size-ratio prune in the join condition
+    *     (J <= min(|A|,|B|)/max(|A|,|B|));
+    *  4. candidates verified exactly with `array_intersect` on the full
+    *     sets.
+    *
+    * Provably the same result as the naive inverted-index join (which the
+    * DuckDB oracle runs), at a fraction of the join volume — the property
+    * that lets exact near-dup mining survive web-scale corpora.
+    */
+  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
+                        n: Int, num: Int, den: Int): DataFrame = {
+    val (withSet, post) = shingleSets(df, idCol, textCol, n)
     // document frequency per shingle as a WINDOW count, not groupBy+join:
     // the join form shuffles the full postings table twice (once into the
     // agg, once into the join) plus the dfreq side; the window form is ONE
@@ -104,13 +125,9 @@ object Dedup {
           least(col("na"), col("nb")) * den >=
             greatest(col("na"), col("nb")) * num)
       .select("a", "b").distinct()
-    val sets = withSet.select(col("doc"), col("shs"))
-    val interC = size(array_intersect(col("sa"), col("sb")))
-    cand
-      .join(sets.toDF("a", "sa"), "a")
-      .join(sets.toDF("b", "sb"), "b")
-      .select(col("a"), col("b"), interC.as("inter"),
-        (size(col("sa")) + size(col("sb")) - interC).as("uni"))
+    withSetsAB(cand, withSet)
+      .select(col("a"), col("b"), interAB.as("inter"),
+        (size(col("sa")) + size(col("sb")) - interAB).as("uni"))
       .filter(col("inter") * den >= col("uni") * num)
   }
 
@@ -136,14 +153,7 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int = 3, num: Int = 9, den: Int = 10)
       : DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val withSet = df.select(df(idCol).as("doc"), df(textCol).as("_t"))
-      .repartition(par)
-      .select(col("doc"), TextOps.shingleSet(col("_t"), n).as("shs"))
-      .withColumn("n_", size(col("shs")))
-      .localCheckpoint(true)
-    val post = withSet.select(col("doc"), col("n_"),
-      explode(col("shs")).as("g"))
+    val (withSet, post) = shingleSets(df, idCol, textCol, n)
     val wg = org.apache.spark.sql.expressions.Window.partitionBy("g")
     val wd = org.apache.spark.sql.expressions.Window
       .partitionBy("doc").orderBy(col("df_"), col("g"))
@@ -159,12 +169,8 @@ object Dedup {
         prefix("g") === full("g2") && col("a") =!= col("b") &&
           col("nb") * den >= col("na") * num)
       .select("a", "b").distinct()
-    val sets = withSet.select(col("doc"), col("shs"))
-    val interC = size(array_intersect(col("sa"), col("sb")))
-    cand
-      .join(sets.toDF("a", "sa"), "a")
-      .join(sets.toDF("b", "sb"), "b")
-      .select(col("a"), col("b"), interC.as("inter"),
+    withSetsAB(cand, withSet)
+      .select(col("a"), col("b"), interAB.as("inter"),
         size(col("sa")).as("na"))
       .filter(col("inter") * den >= col("na") * num)
   }
@@ -281,15 +287,22 @@ object Dedup {
     */
   private def verifyPairs(cand: DataFrame, base: DataFrame,
                           num: Int, den: Int): DataFrame = {
-    val withSets = cand
-      .join(base.select(col("doc").as("a"), col("sh").as("sh_a")), "a")
-      .join(base.select(col("doc").as("b"), col("sh").as("sh_b")), "b")
-    val interC = size(array_intersect(col("sh_a"), col("sh_b")))
-    val uniC = size(col("sh_a")) + size(col("sh_b")) - interC
-    withSets
-      .select(col("a"), col("b"), interC.as("inter"), uniC.as("uni"))
+    withShingles(cand, base)
+      .select(col("a"), col("b"), interSh.as("inter"), uniSh.as("uni"))
       .filter(col("inter") * den >= col("uni") * num)
   }
+
+  /** Candidate pairs `(a, b)` joined to both docs' MinHash-base shingle
+    * arrays `sh_a`, `sh_b`.
+    */
+  private def withShingles(cand: DataFrame, base: DataFrame): DataFrame =
+    cand
+      .join(base.select(col("doc").as("a"), col("sh").as("sh_a")), "a")
+      .join(base.select(col("doc").as("b"), col("sh").as("sh_b")), "b")
+
+  private def interSh: Column =
+    size(array_intersect(col("sh_a"), col("sh_b")))
+  private def uniSh: Column = size(col("sh_a")) + size(col("sh_b")) - interSh
 
   /** Banded-bucket candidate mining + exact verify — the shared back half
     * of every MinHash query (minhashDedup and minhashCalibration must see
@@ -409,16 +422,9 @@ object Dedup {
   def knnGraph(df: DataFrame, idCol: String, textCol: String, k: Int,
                n: Int = 3, bands: Int = 4,
                maxBucket: Int = 4096): DataFrame = {
-    val (base, _, banded) = minhashBands(df, idCol, textCol, n, bands, Nil)
-    val cand = knnCandidates(banded, maxBucket)
-    val withSets = cand
-      .join(base.select(col("doc").as("a"), col("sh").as("sh_a")), "a")
-      .join(base.select(col("doc").as("b"), col("sh").as("sh_b")), "b")
-    val interC = size(array_intersect(col("sh_a"), col("sh_b")))
-    val uniC = size(col("sh_a")) + size(col("sh_b")) - interC
-    val scored = withSets
+    val scored = knnWithShingles(df, idCol, textCol, n, bands, maxBucket)
       .select(col("a").as("doc_id"), col("b").as("nbr_id"),
-        interC.as("inter"), uniC.as("uni"))
+        interSh.as("inter"), uniSh.as("uni"))
       .withColumn("jac_ppm",
         expr("(CAST(inter AS BIGINT) * 1000000) div uni"))
     graft.ops.TopK(scored, Seq("doc_id"), scored("jac_ppm"),
@@ -470,21 +476,40 @@ object Dedup {
   private[llm] def knnCandidates(banded: DataFrame,
                                  maxBucket: Int): DataFrame = {
     require(maxBucket >= 1, "maxBucket must be at least 1")
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("band2", "bkey2")
-      .orderBy(xxhash64(col("band2"), col("bkey2"), col("b")), col("b"))
     val l = banded.toDF("a", "band", "bkey")
-    val r = banded.toDF("b", "band2", "bkey2")
-      .withColumn("_br", row_number().over(w))
+    val r = capPartners(banded.toDF("b", "band2", "bkey2"),
+      Seq("band2", "bkey2"), "b", maxBucket)
+    l.join(r,
+        l("band") === r("band2") && l("bkey") === r("bkey2") &&
+          l("a") =!= r("b"))
+      .select("a", "b").distinct()
+  }
+
+  /** The partner side of a capped bucket join: at most `maxBucket` rows
+    * of `r` per `keys` bucket, ranked by a stable hash of (bucket, `id`),
+    * with the cap metric of [[knnCandidates]].
+    */
+  private[llm] def capPartners(r: DataFrame, keys: Seq[String], id: String,
+                               maxBucket: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*)
+      .orderBy(xxhash64((keys :+ id).map(col): _*), col(id))
+    r.withColumn("_br", row_number().over(w))
       .filter(col("_br") <= maxBucket)
       .observe("graft_knn_bucket_cap",
         count(when(col("_br") === maxBucket, true))
           .as("n_buckets_at_cap"))
       .drop("_br")
-    l.join(r,
-        l("band") === r("band2") && l("bkey") === r("bkey2") &&
-          l("a") =!= r("b"))
-      .select("a", "b").distinct()
+  }
+
+  /** [[knnCandidates]] over `df`'s MinHash bands, joined to both docs'
+    * shingle arrays (see [[withShingles]]).
+    */
+  private def knnWithShingles(df: DataFrame, idCol: String, textCol: String,
+                              n: Int, bands: Int,
+                              maxBucket: Int): DataFrame = {
+    val (base, _, banded) = minhashBands(df, idCol, textCol, n, bands, Nil)
+    withShingles(knnCandidates(banded, maxBucket), base)
   }
 
   /** Audit of the hot-bucket-cap assumption the capped candidate family's
@@ -543,11 +568,13 @@ object Dedup {
     * aggregate; the top-k cut is the two-phase WindowGroupLimit.
     * Output: (doc_id, nbr_id, rnk, cos_micro).
     */
-  def tfidfKnnGraph(df: DataFrame, idCol: String, textCol: String, k: Int,
-                    n: Int = 3, bands: Int = 4,
-                    maxBucket: Int = 4096): DataFrame = {
-    val (_, _, banded) = minhashBands(df, idCol, textCol, n, bands, Nil)
-    val cand = knnCandidates(banded, maxBucket)
+  /** One packed row per doc `(doc, ent, n2)`: the term-sorted TF-IDF
+    * postings array the sorted-merge [[graft.functions.SparseDot]]
+    * consumes (weight tf·round(10⁴·ln(N/df)), zero weights cut) and the
+    * squared norm off the same aggregate.
+    */
+  private[graft] def tfidfPacked(df: DataFrame, idCol: String,
+                                 textCol: String): DataFrame = {
     val tok = df.select(df(idCol).as("doc"),
       explode(TextOps.tokens(df(textCol))).as("term"))
     val tf = tok.groupBy("doc", "term").agg(count(lit(1)).as("tf"))
@@ -555,13 +582,7 @@ object Dedup {
     // corpus size folded in as a 1-row broadcast aggregate (the
     // q_scalar_subquery shape) — no driver-side count action
     val n1 = df.agg(count(lit(1)).as("n_docs"))
-    // one packed row per doc — the term-sorted postings array the
-    // sorted-merge dot consumes, plus the squared norm off the same
-    // aggregate. The packed table feeds BOTH sides of the pair join —
-    // without a checkpoint the tf/df/N subtree re-scans and re-shuffles
-    // the corpus per branch (EAGER CHECKPOINT DISCIPLINE above; the
-    // q_dbscan_ann lesson)
-    val packed = tf.join(dfreq, "term")
+    tf.join(dfreq, "term")
       .crossJoin(broadcast(n1))
       .select(col("doc"), col("term"),
         (col("tf") * round(lit(10000) *
@@ -572,7 +593,26 @@ object Dedup {
       .agg(graft.functions.SparseDot.packPostings(
           col("term"), col("wt")).as("ent"),
         sum(col("wt") * col("wt")).as("n2"))
-      .localCheckpoint(true)
+  }
+
+  /** Cosine of a packed pair's `dot` over its squared norms `na2`, `nb2`,
+    * in micro units. */
+  private[graft] def cosMicro: Column =
+    round(lit(1000000) * col("dot").cast("double") /
+        (sqrt(col("na2").cast("double")) *
+         sqrt(col("nb2").cast("double"))))
+      .cast("long")
+
+  def tfidfKnnGraph(df: DataFrame, idCol: String, textCol: String, k: Int,
+                    n: Int = 3, bands: Int = 4,
+                    maxBucket: Int = 4096): DataFrame = {
+    val (_, _, banded) = minhashBands(df, idCol, textCol, n, bands, Nil)
+    val cand = knnCandidates(banded, maxBucket)
+    // The packed table feeds BOTH sides of the pair join — without a
+    // checkpoint the tf/df/N subtree re-scans and re-shuffles the corpus
+    // per branch (EAGER CHECKPOINT DISCIPLINE above; the q_dbscan_ann
+    // lesson)
+    val packed = tfidfPacked(df, idCol, textCol).localCheckpoint(true)
     // shuffle_hash on the packed lookups: the doc-key joins ship the
     // packed postings payloads, and the default sort-merge strategy
     // SORTS the pair×payload stream on the join key — at 128×
@@ -596,10 +636,7 @@ object Dedup {
       // match dropped no-overlap pairs before ranking)
       .filter(col("dot") =!= 0)
       .select(col("a").as("doc_id"), col("b").as("nbr_id"),
-        round(lit(1000000) * col("dot").cast("double") /
-            (sqrt(col("na2").cast("double")) *
-             sqrt(col("nb2").cast("double"))))
-          .cast("long").as("cos_micro"))
+        cosMicro.as("cos_micro"))
     graft.ops.TopK(scored, Seq("doc_id"), scored("cos_micro"),
         Seq(scored("nbr_id")), k)
       .select(col("doc_id"), col("nbr_id"), col("rnk"), col("cos_micro"))
@@ -627,13 +664,8 @@ object Dedup {
   def containmentGraph(df: DataFrame, idCol: String, textCol: String,
                        k: Int, n: Int = 3, bands: Int = 4,
                        maxBucket: Int = 4096): DataFrame = {
-    val (base, _, banded) = minhashBands(df, idCol, textCol, n, bands, Nil)
-    val cand = knnCandidates(banded, maxBucket)
-    val scored = cand
-      .join(base.select(col("doc").as("a"), col("sh").as("sh_a")), "a")
-      .join(base.select(col("doc").as("b"), col("sh").as("sh_b")), "b")
-      .select(col("a"), col("b"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).as("inter"),
+    val scored = knnWithShingles(df, idCol, textCol, n, bands, maxBucket)
+      .select(col("a"), col("b"), interSh.as("inter"),
         size(col("sh_a")).as("na"))
       .withColumn("cont_ppm",
         expr("(CAST(inter AS BIGINT) * 1000000) div na"))
@@ -658,14 +690,8 @@ object Dedup {
                      kJac: Int, kCont: Int, kOut: Int, rrfK: Int = 60,
                      n: Int = 3, bands: Int = 4,
                      maxBucket: Int = 4096): DataFrame = {
-    val (base, _, banded) = minhashBands(df, idCol, textCol, n, bands, Nil)
-    val cand = knnCandidates(banded, maxBucket)
-    val interC = size(array_intersect(col("sh_a"), col("sh_b")))
-    val scored = cand
-      .join(base.select(col("doc").as("a"), col("sh").as("sh_a")), "a")
-      .join(base.select(col("doc").as("b"), col("sh").as("sh_b")), "b")
-      .select(col("a"), col("b"), interC.as("inter"),
-        (size(col("sh_a")) + size(col("sh_b")) - interC).as("uni"),
+    val scored = knnWithShingles(df, idCol, textCol, n, bands, maxBucket)
+      .select(col("a"), col("b"), interSh.as("inter"), uniSh.as("uni"),
         size(col("sh_a")).as("na"))
       .withColumn("jac_ppm",
         expr("(CAST(inter AS BIGINT) * 1000000) div uni"))
@@ -756,6 +782,14 @@ object Dedup {
     * streaming ingest builds the delta's slice once, mines with it and
     * appends it to the store.
     */
+  private def deltaBucketPairs(l: DataFrame, r: DataFrame): DataFrame =
+    l.join(r,
+        col("band") === col("band2") && col("bkey") === col("bkey2") &&
+          col("x") =!= col("d"))
+      .select(least(col("x"), col("d")).as("a"),
+        greatest(col("x"), col("d")).as("b"))
+      .distinct()
+
   def minhashDeltaPairsIndexed(indexBands: DataFrame, indexBase: DataFrame,
                                deltaBands: DataFrame, deltaBase: DataFrame,
                                num: Int, den: Int): DataFrame = {
@@ -764,12 +798,7 @@ object Dedup {
         col("bkey")))
     val r = deltaBands.select(col("doc").as("d"), col("band").as("band2"),
       col("bkey").as("bkey2"))
-    val cand = l.join(r,
-        col("band") === col("band2") && col("bkey") === col("bkey2") &&
-          col("x") =!= col("d"))
-      .select(least(col("x"), col("d")).as("a"),
-        greatest(col("x"), col("d")).as("b"))
-      .distinct()
+    val cand = deltaBucketPairs(l, r)
     val allBase = indexBase.select(col("doc"), col("sh"))
       .unionByName(deltaBase.select(col("doc"), col("sh")))
     verifyPairs(cand, allBase, num, den)
@@ -801,12 +830,7 @@ object Dedup {
     val r = banded.filter(col("_new"))
       .select(col("doc").as("d"), col("band").as("band2"),
         col("bkey").as("bkey2"))
-    val cand = l.join(r,
-        l("band") === r("band2") && l("bkey") === r("bkey2") &&
-          col("x") =!= col("d"))
-      .select(least(col("x"), col("d")).as("a"),
-        greatest(col("x"), col("d")).as("b"))
-      .distinct()
+    val cand = deltaBucketPairs(l, r)
     verifyPairs(cand, base.select("doc", "sh"), num, den)
   }
 

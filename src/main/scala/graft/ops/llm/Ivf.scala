@@ -25,7 +25,7 @@ object Ivf {
     * the same lexicographic order as the previous max(struct(_s, cid))
     * aggregate, evaluated on the same doubles.
     *
-    * Shape (r16 optimization, guide §2.3/§2.4): the old form broadcast-
+    * Shape: the old form broadcast-
     * joined every row against every centroid (×k row inflation) and
     * argmin'd back down through a struct aggregate — min/max over a
     * struct is not a mutable-buffer type, so it planned as
@@ -36,7 +36,7 @@ object Ivf {
     * zero sorts, no vector ever shuffles. |cvec| is precomputed per
     * centroid (was recomputed per joined row).
     *
-    * PRECONDITION (r16 ADVICE): `vectors` ids must be unique. The old
+    * PRECONDITION: `vectors` ids must be unique. The old
     * groupBy(id) aggregate implicitly collapsed duplicate ids to one
     * output row; the per-row argmin emits one row PER INPUT ROW, so a
     * caller feeding duplicated ids would double-weight Lloyd means in
@@ -77,19 +77,26 @@ object Ivf {
       .localCheckpoint(true)
     (1 to iters).foreach { _ =>
       val assigned = assign(v, centroids)
-      centroids = assigned
-        .select(col("cid"), posexplode(col("vec")).as(Seq("dim", "x")))
-        .groupBy(col("cid"), col("dim"))
-        // grid-snapped mean: summation order must not move assignments
-        .agg((round(avg(col("x")) * 1e6) / 1e6).as("m"))
-        .groupBy(col("cid"))
-        .agg(transform(
-          sort_array(collect_list(struct(col("dim"), col("m")))),
-          e => e.getField("m")).as("cvec"))
+      centroids = snappedMean(assigned, Seq(col("cid")), "vec")
         .localCheckpoint(true)
     }
     centroids
   }
+
+  /** One k-means update: the per-dimension mean `cvec` of the `vecCol`
+    * vectors of each `keys` group, grid-snapped so summation order cannot
+    * move the next pass's assignments.
+    */
+  private[llm] def snappedMean(assigned: DataFrame, keys: Seq[Column],
+                               vecCol: String): DataFrame =
+    assigned
+      .select(keys :+ posexplode(col(vecCol)).as(Seq("dim", "x")): _*)
+      .groupBy(keys :+ col("dim"): _*)
+      .agg((round(avg(col("x")) * 1e6) / 1e6).as("m"))
+      .groupBy(keys: _*)
+      .agg(transform(
+        sort_array(collect_list(struct(col("dim"), col("m")))),
+        e => e.getField("m")).as("cvec"))
 
   /** IVF top-k: index build (quantizer + cell assignment), then each
     * query probes its `nprobe` best cells and exact-scores only those
@@ -115,7 +122,7 @@ object Ivf {
       .filter(col("id") =!= col("qid"))
       .withColumn("score", Similarity.cosine(col("qvec"), col("vec"),
         col("nq"), col("nv")))
-    graft.ops.TopK(scored, Seq("qid"), scored("score"), Seq(scored("id")), k)
+    Similarity.topKByQuery(scored, k)
       .select(col("qid"), col("id"), col("rnk"),
         round(col("score"), 4).as("score4"))
   }
@@ -161,17 +168,12 @@ object Ivf {
       .select(col("cid"), col("id"), col("cv"), col("mxv"))
   }
 
-  private def int8Prep(vectors: DataFrame): DataFrame =
-    Similarity.int8Codes(vectors)
-      .select(col("id"), col("codes").cast("array<double>").as("cv"),
-        col("maxabs_micro").as("mxv"))
-
   /** The persisted-quantizer half of the streaming IVF maintenance:
     * (cid, cc, cn2) built once from the accumulated corpus. Callers
     * checkpoint it and hand it to [[int8CellIds]] per delta batch.
     */
   def int8Quantizer(vectors: DataFrame, nClusters: Int = 16): DataFrame =
-    seededCentroids(int8Prep(vectors), nClusters)
+    seededCentroids(Similarity.corpusCodes(vectors), nClusters)
 
   /** Delta assignment against a persisted quantizer: (id, cid) for each
     * incoming vector — per-row deterministic (independent of how rows
@@ -179,7 +181,7 @@ object Ivf {
     * replay bit-for-bit.
     */
   def int8CellIds(vectors: DataFrame, cents: DataFrame): DataFrame =
-    int8AssignExact(int8Prep(vectors), cents)
+    int8AssignExact(Similarity.corpusCodes(vectors), cents)
       .select(col("id"), col("cid"))
 
   /** The two tables that ARE the int8 IVF index — the digest-seeded
@@ -193,7 +195,7 @@ object Ivf {
     */
   def int8Index(vectors: DataFrame,
                 nClusters: Int = 16): (DataFrame, DataFrame) = {
-    val v = int8Prep(vectors)
+    val v = Similarity.corpusCodes(vectors)
       .localCheckpoint(true) // branches: seeds + assignment
     val cents = seededCentroids(v, nClusters)
     (cents, int8AssignExact(v, cents))
@@ -210,22 +212,15 @@ object Ivf {
                         queries: DataFrame, k: Int,
                         nprobe: Int = 4): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-    val q = Similarity.int8Codes(queries)
-      .select(col("id").as("qid"), col("codes").cast("array<double>")
-        .as("cq"), col("maxabs_micro").as("mxq"))
+    val q = Similarity.queryCodes(queries)
     val probes = q.join(broadcast(cents))
       .withColumn("_s", cellScore(col("cq")))
       .withColumn("_r", row_number().over(
         w.partitionBy(col("qid")).orderBy(col("_s").desc, col("cid"))))
       .filter(col("_r") <= nprobe)
       .select(col("cid"), col("qid"), col("cq"), col("mxq"))
-    val scored = assigned.join(probes, Seq("cid"))
-      .filter(col("id") =!= col("qid"))
-      .withColumn("score", Similarity.dot(col("cq"), col("cv"))
-        .cast("long") * col("mxq") * col("mxv"))
-    graft.ops.TopK(scored, Seq("qid"), scored("score"),
-        Seq(scored("id")), k)
-      .select(col("qid"), col("id"), col("rnk"), col("score"))
+    Similarity.int8TopKByQuery(assigned.join(probes, Seq("cid"))
+      .filter(col("id") =!= col("qid")), k)
   }
 
   /** Bit-deterministic IVF search — the hash-verifiable twin of `topK`:

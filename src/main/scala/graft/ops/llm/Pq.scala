@@ -51,16 +51,8 @@ object Pq {
       .select(col("sub"), col("_r").as("code"), col("sv").as("cvec"))
       .localCheckpoint(true)
     (1 to iters).foreach { _ =>
-      books = assignCodes(subs, books)
-        .select(col("sub"), col("code"), posexplode(col("sv"))
-          .as(Seq("dim", "x")))
-        .groupBy(col("sub"), col("code"), col("dim"))
-        // grid-snapped mean: summation order must not move assignments
-        .agg((round(avg(col("x")) * 1e6) / 1e6).as("m"))
-        .groupBy(col("sub"), col("code"))
-        .agg(transform(
-          sort_array(collect_list(struct(col("dim"), col("m")))),
-          e => e.getField("m")).as("cvec"))
+      books = Ivf.snappedMean(assignCodes(subs, books),
+          Seq(col("sub"), col("code")), "sv")
         .localCheckpoint(true)
     }
     books
@@ -72,7 +64,7 @@ object Pq {
     * order as the previous min(struct(_d, code)) aggregate, on the same
     * doubles).
     *
-    * Shape (r16 optimization, guide §2.3/§2.4): the old form inflated
+    * Shape: the old form inflated
     * the subvector table ×k through the codebook join (n·m·k rows at
     * k=64) and argmin'd back down through a struct aggregate, which
     * plans as Sort+SortAggregate+Exchange+Sort+SortAggregate with
@@ -85,7 +77,7 @@ object Pq {
     * the per-(sub, id) argmin so it is dropped, and |cvec|² is
     * precomputed per codebook entry — ONE dot per (row, entry).
     *
-    * PRECONDITION (r16 ADVICE): `subs` keys (sub, id) must be unique.
+    * PRECONDITION: `subs` keys (sub, id) must be unique.
     * The old groupBy(sub, id) + first(sv) aggregate implicitly collapsed
     * duplicates; the per-row argmin emits one row per input row. The
     * only producer is [[subTable]], which emits exactly one row per
@@ -173,15 +165,10 @@ object Pq {
                     k: Int, shortlist: Int): DataFrame = {
     val cand = adcTopK(codes, codebooks, queries, m, shortlist)
       .select(col("qid"), col("id"))
-    val v = Similarity.int8Codes(vectors)
-      .select(col("id"), col("codes").cast("array<double>").as("cv"),
-        col("maxabs_micro").as("mxv"))
-    val q = Similarity.int8Codes(queries)
-      .select(col("id").as("qid"), col("codes").cast("array<double>")
-        .as("cq"), col("maxabs_micro").as("mxq"))
+    val v = Similarity.corpusCodes(vectors)
+    val q = Similarity.queryCodes(queries)
     cand.join(v, Seq("id")).join(broadcast(q), Seq("qid"))
-      .withColumn("score", Similarity.dot(col("cq"), col("cv"))
-        .cast("long") * col("mxq") * col("mxv"))
+      .withColumn("score", Similarity.int8Score)
       .withColumn("rnk", row_number().over(Window.partitionBy(col("qid"))
         .orderBy(col("score").desc, col("id"))))
       .filter(col("rnk") <= k)

@@ -66,9 +66,20 @@ object SimHash {
     val hashed = df.select(df(idCol).as("doc"), simhashSha(textCol).as("h"))
       // eager checkpoint: lazy + multi-branch consumers can deadlock Spark (see ops/llm/Dedup.scala "EAGER CHECKPOINT DISCIPLINE")
       .localCheckpoint(true)
+    bandedPairs(hashed, bands, maxHamming,
+      expr("cast(bit_count(ha ^ hb) as int)")) { b =>
+      shiftright(col("h"), b * width).bitwiseAND(lit(mask))
+    }
+  }
+
+  /** Pairs (a < b) of `hashed(doc, h)` that agree on at least one of the
+    * `bands` bands `bits(band)` of `h`, kept when their `dist` (over the
+    * two hashes `ha`, `hb`) is at most `maxHamming`.
+    */
+  private def bandedPairs(hashed: DataFrame, bands: Int, maxHamming: Int,
+                          dist: Column)(bits: Int => Column): DataFrame = {
     val bandKeys = array((0 until bands).map(b =>
-      struct(lit(b).as("band"),
-        shiftright(col("h"), b * width).bitwiseAND(lit(mask)).as("bits"))): _*)
+      struct(lit(b).as("band"), bits(b).as("bits"))): _*)
     val banded = hashed.select(col("doc"), col("h"),
         explode(bandKeys).as("bk"))
       .select(col("doc"), col("h"),
@@ -78,9 +89,7 @@ object SimHash {
     val cand = l.join(r, col("band") === col("band2") &&
         col("bits") === col("bits2") && col("a") < col("b"))
       .select("a", "b", "ha", "hb").distinct()
-    cand
-      .withColumn("dist",
-        expr("cast(bit_count(ha ^ hb) as int)"))
+    cand.withColumn("dist", dist)
       .filter(col("dist") <= maxHamming)
       .select(col("a"), col("b"), col("dist"))
   }
@@ -100,20 +109,8 @@ object SimHash {
     val hashed = df.select(df(idCol).as("doc"),
         simhashBits(textCol).as("h"))
       .localCheckpoint(true)
-    val bandKeys = array((0 until bands).map(b =>
-      struct(lit(b).as("band"),
-        substring(col("h"), b * width + 1, width).as("bits"))): _*)
-    val banded = hashed.select(col("doc"), col("h"),
-        explode(bandKeys).as("bk"))
-      .select(col("doc"), col("h"),
-        col("bk.band").as("band"), col("bk.bits").as("bits"))
-    val l = banded.toDF("a", "ha", "band", "bits")
-    val r = banded.toDF("b", "hb", "band2", "bits2")
-    val cand = l.join(r, col("band") === col("band2") &&
-        col("bits") === col("bits2") && col("a") < col("b"))
-      .select("a", "b", "ha", "hb").distinct()
-    cand.withColumn("dist", hamming(col("ha"), col("hb")))
-      .filter(col("dist") <= maxHamming)
-      .select(col("a"), col("b"), col("dist"))
+    bandedPairs(hashed, bands, maxHamming, hamming(col("ha"), col("hb"))) {
+      b => substring(col("h"), b * width + 1, width)
+    }
   }
 }

@@ -37,6 +37,12 @@ object Similarity {
   def cosine(a: Column, b: Column, normA: Column, normB: Column): Column =
     dot(a, b) / (normA * normB)
 
+  /** Each query's `k` best rows of `scored(qid, id, score)`, ties on the
+    * smaller id, ranked in `rnk`.
+    */
+  private[llm] def topKByQuery(scored: DataFrame, k: Int): DataFrame =
+    graft.ops.TopK(scored, Seq("qid"), scored("score"), Seq(scored("id")), k)
+
   /** Exact top-k neighbors for each query vector. `vectors` = (id, vec),
     * `queries` = (qid, qvec); self-pairs excluded by id. Output:
     * (qid, id, rnk, score4) — rnk from the un-rounded score with id
@@ -49,8 +55,7 @@ object Similarity {
     val scored = v.join(broadcast(q), col("id") =!= col("qid"))
       .withColumn("score",
         cosine(col("qvec"), col("vec"), col("nq"), col("nv")))
-    val top = graft.ops.TopK(scored, Seq("qid"), scored("score"),
-      Seq(scored("id")), k)
+    val top = topKByQuery(scored, k)
     top.select(col("qid"), col("id"), col("rnk"),
       round(col("score"), 4).as("score4"))
   }
@@ -120,8 +125,8 @@ object Similarity {
     * executor-sized; with ~√n balanced cells the pair space collapses by
     * ~√n).
     *
-    * Hot-cell guard (r7): a cell of size m lands its full m² candidate
-    * space on ONE shuffle key — the skew the r6 audit flagged for
+    * Hot-cell guard: a cell of size m lands its full m² candidate
+    * space on ONE shuffle key — the skew risk of
     * low-cardinality cell columns. Cells over `targetCell` are
     * grid-decomposed: each member gets a deterministic sub-block
     * u ∈ [0, s) with s = ceil(m / targetCell); the a-side replicates a
@@ -136,7 +141,7 @@ object Similarity {
     * both sides (cells are few by construction — that's the premise of
     * the skew risk).
     *
-    * Hard partner cap (r8, the `Dedup.knnGraph` treatment): the grid
+    * Hard partner cap (the `Dedup.knnGraph` treatment): the grid
     * guard bounds TASK size but total comparisons stay Σ|cell|² — an
     * adversarial cell (a giant identical-embedding family) still pays
     * its full quadratic candidate space. Cells over `maxCell` therefore
@@ -151,10 +156,10 @@ object Similarity {
     * is then pair-for-pair identical to the uncapped join, and the
     * rank window is skipped entirely.
     *
-    * Plan shape (r8, per ADVICE): the (id, cell, vec, nv) projection is
+    * Plan shape: the (id, cell, vec, nv) projection is
     * localCheckpoint-ed ONCE and feeds the cell counts and both join
     * sides — one source scan, not three. The pair join itself keeps the
-    * r7 inline shape (vectors ride the equi-join, score computed in
+    * inline shape (vectors ride the equi-join, score computed in
     * place, no distinct pass): each unordered pair is emitted exactly
     * once by construction — both-in-sample pairs by the a < b direction,
     * sampled-partner pairs by their single surviving direction
@@ -299,6 +304,31 @@ object Similarity {
         col("max_err_micro") <= col("step_micro") + 2)
   }
 
+  /** int8 codes of `vectors` as `(id, cv, mxv)` and of `queries` as
+    * `(qid, cq, mxq)`, codes cast for [[dot]].
+    */
+  private[llm] def corpusCodes(vectors: DataFrame): DataFrame =
+    int8Codes(vectors)
+      .select(col("id"), col("codes").cast("array<double>").as("cv"),
+        col("maxabs_micro").as("mxv"))
+  private[llm] def queryCodes(queries: DataFrame): DataFrame =
+    int8Codes(queries)
+      .select(col("id").as("qid"), col("codes").cast("array<double>")
+        .as("cq"), col("maxabs_micro").as("mxq"))
+
+  /** Each query's `k` best `pairs` by their exact int8 score:
+    * (qid, id, rnk, score).
+    */
+  private[llm] def int8TopKByQuery(pairs: DataFrame, k: Int): DataFrame = {
+    val scored = pairs.withColumn("score", int8Score)
+    topKByQuery(scored, k)
+      .select(col("qid"), col("id"), col("rnk"), col("score"))
+  }
+
+  /** The exact integer score of a query-code × corpus-code pair. */
+  private[llm] def int8Score: Column =
+    dot(col("cq"), col("cv")).cast("long") * col("mxq") * col("mxv")
+
   /** Quantized top-k: search over int8 codes with an EXACT integer score
     * `dot(codesA, codesB) · mxA_micro · mxB_micro` (≈ cosine numerator
     * scaled by 127²·10¹²). Every term is an integer that fits a long
@@ -316,18 +346,9 @@ object Similarity {
     * to milli.
     */
   def int8TopK(vectors: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val v = int8Codes(vectors)
-      .select(col("id"), col("codes").cast("array<double>").as("cv"),
-        col("maxabs_micro").as("mxv"))
-    val q = int8Codes(queries)
-      .select(col("id").as("qid"), col("codes").cast("array<double>").as("cq"),
-        col("maxabs_micro").as("mxq"))
-    val scored = v.join(broadcast(q), col("id") =!= col("qid"))
-      .withColumn("score",
-        dot(col("cq"), col("cv")).cast("long") * col("mxq") * col("mxv"))
-    graft.ops.TopK(scored, Seq("qid"), scored("score"),
-        Seq(scored("id")), k)
-      .select(col("qid"), col("id"), col("rnk"), col("score"))
+    val v = corpusCodes(vectors)
+    val q = queryCodes(queries)
+    int8TopKByQuery(v.join(broadcast(q), col("id") =!= col("qid")), k)
   }
 
   /** L99 — Matryoshka prefix-dimension retrieval: the int8 search run
@@ -364,18 +385,9 @@ object Similarity {
                    dims: Int = 16, shortlist: Int = 20): DataFrame = {
     val cand = prefixTopK(vectors, queries, shortlist, dims)
       .select(col("qid"), col("id"))
-    val v = int8Codes(vectors)
-      .select(col("id"), col("codes").cast("array<double>").as("cv"),
-        col("maxabs_micro").as("mxv"))
-    val q = int8Codes(queries)
-      .select(col("id").as("qid"),
-        col("codes").cast("array<double>").as("cq"),
-        col("maxabs_micro").as("mxq"))
-    val scored = cand.join(v, "id").join(broadcast(q), "qid")
-      .withColumn("score",
-        dot(col("cq"), col("cv")).cast("long") * col("mxq") * col("mxv"))
-    graft.ops.TopK(scored, Seq("qid"), scored("score"), Seq(scored("id")), k)
-      .select(col("qid"), col("id"), col("rnk"), col("score"))
+    val v = corpusCodes(vectors)
+    val q = queryCodes(queries)
+    int8TopKByQuery(cand.join(v, "id").join(broadcast(q), "qid"), k)
   }
 
   /** Deterministic random hyperplanes: `planes` rows of `dim` components in
@@ -438,33 +450,19 @@ object Similarity {
     require(planes <= 62, "bucket id must fit a long")
     // integer hyperplanes: the LCG formula is mirrored verbatim in the
     // oracle SQL — change one only with the other
-    val w: Array[Array[Long]] = Array.tabulate(planes, dim) { (p, i) =>
-      ((1103515245L * (p * dim + i) + 12345L + seed) % 2147483648L) % 17L - 8L
-    }
     def bucketOfInt(codes: Column): Column =
-      w.zipWithIndex.map { case (row, p) =>
-        // exact: |dot| <= 127·8·dim, integer-valued doubles
-        val d = dot(codes,
-          array(row.toIndexedSeq.map(x => lit(x.toDouble)): _*))
-        when(d >= 0d, lit(1L << p)).otherwise(lit(0L))
-      }.reduce(_ + _)
-    val v = int8Codes(vectors)
-      .select(col("id"), col("codes").cast("array<double>").as("cv"),
-        col("maxabs_micro").as("mxv"))
+      planeBucket(codes, planes, dim) { (p, i) =>
+        ((1103515245L * (p * dim + i) + 12345L + seed) % 2147483648L) %
+          17L - 8L
+      }
+    val v = corpusCodes(vectors)
       .withColumn("bucket", bucketOfInt(col("cv")))
-    val q = int8Codes(queries)
-      .select(col("id").as("qid"), col("codes").cast("array<double>")
-        .as("cq"), col("maxabs_micro").as("mxq"))
+    val q = queryCodes(queries)
       .withColumn("b0", bucketOfInt(col("cq")))
       .withColumn("probe", explode(array(col("b0") +:
         (0 until planes).map(j => col("b0").bitwiseXOR(lit(1L << j))): _*)))
-    val scored = v.join(broadcast(q),
-        col("bucket") === col("probe") && col("id") =!= col("qid"))
-      .withColumn("score", dot(col("cq"), col("cv")).cast("long") *
-        col("mxq") * col("mxv"))
-    graft.ops.TopK(scored, Seq("qid"), scored("score"),
-        Seq(scored("id")), k)
-      .select(col("qid"), col("id"), col("rnk"), col("score"))
+    int8TopKByQuery(v.join(broadcast(q),
+        col("bucket") === col("probe") && col("id") =!= col("qid")), k)
   }
 
   /** Exact-integer LSH k-NN graph over the embedding corpus — the
@@ -511,9 +509,7 @@ object Similarity {
   def knnGraphExactInt(vectors: DataFrame, k: Int, dim: Int,
                        planesPerTable: Seq[Int], seed: Long,
                        maxBucket: Int): DataFrame = {
-    val v = int8Codes(vectors)
-      .select(col("id"), col("codes").cast("array<double>").as("cv"),
-        col("maxabs_micro").as("mxv"))
+    val v = corpusCodes(vectors)
       .localCheckpoint(true) // branches: bucket keys + both score sides
     val cand = knnExactCandidates(v, dim, planesPerTable, seed, maxBucket)
     val scored = cand
@@ -535,6 +531,18 @@ object Similarity {
     * self-join, distinct (a, b) pairs. `v` must be the int8Codes
     * projection (id, cv, mxv).
     */
+  /** Integer bucket id of int8 `codes` against `planes` integer
+    * hyperplanes, plane p's dim-i weight `w(p, i)`: Σ_p [dot ≥ 0]·2^p.
+    * Exact: |dot| ≤ 127·8·dim, integer-valued doubles.
+    */
+  private def planeBucket(codes: Column, planes: Int, dim: Int)(
+      w: (Int, Int) => Long): Column =
+    (0 until planes).map { p =>
+      val row = (0 until dim).map(w(p, _))
+      val d = dot(codes, array(row.map(x => lit(x.toDouble)): _*))
+      when(d >= 0d, lit(1L << p)).otherwise(lit(0L))
+    }.reduce(_ + _)
+
   private[graft] def knnExactCandidates(v: DataFrame, dim: Int,
                                       planesPerTable: Seq[Int], seed: Long,
                                       maxBucket: Int): DataFrame = {
@@ -542,14 +550,10 @@ object Similarity {
     require(planesPerTable.forall(p => p >= 1 && p <= 62),
       "plane counts must be in [1, 62] (bucket id must fit a long)")
     def bucketOfInt(codes: Column, planes: Int, tblSeed: Long): Column =
-      (0 until planes).map { p =>
-        val row = (0 until dim).map { i =>
-          ((1103515245L * (p * dim + i) + 12345L + tblSeed) %
-            2147483648L) % 17L - 8L
-        }
-        val d = dot(codes, array(row.map(x => lit(x.toDouble)): _*))
-        when(d >= 0d, lit(1L << p)).otherwise(lit(0L))
-      }.reduce(_ + _)
+      planeBucket(codes, planes, dim) { (p, i) =>
+        ((1103515245L * (p * dim + i) + 12345L + tblSeed) %
+          2147483648L) % 17L - 8L
+      }
     val keyed = v.select(col("id"),
       explode(array(planesPerTable.zipWithIndex.map { case (np, t) =>
         struct(lit(t).as("tbl"),
@@ -557,20 +561,9 @@ object Similarity {
       }: _*)).as("tb"))
       .select(col("id"), col("tb.tbl").as("tbl"),
         col("tb.bucket").as("bucket"))
-    val bw = org.apache.spark.sql.expressions.Window
-      .partitionBy("tbl2", "bucket2")
-      .orderBy(xxhash64(col("tbl2"), col("bucket2"), col("b")), col("b"))
     keyed.toDF("a", "tbl", "bucket")
-      .join(keyed.toDF("b", "tbl2", "bucket2")
-          .withColumn("_br", row_number().over(bw))
-          .filter(col("_br") <= maxBucket)
-          // cap observability: see Dedup.knnCandidates — counts buckets
-          // of size >= maxBucket; sits ABOVE the filter so the
-          // Filter-over-Window adjacency keeps InferWindowGroupLimit
-          .observe("graft_knn_bucket_cap",
-            count(when(col("_br") === maxBucket, true))
-              .as("n_buckets_at_cap"))
-          .drop("_br"),
+      .join(Dedup.capPartners(keyed.toDF("b", "tbl2", "bucket2"),
+          Seq("tbl2", "bucket2"), "b", maxBucket),
         col("tbl") === col("tbl2") && col("bucket") === col("bucket2") &&
           col("a") =!= col("b"))
       .select("a", "b").distinct()
@@ -621,7 +614,7 @@ object Similarity {
         col("bucket") === col("probe") && col("id") =!= col("qid"))
       .withColumn("score",
         cosine(col("qvec"), col("vec"), col("nq"), col("nv")))
-    graft.ops.TopK(scored, Seq("qid"), scored("score"), Seq(scored("id")), k)
+    topKByQuery(scored, k)
       .select(col("qid"), col("id"), col("rnk"),
         round(col("score"), 4).as("score4"))
   }
@@ -688,7 +681,7 @@ object Similarity {
     // dim read off the (already materialized) code table instead of a
     // separate parquet-scan job — codes are per-dimension, same length
     val dim = codes.select(size(col("cv"))).head().getInt(0)
-    // ordered + int8-UB prefiltered (r16 verdict #3): the join emits
+    // ordered + int8-UB prefiltered: the join emits
     // only a < b (this caller filtered that anyway — proof at the
     // `ordered` param) and drops pairs whose provable int8 cosine upper
     // bound is below τ before they are emitted — the exact τ filter
@@ -739,15 +732,11 @@ object Similarity {
     require(planesPerTable.forall(p => p >= 1 && p <= 62),
       "plane counts must be in [1, 62] (bucket id must fit a long)")
     def bucketOfInt(codes: Column, planes: Int, tbl: Int): Column =
-      (0 until planes).map { p =>
-        val row = (0 until dim).map { i =>
-          Math.floorMod(
-            mix64(seed ^ (tbl * 1000003L) ^ (p * 8191L) ^ i.toLong),
-            17L) - 8L
-        }
-        val d = dot(codes, array(row.map(x => lit(x.toDouble)): _*))
-        when(d >= 0d, lit(1L << p)).otherwise(lit(0L))
-      }.reduce(_ + _)
+      planeBucket(codes, planes, dim) { (p, i) =>
+        Math.floorMod(
+          mix64(seed ^ (tbl * 1000003L) ^ (p * 8191L) ^ i.toLong),
+          17L) - 8L
+      }
     val nTables = planesPerTable.size
     val offsets = planesPerTable.scanLeft(0)(_ + _)
     require(offsets.last <= 62,
@@ -769,8 +758,7 @@ object Similarity {
     def bucketAt(t: Int): Column =
       shiftright(col("bvp"), offsets(t))
         .bitwiseAND(lit((1L << planesPerTable(t)) - 1L))
-    // Int8 cosine upper bound (r16 verdict #3 — prune BEFORE pair
-    // emission). The per-vector max-abs scales cancel in cosine, so with
+    // Int8 cosine upper bound (prune BEFORE pair emission). The per-vector max-abs scales cancel in cosine, so with
     // u := v·127/max|v| and c := the int8 codes, u_i ∈ [c_i, c_i + 1)
     // per dim (quantizeInt8's floor) and cosine(va, vb) = cosine(ua, ub)
     // EXACTLY. Over that box:
@@ -897,7 +885,7 @@ object Similarity {
     // borderLab's anti-join) — eager-checkpoint per the EAGER
     // CHECKPOINT DISCIPLINE (ops/llm/Dedup.scala) so the degree
     // aggregation over the pair fan-out runs ONCE, not once per
-    // consumer (the r10 plan executed it six times).
+    // consumer (unpinned, the plan executed it six times).
     val core = deg.filter(col("d") >= (minPts - 1).toLong)
       .select(col("src").as("id"))
       .localCheckpoint(true)
@@ -910,7 +898,7 @@ object Similarity {
     // singleton cores never appear in coreEdges — they label themselves.
     // coreLab feeds the core-row output, borderLab's cluster lookup and
     // (transitively) the noise anti-join — checkpoint so the CC-label
-    // join runs once (r10 plan: four executions).
+    // join runs once (unpinned: four executions).
     val coreLab = core.join(cc, core("id") === cc("node"), "left")
       .select(core("id"), coalesce(cc("rep"), core("id")).as("cluster"))
       .localCheckpoint(true)

@@ -32,13 +32,8 @@ object Unigram {
       : Seq[(String, Long)] = {
     require(maxLen >= 2, s"maxLen must be >= 2, got $maxLen")
     val w = words.toDF("word", "freq")
-    val cand = (1 to maxLen).map { l =>
-      w.filter(char_length(col("word")) >= l)
-        .select(explode(expr(
-          s"transform(sequence(1, char_length(word) - $l + 1), " +
-            s"i -> substring(word, i, $l))")).as("piece"),
-          col("freq"))
-    }.reduce(_ unionByName _)
+    val cand = (1 to maxLen).map(WordPiece.substrings(w, _))
+      .reduce(_ unionByName _)
       .groupBy("piece").agg(sum("freq").as("wt"))
     val kept = cand.filter(char_length(col("piece")) === 1)
       .unionByName(cand.filter(char_length(col("piece")) >= 2)

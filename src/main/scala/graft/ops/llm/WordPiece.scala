@@ -37,6 +37,16 @@ object WordPiece {
       .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("freq"))
 
+  /** Every length-`l` substring `piece` of each `(word, freq)` row, with
+    * the word's `freq`.
+    */
+  private[llm] def substrings(w: DataFrame, l: Int): DataFrame =
+    w.filter(char_length(col("word")) >= l)
+      .select(explode(expr(
+        s"transform(sequence(1, char_length(word) - $l + 1), " +
+          s"i -> substring(word, i, $l))")).as("piece"),
+        col("freq"))
+
   /** The deterministic corpus vocabulary (driver-side, vocab-sized):
     * all single chars plus topN substrings len 2..maxLen by
     * (occurrence-weighted freq desc, piece asc).
@@ -48,13 +58,7 @@ object WordPiece {
     val chars = w.select(explode(expr(
       "transform(sequence(1, char_length(word)), i -> substring(word, i, 1))"
     )).as("piece")).distinct()
-    val subs = (2 to maxLen).map { l =>
-      w.filter(char_length(col("word")) >= l)
-        .select(explode(expr(
-          s"transform(sequence(1, char_length(word) - $l + 1), " +
-            s"i -> substring(word, i, $l))")).as("piece"),
-          col("freq"))
-    }.reduce(_ unionByName _)
+    val subs = (2 to maxLen).map(substrings(w, _)).reduce(_ unionByName _)
     val top = subs.groupBy("piece").agg(sum("freq").as("wt"))
       .orderBy(col("wt").desc, col("piece")).limit(topN)
       .select("piece")

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.table
@@ -27,8 +28,7 @@ object AnalyticsQueries {
     * The double product is IEEE-identical in both engines; rounding to an
     * integral double then casting long is exact.
     */
-  private def revCents(price: org.apache.spark.sql.Column,
-                       discount: org.apache.spark.sql.Column) =
+  private def revCents(price: Column, discount: Column) =
     round(price * (lit(1.0) - discount) * 100).cast("long")
 
   // 12h-gap sessionization in exact µs: `sess(user_id, event_id, tsu, $idx)`
@@ -111,6 +111,19 @@ object AnalyticsQueries {
       |FROM c ASOF LEFT JOIN v
       |  ON c.user_id = v.user_id AND c.tsu >= v.tsu""".stripMargin
 
+  // Spark side of the as-of joins' inputs: clicks `(user_id, tsu,
+  // click_id)` and views `(user_id, tsu, view_id)` in µs.
+  private def clickViewEvents(s: SparkSession,
+                              dir: String): (DataFrame, DataFrame) = {
+    val e = table(s, dir, "events")
+      .withColumn("tsu", expr("ts div 1000"))
+    val clicks = e.filter(e("event_type") === "click")
+      .select(col("user_id"), col("tsu"), col("event_id").as("click_id"))
+    val views = e.filter(e("event_type") === "view")
+      .select(col("user_id"), col("tsu"), col("event_id").as("view_id"))
+    (clicks, views)
+  }
+
   // Counts of consecutive event-type pairs per user; q_transitions and
   // q_stream_transitions share this oracle.
   private val duckTransitions =
@@ -123,6 +136,14 @@ object AnalyticsQueries {
       |SELECT ft AS from_type, tt AS to_type,
       |  CAST(count(*) AS BIGINT) cnt
       |FROM nx WHERE tt IS NOT NULL GROUP BY 1, 2""".stripMargin
+
+  // Spark side of the transitions' `e` and its per-user time order.
+  private def userEvents(s: SparkSession, dir: String): DataFrame =
+    table(s, dir, "events")
+      .select(col("user_id"), col("event_id"), col("event_type"),
+        expr("ts div 1000").as("tsu"))
+  private def byUserTime: WindowSpec =
+    Window.partitionBy("user_id").orderBy("tsu", "event_id")
 
   // The 20 most frequent words (ties by word); q_stream_topk and its update
   // twin share this oracle.
@@ -170,6 +191,21 @@ object AnalyticsQueries {
       |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
       |    * (1000 - CAST(round(l_discount * 1000) AS BIGINT)))
       |    AS BIGINT) AS revenue_ppm_cents""".stripMargin
+
+  // Suppliers joined to their nation's name, projected to `cols`.
+  private def supplierNations(s: SparkSession, dir: String,
+                              cols: Column*): DataFrame = {
+    val n = table(s, dir, "nation")
+      .select(col("n_nationkey"), col("n_name"))
+    table(s, dir, "supplier")
+      .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
+      .select(cols: _*)
+  }
+
+  // Spark side of the Q5 revenue: cents × (1000 − milli discount).
+  private def q5Rev: Column =
+    round(col("l_extendedprice") * 100).cast("long") *
+      (lit(1000L) - round(col("l_discount") * 1000).cast("long"))
 
   val all: Map[String, Q] = Map(
 
@@ -602,12 +638,7 @@ object AnalyticsQueries {
     // probe). Oracle uses DuckDB's native ASOF LEFT JOIN.
     "q_asof_join" -> Q(duckAsofJoin) {
       (s, dir) =>
-        val e = table(s, dir, "events")
-          .withColumn("tsu", expr("ts div 1000"))
-        val clicks = e.filter(e("event_type") === "click")
-          .select(col("user_id"), col("tsu"), col("event_id").as("click_id"))
-        val views = e.filter(e("event_type") === "view")
-          .select(col("user_id"), col("tsu"), col("event_id").as("view_id"))
+        val (clicks, views) = clickViewEvents(s, dir)
         TimeJoins.asof(clicks, views, "user_id", "tsu",
             "click_id", "view_id")
           .withColumnRenamed("tsu", "ts")
@@ -698,10 +729,8 @@ object AnalyticsQueries {
     // lead() window on the user exchange, then a tiny 5x5 rollup.
     "q_transitions" -> Q(duckTransitions) {
       (s, dir) =>
-        val e = table(s, dir, "events")
-          .select(col("user_id"), col("event_id"), col("event_type"),
-            expr("ts div 1000").as("tsu"))
-        val w = Window.partitionBy("user_id").orderBy("tsu", "event_id")
+        val e = userEvents(s, dir)
+        val w = byUserTime
         e.withColumn("to_type", lead("event_type", 1).over(w))
           .filter(col("to_type").isNotNull)
           .groupBy(col("event_type").as("from_type"), col("to_type"))
@@ -731,10 +760,8 @@ object AnalyticsQueries {
         |SELECT e1, e2, e3, n_paths FROM p
         |ORDER BY n_paths DESC, e1, e2, e3 LIMIT 20""".stripMargin) {
       (s, dir) =>
-        val e = table(s, dir, "events")
-          .select(col("user_id"), col("event_id"), col("event_type"),
-            expr("ts div 1000").as("tsu"))
-        val w = Window.partitionBy("user_id").orderBy("tsu", "event_id")
+        val e = userEvents(s, dir)
+        val w = byUserTime
         e.select(col("event_type").as("e1"),
             lead("event_type", 1).over(w).as("e2"),
             lead("event_type", 2).over(w).as("e3"))
@@ -772,10 +799,8 @@ object AnalyticsQueries {
         |  CAST(max(CASE WHEN rn = (9 * n + 9) // 10 THEN gap_us END)
         |    AS BIGINT) AS p90_us
         |FROM g GROUP BY 1, 2""".stripMargin) { (s, dir) =>
-      val e = table(s, dir, "events")
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          expr("ts div 1000").as("tsu"))
-      val w = Window.partitionBy("user_id").orderBy("tsu", "event_id")
+      val e = userEvents(s, dir)
+      val w = byUserTime
       val nx = e.select(col("event_type").as("ft"),
           lead("event_type", 1).over(w).as("tt"),
           (lead("tsu", 1).over(w) - col("tsu")).as("gap_us"))
@@ -960,8 +985,7 @@ object AnalyticsQueries {
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
       val r = table(s, dir, "region")
         .select(col("r_regionkey"), col("r_name"))
-      val rev = round(col("l_extendedprice") * 100).cast("long") *
-        (lit(1000L) - round(col("l_discount") * 1000).cast("long"))
+      val rev = q5Rev
       o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .join(l, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(sup), col("l_suppkey") === col("s_suppkey") &&
@@ -1243,8 +1267,7 @@ object AnalyticsQueries {
         .filter(col("l_shipdate") > cut)
         .select(col("l_orderkey"), col("l_extendedprice"),
           col("l_discount"))
-      val rev = round(col("l_extendedprice") * 100).cast("long") *
-        (lit(1000L) - round(col("l_discount") * 1000).cast("long"))
+      val rev = q5Rev
       o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .join(l, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("l_orderkey"),
@@ -1377,8 +1400,7 @@ object AnalyticsQueries {
       val l = table(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"),
           col("l_extendedprice"), col("l_discount"))
-      val rev = round(col("l_extendedprice") * 100).cast("long") *
-        (lit(1000L) - round(col("l_discount") * 1000).cast("long"))
+      val rev = q5Rev
       l.join(o, col("o_orderkey") === col("l_orderkey"))
         .join(broadcast(c), col("c_custkey") === col("o_custkey"))
         .join(broadcast(sup), col("s_suppkey") === col("l_suppkey"))
@@ -1436,8 +1458,7 @@ object AnalyticsQueries {
       val l = table(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_extendedprice"), col("l_discount"))
-      val rev = round(col("l_extendedprice") * 100).cast("long") *
-        (lit(1000L) - round(col("l_discount") * 1000).cast("long"))
+      val rev = q5Rev
       l.join(broadcast(p), col("p_partkey") === col("l_partkey"))
         .join(o, col("o_orderkey") === col("l_orderkey"))
         .join(broadcast(cust), col("c_custkey") === col("o_custkey"))
@@ -1482,16 +1503,11 @@ object AnalyticsQueries {
         .select(col("p_partkey"), col("p_retailprice"))
       val o = table(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderdate"))
-      val n = table(s, dir, "nation")
-        .select(col("n_nationkey"), col("n_name"))
-      val sup = table(s, dir, "supplier")
-        .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name"))
+      val sup = supplierNations(s, dir, col("s_suppkey"), col("n_name"))
       val l = table(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_quantity"), col("l_extendedprice"), col("l_discount"))
-      val profit = round(col("l_extendedprice") * 100).cast("long") *
-        (lit(1000L) - round(col("l_discount") * 1000).cast("long")) -
+      val profit = q5Rev -
         round(col("l_quantity")).cast("long") *
         round(col("p_retailprice") * 100).cast("long") * lit(800L)
       l.join(broadcast(p), col("p_partkey") === col("l_partkey"))
@@ -1561,8 +1577,7 @@ object AnalyticsQueries {
       val l = table(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_shipdate"),
           col("l_extendedprice"), col("l_discount"))
-      val rev = round(col("l_extendedprice") * 100).cast("long") *
-        (lit(1000L) - round(col("l_discount") * 1000).cast("long"))
+      val rev = q5Rev
       l.join(broadcast(p), col("p_partkey") === col("l_partkey"))
         .select((year(col("l_shipdate")) * 100 +
             month(col("l_shipdate"))).cast("long").as("ym"),
@@ -1660,8 +1675,7 @@ object AnalyticsQueries {
           col("p_size").between(1, 10) && qty.between(10L, 20L), "b2")
         .when(col("p_brand") === "Brand#3" &&
           col("p_size").between(1, 15) && qty.between(20L, 30L), "b3")
-      val rev = round(col("l_extendedprice") * 100).cast("long") *
-        (lit(1000L) - round(col("l_discount") * 1000).cast("long"))
+      val rev = q5Rev
       l.join(broadcast(p), col("p_partkey") === col("l_partkey"))
         .select(branch.as("branch"), rev.as("rev"))
         .filter(col("branch").isNotNull)
@@ -1715,11 +1729,8 @@ object AnalyticsQueries {
         // 2 consumers: the global (total, n) and the gate probe
         .localCheckpoint(true)
       val t = g.agg(sum("qty").as("total"), count(lit(1)).as("n"))
-      val n = table(s, dir, "nation")
-        .select(col("n_nationkey"), col("n_name"))
-      val sup = table(s, dir, "supplier")
-        .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("s_name"), col("n_name"))
+      val sup = supplierNations(s, dir,
+        col("s_suppkey"), col("s_name"), col("n_name"))
       g.crossJoin(broadcast(t))
         .filter(col("qty") * 10L * col("n") > lit(12L) * col("total"))
         .join(broadcast(sup), col("s_suppkey") === col("l_suppkey"))
@@ -1844,8 +1855,7 @@ object AnalyticsQueries {
         .filter(col("l_returnflag") === "R")
         .select(col("l_orderkey"), col("l_extendedprice"),
           col("l_discount"))
-      val rev = round(col("l_extendedprice") * 100).cast("long") *
-        (lit(1000L) - round(col("l_discount") * 1000).cast("long"))
+      val rev = q5Rev
       val c = table(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"),
           round(col("c_acctbal") * 100).cast("long").as("acctbal_cents"),
@@ -1889,8 +1899,7 @@ object AnalyticsQueries {
         |JOIN supplier ON s_suppkey = l_suppkey
         |CROSS JOIN m
         |WHERE total_rev_mcents = mx""".stripMargin) { (s, dir) =>
-      val rev = round(col("l_extendedprice") * 100).cast("long") *
-        (lit(1000L) - round(col("l_discount") * 1000).cast("long"))
+      val rev = q5Rev
       val r = table(s, dir, "lineitem")
         .filter(col("l_shipdate") >=
             to_timestamp(lit("1997-01-01 00:00:00")) &&
@@ -2071,7 +2080,7 @@ object AnalyticsQueries {
       val day = expr("(ts div 1000) div 86400000000")
       val treat = col("user_id") % 2 === 1
       val click = col("event_type") === "click"
-      def cell(p: org.apache.spark.sql.Column) =
+      def cell(p: Column) =
         sum(when(p, 1L).otherwise(0L))
       val cells = ev.select(day.as("day"), treat.as("treat"),
           click.as("click"))
@@ -2148,8 +2157,8 @@ object AnalyticsQueries {
       val ev = table(s, dir, "events")
       val x = round(col("value") * 1000).cast("long")
       val treat = col("user_id") % 2 === 1
-      def arm(p: org.apache.spark.sql.Column,
-              v: org.apache.spark.sql.Column) =
+      def arm(p: Column,
+              v: Column) =
         sum(when(p, v).otherwise(0L))
       val sums = ev.select(col("event_type"), treat.as("treat"), x.as("x"))
         .groupBy("event_type")
@@ -2432,12 +2441,7 @@ object AnalyticsQueries {
         |  CASE WHEN gap <= 600000000 THEN view_id END AS view_id,
         |  CASE WHEN gap <= 600000000 THEN gap END AS gap
         |FROM m""".stripMargin) { (s, dir) =>
-      val e = table(s, dir, "events")
-        .withColumn("tsu", expr("ts div 1000"))
-      val clicks = e.filter(e("event_type") === "click")
-        .select(col("user_id"), col("tsu"), col("event_id").as("click_id"))
-      val views = e.filter(e("event_type") === "view")
-        .select(col("user_id"), col("tsu"), col("event_id").as("view_id"))
+      val (clicks, views) = clickViewEvents(s, dir)
       TimeJoins.asofTolerance(clicks, views, "user_id", "tsu",
           "click_id", "view_id", tolerance = 600000000L)
         .withColumnRenamed("tsu", "ts")

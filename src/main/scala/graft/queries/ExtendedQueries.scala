@@ -1,7 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.table
@@ -19,6 +19,18 @@ object ExtendedQueries {
 
   /** Exact integer cents of a double money column. */
   private def cents(c: Column): Column = round(c * 100).cast("long")
+
+  // Orders per priority, in (price cents, orderkey) order.
+  private def byPriorityPrice(o: DataFrame): WindowSpec =
+    Window.partitionBy(o("o_orderpriority"))
+      .orderBy(cents(o("o_totalprice")), o("o_orderkey"))
+
+  // Line items `(flag, l_orderkey, l_linenumber, c)`, `c` the price in
+  // cents.
+  private def lineCents(s: SparkSession, dir: String): DataFrame =
+    table(s, dir, "lineitem")
+      .select(col("l_returnflag").as("flag"), col("l_orderkey"),
+        col("l_linenumber"), cents(col("l_extendedprice")).as("c"))
 
   // Docs sharing any shingle with the 5 probe docs; q_contamination and
   // q_contamination_bloom share this oracle.
@@ -234,8 +246,7 @@ object ExtendedQueries {
         |  ORDER BY CAST(round(o_totalprice * 100) AS BIGINT), o_orderkey)"""
         .stripMargin) { (s, dir) =>
       val o = table(s, dir, "orders")
-      val w = Window.partitionBy(o("o_orderpriority"))
-        .orderBy(cents(o("o_totalprice")), o("o_orderkey"))
+      val w = byPriorityPrice(o)
       o.select(o("o_orderkey"),
         ntile(4).over(w).as("quartile"),
         percent_rank().over(w).as("pr"),
@@ -659,10 +670,7 @@ object ExtendedQueries {
         |    AS BIGINT) AS n_clamped
         |FROM r JOIN q ON q.flag = r.flag
         |GROUP BY 1, 3, 4""".stripMargin) { (s, dir) =>
-      val v = table(s, dir, "lineitem")
-        .select(col("l_returnflag").as("flag"), col("l_orderkey"),
-          col("l_linenumber"),
-          round(col("l_extendedprice") * 100).cast("long").as("c"))
+      val v = lineCents(s, dir)
       val w = Window.partitionBy("flag")
         .orderBy("c", "l_orderkey", "l_linenumber")
       val r = v.select(col("flag"), col("c"),
@@ -743,10 +751,7 @@ object ExtendedQueries {
         |SELECT pt.flag AS l_returnflag, n, pt.mean_micro, n_replicates,
         |  lo_micro, hi_micro
         |FROM pt JOIN ci ON ci.flag = pt.flag""".stripMargin) { (s, dir) =>
-      val v = table(s, dir, "lineitem")
-        .select(col("l_returnflag").as("flag"), col("l_orderkey"),
-          col("l_linenumber"),
-          round(col("l_extendedprice") * 100).cast("long").as("c"))
+      val v = lineCents(s, dir)
       // ONE sha per row — its 32 hex-byte pairs seed all 16 replicate
       // lanes (byte b is replicate b's uniform), 16× fewer digests
       val e = v
@@ -962,8 +967,7 @@ object ExtendedQueries {
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"""
         .stripMargin) { (s, dir) =>
       val o = table(s, dir, "orders")
-      val w = Window.partitionBy(o("o_orderpriority"))
-        .orderBy(cents(o("o_totalprice")), o("o_orderkey"))
+      val w = byPriorityPrice(o)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       o.select(o("o_orderkey"),
         first(o("o_orderkey")).over(w).as("first_key"),

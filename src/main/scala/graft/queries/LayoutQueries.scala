@@ -59,7 +59,36 @@ object LayoutQueries {
     */
   private val planTarget = 16384L
 
-  def all: Map[String, Q] = Map(
+  /** Zone size (rows per ingest batch / file) and the skip predicate's
+    * range for the zone-map queries.
+    */
+  private val zoneRows = 50
+  private val predLo = 300
+  private val predHi = 400
+
+  // Zone stats over n_chars and the [predLo, predHi] skip decision.
+  private val duckZoneStats =
+    s"""  CAST(count(*) AS BIGINT) AS n_rows,
+      |  CAST(min(n_chars) AS BIGINT) AS n_chars_min,
+      |  CAST(max(n_chars) AS BIGINT) AS n_chars_max,
+      |  CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END)
+      |    AS BIGINT) AS n_chars_nulls,
+      |  coalesce(max(n_chars) < $predLo OR min(n_chars) > $predHi,
+      |    false) AS skip""".stripMargin
+
+  /** Point-lookup probe for the bloom-zone query (a mid-range n_chars
+    * value present in ~1 of 10 zones at every SF).
+    */
+  private val probeChars = 300L
+
+  /** Z-order zone size and the 2-D predicate box (each scaled dim in
+    * [64, 127] — a quarter of each axis, 1/16 of the plane).
+    */
+  private val zZoneRows = 100
+  private val boxLo = 64
+  private val boxHi = 127
+
+  val all: Map[String, Q] = Map(
 
     // S1 csv — write-side quoting/whitespace and read-side schema must
     // agree byte-for-byte with the parquet truth.
@@ -247,35 +276,6 @@ object LayoutQueries {
       ZoneMaps.pruneBox(zones, Seq(
         ("zx", lit(boxLo), lit(boxHi)), ("zy", lit(boxLo), lit(boxHi))))
     })
-
-  /** Zone size (rows per ingest batch / file) and the skip predicate's
-    * range for the zone-map queries.
-    */
-  private val zoneRows = 50
-  private val predLo = 300
-  private val predHi = 400
-
-  // Zone stats over n_chars and the [predLo, predHi] skip decision.
-  private val duckZoneStats =
-    s"""  CAST(count(*) AS BIGINT) AS n_rows,
-      |  CAST(min(n_chars) AS BIGINT) AS n_chars_min,
-      |  CAST(max(n_chars) AS BIGINT) AS n_chars_max,
-      |  CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END)
-      |    AS BIGINT) AS n_chars_nulls,
-      |  coalesce(max(n_chars) < $predLo OR min(n_chars) > $predHi,
-      |    false) AS skip""".stripMargin
-
-  /** Point-lookup probe for the bloom-zone query (a mid-range n_chars
-    * value present in ~1 of 10 zones at every SF).
-    */
-  private val probeChars = 300L
-
-  /** Z-order zone size and the 2-D predicate box (each scaled dim in
-    * [64, 127] — a quarter of each axis, 1/16 of the plane).
-    */
-  private val zZoneRows = 100
-  private val boxLo = 64
-  private val boxHi = 127
 
   /** Events with their z-order coords and curve rank: zx/zy scaled
     * buckets (ZOrder.bucket over the column-wide bounds — one 1-row

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -157,6 +158,18 @@ object LlmQueries {
       |$duckJaccardPairs,
       |${duckCc("pairs")}""".stripMargin
 
+  // Spark side of duckJaccardCc: each clustered doc's component `rep`.
+  private def jaccardReps(s: SparkSession, dir: String): DataFrame =
+    Dedup.connectedComponents(SharedBases.jaccardPairs(s, dir))
+      .select(col("node").as("doc_id"), col("rep"))
+
+  // The docs of `d` that survive near-dup removal: those in no pair and
+  // each component's representative.
+  private def jaccardSurvivors(s: SparkSession, dir: String,
+                               d: DataFrame): DataFrame =
+    d.join(jaccardReps(s, dir), Seq("doc_id"), "left")
+      .filter(col("rep").isNull || col("rep") === col("doc_id"))
+
   // Same-bucket kNN candidates `knn_cand(a, b)` over `mh_banded`, both
   // directions, uncapped.
   private val duckKnnCand =
@@ -227,8 +240,8 @@ object LlmQueries {
     * checkpointed (it feeds every downstream graph branch — EAGER
     * CHECKPOINT DISCIPLINE, ops/llm/Dedup.scala).
     */
-  private def symmetricKnnEdges(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+  private def symmetricKnnEdges(s: SparkSession,
+      dir: String): DataFrame = {
     val g0 = SharedBases.knnEdges(s, dir)
       .select(col("doc_id").as("src"), col("nbr_id").as("dst"))
     g0.union(g0.select(col("dst").as("src"), col("src").as("dst")))
@@ -241,8 +254,8 @@ object LlmQueries {
     * Returns (e2, labels) — BOTH eagerly checkpointed (multi-branch
     * consumers; see ops/llm/Dedup.scala "EAGER CHECKPOINT DISCIPLINE").
     */
-  private def lpa3(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private def lpa3(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
     val e2 = symmetricKnnEdges(s, dir)
     var lbl = e2.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
@@ -676,6 +689,17 @@ object LlmQueries {
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
       |  FROM t)""".stripMargin
 
+  // Spark side of duckPackCum.
+  private def packCum(d: DataFrame): DataFrame = {
+    val shard = (expr("cast(conv(substr(sha2(lower(trim(text)), 256)," +
+      " 1, 8), 16, 10) as bigint)") % 10).cast("int")
+    val w = Window.partitionBy("shard").orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    d.select(d("doc_id"), shard.as("shard"),
+        size(TextOps.tokens(d("text"))).cast("long").as("n_tok"))
+      .withColumn("cum", sum("n_tok").over(w))
+  }
+
   // The training-mix tail over `src(doc_id, lang, q)`: token and vocab
   // counts (CTE `tok`), the density gate, the 5000-token budget and the
   // per-lang report.
@@ -702,6 +726,31 @@ object LlmQueries {
       |FROM sel WHERE tok_cum - n_tok < 5000
       |GROUP BY lang""".stripMargin
 
+  // Spark side of duckRecipeMix over `src(doc_id, lang, q)`.
+  private def recipeMix(src: DataFrame): DataFrame = {
+    val toks = split(col("q"), "\\s+")
+    val qual = src.select(col("doc_id"), col("lang"),
+        size(toks).cast("long").as("n_tok"),
+        size(array_distinct(toks)).cast("long").as("n_vocab"))
+      .filter(col("n_tok") >= 3)
+      .select(col("doc_id"), col("lang"), col("n_tok"),
+        expr("(n_vocab * 1000000) div n_tok").as("density_ppm"))
+      // eager checkpoint the skinny selection table before PrefixSum:
+      // lang survives only the data branch, so column pruning makes
+      // the offsets branch a DIFFERENT subtree and AQE exchange reuse
+      // cannot collapse it — unpinned, the offsets branch re-ran the
+      // whole upstream dedup chain including a second corpus scan
+      // (PlanAuditSpec asserts the final plan reads no parquet)
+      .localCheckpoint(true)
+    graft.ops.PrefixSum.runningSum(qual,
+        Seq(col("density_ppm").desc, col("doc_id").asc),
+        col("n_tok"), "tok_cum")
+      .filter(col("tok_cum") - col("n_tok") < 5000)
+      .groupBy("lang")
+      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
+        min("density_ppm").as("min_density_ppm"))
+  }
+
   // Per-doc SimHash bit votes `votes(doc_id, j, v)` over 60-bit sha256
   // token hashes.
   private val duckSimHashVotes =
@@ -726,6 +775,14 @@ object LlmQueries {
       |    i -> t[i] || ' ' || t[i+1])) bigram
       |  FROM toks WHERE len(t) >= 2)""".stripMargin
 
+  // Spark side of duckBigramOccs, counted: `(bigram, cnt, head)`. The
+  // contains-" " filter drops the partial shingle of <2-token docs.
+  private def bigramCounts(d: DataFrame): DataFrame =
+    d.select(explode(TextOps.shingleStream(d("text"), 2)).as("bigram"))
+      .filter(col("bigram").contains(" "))
+      .groupBy("bigram").agg(count(lit(1)).as("cnt"))
+      .withColumn("head", substring_index(col("bigram"), " ", 1))
+
   // Unigram surprisal costs `m(term, micro)` from term counts `tf`.
   private[queries] val duckTermCosts =
     """f AS (SELECT term, CAST(sum(tf) AS BIGINT) AS freq FROM tf
@@ -734,6 +791,14 @@ object LlmQueries {
       |m AS (SELECT term,
       |        CAST(round(-ln(freq / total) * 10000) AS BIGINT) AS micro
       |      FROM f, n)""".stripMargin
+
+  // Spark side of duckTermCosts' `m`, from `f(term, freq)` and its 1-row
+  // total `n1`.
+  private def termCosts(f: DataFrame, n1: DataFrame): DataFrame =
+    f.crossJoin(broadcast(n1))
+      .select(col("term"),
+        round(-log(col("freq") / col("total")) * 10000, 0)
+          .cast("long").as("micro"))
 
   // Per-doc chunk count and duplicate share from `w(doc_id, cnt)`.
   private val duckChunkDupStats =
@@ -1107,14 +1172,7 @@ object LlmQueries {
         |  CAST((cum - n_tok) // 2048 AS BIGINT) AS seq_id,
         |  CAST((cum - n_tok) % 2048 AS BIGINT) AS seq_offset
         |FROM c""".stripMargin) { (s, dir) =>
-      val d = table(s, dir, "documents")
-      val shard = (expr("cast(conv(substr(sha2(lower(trim(text)), 256)," +
-        " 1, 8), 16, 10) as bigint)") % 10).cast("int")
-      val w = Window.partitionBy("shard").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      d.select(d("doc_id"), shard.as("shard"),
-          size(TextOps.tokens(d("text"))).cast("long").as("n_tok"))
-        .withColumn("cum", sum("n_tok").over(w))
+      packCum(table(s, dir, "documents"))
         .select(col("doc_id"), col("shard"), col("n_tok"),
           expr("(cum - n_tok) div 2048").as("seq_id"),
           ((col("cum") - col("n_tok")) % 2048).as("seq_offset"))
@@ -1136,14 +1194,7 @@ object LlmQueries {
         |  CAST(sum(n_tok) AS BIGINT) AS sum_tok,
         |  CAST(max(cum) - seq_id * 2048 - 2048 AS BIGINT) AS overflow_tok
         |FROM k GROUP BY 1, 2""".stripMargin) { (s, dir) =>
-      val d = table(s, dir, "documents")
-      val shard = (expr("cast(conv(substr(sha2(lower(trim(text)), 256)," +
-        " 1, 8), 16, 10) as bigint)") % 10).cast("int")
-      val w = Window.partitionBy("shard").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      d.select(d("doc_id"), shard.as("shard"),
-          size(TextOps.tokens(d("text"))).cast("long").as("n_tok"))
-        .withColumn("cum", sum("n_tok").over(w))
+      packCum(table(s, dir, "documents"))
         .withColumn("seq_id", expr("(cum - n_tok) div 2048"))
         .groupBy("shard", "seq_id")
         .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("sum_tok"),
@@ -1175,10 +1226,7 @@ object LlmQueries {
       val tf = tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       val f = tf.groupBy("term").agg(sum("tf").as("freq"))
       val n1 = f.agg(sum("freq").cast("double").as("total"))
-      val m = f.crossJoin(broadcast(n1))
-        .select(col("term"),
-          round(-log(col("freq") / col("total")) * 10000, 0)
-            .cast("long").as("micro"))
+      val m = termCosts(f, n1)
       tf.join(m, "term")
         .groupBy("doc_id")
         .agg(sum(col("tf") * col("micro")).cast("long")
@@ -1433,9 +1481,7 @@ object LlmQueries {
         |$duckJaccardCc
         |SELECT node AS doc_id, CAST(min(rep) AS BIGINT) AS rep
         |FROM cc GROUP BY node""".stripMargin) { (s, dir) =>
-      val pairs = SharedBases.jaccardPairs(s, dir)
-      Dedup.connectedComponents(pairs)
-        .select(col("node").as("doc_id"), col("rep"))
+      jaccardReps(s, dir)
     },
 
     // L103 — soft-dedup repeat weighting (the data-constrained
@@ -1482,12 +1528,7 @@ object LlmQueries {
         |LEFT JOIN reps r ON d.doc_id = r.doc_id
         |WHERE r.rep IS NULL OR r.rep = d.doc_id""".stripMargin) { (s, dir) =>
       val d = table(s, dir, "documents")
-      val pairs = SharedBases.jaccardPairs(s, dir)
-      val reps = Dedup.connectedComponents(pairs)
-        .select(col("node").as("doc_id"), col("rep"))
-      d.join(reps, Seq("doc_id"), "left")
-        .filter(col("rep").isNull || col("rep") === col("doc_id"))
-        .select(col("doc_id"))
+      jaccardSurvivors(s, dir, d).select(col("doc_id"))
     },
 
     // Near-dup cluster size distribution: (cluster_size, n_clusters) over
@@ -2167,22 +2208,8 @@ object LlmQueries {
         |  cos_micro
         |FROM rr WHERE rnk <= 5""".stripMargin) { (s, dir) =>
       val d = table(s, dir, "documents")
-      val tok = d.select(col("doc_id").as("doc"),
-        explode(TextOps.tokens(col("text"))).as("term"))
-      val tf = tok.groupBy("doc", "term").agg(count(lit(1)).as("tf"))
-      val dfq = tok.groupBy("term").agg(countDistinct("doc").as("df"))
-      val n1 = d.agg(count(lit(1)).as("n_docs"))
-      val w = tf.join(dfq, "term").crossJoin(broadcast(n1))
-        .select(col("doc"), col("term"),
-          (col("tf") * round(lit(10000) *
-              log(col("n_docs").cast("double") / col("df").cast("double")))
-            .cast("long")).as("wt"))
-        .filter(col("wt") =!= 0)
       // packed once; anchors broadcast — corpus streams, no pair shuffle
-      val packed = w.groupBy("doc")
-        .agg(graft.functions.SparseDot.packPostings(
-            col("term"), col("wt")).as("ent"),
-          sum(col("wt") * col("wt")).as("n2"))
+      val packed = Dedup.tfidfPacked(d, "doc_id", "text")
         .localCheckpoint(true)
       val anchors = packed.filter(col("doc") < 5)
         .select(col("doc").as("a"), col("ent").as("ea"),
@@ -2194,11 +2221,7 @@ object LlmQueries {
         // weights strictly positive => dot != 0 <=> term overlap (the
         // oracle's inner term join row set, the L73 argument)
         .filter(col("dot") =!= 0)
-        .select(col("a"), col("b"),
-          round(lit(1000000) * col("dot").cast("double") /
-              (sqrt(col("na2").cast("double")) *
-               sqrt(col("nb2").cast("double"))))
-            .cast("long").as("cos_micro"))
+        .select(col("a"), col("b"), Dedup.cosMicro.as("cos_micro"))
       // exclusion set pre-filtered to pairs TOUCHING an anchor (every
       // scored pair has one, so the anti-join result is unchanged) and
       // broadcast — anchor-count-sized, so at corpus scale the pair
@@ -2359,7 +2382,7 @@ object LlmQueries {
       val nodes = edges.select(col("src").as("id"))
         .union(edges.select(col("dst").as("id")))
         .distinct().localCheckpoint(true)
-      def halfRound(score: org.apache.spark.sql.DataFrame,
+      def halfRound(score: DataFrame,
                     from: String, to: String) = {
         val r = edges
           .join(score.withColumnRenamed("id", "jid"),
@@ -3104,7 +3127,7 @@ object LlmQueries {
         .localCheckpoint(true)
       val asgN = rep.select(col("doc_id"), splitOf("doc_id").as("split"))
         .localCheckpoint(true)
-      def audit(asg: org.apache.spark.sql.DataFrame, method: String) = {
+      def audit(asg: DataFrame, method: String) = {
         val leaks = pairs
           .join(asg.select(col("doc_id").as("a"), col("split").as("sa")),
             "a")
@@ -3214,10 +3237,7 @@ object LlmQueries {
         .select(explode(TextOps.tokens(d("text"))).as("term"))
       val f = rtok.groupBy("term").agg(count(lit(1)).as("freq"))
       val n1 = f.agg(sum("freq").cast("double").as("total"))
-      val m = f.crossJoin(broadcast(n1))
-        .select(col("term"),
-          round(-log(col("freq") / col("total")) * 10000, 0)
-            .cast("long").as("micro"))
+      val m = termCosts(f, n1)
       val oov = n1.select(round(log(col("total") + 1) * 10000, 0)
         .cast("long").as("oov_micro"))
       val ttf = d.filter(col("source") === "src1")
@@ -3319,14 +3339,7 @@ object LlmQueries {
         |  (cnt * 1000) // head_cnt AS cond_permille
         |FROM r WHERE rnk <= 5""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val d = table(s, dir, "documents")
-      // codegen shingle stream; the contains-" " filter drops the partial
-      // shingle of <2-token docs (== the old size(t) >= 2 pre-filter)
-      val c = d.select(explode(TextOps.shingleStream(d("text"), 2))
-          .as("bigram"))
-        .filter(col("bigram").contains(" "))
-        .groupBy("bigram").agg(count(lit(1)).as("cnt"))
-        .withColumn("head", substring_index(col("bigram"), " ", 1))
+      val c = bigramCounts(table(s, dir, "documents"))
       val byHead = Window.partitionBy("head")
       c.withColumn("head_cnt", sum(col("cnt")).over(byHead))
         .filter(col("head_cnt") >= 50)
@@ -3374,12 +3387,7 @@ object LlmQueries {
         |JOIN tl ON tl.tail = c.tail, b
         |ORDER BY c.cnt DESC, c.bigram
         |LIMIT 200""".stripMargin) { (s, dir) =>
-      val d = table(s, dir, "documents")
-      val c = d.select(explode(TextOps.shingleStream(d("text"), 2))
-          .as("bigram"))
-        .filter(col("bigram").contains(" "))
-        .groupBy("bigram").agg(count(lit(1)).as("cnt"))
-        .withColumn("head", substring_index(col("bigram"), " ", 1))
+      val c = bigramCounts(table(s, dir, "documents"))
         .withColumn("tail", substring_index(col("bigram"), " ", -1))
         // 4 consumers: contexts, continuations, the type total, and
         // the probe (EAGER CHECKPOINT DISCIPLINE, ops/llm/Dedup.scala)
@@ -4357,27 +4365,7 @@ object LlmQueries {
         .orderBy(col("doc_id"))
       val dedup = norm.withColumn("rn", row_number().over(wD))
         .filter(col("rn") === 1).drop("rn")
-      val toks = split(col("q"), "\\s+")
-      val qual = dedup.select(col("doc_id"), col("lang"),
-          size(toks).cast("long").as("n_tok"),
-          size(array_distinct(toks)).cast("long").as("n_vocab"))
-        .filter(col("n_tok") >= 3)
-        .select(col("doc_id"), col("lang"), col("n_tok"),
-          expr("(n_vocab * 1000000) div n_tok").as("density_ppm"))
-        // eager checkpoint the skinny selection table before PrefixSum:
-        // lang survives only the data branch, so column pruning makes
-        // the offsets branch a DIFFERENT subtree and AQE exchange reuse
-        // cannot collapse it — unpinned, the offsets branch re-ran the
-        // whole upstream dedup chain including a second corpus scan
-        // (PlanAuditSpec asserts the final plan reads no parquet)
-        .localCheckpoint(true)
-      graft.ops.PrefixSum.runningSum(qual,
-          Seq(col("density_ppm").desc, col("doc_id").asc),
-          col("n_tok"), "tok_cum")
-        .filter(col("tok_cum") - col("n_tok") < 5000)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
-          min("density_ppm").as("min_density_ppm"))
+      recipeMix(dedup)
     },
 
     // L59 — the FUZZY-dedup training-mix recipe: q_data_recipe with the
@@ -4409,34 +4397,10 @@ object LlmQueries {
         |  WHERE r.rep IS NULL OR r.rep = d.doc_id),
         |${duckRecipeMix("tokc", "surv")}""".stripMargin) { (s, dir) =>
       val d = table(s, dir, "documents")
-      val pairs = SharedBases.jaccardPairs(s, dir)
-      val reps = Dedup.connectedComponents(pairs)
-        .select(col("node").as("doc_id"), col("rep"))
-      val surv = d.join(reps, Seq("doc_id"), "left")
-        .filter(col("rep").isNull || col("rep") === col("doc_id"))
+      val surv = jaccardSurvivors(s, dir, d)
         .select(d("doc_id"), d("lang"),
           TextOps.normalized(d("text")).as("q"))
-      val toks = split(col("q"), "\\s+")
-      val qual = surv.select(col("doc_id"), col("lang"),
-          size(toks).cast("long").as("n_tok"),
-          size(array_distinct(toks)).cast("long").as("n_vocab"))
-        .filter(col("n_tok") >= 3)
-        .select(col("doc_id"), col("lang"), col("n_tok"),
-          expr("(n_vocab * 1000000) div n_tok").as("density_ppm"))
-        // eager checkpoint the skinny selection table before PrefixSum:
-        // lang survives only the data branch, so column pruning makes
-        // the offsets branch a DIFFERENT subtree and AQE exchange reuse
-        // cannot collapse it — unpinned, the offsets branch re-ran the
-        // whole upstream dedup chain including a second corpus scan
-        // (PlanAuditSpec asserts the final plan reads no parquet)
-        .localCheckpoint(true)
-      graft.ops.PrefixSum.runningSum(qual,
-          Seq(col("density_ppm").desc, col("doc_id").asc),
-          col("n_tok"), "tok_cum")
-        .filter(col("tok_cum") - col("n_tok") < 5000)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
-          min("density_ppm").as("min_density_ppm"))
+      recipeMix(surv)
     },
 
     // L56 — BPE merge training (the tokenizer-training kernel), 3
@@ -4573,7 +4537,7 @@ object LlmQueries {
       val unk =
         if (costs.isEmpty) 10000L else costs.iterator.map(_._2).max + 10000L
       def family(name: String, pieces: org.apache.spark.sql.Column,
-          src: org.apache.spark.sql.DataFrame, cnt: String) =
+          src: DataFrame, cnt: String) =
         src.select((pieces.cast("long") * col(cnt)).as("np"), col(cnt))
           .agg(sum(cnt).cast("long").as("n_words"),
             sum("np").cast("long").as("n_pieces"))

@@ -97,6 +97,16 @@ object MiningQueries {
       |h AS (SELECT doc_id, ch, CAST(count(*) AS BIGINT) cnt FROM c
       |      GROUP BY 1, 2)""".stripMargin
 
+  // Spark side of duckCharHist, folded by the one-pass codegen
+  // CharHistStats: `(doc_id, n_chars_norm, distinct_chars, stat)`.
+  private def charHist(d: DataFrame, stat: Column): DataFrame =
+    d.select(d("doc_id"), TextOps.normalized(d("text")).as("s"))
+      .filter(length(col("s")) >= 1)
+      .select(col("doc_id"), graft.functions.CharHistStats(col("s")).as("h"))
+      .select(col("doc_id"),
+        col("h.n_chars").as("n_chars_norm"),
+        col("h.distinct").as("distinct_chars"), stat)
+
   val all: Map[String, Q] = Map(
 
     // BM25 (k1=1.2, b=0.75) relevance of every document against the
@@ -435,15 +445,7 @@ object MiningQueries {
         |  CAST(round(CAST((n * n - ss) * 1000000 AS DOUBLE) /
         |             CAST(n * n AS DOUBLE)) AS BIGINT) AS gini_ppm
         |FROM a""".stripMargin) { (s, dir) =>
-      val d = table(s, dir, "documents")
-      val norm = d.select(d("doc_id"), TextOps.normalized(d("text")).as("s"))
-        .filter(length(col("s")) >= 1)
-      norm.select(col("doc_id"),
-          graft.functions.CharHistStats(col("s")).as("h"))
-        .select(col("doc_id"),
-          col("h.n_chars").as("n_chars_norm"),
-          col("h.distinct").as("distinct_chars"),
-          col("h.sum_sq").as("ss"))
+      charHist(table(s, dir, "documents"), col("h.sum_sq").as("ss"))
         .select(col("doc_id"), col("n_chars_norm"), col("distinct_chars"),
           round(((col("n_chars_norm") * col("n_chars_norm") - col("ss")) *
               lit(1000000L)).cast("double") /
@@ -476,15 +478,7 @@ object MiningQueries {
         |SELECT n.doc_id, n.n AS n_chars_norm, n.d AS distinct_chars,
         |  e.h_micro
         |FROM n JOIN e ON e.doc_id = n.doc_id""".stripMargin) { (s, dir) =>
-      val d = table(s, dir, "documents")
-      val norm = d.select(d("doc_id"), TextOps.normalized(d("text")).as("s"))
-        .filter(length(col("s")) >= 1)
-      norm.select(col("doc_id"),
-          graft.functions.CharHistStats(col("s")).as("h"))
-        .select(col("doc_id"),
-          col("h.n_chars").as("n_chars_norm"),
-          col("h.distinct").as("distinct_chars"),
-          col("h.h_micro").as("h_micro"))
+      charHist(table(s, dir, "documents"), col("h.h_micro").as("h_micro"))
     },
 
     // TextRank keyword extraction: weighted PageRank over the token

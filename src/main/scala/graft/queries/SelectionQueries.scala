@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,8 +27,7 @@ object SelectionQueries {
     * tie-break stay identical — the Spark-side twin of the shared
     * duckShingles CTE.
     */
-  private def firstSeenCounts(d: org.apache.spark.sql.DataFrame)
-  : org.apache.spark.sql.DataFrame = {
+  private def firstSeenCounts(d: DataFrame): DataFrame = {
     val ex = d.select(d("doc_id"),
       explode(TextOps.shingleSet(d("text"), 3)).as("g"))
     val fs = ex.groupBy("g").agg(min("doc_id").as("fd"))
@@ -98,10 +98,9 @@ object SelectionQueries {
       |FROM ranked WHERE rn = 1""".stripMargin
 
   private def nbClassify(s: org.apache.spark.sql.SparkSession,
-                         dir: String): org.apache.spark.sql.DataFrame = {
+                         dir: String): DataFrame = {
     val d = table(s, dir, "documents")
-    val tok = d.select(d("doc_id"), d("lang"),
-      explode(TextOps.tokens(d("text"))).as("term"))
+    val tok = docTerms(d)
     val cnt = tok.groupBy(col("lang").as("mlang"), col("term"))
       .agg(count(lit(1)).as("c"))
     val tot = cnt.groupBy("mlang").agg(sum("c").as("tl"))
@@ -147,6 +146,11 @@ object SelectionQueries {
           .as("correct"))
   }
 
+  // Each doc's `(doc_id, lang, term)` token occurrences.
+  private def docTerms(d: DataFrame): DataFrame =
+    d.select(d("doc_id"), d("lang"),
+      explode(TextOps.tokens(d("text"))).as("term"))
+
   // The hashed quality scorer's per-token weights `w(doc_id, $cols, wt)`
   // (first sha256 hex char → {-2, -1, 1, 2}).
   private def duckWordWeights(cols: String) =
@@ -162,6 +166,21 @@ object SelectionQueries {
       |         ELSE 2 END AS wt
       |  FROM occ)""".stripMargin
 
+  // Spark side of duckWordWeights: `d`'s columns `cols` with one row per
+  // token, projected to `out` plus the token's weight `wt`.
+  private def wordWeights(d: DataFrame, cols: String*)(
+      out: Column*): DataFrame = {
+    val occ = d.select(cols.map(d(_)) :+
+      explode(TextOps.tokens(d("text"))).as("t"): _*)
+    val h = substring(sha2(col("t"), 256), 1, 1)
+    val wt = when(h <= "3", -2).when(h <= "7", -1)
+      .when(h <= "b", 1).otherwise(2)
+    occ.select(out :+ wt.cast("long").as("wt"): _*)
+  }
+
+  private def enPos0: Column =
+    when(col("lang") === "en", 1L).otherwise(0L).as("pos0")
+
   // Word weights and the head of a per-doc `ds` CTE with the English label
   // `pos`; callers add the score column.
   private val duckWordWeightsPos =
@@ -170,6 +189,13 @@ object SelectionQueries {
       |  SELECT doc_id, source,
       |    CAST(max(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
       |      AS pos""".stripMargin
+
+  // Spark side of duckWordWeightsPos: per-doc `(doc_id, source, pos)` and
+  // the caller's `score` aggregate over `wt`.
+  private def wordWeightsPos(d: DataFrame, score: Column): DataFrame =
+    wordWeights(d, "doc_id", "source", "lang")(
+        col("doc_id"), col("source"), enPos0)
+      .groupBy("doc_id", "source").agg(max("pos0").as("pos"), score)
 
   // Shingle occurrences `ex(doc_id, g)` and each shingle's first doc
   // `fs(g, fd)`.
@@ -252,13 +278,8 @@ object SelectionQueries {
         |  CAST(sum(score) AS BIGINT) AS sum_score
         |FROM ds GROUP BY source, lang""".stripMargin) { (s, dir) =>
       val d = table(s, dir, "documents")
-      val occ = d.select(d("doc_id"), d("source"), d("lang"),
-        explode(TextOps.tokens(d("text"))).as("t"))
-      val h = substring(sha2(col("t"), 256), 1, 1)
-      val wt = when(h <= "3", -2).when(h <= "7", -1)
-        .when(h <= "b", 1).otherwise(2)
-      occ.select(col("doc_id"), col("source"), col("lang"),
-          wt.cast("long").as("wt"))
+      wordWeights(d, "doc_id", "source", "lang")(
+          col("doc_id"), col("source"), col("lang"))
         .groupBy("doc_id", "source", "lang").agg(sum("wt").as("score"))
         .groupBy("source", "lang").agg(
           sum(when(col("score") >= 0, 1L).otherwise(0L)).as("n_keep"),
@@ -310,16 +331,7 @@ object SelectionQueries {
         |    / CAST(2 * np * nn AS DOUBLE)) AS BIGINT) AS auc_micro
         |FROM a WHERE np > 0 AND nn > 0""".stripMargin) { (s, dir) =>
       val d = table(s, dir, "documents")
-      val occ = d.select(d("doc_id"), d("source"), d("lang"),
-        explode(TextOps.tokens(d("text"))).as("t"))
-      val h = substring(sha2(col("t"), 256), 1, 1)
-      val wt = when(h <= "3", -2).when(h <= "7", -1)
-        .when(h <= "b", 1).otherwise(2)
-      val ds = occ.select(col("doc_id"), col("source"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("pos0"),
-          wt.cast("long").as("wt"))
-        .groupBy("doc_id", "source")
-        .agg(max("pos0").as("pos"), sum("wt").as("score"))
+      val ds = wordWeightsPos(d, sum("wt").as("score"))
       val g = ds.groupBy("source", "score")
         .agg(count(lit(1)).as("n_tot"), sum("pos").as("n_pos"))
       val win = Window.partitionBy("source").orderBy("score")
@@ -384,16 +396,7 @@ object SelectionQueries {
         |    / CAST(cum_n * tot_pos AS DOUBLE)) AS BIGINT) AS lift_micro
         |FROM c WHERE tot_pos > 0""".stripMargin) { (s, dir) =>
       val d = table(s, dir, "documents")
-      val occ = d.select(d("doc_id"), d("source"), d("lang"),
-        explode(TextOps.tokens(d("text"))).as("t"))
-      val h = substring(sha2(col("t"), 256), 1, 1)
-      val wt = when(h <= "3", -2).when(h <= "7", -1)
-        .when(h <= "b", 1).otherwise(2)
-      val ds = occ.select(col("doc_id"), col("source"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("pos0"),
-          wt.cast("long").as("wt"))
-        .groupBy("doc_id", "source")
-        .agg(max("pos0").as("pos"), sum("wt").as("score"))
+      val ds = wordWeightsPos(d, sum("wt").as("score"))
       val rkW = Window.partitionBy("source")
         .orderBy(col("score").desc, col("doc_id"))
       val nW = Window.partitionBy("source")
@@ -452,14 +455,7 @@ object SelectionQueries {
         |  CAST(sum(score) AS BIGINT) AS sum_score
         |FROM b GROUP BY 1""".stripMargin) { (s, dir) =>
       val d = table(s, dir, "documents")
-      val occ = d.select(d("doc_id"), d("lang"),
-        explode(TextOps.tokens(d("text"))).as("t"))
-      val h = substring(sha2(col("t"), 256), 1, 1)
-      val wt = when(h <= "3", -2).when(h <= "7", -1)
-        .when(h <= "b", 1).otherwise(2)
-      val ds = occ.select(col("doc_id"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("pos0"),
-          wt.cast("long").as("wt"))
+      val ds = wordWeights(d, "doc_id", "lang")(col("doc_id"), enPos0)
         .groupBy("doc_id")
         .agg(max("pos0").as("pos"), sum("wt").as("score"))
         // feeds BOTH the min/max aggregate and the binning pass — the
@@ -551,17 +547,8 @@ object SelectionQueries {
         |    / CAST(n * n - pe_num AS DOUBLE)) AS BIGINT) AS kappa_micro
         |FROM k WHERE n * n - pe_num > 0""".stripMargin) { (s, dir) =>
       val d = table(s, dir, "documents")
-      val occ = d.select(d("doc_id"), d("source"), d("lang"),
-        explode(TextOps.tokens(d("text"))).as("t"))
-      val h = substring(sha2(col("t"), 256), 1, 1)
-      val wt = when(h <= "3", -2).when(h <= "7", -1)
-        .when(h <= "b", 1).otherwise(2)
-      val ds = occ.select(col("doc_id"), col("source"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("pos0"),
-          wt.cast("long").as("wt"))
-        .groupBy("doc_id", "source")
-        .agg(max("pos0").as("pos"),
-          when(sum("wt") >= 0, 1L).otherwise(0L).as("acc"))
+      val ds = wordWeightsPos(d,
+        when(sum("wt") >= 0, 1L).otherwise(0L).as("acc"))
       val cf = ds.groupBy("source").agg(
         sum(col("acc") * col("pos")).as("a"),
         sum(col("acc") * (lit(1) - col("pos"))).as("b"),
@@ -602,8 +589,7 @@ object SelectionQueries {
         |FROM cnt JOIN tot ON cnt.lang = tot.lang, v""".stripMargin) {
       (s, dir) =>
       val d = table(s, dir, "documents")
-      val tok = d.select(d("doc_id"), d("lang"),
-        explode(TextOps.tokens(d("text"))).as("term"))
+      val tok = docTerms(d)
       val cnt = tok.groupBy("lang", "term").agg(count(lit(1)).as("c"))
       val tot = cnt.groupBy("lang").agg(sum("c").as("tl"))
       val v = tok.agg(countDistinct("term").as("v"))
@@ -1060,8 +1046,7 @@ object SelectionQueries {
         |FROM dens d JOIN bounds b ON d.lang = b.lang""".stripMargin) {
       (s, dir) =>
         val d = table(s, dir, "documents")
-        val tok = d.select(d("doc_id"), d("lang"),
-          explode(TextOps.tokens(d("text"))).as("term"))
+        val tok = docTerms(d)
         val tf = tok.groupBy("doc_id", "lang", "term")
           .agg(count(lit(1)).as("tf"))
         val f = tf.groupBy("term").agg(sum("tf").as("freq"))

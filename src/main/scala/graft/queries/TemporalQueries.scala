@@ -31,6 +31,14 @@ object TemporalQueries {
       |    CAST(count(*) AS BIGINT) $n
       |  FROM events GROUP BY 1, 2)""".stripMargin
 
+  // Spark side of duckDailyCounts.
+  private def dailyCounts(s: SparkSession, dir: String,
+                          n: String): DataFrame =
+    table(s, dir, "events")
+      .select(col("event_type"),
+        expr("(ts div 1000) div 86400000000").as("day"))
+      .groupBy("event_type", "day").agg(count(lit(1)).as(n))
+
   val all: Map[String, Q] = Map(
 
     // X52 — trailing-window z-score anomaly detection (the metrics-ops
@@ -63,11 +71,7 @@ object TemporalQueries {
         |  CAST(CASE WHEN abs(z_micro) > 3000000 THEN 1 ELSE 0 END
         |    AS BIGINT) AS is_anomaly
         |FROM z""".stripMargin) { (s, dir) =>
-      val ev = table(s, dir, "events")
-      val counts = ev
-        .select(col("event_type"),
-          expr("(ts div 1000) div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("cnt"))
+      val counts = dailyCounts(s, dir, "cnt")
       val tw = Window.partitionBy("event_type").orderBy("day")
         .rowsBetween(-7, -1)
       val stats = counts
@@ -216,10 +220,7 @@ object TemporalQueries {
         |    / (CAST(n_days AS DOUBLE) * CAST(s_all AS DOUBLE)))
         |    AS BIGINT) AS idx_ppm
         |FROM w WHERE s_all > 0""".stripMargin) { (s, dir) =>
-      val e = table(s, dir, "events")
-        .select(col("event_type"),
-          expr("(ts div 1000) div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("cnt"))
+      val e = dailyCounts(s, dir, "cnt")
       val g = e.select(col("event_type"), (col("day") % 7).as("dow"),
           col("cnt"))
         .groupBy("event_type", "dow")
@@ -267,10 +268,7 @@ object TemporalQueries {
         |FROM p WINDOW tw AS (PARTITION BY event_type ORDER BY day
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"""
         .stripMargin) { (s, dir) =>
-      val e = table(s, dir, "events")
-        .select(col("event_type"),
-          expr("(ts div 1000) div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("x"))
+      val e = dailyCounts(s, dir, "x")
       val wAll = Window.partitionBy("event_type")
       val tw = Window.partitionBy("event_type").orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -315,10 +313,7 @@ object TemporalQueries {
         |    AS tau_ppm
         |FROM n LEFT JOIN s ON s.event_type = n.event_type
         |WHERE n_days > 1""".stripMargin) { (s, dir) =>
-      val e = table(s, dir, "events")
-        .select(col("event_type"),
-          expr("(ts div 1000) div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("x"))
+      val e = dailyCounts(s, dir, "x")
         // feeds both sides of the pair join AND the day count — ONE
         // daily rollup (EAGER CHECKPOINT DISCIPLINE, ops/llm/Dedup.scala)
         .localCheckpoint(true)
@@ -379,10 +374,7 @@ object TemporalQueries {
         |FROM m
         |WHERE n >= 3 AND n * sxx - sx * sx > 0
         |  AND n * syy - sy * sy > 0""".stripMargin) { (s, dir) =>
-      val e = table(s, dir, "events")
-        .select(col("event_type"),
-          expr("(ts div 1000) div 86400000000").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("x"))
+      val e = dailyCounts(s, dir, "x")
         // both sides of the alignment join — ONE daily rollup (EAGER
         // CHECKPOINT DISCIPLINE, ops/llm/Dedup.scala)
         .localCheckpoint(true)

@@ -72,22 +72,6 @@ object StreamingPipeline {
         col("window.end").as("window_end"),
         col("event_type"), col("cnt"))
 
-  /** Session-window counts per key: the streaming twin of
-    * `ops.Sessionize` — Spark's native session_window merges events
-    * within `gap` into one growing window, state bounded by the
-    * watermark. (Batch sessionization stays the `Sessionize` op; this is
-    * the stream-native form.)
-    */
-  def sessionizedEventCounts(events: DataFrame, gap: String = "12 hours",
-                             watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("user_id"), col("n_events"))
-
   /** Custom keyed state: cumulative per-user event counts emitted on
     * every update — the arbitrary-state escape hatch for semantics
     * windows can't express (monotone counters that survive across
@@ -145,63 +129,6 @@ object StreamingPipeline {
         st.select(col("user_id"), col("event_type"))
           .as[(Long, String)])
     }
-
-  /** Stream-stream interval join: each click joined to the same user's
-    * views within `horizon` BEFORE the click. Both sides carry watermarks;
-    * the time-bound join condition lets Spark expire buffered state for
-    * rows older than the horizon — unbounded-state stream joins don't run
-    * at scale. (Batch twin of this shape is q_range_join's bin join.)
-    */
-  def clickViewJoin(clicks: DataFrame, views: DataFrame,
-                    watermark: String = "10 minutes",
-                    horizon: String = "1 hour"): DataFrame = {
-    val c = clicks.withWatermark("ts", watermark)
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-        col("event_id").as("click_id"))
-    val v = views.withWatermark("ts", watermark)
-      .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-        col("event_id").as("view_id"))
-    c.join(v,
-      col("c_user") === col("v_user") &&
-        col("v_ts") <= col("c_ts") &&
-        col("v_ts") >= col("c_ts") - expr(s"INTERVAL $horizon"))
-      .select(col("c_user").as("user_id"), col("click_id"), col("view_id"))
-  }
-
-  /** Left-OUTER interval attribution (X12e variant): every click is
-    * emitted, matched views attached when one exists within the horizon,
-    * NULL view_id otherwise — the "unattributed conversion" row an inner
-    * join silently drops. The outer side can only emit its null-extended
-    * row once the watermark proves no matching view can still arrive, so
-    * results trail the watermark by design; state stays bounded by the
-    * same horizon condition as the inner form.
-    */
-  def clickViewJoinOuter(clicks: DataFrame, views: DataFrame,
-                         watermark: String = "10 minutes",
-                         horizon: String = "1 hour"): DataFrame = {
-    val c = clicks.withWatermark("ts", watermark)
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-        col("event_id").as("click_id"))
-    val v = views.withWatermark("ts", watermark)
-      .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-        col("event_id").as("view_id"))
-    c.join(v,
-        col("c_user") === col("v_user") &&
-          col("v_ts") <= col("c_ts") &&
-          col("v_ts") >= col("c_ts") - expr(s"INTERVAL $horizon"),
-        "leftOuter")
-      .select(col("c_user").as("user_id"), col("click_id"), col("view_id"))
-  }
-
-  /** Watermarked streaming dedup: first occurrence of each key wins;
-    * duplicates arriving within the watermark horizon are dropped and the
-    * per-key state is GC'd once the watermark passes — the streaming twin
-    * of exact dedup with bounded state.
-    */
-  def dedupWithinWatermark(events: DataFrame, keyCols: Seq[String],
-                           watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
 
   /** Index-backed continuous-ingest near-dup detection — the streaming
     * form of the persisted signature index (`Dedup.minhashIndex`): the
@@ -317,12 +244,19 @@ object StreamingPipeline {
     // 2^53 range, so `/ 1000` via double can truncate a µs off near
     // window boundaries. `div` stays in long arithmetic.
     val withTs = e.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    windowedEventCounts(withTs.select(col("ts"), col("event_type")))
+    windowStartCounts(withTs.select(col("ts"), col("event_type")))
+  }
+
+  /** [[windowedEventCounts]] at its defaults, each window as its start
+    * string: (window_start "yyyy-MM-dd HH:mm:ss", event_type, cnt). The
+    * batch twin and the update-mode drain both emit this.
+    */
+  private def windowStartCounts(events: DataFrame): DataFrame =
+    windowedEventCounts(events)
       .select(
         date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
           .as("window_start"),
         col("event_type"), col("cnt"))
-  }
 
   /** Word frequencies of the `text` column: the aggregation shared by
     * the top-K leaderboard's complete and update twins.
@@ -364,7 +298,7 @@ object StreamingPipeline {
     * first_event, last_event). dur = window end − start − gap = last
     * event ts − first event ts, matching the batch form.
     */
-  private def sessions(st: DataFrame): DataFrame = {
+  private[graft] def sessions(st: DataFrame): DataFrame = {
     val gapUs = 43_200_000_000L
     st.groupBy(col("user_id"), session_window(col("ts"), "12 hours"))
       .agg(count(lit(1)).as("n_events"),
@@ -516,6 +450,17 @@ object StreamingPipeline {
       .toDF("from_type", "to_type")
   }
 
+  /** Staged events typed for the stateful operators:
+    * (user_id, tsu µs, event_id, event_type).
+    */
+  private def typedEvents(st: DataFrame)
+      : org.apache.spark.sql.Dataset[(Long, Long, Long, String)] = {
+    import st.sparkSession.implicits._
+    st.select(col("user_id"), unix_micros(col("ts")).as("tsu"),
+        col("event_id"), col("event_type"))
+      .as[(Long, Long, Long, String)]
+  }
+
   /** X12v — the stateful sequential counter as a REAL gate drain: the
     * staged time-ordered event stream drained through
     * `statefulTransitions` with the emitted facts APPENDED per batch
@@ -526,14 +471,10 @@ object StreamingPipeline {
     * single-pass lead() window over the whole history.
     */
   def streamTransitions(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     val facts = drainAppend(spark,
       graft.queries.StreamStaging.dir(spark, sfDir, "events8range"),
       "transitions") { st =>
-      statefulTransitions(
-        st.select(col("user_id"), unix_micros(col("ts")).as("tsu"),
-            col("event_id"), col("event_type"))
-          .as[(Long, Long, Long, String)])
+      statefulTransitions(typedEvents(st))
     }
     facts.groupBy("from_type", "to_type").agg(count(lit(1)).as("cnt"))
   }
@@ -590,14 +531,10 @@ object StreamingPipeline {
     * proving the state machine bridges every trigger boundary.
     */
   def streamFunnel(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     val state = drainUpdateMerge(spark,
       graft.queries.StreamStaging.dir(spark, sfDir, "events8range"),
       "funnel", Seq("user_id")) { st =>
-      statefulFunnel(
-        st.select(col("user_id"), unix_micros(col("ts")).as("tsu"),
-            col("event_id"), col("event_type"))
-          .as[(Long, Long, Long, String)])
+      statefulFunnel(typedEvents(st))
     }
     state.agg(
       count(when(col("t1") >= 0, 1)).as("n_signup"),
@@ -738,12 +675,11 @@ object StreamingPipeline {
     * aggregation; every batch re-emits the whole state, so the last
     * batch's rows are the final state.
     */
-  def drainComplete(spark: SparkSession, stagedDir: String, prefix: String,
-                    statePartitions: Int = defaultStatePartitions)(
+  def drainComplete(spark: SparkSession, stagedDir: String, prefix: String)(
       build: DataFrame => DataFrame): DataFrame = {
     var last = Seq.empty[Row]
     val schema = drain(spark, stagedDir, prefix, "complete",
-      statePartitions)(build) { batch => last = batch.collect().toSeq }
+      defaultStatePartitions)(build) { batch => last = batch.collect().toSeq }
     localFrame(spark, last, schema)
   }
 
@@ -765,20 +701,6 @@ object StreamingPipeline {
       perBatch(localFrame(spark, Nil, schema)).schema)
   }
 
-  /** Convenience overload for ad-hoc sources (the stress harness): stage
-    * `src` into a per-call temp dir, drain, delete. Gate entries use the
-    * stagedDir form with the memoized StreamStaging fixture instead.
-    */
-  def drainUpdateMerge(spark: SparkSession, src: DataFrame, prefix: String,
-                       keyCols: Seq[String])(
-      build: DataFrame => DataFrame): DataFrame = {
-    val tmp = ephemeralDir(s"$prefix-adhoc")
-    try {
-      src.repartition(8).write.mode("overwrite").parquet(tmp.toString)
-      drainUpdateMerge(spark, tmp.toString, prefix, keyCols)(build)
-    } finally graft.util.Fs.deleteRecursively(tmp)
-  }
-
   /** Merge sink, the 100 TB counterpart of [[drainComplete]]: `build`
     * must end in an update-mode-legal aggregation keyed by `keyCols` that
     * emits the key's full current aggregate value on change (true of
@@ -793,14 +715,14 @@ object StreamingPipeline {
   def drainUpdateMerge(spark: SparkSession, stagedDir: String,
                        prefix: String,
                        keyCols: Seq[String],
-                       onFinish: StreamingQuery => Unit = _ => (),
-                       statePartitions: Int = defaultStatePartitions)(
+                       onFinish: StreamingQuery => Unit = _ => ())(
       build: DataFrame => DataFrame): DataFrame = {
     val sinkRoot = ephemeralDir(s"$prefix-sink")
     val sinkPath = sinkRoot.resolve("state").toString
     try {
       val schema = drain(spark, stagedDir, prefix, "update",
-        statePartitions, onFinish)(build)(mergeBatch(_, sinkPath, keyCols))
+        defaultStatePartitions, onFinish)(build)(
+        mergeBatch(_, sinkPath, keyCols))
       // no batch wrote (empty source): the sink path does not exist
       if (!new java.io.File(sinkPath).exists()) localFrame(spark, Nil, schema)
       else {
@@ -899,10 +821,11 @@ object StreamingPipeline {
     * (10³–10⁵ keys) the session default (= local cores) is pure
     * overhead: measured at sf0.1, 32→8 instances cut
     * q_stream_window_update 8.9→5.2 s and q_stream_dedup_update
-    * 8.4→4.2 s with identical results. A production deployment sizes
-    * this to keys/executors — pass a larger `statePartitions`; the
-    * choice is per-run here because every drain starts a fresh
-    * checkpoint.
+    * 8.4→4.2 s with identical results; below 8 the gain is inside run
+    * noise (a 5-run A/B on streamWindowUpdate: 8→2 ≈ −0.3 s, like the
+    * HDFS-backed provider; changelog off and RocksDB compression ≈ 0).
+    * A production deployment sizes this to keys/executors; the choice
+    * is per-run here because every drain starts a fresh checkpoint.
     */
   val defaultStatePartitions = 8
 
@@ -958,23 +881,14 @@ object StreamingPipeline {
     * feed tunes the delay to its real disorder bound.
     */
   def streamWindowUpdate(spark: SparkSession, sfDir: String,
-      onFinish: StreamingQuery => Unit = _ => (),
-      statePartitions: Int = defaultStatePartitions): DataFrame =
+      onFinish: StreamingQuery => Unit = _ => ()): DataFrame =
     // update mode runs no trailing no-data batch ([[drain]]): here it
     // would arrive empty (measured: mask = 0) after ~0.5 s of pure
     // state-store machinery
     drainUpdateMerge(spark,
       graft.queries.StreamStaging.dir(spark, sfDir, "events8range"),
       "window_upd", Seq("window_start", "event_type"),
-      onFinish = onFinish, statePartitions = statePartitions) { st =>
-      st.withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(
-          date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-            .as("window_start"),
-          col("event_type"), col("cnt"))
-    }
+      onFinish = onFinish)(windowStartCounts)
 
   /** X12t — the session-window surface with the production sink,
     * completing the twin set across all five streaming gate surfaces.
@@ -1044,56 +958,66 @@ object StreamingPipeline {
     * branch only would be ignored) and is dropped after them with the
     * ts-referencing predicate that pins the drop above the watermark.
     */
-  def streamIntervalJoin(spark: SparkSession, sfDir: String,
-                         statePartitions: Int = joinStatePartitions)
-      : DataFrame =
+  def streamIntervalJoin(spark: SparkSession, sfDir: String): DataFrame =
     intervalJoinDrain(spark,
       graft.queries.StreamStaging.dir(spark, sfDir, "events8range"),
-      "ssj", "inner", statePartitions)
+      "ssj", "inner")
 
   /** Stream-stream joins run FOUR state stores per partition per side
     * pair (keyToNumValues + keyWithIndex, left and right), so their
     * per-trigger instance constant is ~4× a stateful agg's at equal
-    * partition count — the measured sp curve at sf0.1 (SsjProbe:
-    * 16→12.2 s, 8→8.4 s, 4→6.9 s, 2→6.4 s) is the [[defaultStatePartitions]]
-    * story amplified. 4 fits these drains' key cardinality; production
-    * sizes the parameter to keys/executors like every other drain.
+    * partition count — the measured curve of the interval-join drain at
+    * sf0.1 (16→12.2 s, 8→8.4 s, 4→6.9 s, 2→6.4 s) is the
+    * [[defaultStatePartitions]] story amplified. 4 fits these drains' key
+    * cardinality; production sizes it to keys/executors like every other
+    * drain.
     */
   val joinStatePartitions = 4
 
   /** See [[streamIntervalJoin]] — the left-outer (unattributed-click)
     * form, over the sentinel staging so the tail flushes.
     */
-  def streamIntervalJoinOuter(spark: SparkSession, sfDir: String,
-                              statePartitions: Int =
-                                joinStatePartitions): DataFrame =
+  def streamIntervalJoinOuter(spark: SparkSession, sfDir: String)
+      : DataFrame =
     intervalJoinDrain(spark,
       graft.queries.StreamStaging.dir(spark, sfDir, "events8sentinel"),
-      "ssjo", "left_outer", statePartitions)
+      "ssjo", "left_outer")
 
   private def intervalJoinDrain(spark: SparkSession, stagedDir: String,
-                                prefix: String, joinType: String,
-                                statePartitions: Int): DataFrame =
-    drainAppend(spark, stagedDir, prefix, statePartitions) { st =>
-      // each branch keeps the heartbeat THROUGH its watermark node and
-      // drops it just after (see streamSessionizeAppend for why the
-      // predicate must reference ts)
-      def side(t: String, user: String, ts: String, id: String) =
-        st.filter(col("event_type").isin(t, "__sentinel__"))
-          .withWatermark("ts", "10 minutes")
-          .filter(col("event_type") =!= "__sentinel__" || col("ts").isNull)
-          .select(col("user_id").as(user), col("ts").as(ts),
-            col("event_id").as(id))
-      val c = side("click", "c_user", "c_ts", "click_id")
-      val v = side("view", "v_user", "v_ts", "view_id")
-      c.join(v,
-          col("c_user") === col("v_user") &&
-            col("v_ts") <= col("c_ts") &&
-            col("v_ts") >= col("c_ts") - expr("INTERVAL 1 hour"),
-          joinType)
-        .select(col("c_user").as("user_id"), col("click_id"),
-          col("view_id"))
-    }
+                                prefix: String, joinType: String)
+      : DataFrame =
+    drainAppend(spark, stagedDir, prefix, joinStatePartitions)(
+      intervalJoin(_, joinType))
+
+  /** Stream-stream interval join of one event stream `(user_id, ts,
+    * event_id, event_type)` with itself: each click joined (`joinType`
+    * "inner" or "left_outer") to the same user's views at most 1 h
+    * before it. Both branches carry a 10-minute watermark; the time-bound
+    * join condition lets Spark expire buffered state for rows older than
+    * the horizon. The outer form emits an unattributed click (NULL
+    * view_id) once the watermark proves no matching view can still
+    * arrive. A `__sentinel__` event passes both watermark nodes and is
+    * dropped after them (see [[streamSessionizeAppend]] for why the
+    * predicate must reference ts).
+    */
+  private[graft] def intervalJoin(events: DataFrame,
+                                  joinType: String): DataFrame = {
+    def side(t: String, user: String, ts: String, id: String) =
+      events.filter(col("event_type").isin(t, "__sentinel__"))
+        .withWatermark("ts", "10 minutes")
+        .filter(col("event_type") =!= "__sentinel__" || col("ts").isNull)
+        .select(col("user_id").as(user), col("ts").as(ts),
+          col("event_id").as(id))
+    val c = side("click", "c_user", "c_ts", "click_id")
+    val v = side("view", "v_user", "v_ts", "view_id")
+    c.join(v,
+        col("c_user") === col("v_user") &&
+          col("v_ts") <= col("c_ts") &&
+          col("v_ts") >= col("c_ts") - expr("INTERVAL 1 hour"),
+        joinType)
+      .select(col("c_user").as("user_id"), col("click_id"),
+        col("view_id"))
+  }
 
   /** X12q — the update-mode twin of `q_stream_topk` (the reference's
     * product leaderboard): word-frequency state in UPDATE mode merged

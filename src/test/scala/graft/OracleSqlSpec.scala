@@ -38,4 +38,9 @@ class OracleSqlSpec extends AnyFunSuite {
         s"${differ.mkString(", ")}; of these, containing `null`: " +
         withNull.mkString(", "))
   }
+
+  test("the query registry is built once") {
+    assert(SparkEntry.queries eq SparkEntry.queries)
+    assert(SparkEntry.oracleSql eq SparkEntry.oracleSql)
+  }
 }

@@ -71,14 +71,14 @@ class StreamingSpec extends SparkSpec {
 
   test("session windows merge events within the gap") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long)]
+    val mem = MemoryStream[(Timestamp, Long, Long)]
     mem.addData(
-      (Timestamp.valueOf("2025-06-10 12:00:00"), 1L),
-      (Timestamp.valueOf("2025-06-10 12:10:00"), 1L), // same session (gap 30m)
-      (Timestamp.valueOf("2025-06-10 15:00:00"), 1L), // new session
-      (Timestamp.valueOf("2025-06-10 12:05:00"), 2L))
-    val out = StreamingPipeline.sessionizedEventCounts(
-      mem.toDF().toDF("ts", "user_id"), gap = "30 minutes")
+      (Timestamp.valueOf("2025-06-10 12:00:00"), 1L, 1L),
+      (Timestamp.valueOf("2025-06-10 18:00:00"), 1L, 2L), // same (gap 12h)
+      (Timestamp.valueOf("2025-06-11 07:00:00"), 1L, 3L), // new session
+      (Timestamp.valueOf("2025-06-10 12:05:00"), 2L, 4L))
+    val out = StreamingPipeline.sessions(
+      mem.toDF().toDF("ts", "user_id", "event_id"))
     val q = out.writeStream.format("memory").queryName("sess")
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -118,19 +118,17 @@ class StreamingSpec extends SparkSpec {
   test("stream-stream interval join pairs clicks with in-horizon views") {
     implicit val sqlCtx = spark.sqlContext
     def ts(s: String) = Timestamp.valueOf(s)
-    val clicks = MemoryStream[(Long, Timestamp, Long)]
-    val views = MemoryStream[(Long, Timestamp, Long)]
+    val events = MemoryStream[(Long, Timestamp, Long, String)]
     // view 100 is 30m before click 1 (in horizon); view 101 is >1h before
     // both clicks (out of horizon); view 102 is AFTER click 1 (excluded
     // for it) but 30m before click 2 (joins to it)
-    clicks.addData((1L, ts("2025-06-10 12:00:00"), 1L),
-      (1L, ts("2025-06-10 13:00:00"), 2L))
-    views.addData((1L, ts("2025-06-10 11:30:00"), 100L),
-      (1L, ts("2025-06-10 10:30:00"), 101L),
-      (1L, ts("2025-06-10 12:30:00"), 102L))
-    val out = StreamingPipeline.clickViewJoin(
-      clicks.toDF().toDF("user_id", "ts", "event_id"),
-      views.toDF().toDF("user_id", "ts", "event_id"))
+    events.addData((1L, ts("2025-06-10 12:00:00"), 1L, "click"),
+      (1L, ts("2025-06-10 13:00:00"), 2L, "click"),
+      (1L, ts("2025-06-10 11:30:00"), 100L, "view"),
+      (1L, ts("2025-06-10 10:30:00"), 101L, "view"),
+      (1L, ts("2025-06-10 12:30:00"), 102L, "view"))
+    val out = StreamingPipeline.intervalJoin(
+      events.toDF().toDF("user_id", "ts", "event_id", "event_type"), "inner")
     val q = out.writeStream.format("memory").queryName("ssj")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -145,24 +143,23 @@ class StreamingSpec extends SparkSpec {
   test("left-outer interval join emits unattributed clicks after watermark") {
     implicit val sqlCtx = spark.sqlContext
     def ts(s: String) = Timestamp.valueOf(s)
-    val clicks = MemoryStream[(Long, Timestamp, Long)]
-    val views = MemoryStream[(Long, Timestamp, Long)]
-    val out = StreamingPipeline.clickViewJoinOuter(
-      clicks.toDF().toDF("user_id", "ts", "event_id"),
-      views.toDF().toDF("user_id", "ts", "event_id"))
+    val events = MemoryStream[(Long, Timestamp, Long, String)]
+    val out = StreamingPipeline.intervalJoin(
+      events.toDF().toDF("user_id", "ts", "event_id", "event_type"),
+      "left_outer")
     val q = out.writeStream.format("memory").queryName("ssjo")
       .outputMode("append").start()
     try {
       // click 1 has an in-horizon view; click 2 has NO view at all — the
       // row an inner join drops and the outer join must null-extend
-      clicks.addData((1L, ts("2025-06-10 12:00:00"), 1L),
-        (2L, ts("2025-06-10 12:00:00"), 2L))
-      views.addData((1L, ts("2025-06-10 11:30:00"), 100L))
+      events.addData((1L, ts("2025-06-10 12:00:00"), 1L, "click"),
+        (2L, ts("2025-06-10 12:00:00"), 2L, "click"),
+        (1L, ts("2025-06-10 11:30:00"), 100L, "view"))
       q.processAllAvailable()
-      // advance BOTH watermarks well past click 2's join horizon so its
-      // null-extended row is provably final and flushes
-      clicks.addData((9L, ts("2025-06-10 20:00:00"), 9L))
-      views.addData((9L, ts("2025-06-10 20:00:00"), 900L))
+      // advance BOTH branches' watermarks well past click 2's join
+      // horizon so its null-extended row is provably final and flushes
+      events.addData((9L, ts("2025-06-10 20:00:00"), 9L, "click"),
+        (9L, ts("2025-06-10 20:00:00"), 900L, "view"))
       q.processAllAvailable()
       val rows = spark.table("ssjo")
         .select("click_id", "view_id")
@@ -179,8 +176,9 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Timestamp)]
     mem.addData((7L, ts("2025-06-10 12:00:00")), (7L, ts("2025-06-10 12:01:00")),
       (8L, ts("2025-06-10 12:02:00")), (7L, ts("2025-06-10 12:03:00")))
-    val out = StreamingPipeline.dedupWithinWatermark(
-      mem.toDF().toDF("event_id", "ts"), Seq("event_id"))
+    val out = mem.toDF().toDF("event_id", "ts")
+      .withWatermark("ts", "10 minutes")
+      .dropDuplicatesWithinWatermark(Seq("event_id"))
     val q = out.writeStream.format("memory").queryName("ddw")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -201,8 +199,9 @@ class StreamingSpec extends SparkSpec {
     val trackOld = spark.conf.get(trackKey)
     spark.conf.set(trackKey, "true")
     val mem = MemoryStream[(Long, Timestamp)]
-    val out = StreamingPipeline.dedupWithinWatermark(
-      mem.toDF().toDF("event_id", "ts"), Seq("event_id"))
+    val out = mem.toDF().toDF("event_id", "ts")
+      .withWatermark("ts", "10 minutes")
+      .dropDuplicatesWithinWatermark(Seq("event_id"))
     val q = out.writeStream.format("memory").queryName("rocks")
       .outputMode("append").start()
     try {
@@ -470,12 +469,12 @@ class StreamingSpec extends SparkSpec {
     // diff > gap split rule. The corpus has no exactly-gap pair at any
     // SF, so the gate can't see this — this spec can.
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long)]
+    val mem = MemoryStream[(Timestamp, Long, Long)]
     mem.addData(
-      (Timestamp.valueOf("2025-06-10 12:00:00"), 1L),
-      (Timestamp.valueOf("2025-06-10 12:30:00"), 1L)) // exactly the 30m gap
-    val out = StreamingPipeline.sessionizedEventCounts(
-      mem.toDF().toDF("ts", "user_id"), gap = "30 minutes")
+      (Timestamp.valueOf("2025-06-10 12:00:00"), 1L, 1L),
+      (Timestamp.valueOf("2025-06-11 00:00:00"), 1L, 2L)) // exactly the 12h gap
+    val out = StreamingPipeline.sessions(
+      mem.toDF().toDF("ts", "user_id", "event_id"))
     val q = out.writeStream.format("memory").queryName("sessb")
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -484,17 +483,17 @@ class StreamingSpec extends SparkSpec {
     assert(nSessions == 1L, "session_window must merge at diff == gap")
     // the batch gap-sessionizer agrees (diff > gap splits)
     val batch = graft.ops.Sessionize(
-      Seq((1L, 0L, 1L), (1L, 1_800_000_000L, 2L))
+      Seq((1L, 0L, 1L), (1L, 43_200_000_000L, 2L))
         .toDF("user_id", "ts_us", "event_id"),
-      "user_id", "ts_us", "event_id", gap = 1_800_000_000L)
+      "user_id", "ts_us", "event_id", gap = 43_200_000_000L)
     assert(batch.count() == 1L, "Sessionize must merge at diff == gap")
     // one µs past the gap: both split
-    val mem2 = MemoryStream[(Timestamp, Long)]
+    val mem2 = MemoryStream[(Timestamp, Long, Long)]
     mem2.addData(
-      (Timestamp.valueOf("2025-06-10 12:00:00"), 1L),
-      (Timestamp.valueOf("2025-06-10 12:30:00.000001"), 1L))
-    val q2 = StreamingPipeline.sessionizedEventCounts(
-        mem2.toDF().toDF("ts", "user_id"), gap = "30 minutes")
+      (Timestamp.valueOf("2025-06-10 12:00:00"), 1L, 1L),
+      (Timestamp.valueOf("2025-06-11 00:00:00.000001"), 1L, 2L))
+    val q2 = StreamingPipeline.sessions(
+        mem2.toDF().toDF("ts", "user_id", "event_id"))
       .writeStream.format("memory").queryName("sessb2")
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     q2.awaitTermination()

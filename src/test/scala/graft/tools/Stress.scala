@@ -104,8 +104,8 @@ object Stress {
             timestamp_micros(lit(1700000000000000L) +
               pmod(col("doc_id"), lit(60L)) * 1000000L).as("ts"),
             sha2(col("text"), 256).as("k"))
-        val out = graft.streaming.StreamingPipeline
-          .dedupWithinWatermark(ev, Seq("k"))
+        val out = ev.withWatermark("ts", "10 minutes")
+          .dropDuplicatesWithinWatermark(Seq("k"))
         // the flat-state evidence below asserts on numRowsTotal, which
         // GraftSession's write-heavy tuning disables (reads -1 otherwise);
         // re-enable the row-count tracking for this one query, as
@@ -268,9 +268,11 @@ object Stress {
       // evidence the update-mode shape does not.
       "stream_update_merge" -> (d => {
         val sp = d.sparkSession
+        val staged = graft.TempDirs.create("graft-stress-upd")
+        d.select(col("doc_id"), col("text")).repartition(8)
+          .write.mode("overwrite").parquet(staged)
         graft.streaming.StreamingPipeline.drainUpdateMerge(
-          sp, d.select(col("doc_id"), col("text")), "stress_upd",
-          Seq("digest")) { st =>
+          sp, staged, "stress_upd", Seq("digest")) { st =>
           st.select(sha2(lower(trim(col("text"))), 256).as("digest"),
               col("doc_id"))
             .groupBy("digest")
